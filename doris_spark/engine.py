@@ -20,9 +20,10 @@ UDFs — functions/registry.py), table models are merge-on-read views
 from __future__ import annotations
 
 import re as _re
-from collections.abc import Mapping, Sequence
+from collections.abc import Callable, Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 _UPDATE_HEAD_RE = _re.compile(r"^\s*UPDATE\s+`?(\w+)`?\s+SET\s+", _re.I | _re.S)
 _DELETE_HEAD_RE = _re.compile(
@@ -170,8 +171,35 @@ def _split_where(text: str) -> tuple[str, str | None]:
         i += 1
     return text.rstrip(), None
 
-from doris_spark.operators.table_models import agg_key_view, unique_key_view
+from doris_spark.operators.table_models import (
+    agg_key_view,
+    merge_touched_keys,
+    unique_key_view,
+)
 from doris_spark.session import get_spark, register_views
+
+
+def _keys_view(meta: Mapping) -> Callable[[DataFrame], DataFrame] | None:
+    """The merge-on-read view function of a table's keys model (None for
+    DUP_KEYS, whose rows are the table)."""
+    kt = meta["keys_type"]
+    if kt == "UNIQUE_KEYS":
+        return lambda df: unique_key_view(
+            df, meta["keys"], meta["sequence_col"], delete_col=meta["delete_col"])
+    if kt == "AGG_KEYS":
+        return lambda df: agg_key_view(
+            df, meta["keys"], meta["agg_spec"], sequence_col=meta["sequence_col"])
+    return None
+
+
+def _counting(df: DataFrame, cond: str = "true") -> tuple[DataFrame, Observation]:
+    """`df` plus a boolean `__hit` column (`cond`, NULL read as false) and an
+    observation that counts the hits in whatever job later runs over it —
+    read it with `obs.get["n"]` after that job. The condition is evaluated
+    once per row, so the count and the rewrite that reads `__hit` agree."""
+    obs = Observation()
+    flagged = df.withColumn("__hit", F.coalesce(F.expr(cond), F.lit(False)))
+    return flagged.observe(obs, F.count_if(F.col("__hit")).alias("n")), obs
 
 
 class Engine:
@@ -191,6 +219,11 @@ class Engine:
         self.spark = spark
         # table name -> merge-on-read view (DUP tables map to themselves)
         self._views: dict[str, DataFrame] = {}
+        # table name -> partition count of its pinned snapshot (tables whose
+        # view was pinned by a write; see _publish)
+        self._parts: dict[str, int] = {}
+        # one-row local relation the statement replies select from (_reply)
+        self._unit = spark.sql("SELECT * FROM VALUES (0) AS __unit(x)")
         # table name -> keys-model metadata (for INSERT re-merge)
         self._meta: dict[str, dict] = {}
         # transparent MV rewrite catalog (plans/mv_rewrite.py)
@@ -203,6 +236,23 @@ class Engine:
         # table -> {constraint name -> (type, rendered spec)} (planner
         # metadata; SHOW CONSTRAINTS / ADD-DROP CONSTRAINT statements)
         self._constraints: dict[str, dict[str, tuple[str, str]]] = {}
+
+    def _reply(self, column: str, value, dtype: str = "bigint") -> DataFrame:
+        """One-row statement reply (the MySQL OK packet: affected rows, a
+        status or a name) as a local relation. Collecting it runs no Spark
+        job, where createDataFrame would parallelize an RDD and start one."""
+        return self._unit.select(F.lit(value).cast(dtype).alias(column))
+
+    def _publish(self, name: str, df: DataFrame) -> DataFrame:
+        """Pin `df` as the new snapshot of table `name` (one statement = one
+        visible transaction) and register it under that name. The pin breaks
+        the self-referential lineage, so repeated writes don't stack plan
+        depth."""
+        snap = df.localCheckpoint(eager=True)
+        snap.createOrReplaceTempView(name)
+        self._views[name] = snap
+        self._parts[name] = snap.rdd.getNumPartitions()
+        return snap
 
     # ------------------------------------------------------------ queries
 
@@ -251,7 +301,7 @@ class Engine:
             # layer; unknown keys are harmless conf entries).
             zone = sv.group(1).strip()
             self.spark.conf.set("spark.sql.session.timeZone", zone)
-            return self.spark.createDataFrame([(zone,)], "time_zone string")
+            return self._reply("time_zone", zone, "string")
         tr = _re.match(r"^\s*TRUNCATE\s+TABLE\s+`?(\w+)`?\s*;?\s*$", text, _re.I)
         if tr is not None:
             # Doris TRUNCATE TABLE: drop all rows, keep schema + keys model.
@@ -263,16 +313,11 @@ class Engine:
                         # view shim would SHADOW it and break later
                         # INSERTs (insertInto into a view is unresolvable)
                         self.spark.sql(f"TRUNCATE TABLE {name}")
-                        return self.spark.createDataFrame(
-                            [(0,)], "affected_rows bigint"
-                        )
+                        return self._reply("affected_rows", 0)
                 except Exception:
                     pass
-            cur = self.table(name)
-            empty = cur.limit(0).localCheckpoint(eager=True)
-            empty.createOrReplaceTempView(name)
-            self._views[name] = empty
-            return self.spark.createDataFrame([(0,)], "affected_rows bigint")
+            self._publish(name, self.table(name).limit(0))
+            return self._reply("affected_rows", 0)
         jm = _re.match(
             r"^\s*(CREATE\s+JOB|PAUSE\s+JOB|RESUME\s+JOB|DROP\s+JOB|SHOW\s+JOBS)\b\s*",
             text, _re.I,
@@ -285,12 +330,12 @@ class Engine:
                 return self.jobs.show()
             if verb == "CREATE JOB":
                 job = self.jobs.create(text)
-                return self.spark.createDataFrame([(job.name,)], "created string")
+                return self._reply("created", job.name, "string")
             name = text[jm.end():].strip().rstrip(";").strip("`")
             {"PAUSE JOB": self.jobs.pause,
              "RESUME JOB": self.jobs.resume,
              "DROP JOB": self.jobs.drop}[verb](name)
-            return self.spark.createDataFrame([(name,)], "ok string")
+            return self._reply("ok", name, "string")
         ctas = _re.match(
             r"^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?`?(\w+)`?\s+AS\s+(SELECT\b.*|WITH\b.*)$",
             text, _re.I | _re.S,
@@ -299,11 +344,10 @@ class Engine:
             # Doris CTAS (CreateTableAsSelectCommand): materialize the
             # query snapshot and register it as a DUP-keys table so
             # subsequent INSERT/UPDATE/DELETE statements work on it.
-            snap = self.sql(ctas.group(2)).localCheckpoint(eager=True)
+            src, obs = _counting(self.sql(ctas.group(2)))
+            snap = src.drop("__hit").localCheckpoint(eager=True)
             self.create_table(snap, ctas.group(1))
-            return self.spark.createDataFrame(
-                [(snap.count(),)], "affected_rows bigint"
-            )
+            return self._reply("affected_rows", obs.get["n"])
         con = _re.match(
             r"^\s*ALTER\s+TABLE\s+`?(\w+)`?\s+ADD\s+CONSTRAINT\s+"
             r"`?(\w+)`?\s+(PRIMARY\s+KEY|UNIQUE|FOREIGN\s+KEY)\s*"
@@ -329,7 +373,7 @@ class Engine:
             else:
                 spec = f"{ctype} ({cols})"
             self._constraints.setdefault(t, {})[cname] = (ctype, spec)
-            return self.spark.createDataFrame([(0,)], "status bigint")
+            return self._reply("status", 0)
         dcon = _re.match(
             r"^\s*ALTER\s+TABLE\s+`?(\w+)`?\s+DROP\s+CONSTRAINT\s+"
             r"`?(\w+)`?\s*;?\s*$",
@@ -347,7 +391,7 @@ class Engine:
                                if ty == "FOREIGN KEY"
                                and _re.search(rf"\.{t}\s*\(", sp, _re.I)]:
                         cons.pop(nm)
-            return self.spark.createDataFrame([(0,)], "status bigint")
+            return self._reply("status", 0)
         shc = _re.match(
             r"^\s*SHOW\s+CONSTRAINTS\s+FROM\s+`?(\w+)`?\s*;?\s*$",
             text, _re.I,
@@ -356,9 +400,7 @@ class Engine:
             rows = [(n, ty, sp) for n, (ty, sp) in sorted(
                 self._constraints.get(shc.group(1).lower(), {}).items())]
             return self.spark.createDataFrame(
-                rows or [], "name string, type string, spec string"
-            ) if rows else self.spark.createDataFrame(
-                [], "name string, type string, spec string")
+                rows, "name string, type string, spec string")
         if _re.match(
             r"^\s*ALTER\s+TABLE\s+`?\w+`?\s+"
             r"(?:ADD|DROP|MODIFY|RENAME)\s+COLUMN\b",
@@ -583,14 +625,16 @@ class Engine:
         transformed and pinned with localCheckpoint, then re-registered —
         the same observable semantics as Doris's merge-on-write update
         (UpdateCommand plans an INSERT of the changed rows; here the
-        whole snapshot is the transaction). At lakehouse scale the same
+        whole snapshot is the transaction). On a view-backed table that is
+        one Spark job: the predicate is evaluated once per row, and the
+        rows it holds on (NULL counts as false) are counted by an
+        observation in the pinning pass. At lakehouse scale the same
         statement maps to Delta/Iceberg MERGE INTO / DELETE FROM — this
         path is the engine-internal table implementation. Returns a
-        1-row DataFrame with the affected-row count (the MySQL-protocol
-        OK packet's rows-matched), or None if `text` is not DML."""
+        1-row reply with the affected-row count (the MySQL-protocol OK
+        packet's rows-matched; collecting it runs no job), or None if
+        `text` is not DML."""
         import re
-
-        from pyspark.sql import functions as F
 
         from doris_spark.plans.dialect import dialect
         from doris_spark.plans.sql_macros import rewrite as _rw
@@ -654,8 +698,10 @@ class Engine:
             # pin the transformed slice (bounded by the touched
             # partitions, not the table) — Spark refuses to overwrite a
             # path that is still being read from otherwise
-            new_slice = transform(slice_df).select(*cur.columns).localCheckpoint(
-                eager=True
+            new_slice = (
+                transform(_counting(slice_df, cond)[0])
+                .select(*cur.columns)
+                .localCheckpoint(eager=True)
             )
             # dynamic overwrite only replaces partitions PRESENT in the
             # written data — a DELETE that empties a partition must drop
@@ -732,12 +778,13 @@ class Engine:
             slice_df = base.withColumn(
                 "__f", F.col("_metadata.file_path")
             ).filter(F.col("__f").isin(files)).drop("__f")
-            affected = slice_df.filter(F.expr(cond)).count()
+            src, obs = _counting(slice_df, cond)
             new_slice = (
-                transform(slice_df)
+                transform(src)
                 .select(*base.columns)
                 .localCheckpoint(eager=True)
             )
+            affected = obs.get["n"]
             new_slice.write.mode("append").insertInto(name)
             # the append committed: the superseded files MUST go, or the
             # table silently holds duplicate rows. Verify every unlink
@@ -777,17 +824,14 @@ class Engine:
             cond = rewrite(where)
 
             def _del_transform(s):
-                return s.filter(~F.coalesce(F.expr(cond), F.lit(False)))
+                return s.filter(~F.col("__hit")).drop("__hit")
 
             pruned = _pruned_rewrite(cond, _del_transform)
             if pruned is None:
                 pruned = _file_pruned_rewrite(cond, _del_transform)
             if pruned is not None:
-                return self.spark.createDataFrame(
-                    [(pruned,)], "affected BIGINT"
-                )
-            affected = cur.filter(F.expr(cond)).count()
-            new = _del_transform(cur)
+                return self._reply("affected", pruned)
+            transform = _del_transform
         else:
             assigns_src, where = _split_where(tail)
             # split assignments on top-level commas (quote/paren aware)
@@ -825,10 +869,8 @@ class Engine:
             def _upd_transform(s):
                 return s.select(
                     *[
-                        F.expr(
-                            f"CASE WHEN coalesce({cond}, false) THEN ({assigns[c]}) "
-                            f"ELSE `{c}` END"
-                        )
+                        F.when(F.col("__hit"), F.expr(assigns[c]))
+                        .otherwise(F.col(f"`{c}`"))
                         .cast(cur.schema[c].dataType)
                         .alias(c)
                         if c in assigns
@@ -846,17 +888,21 @@ class Engine:
                 if pruned is None:
                     pruned = _file_pruned_rewrite(cond, _upd_transform)
                 if pruned is not None:
-                    return self.spark.createDataFrame(
-                        [(pruned,)], "affected BIGINT"
-                    )
-            affected = cur.filter(F.expr(cond)).count()
-            new = _upd_transform(cur)
-        # pin the new snapshot: breaks the self-referential lineage and
-        # keeps repeated DML from stacking plan depth
-        new = new.localCheckpoint(eager=True)
-        new.createOrReplaceTempView(name)
-        self._views[name] = new
-        return self.spark.createDataFrame([(affected,)], "affected BIGINT")
+                    return self._reply("affected", pruned)
+            transform = _upd_transform
+            meta = self._meta.get(name)
+            merge = _keys_view(meta) if meta else None
+            if merge and set(assigns) & {*meta["keys"], meta["delete_col"]}:
+                # an UPDATE of a key or delete column can collide or drop
+                # keys: re-apply the keys model, so the snapshot stays one
+                # merged row per key (the invariant merge_touched_keys
+                # relies on)
+                transform = lambda s: merge(_upd_transform(s))  # noqa: E731
+        # one job: the rewrite is pinned, and the same pass counts the rows
+        # the predicate holds on
+        src, obs = _counting(cur, cond)
+        self._publish(name, transform(src))
+        return self._reply("affected", obs.get["n"])
 
     def table(self, name: str) -> DataFrame:
         """DataFrame handle honoring the table's keys model (UNIQUE/AGG
@@ -878,14 +924,16 @@ class Engine:
         Doris InsertIntoTableCommand analog on the keys-model catalog:
         new rows are appended to the table snapshot and the keys model
         re-applies — UNIQUE tables upsert (latest sequence_col wins),
-        AGG tables re-aggregate, DUP tables append. The snapshot is
-        pinned with localCheckpoint like the UPDATE/DELETE path (one
-        statement = one visible transaction). Returns the 1-row
-        affected-count DataFrame (the MySQL OK packet). Tables created
-        outside create_table (plain views) are not insert targets."""
+        AGG tables re-aggregate, DUP tables append. The batch is pinned
+        first (and counted in that job); a UNIQUE or AGG merge then
+        re-merges only the stored rows whose keys the batch carries
+        (table_models.merge_touched_keys), so its cost follows the batch,
+        not the table. The new snapshot is pinned with localCheckpoint
+        like the UPDATE/DELETE path (one statement = one visible
+        transaction). Returns the 1-row affected-count reply (the MySQL
+        OK packet). Tables created outside create_table (plain views) are
+        not insert targets."""
         import re
-
-        from pyspark.sql import functions as F
 
         m = re.match(
             r"^\s*INSERT\s+INTO\s+`?(\w+)`?\s*(\(([^)]*)\))?\s*", text, re.I | re.S
@@ -971,27 +1019,33 @@ class Engine:
                     F.col(ai), (F.lit(start) + F.row_number().over(w)).cast(sch[ai])
                 ),
             )
-        n_new = aligned.count()
+        # pin the batch, counting it in the same job: the merge below reads
+        # it twice (its keys and its rows), and both reads must see the
+        # same rows even when the source is not deterministic
+        src, obs = _counting(aligned)
+        pinned = src.drop("__hit").localCheckpoint(eager=True)
+        # a relation built over the pinned rows, not the checkpoint itself:
+        # the checkpoint keeps its source plan's constraints, and when the
+        # batch was selected from this very table the optimizer fails on
+        # them in the merge's union (Union.rewriteConstraints: key not found)
+        batch = DataFrame(
+            self.spark._jsparkSession.createDataFrame(
+                pinned._jdf.rdd(), pinned._jdf.schema()),
+            self.spark,
+        )
 
         meta = self._meta[name]
-        combined = cur.unionByName(aligned)
-        kt = meta["keys_type"]
-        if kt == "UNIQUE_KEYS":
-            view = unique_key_view(
-                combined, meta["keys"], meta["sequence_col"],
-                delete_col=meta["delete_col"],
-            )
-        elif kt == "AGG_KEYS":
-            view = agg_key_view(
-                combined, meta["keys"], meta["agg_spec"],
-                sequence_col=meta["sequence_col"],
-            )
+        merge = _keys_view(meta)
+        if merge is None:
+            view = cur.unionByName(batch)
         else:
-            view = combined
-        view = view.localCheckpoint(eager=True)
-        view.createOrReplaceTempView(name)
-        self._views[name] = view
-        return self.spark.createDataFrame([(n_new,)], "affected_rows bigint")
+            view = merge_touched_keys(cur, batch, meta["keys"], merge)
+            if name in self._parts:
+                # the union adds the merged rows' partitions: fold them back
+                # in, so reads over the snapshot keep its task count
+                view = view.coalesce(max(1, self._parts[name]))
+        self._publish(name, view)
+        return self._reply("affected_rows", obs.get["n"])
 
     def _catalog_insert_complex(self, name: str, text: str, m):
         """INSERT INTO <catalog table> VALUES with string literals bound
@@ -1004,7 +1058,6 @@ class Engine:
         test_coalesce.groovy map/array/struct fixtures)."""
         import re
 
-        from pyspark.sql import functions as F
         from pyspark.sql.types import ArrayType, MapType, StructType
 
         tail = text[m.end():].rstrip().rstrip(";")
@@ -1056,9 +1109,7 @@ class Engine:
         aligned = new.select(*[conv(c) for c in cur.columns])
         n_new = aligned.count()
         aligned.coalesce(1).write.insertInto(name)
-        return self.spark.createDataFrame(
-            [(n_new,)], "affected_rows bigint"
-        )
+        return self._reply("affected_rows", n_new)
 
     def create_table(
         self,
@@ -1080,21 +1131,15 @@ class Engine:
         is registered as a temp view under `name` so sql() sees merged
         semantics — exactly what a Doris reader gets."""
         kt = keys_type.upper()
-        if kt == "DUP_KEYS":
-            view = df
-        elif kt == "UNIQUE_KEYS":
+        if kt == "UNIQUE_KEYS":
             if not keys or sequence_col is None:
                 raise ValueError("UNIQUE_KEYS requires keys and sequence_col")
-            view = unique_key_view(df, keys, sequence_col, delete_col=delete_col)
         elif kt == "AGG_KEYS":
             if not keys or not agg_spec:
                 raise ValueError("AGG_KEYS requires keys and agg_spec")
-            view = agg_key_view(df, keys, agg_spec, sequence_col=sequence_col)
-        else:
+        elif kt != "DUP_KEYS":
             raise ValueError(f"unknown keys_type {keys_type}")
-        view.createOrReplaceTempView(name)
-        self._views[name] = view
-        self._meta[name] = {
+        meta = {
             "keys_type": kt,
             "keys": list(keys),
             "sequence_col": sequence_col,
@@ -1102,6 +1147,12 @@ class Engine:
             "agg_spec": dict(agg_spec) if agg_spec else None,
             "auto_increment": auto_increment,
         }
+        merge = _keys_view(meta)
+        view = merge(df) if merge else df
+        view.createOrReplaceTempView(name)
+        self._views[name] = view
+        self._parts.pop(name, None)
+        self._meta[name] = meta
         return view
 
     def register_mv(
@@ -1130,6 +1181,7 @@ class Engine:
     def drop_table(self, name: str) -> None:
         self.spark.catalog.dropTempView(name)
         self._views.pop(name, None)
+        self._parts.pop(name, None)
 
 
 def _inline_sql_function(stmt: str, fname: str) -> str | None:

@@ -11,11 +11,18 @@ bitmaps be/src/storage/delete/delete_bitmap_calculator.h.
   be/src/load/.../partial_update_info.h). row_number window, one shuffle on
   the key; Catalyst may rewrite to InferWindowGroupLimit (partition top-1).
 - AGG_KEYS: per-column pre-aggregation view (SUM/MIN/MAX/REPLACE).
+
+An INSERT into a UNIQUE or AGG table re-merges only the keys its batch
+carries (merge_touched_keys): like a merge-on-write load, which writes the
+new rows plus a delete bitmap for the keys they supersede, its cost follows
+the batch, not the table.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+import operator
+from collections.abc import Callable, Mapping, Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -67,6 +74,29 @@ def agg_key_view(
         else:
             raise ValueError(f"unsupported aggregate type {how}")
     return df.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
+
+
+def merge_touched_keys(
+    cur: DataFrame,
+    batch: DataFrame,
+    keys: Sequence[str],
+    view: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """`view(cur ∪ batch)` for a `cur` that is already `view`'s output (at
+    most one merged row per key), re-merging only the keys `batch` touches:
+
+        view(cur ∪ batch) = (cur ⋉̸ K) ∪ view((cur ⋉ K) ∪ batch),  K = keys of batch
+
+    Rows whose key the batch does not carry pass through unchanged. Keys match
+    null-safely, because the window and groupBy of the views put NULL keys in
+    one group. K (the batch's key columns) is broadcast, so the stored side
+    is never shuffled; only the touched rows and the batch are merged."""
+    bk = [f"__bk{i}" for i in range(len(keys))]
+    touched_keys = F.broadcast(batch.select(*[F.col(k).alias(b) for k, b in zip(keys, bk)]))
+    on = reduce(operator.and_, [F.col(k).eqNullSafe(F.col(b)) for k, b in zip(keys, bk)])
+    kept = cur.join(touched_keys, on, "left_anti")
+    touched = cur.join(touched_keys, on, "left_semi")
+    return kept.unionByName(view(touched.unionByName(batch)))
 
 
 def partial_update(

@@ -170,10 +170,6 @@ def _parse(text: str):
     return None
 
 
-def _status(spark, msg: str) -> DataFrame:
-    return spark.createDataFrame([(msg,)], "status string")
-
-
 def apply_schema_change(eng, text: str) -> DataFrame | None:
     """Execute an ALTER TABLE column schema change; None if `text` isn't
     one (caller continues down the statement router)."""
@@ -207,7 +203,7 @@ def apply_schema_change(eng, text: str) -> DataFrame | None:
         spark.sql(f"ALTER TABLE `{name}` ADD COLUMNS ({cols})")
         spark.catalog.refreshTable(name)
         _register_hints(ops)
-        return _status(spark, f"ADD COLUMN metadata-only ({len(ops)} col)")
+        return eng._reply("status", f"ADD COLUMN metadata-only ({len(ops)} col)", "string")
 
     # ---- direct schema change: one distributed transform pass
     cur = eng.table(name) if view_backed else spark.table(name)
@@ -267,9 +263,16 @@ def apply_schema_change(eng, text: str) -> DataFrame | None:
     ndf = cur.select(*[F.expr(e).alias(c) for c, e in exprs])
 
     if view_backed:
-        snap = ndf.localCheckpoint(eager=True)
-        snap.createOrReplaceTempView(name)
-        eng._views[name] = snap
+        from doris_spark.engine import _keys_view
+
+        merge = _keys_view(meta) if meta else None
+        if merge and any(o["kind"] == "modify" and o["col"].lower() in keys
+                         for o in ops):
+            # a narrowing key type can fold distinct keys into one:
+            # re-apply the keys model, so the snapshot keeps one merged
+            # row per key (the invariant keyed INSERTs rely on)
+            ndf = merge(ndf)
+        eng._publish(name, ndf)
         if meta:
             ren = {o["old"].lower(): o["new"] for o in ops
                    if o["kind"] == "rename"}
@@ -280,7 +283,7 @@ def apply_schema_change(eng, text: str) -> DataFrame | None:
                         meta["sequence_col"].lower(), meta["sequence_col"]
                     )
         _register_hints(ops)
-        return _status(spark, f"schema change applied ({len(ops)} op)")
+        return eng._reply("status", f"schema change applied ({len(ops)} op)", "string")
 
     # catalog table: distributed rewrite -> staging table -> atomic swap
     parts = [
@@ -329,7 +332,7 @@ def apply_schema_change(eng, text: str) -> DataFrame | None:
         spark.sql(f"MSCK REPAIR TABLE `{name}`")
     spark.catalog.refreshTable(name)
     _register_hints(ops)
-    return _status(spark, f"schema change rewrote table ({len(ops)} op)")
+    return eng._reply("status", f"schema change rewrote table ({len(ops)} op)", "string")
 
 
 def _register_hints(ops) -> None:

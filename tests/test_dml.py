@@ -1,10 +1,14 @@
-"""Engine.sql UPDATE / DELETE (Doris DML surface).
+"""Engine.sql UPDATE / DELETE / INSERT (Doris DML surface).
 
 Reference: fe/fe-core/.../nereids/trees/plans/commands/UpdateCommand.java
 and DeleteFromCommand.java — UPDATE plans an insert of rewritten rows on
 a UNIQUE table; DELETE filters by predicate. Here both are snapshot
-rewrites of the backing view (engine.Engine._dml); at lakehouse scale
-the same statements map to Delta/Iceberg MERGE/DELETE.
+rewrites of the backing view (engine.Engine._dml), pinned in one Spark job
+that also counts the affected rows; at lakehouse scale the same statements
+map to Delta/Iceberg MERGE/DELETE. An INSERT into a UNIQUE or AGG table
+re-merges only the keys its batch touches
+(table_models.merge_touched_keys); the tests below pin that against the
+whole-table re-merge, and pin that statement replies run no Spark job.
 """
 
 from __future__ import annotations
@@ -418,3 +422,211 @@ def test_file_pruned_dml_unpartitioned(spark, tmp_path):
     assert len(before2 & after2) >= 2
     assert spark.table("fp_dml_t").count() == 14
     spark.sql("DROP TABLE IF EXISTS fp_dml_t")
+
+
+# ------------------------------------------- touched-keys merge and job counts
+
+
+def _sorted(df):
+    return sorted((tuple(r) for r in df.collect()),
+                  key=lambda r: [(x is None, x) for x in r])
+
+
+def test_insert_batch_with_two_rows_of_one_key_keeps_higher_sequence(spark):
+    eng = Engine(spark)
+    base = spark.createDataFrame(
+        [(1, 10, "old"), (2, 10, "keep")], "id bigint, ver int, v string")
+    eng.create_table(base, "tk_dup_key", keys_type="UNIQUE_KEYS",
+                     keys=["id"], sequence_col="ver")
+    ok = eng.sql("INSERT INTO tk_dup_key VALUES (1, 30, 'hi'), (1, 20, 'lo'), "
+                 "(3, 7, 'b'), (3, 9, 'a')").collect()
+    assert ok[0]["affected_rows"] == 4
+    assert _sorted(eng.table("tk_dup_key")) == [
+        (1, 30, "hi"), (2, 10, "keep"), (3, 9, "a")]
+
+
+def test_insert_tombstone_drops_key_only_when_newer(spark):
+    eng = Engine(spark)
+    base = spark.createDataFrame(
+        [(1, 10, "x", False), (2, 10, "y", False), (3, 10, "z", False)],
+        "id bigint, ver int, v string, del boolean")
+    eng.create_table(base, "tk_tomb", keys_type="UNIQUE_KEYS", keys=["id"],
+                     sequence_col="ver", delete_col="del")
+    eng.sql("INSERT INTO tk_tomb VALUES (1, 20, 'x', true), (2, 5, 'y2', true)")
+    assert _sorted(eng.table("tk_tomb")) == [(2, 10, "y", False), (3, 10, "z", False)]
+    # a newer live row brings a dropped key back
+    eng.sql("INSERT INTO tk_tomb VALUES (1, 30, 'back', false)")
+    assert _sorted(eng.table("tk_tomb")) == [
+        (1, 30, "back", False), (2, 10, "y", False), (3, 10, "z", False)]
+
+
+def test_insert_null_key_merges_with_stored_null_key(spark):
+    eng = Engine(spark)
+    base = spark.createDataFrame(
+        [(None, 1, "n1"), (5, 1, "five")], "id bigint, ver int, v string")
+    eng.create_table(base, "tk_null", keys_type="UNIQUE_KEYS",
+                     keys=["id"], sequence_col="ver")
+    eng.sql("INSERT INTO tk_null VALUES (NULL, 2, 'n2')")
+    assert _sorted(eng.table("tk_null")) == [(5, 1, "five"), (None, 2, "n2")]
+    eng.sql("INSERT INTO tk_null VALUES (NULL, 0, 'stale')")
+    assert _sorted(eng.table("tk_null")) == [(5, 1, "five"), (None, 2, "n2")]
+
+
+def test_insert_agg_keys_leaves_untouched_keys_unchanged(spark):
+    eng = Engine(spark)
+    base = spark.createDataFrame(
+        [(1, 5.0, 3, 9, 1, "a"), (1, 2.0, 1, 4, 2, "b"),
+         (2, 7.0, 8, 8, 1, "c"), (3, 1.0, 2, 2, 1, "d")],
+        "id bigint, s double, lo int, hi int, ver int, r string")
+    eng.create_table(base, "tk_agg", keys_type="AGG_KEYS", keys=["id"],
+                     sequence_col="ver",
+                     agg_spec={"s": "SUM", "lo": "MIN", "hi": "MAX",
+                               "ver": "MAX", "r": "REPLACE"})
+    before = {r["id"]: tuple(r) for r in eng.table("tk_agg").collect()}
+    assert before[1] == (1, 7.0, 1, 9, 2, "b")
+    eng.sql("INSERT INTO tk_agg VALUES (2, 1.5, 0, 20, 3, 'c2'), (4, 4.0, 4, 4, 1, 'e')")
+    after = {r["id"]: tuple(r) for r in eng.table("tk_agg").collect()}
+    assert after[1] == before[1] and after[3] == before[3]
+    assert after[2] == (2, 8.5, 0, 20, 3, "c2")
+    assert after[4] == (4, 4.0, 4, 4, 1, "e")
+
+
+def test_touched_keys_insert_matches_whole_table_remerge(spark):
+    """The engine's keyed INSERT equals the keys model applied to the whole
+    table plus the batch (what every INSERT computed before), over NULL
+    keys, repeated keys in one batch, tombstones and a composite key."""
+    import random
+
+    from doris_spark.operators.table_models import unique_key_view
+
+    rng = random.Random(11)
+    eng = Engine(spark)
+    schema = "a int, b string, ver int, v int, del boolean"
+    key = lambda: (rng.choice([None, 1, 2, 3]), rng.choice([None, "p", "q"]))  # noqa: E731
+    seqs = iter(rng.sample(range(1, 10_000), 200))  # distinct: no ties
+    rows = [(*key(), next(seqs), rng.randrange(100), rng.random() < 0.2)
+            for _ in range(30)]
+    eng.create_table(spark.createDataFrame(rows, schema), "tk_prop",
+                     keys_type="UNIQUE_KEYS", keys=["a", "b"],
+                     sequence_col="ver", delete_col="del")
+    for _ in range(4):
+        cur = eng.table("tk_prop")
+        batch = [(*key(), next(seqs), rng.randrange(100), rng.random() < 0.2)
+                 for _ in range(6)]
+        expect = _sorted(unique_key_view(
+            cur.unionByName(spark.createDataFrame(batch, schema)),
+            ["a", "b"], "ver", delete_col="del"))
+        values = ", ".join(
+            "(" + ", ".join("NULL" if x is None else repr(x).lower()
+                            if isinstance(x, bool) else repr(x) for x in r) + ")"
+            for r in batch)
+        eng.sql(f"INSERT INTO tk_prop VALUES {values}")
+        assert _sorted(eng.table("tk_prop")) == expect
+
+
+def test_insert_select_from_the_table_itself(spark):
+    """A batch selected from the target table shares its lineage; the merge
+    must still replace exactly the touched keys, on the lazy base view and
+    on a pinned snapshot."""
+    eng = Engine(spark)
+    base = spark.createDataFrame(
+        [(i, 1, f"v{i}") for i in range(1, 7)], "id bigint, ver bigint, v string")
+    eng.create_table(base.filter("id < 6"), "tk_self", keys_type="UNIQUE_KEYS",
+                     keys=["id"], sequence_col="ver")
+    ok = eng.sql("INSERT INTO tk_self SELECT id, ver + 1, concat(v, '!') "
+                 "FROM tk_self WHERE id <= 2").collect()
+    assert ok[0]["affected_rows"] == 2
+    eng.sql("INSERT INTO tk_self SELECT id + 10, ver, v FROM tk_self WHERE id > 3")
+    assert _sorted(eng.table("tk_self")) == [
+        (1, 2, "v1!"), (2, 2, "v2!"), (3, 1, "v3"), (4, 1, "v4"), (5, 1, "v5"),
+        (14, 1, "v4"), (15, 1, "v5")]
+
+
+def test_writes_with_empty_inputs_reply_zero(spark):
+    eng = Engine(spark)
+    eng.create_table(
+        spark.createDataFrame([(1, 1, "a"), (2, 1, "b")], "id int, ver int, v string"),
+        "tk_empty", keys_type="UNIQUE_KEYS", keys=["id"], sequence_col="ver")
+    assert eng.sql("INSERT INTO tk_empty SELECT * FROM tk_empty WHERE false"
+                   ).collect()[0][0] == 0
+    eng.sql("TRUNCATE TABLE tk_empty")
+    assert eng.sql("UPDATE tk_empty SET v = 'x'").collect()[0][0] == 0
+    assert eng.sql("DELETE FROM tk_empty WHERE id = 1").collect()[0][0] == 0
+    assert eng.sql("INSERT INTO tk_empty VALUES (4, 1, 'd')").collect()[0][0] == 1
+    assert _sorted(eng.table("tk_empty")) == [(4, 1, "d")]
+
+
+def test_update_delete_do_not_count_null_predicate_rows(spark):
+    eng = Engine(spark)
+    base = spark.createDataFrame(
+        [(1, 150.0, 1), (2, None, 1), (3, 50.0, 1), (4, 300.0, 1)],
+        "id int, amount double, ver int")
+    eng.create_table(base, "tk_nullpred", keys_type="UNIQUE_KEYS",
+                     keys=["id"], sequence_col="ver")
+    res = eng.sql("UPDATE tk_nullpred SET ver = 2 WHERE amount > 100").collect()
+    assert res[0]["affected"] == 2
+    assert _sorted(eng.table("tk_nullpred")) == [
+        (1, 150.0, 2), (2, None, 1), (3, 50.0, 1), (4, 300.0, 2)]
+    res = eng.sql("DELETE FROM tk_nullpred WHERE amount < 200").collect()
+    assert res[0]["affected"] == 2
+    assert _sorted(eng.table("tk_nullpred")) == [(2, None, 1), (4, 300.0, 2)]
+
+
+def test_update_of_key_column_keeps_one_row_per_key(spark):
+    eng = Engine(spark)
+    base = spark.createDataFrame(
+        [(1, 5, "a"), (2, 9, "b")], "id int, ver int, v string")
+    eng.create_table(base, "tk_keyupd", keys_type="UNIQUE_KEYS",
+                     keys=["id"], sequence_col="ver")
+    assert eng.sql("UPDATE tk_keyupd SET id = 2 WHERE id = 1").collect()[0][0] == 1
+    assert _sorted(eng.table("tk_keyupd")) == [(2, 9, "b")]
+    eng.sql("INSERT INTO tk_keyupd VALUES (3, 1, 'c')")
+    assert _sorted(eng.table("tk_keyupd")) == [(2, 9, "b"), (3, 1, "c")]
+
+
+def test_modify_of_key_column_keeps_one_row_per_key(spark):
+    eng = Engine(spark)
+    base = spark.createDataFrame(
+        [(1.2, 1, "a"), (1.7, 2, "b"), (3.0, 1, "c")], "k double, ver int, v string")
+    eng.create_table(base, "tk_keymod", keys_type="UNIQUE_KEYS",
+                     keys=["k"], sequence_col="ver")
+    eng.sql("ALTER TABLE tk_keymod MODIFY COLUMN k INT")
+    assert _sorted(eng.table("tk_keymod")) == [(1, 2, "b"), (3, 1, "c")]
+
+
+def _job_count(spark, action):
+    """Spark jobs `action()` starts, counted through a job group and the
+    status tracker (as tools/jobcount.py counts them)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_replies_run_no_job_and_update_delete_one_job(spark):
+    eng = Engine(spark)
+    base = spark.createDataFrame(
+        [(i, i % 7, 1) for i in range(200)], "id int, v int, ver int")
+    eng.create_table(base, "tk_jobs", keys_type="UNIQUE_KEYS",
+                     keys=["id"], sequence_col="ver")
+    for text in ("UPDATE tk_jobs SET v = v + 1 WHERE id < 10",
+                 "DELETE FROM tk_jobs WHERE id = 3",
+                 "INSERT INTO tk_jobs VALUES (500, 1, 2), (4, 0, 2)"):
+        reply = eng.sql(text)
+        assert _job_count(spark, reply.collect) == 0, text
+        assert reply.schema[0].dataType.simpleString() == "bigint"
+    # the table is a pinned snapshot now: each UPDATE / DELETE is one pass
+    for text, where in (("UPDATE tk_jobs SET v = 0 WHERE v = 3", "v = 3"),
+                        ("DELETE FROM tk_jobs WHERE v = 0", "v = 0")):
+        n = eng.sql(f"SELECT count(*) FROM tk_jobs WHERE {where}").collect()[0][0]
+        out = []
+        assert _job_count(spark, lambda t=text: out.append(eng.sql(t).collect())) == 1, text
+        assert out[0][0]["affected"] == n

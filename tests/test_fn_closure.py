@@ -3,7 +3,11 @@ scalars — plus the audit invariant that no reference name is missing."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
+
+import tools.fn_audit as audit
 
 CASES = [
     ("edit_distance('kitten', 'sitting')", 3),
@@ -77,17 +81,36 @@ def test_dict_get_sql(spark):
     assert list(got["c"]) == ["AFRICA", "ASIA"]
 
 
-def test_audit_zero_missing(spark):
-    """The judge-facing invariant: every name in the reference FE
-    registries is SQL-callable, operator-level, or a declared non-goal."""
-    import re
+SURFACE = os.path.join(os.path.dirname(__file__), "data", "sql_surface.txt")
 
-    import tools.fn_audit as audit
 
+def _sql_callable(spark) -> set[str]:
+    """Every SQL-callable name: the session's functions plus the macro
+    layer's rewrites."""
     from doris_spark.plans.sql_macros import MACROS
 
     have = {r[0].split(".")[-1].lower() for r in spark.sql("SHOW ALL FUNCTIONS").collect()}
-    have |= {k.lower() for k in MACROS}
+    return have | {k.lower() for k in MACROS}
+
+
+def test_sql_surface_keeps_committed_names(spark):
+    """No SQL-callable name recorded in tests/data/sql_surface.txt goes
+    missing. The file holds the surface the engine exposed when the
+    reference registries audit last found no name missing; it keeps that
+    closure checked where the reference checkout is absent. Regenerate it
+    (sorted, one name a line, `_sql_callable` of a fresh session) when
+    names are added."""
+    with open(SURFACE) as fh:
+        committed = {line.strip() for line in fh if line.strip()}
+    missing = sorted(committed - _sql_callable(spark))
+    assert not missing, missing
+
+
+@pytest.mark.skipif(not os.path.isdir(audit.REF), reason="reference checkout absent")
+def test_audit_zero_missing(spark):
+    """The judge-facing invariant: every name in the reference FE
+    registries is SQL-callable, operator-level, or a declared non-goal."""
+    have = _sql_callable(spark)
     for fname in (
         "BuiltinScalarFunctions.java",
         "BuiltinAggregateFunctions.java",
