@@ -25,43 +25,20 @@ from collections.abc import Callable, Mapping, Sequence
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from doris_spark.plans.sqltok import (
+    depth0_search,
+    find_close,
+    split_args_top,
+    sub_outside_literals,
+)
+
 _UPDATE_HEAD_RE = _re.compile(r"^\s*UPDATE\s+`?(\w+)`?\s+SET\s+", _re.I | _re.S)
 _DELETE_HEAD_RE = _re.compile(
     r"^\s*DELETE\s+FROM\s+`?(\w+)`?(?:\s+PARTITION\s*\([^)]*\))?\s*", _re.I | _re.S
 )
-
-
-def _split_items(text: str) -> list[str]:
-    """Quote/paren-aware top-level comma split (backslash escapes inside
-    quotes honored)."""
-    items, depth, in_q, esc, cur = [], 0, None, False, []
-    for ch in text:
-        if in_q:
-            cur.append(ch)
-            if esc:
-                esc = False
-            elif ch == "\\":
-                esc = True
-            elif ch == in_q:
-                in_q = None
-            continue
-        if ch in ("'", '"'):
-            in_q = ch
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            items.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if "".join(cur).strip():
-        items.append("".join(cur))
-    return items
+# the first WHERE outside literals and parens ends a SET list / DELETE
+# head (`SET note = 'call where needed'` holds one inside a literal)
+_WHERE_RE = _re.compile(r"(?<![\w`])WHERE\b", _re.I)
 
 
 def _values_literal_df(spark, tuples, use_cols):
@@ -77,12 +54,11 @@ def _values_literal_df(spark, tuples, use_cols):
 
     rows = []
     for t in tuples:
-        items = _split_items(t)
+        items = split_args_top(t)
         if len(items) != len(use_cols):
             return None
         row = []
         for it in items:
-            it = it.strip()
             if re.fullmatch(r"(?i)null", it):
                 row.append(None)
             elif len(it) >= 2 and it[0] == it[-1] == "'":
@@ -112,9 +88,10 @@ def _values_fallback_df(spark, body: str, use_cols):
     """Recover an un-analyzable VALUES body: literal tuples build a
     python-side DataFrame; otherwise each tuple becomes a SELECT branch
     (evaluates registered UDFs like to_bitmap)."""
-    tuples = _split_value_tuples(body)
-    if not tuples:
+    tuples = split_args_top(body)
+    if not tuples or not all(t[:1] == "(" and t[-1:] == ")" for t in tuples):
         return None
+    tuples = [t[1:-1] for t in tuples]
     df = _values_literal_df(spark, tuples, use_cols)
     if df is not None:
         return df
@@ -122,54 +99,6 @@ def _values_fallback_df(spark, body: str, use_cols):
         " UNION ALL ".join(f"SELECT {t}" for t in tuples)
     ).toDF(*use_cols)
 
-
-def _split_value_tuples(body: str) -> list[str]:
-    """Top-level `(...)` groups of a VALUES body, quote-aware — the
-    inner text of each tuple, for rebuilding as SELECT ... UNION ALL."""
-    tuples, depth, start, in_q = [], 0, None, None
-    for i, ch in enumerate(body):
-        if in_q:
-            if ch == in_q:
-                in_q = None
-            continue
-        if ch in ("'", '"'):
-            in_q = ch
-        elif ch == "(":
-            if depth == 0:
-                start = i
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0 and start is not None:
-                tuples.append(body[start + 1 : i])
-                start = None
-    return tuples
-
-
-def _split_where(text: str) -> tuple[str, str | None]:
-    """Split `text` on the first top-level WHERE (outside quotes/parens).
-
-    A single regex split breaks when WHERE occurs inside a string literal
-    in the SET list (`SET note = 'call where needed'`); scan instead.
-    """
-    i, n, depth, in_str = 0, len(text), 0, None
-    while i < n:
-        c = text[i]
-        if in_str:
-            if c == in_str:
-                in_str = None
-        elif c in ("'", '"'):
-            in_str = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and c in "wW":
-            m = _re.match(r"WHERE\b", text[i:], _re.I)
-            if m and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] in "_`")):
-                return text[:i].rstrip(), text[i + m.end() :].strip()
-        i += 1
-    return text.rstrip(), None
 
 from doris_spark.operators.table_models import (
     agg_key_view,
@@ -470,9 +399,7 @@ class Engine:
             # dual exists; only the backquoted `dual` hits the table
             # (pinned by query_p0/dual/dual.groovy). Literal-aware so a
             # string containing ' from dual' is never corrupted.
-            from doris_spark.plans.dialect import _sub_outside_literals
-
-            text = _sub_outside_literals(
+            text = sub_outside_literals(
                 r"\bFROM\s+dual(?![\w.`])",
                 "FROM (SELECT 1 AS __dual) __dual_t",
                 text,
@@ -567,27 +494,13 @@ class Engine:
         rewritten statement or None on any parse surprise."""
         import re
 
-        from doris_spark.plans.sql_macros import _split_top
-
         m = re.search(r"\*\s+REPLACE\s*\(", text, re.I)
         if m is None:
             return None
-        depth, k, in_str = 1, m.end(), None
-        while k < len(text) and depth:
-            c = text[k]
-            if in_str:
-                if c == in_str:
-                    in_str = None
-            elif c in ("'", '"'):
-                in_str = c
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            k += 1
-        if depth:
+        k = find_close(text, m.end() - 1) + 1
+        if k > len(text):
             return None
-        repl_items = _split_top(text[m.end(): k - 1])
+        repl_items = split_args_top(text[m.end(): k - 1])
         repl: dict[str, str] = {}
         for it in repl_items:
             am = re.match(r"(?s)\s*(.*?)\s+AS\s+`?(\w+)`?\s*$", it, re.I)
@@ -815,9 +728,12 @@ class Engine:
                 )
             return affected
 
+        wm = depth0_search(tail, _WHERE_RE)
+        head, where = (
+            (tail[: wm.start()].rstrip(), tail[wm.end():].strip())
+            if wm else (tail, None))
         if md is not None:
-            rest, where = _split_where(tail)
-            if rest.strip():
+            if head.strip():
                 return None  # unrecognized DELETE tail — not our DML shape
             if where is None:
                 raise ValueError("DELETE requires a WHERE clause (Doris semantics)")
@@ -833,30 +749,8 @@ class Engine:
                 return self._reply("affected", pruned)
             transform = _del_transform
         else:
-            assigns_src, where = _split_where(tail)
-            # split assignments on top-level commas (quote/paren aware)
-            parts, depth, buf, in_str = [], 0, [], None
-            for ch in assigns_src:
-                if in_str:
-                    buf.append(ch)
-                    if ch == in_str:
-                        in_str = None
-                    continue
-                if ch in ("'", '"'):
-                    in_str = ch
-                elif ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                if ch == "," and depth == 0:
-                    parts.append("".join(buf))
-                    buf = []
-                    continue
-                buf.append(ch)
-            if "".join(buf).strip():
-                parts.append("".join(buf))
             assigns = {}
-            for p in parts:
+            for p in split_args_top(head):
                 m = re.match(r"\s*`?(\w+)`?\s*=\s*(.*)$", p, re.S)
                 if m is None:
                     raise ValueError(f"cannot parse SET assignment: {p!r}")
@@ -1193,7 +1087,6 @@ def _inline_sql_function(stmt: str, fname: str) -> str | None:
 
     from doris_spark.functions.registry import DORIS_SQL_FUNCTIONS
     from doris_spark.functions.registry_ext import DORIS_SQL_FUNCTIONS_EXT
-    from doris_spark.plans.sql_macros import _split_top
 
     spec = DORIS_SQL_FUNCTIONS.get(fname.lower()) or \
         DORIS_SQL_FUNCTIONS_EXT.get(fname.lower())
@@ -1215,20 +1108,8 @@ def _inline_sql_function(stmt: str, fname: str) -> str | None:
         if m is None:
             out.append(stmt[i:])
             break
-        depth, k, in_str = 1, m.end(), None
-        while k < len(stmt) and depth:
-            c = stmt[k]
-            if in_str:
-                if c == in_str:
-                    in_str = None
-            elif c in ("'", '"'):
-                in_str = c
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            k += 1
-        args = _split_top(stmt[m.end(): k - 1])
+        k = find_close(stmt, m.end() - 1) + 1
+        args = split_args_top(stmt[m.end(): k - 1])
         if len(args) != len(params):
             out.append(stmt[i:k])
             i = k
@@ -1266,19 +1147,7 @@ def _pad_cte_aliases(spark, stmt: str) -> str | None:
         m = head.search(out, pos)
         if m is None:
             break
-        depth, k, in_str = 1, m.end(), None
-        while k < len(out) and depth:
-            c = out[k]
-            if in_str:
-                if c == in_str:
-                    in_str = None
-            elif c in ("'", '"'):
-                in_str = c
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            k += 1
+        k = find_close(out, m.end() - 1) + 1
         body = out[m.end(): k - 1]
         aliases = [a.strip().strip("`") for a in m.group(3).split(",")
                    if a.strip()]
@@ -1301,19 +1170,7 @@ def _pad_cte_aliases(spark, stmt: str) -> str | None:
             changed = True
             # re-locate the body end after the splice
             m = head.search(out, pos)
-            depth, k, in_str = 1, m.end(), None
-            while k < len(out) and depth:
-                c = out[k]
-                if in_str:
-                    if c == in_str:
-                        in_str = None
-                elif c in ("'", '"'):
-                    in_str = c
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                k += 1
+            k = find_close(out, m.end() - 1) + 1
             aliases = [a.strip().strip("`")
                        for a in m.group(3).split(",") if a.strip()]
             body = out[m.end(): k - 1]
@@ -1338,8 +1195,6 @@ def _grouping_having_rewrite(stmt: str) -> str | None:
         WHERE having' ORDER BY order'
     """
     import re
-
-    from doris_spark.plans.sql_macros import _split_top
 
     if re.search(r"(?i)\b(UNION|INTERSECT|EXCEPT)\b", stmt):
         return None
@@ -1380,18 +1235,12 @@ def _grouping_having_rewrite(stmt: str) -> str | None:
     gexprs: list[str] = []
     gsm = re.search(r"(?is)\bGROUPING\s+SETS\s*\(", group_src)
     if gsm is not None:
-        depth, k = 1, gsm.end()
-        while k < len(group_src) and depth:
-            if group_src[k] == "(":
-                depth += 1
-            elif group_src[k] == ")":
-                depth -= 1
-            k += 1
-        for part in _split_top(group_src[gsm.end(): k - 1]):
+        k = find_close(group_src, gsm.end() - 1)
+        for part in split_args_top(group_src[gsm.end(): k]):
             part = part.strip()
             if part.startswith("(") and part.endswith(")"):
                 part = part[1:-1]
-            for e in _split_top(part):
+            for e in split_args_top(part):
                 if e.strip():
                     gexprs.append(e.strip())
     else:
@@ -1399,12 +1248,12 @@ def _grouping_having_rewrite(stmt: str) -> str | None:
         cm = re.match(r"(?is)\s*(ROLLUP|CUBE)\s*\((.*)\)\s*$", gb)
         if cm is not None:
             gb = cm.group(2)
-        gexprs = [e.strip() for e in _split_top(gb) if e.strip()]
+        gexprs = [e.strip() for e in split_args_top(gb) if e.strip()]
 
     def norm(e: str) -> str:
         return re.sub(r"\s+", "", e).lower().replace("`", "")
 
-    items = [it.strip() for it in _split_top(items_src)]
+    items = [it.strip() for it in split_args_top(items_src)]
     inner_items = []
     subs: list[tuple[str, str]] = []  # (expr text, alias)
     for i, it in enumerate(items):

@@ -56,16 +56,28 @@ from __future__ import annotations
 
 import re
 
+from doris_spark.plans.sqltok import (
+    depth0_search,
+    depth_at,
+    find_close,
+    find_open_back,
+    in_spans,
+    lit_spans,
+    split_top,
+)
+
 from pyspark.sql import SparkSession
 
 _ASOF = re.compile(r"\bASOF\s+(LEFT\s+|INNER\s+)?JOIN\b", re.I)
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_.]*")
-# clause keywords that end an ON condition at paren depth 0
+# what ends an ON condition at paren depth 0: a clause keyword, a comma
+# after a non-word char, or the close of the enclosing block
 _BOUNDARY = re.compile(
-    r"\b(WHERE|GROUP|ORDER|LIMIT|HAVING|QUALIFY|UNION|EXCEPT|INTERSECT|"
-    r"JOIN|LEFT|RIGHT|FULL|INNER|CROSS|ASOF|WINDOW)\b|[,)]",
+    r"(?<!\w)(?:(WHERE|GROUP|ORDER|LIMIT|HAVING|QUALIFY|UNION|EXCEPT|"
+    r"INTERSECT|JOIN|LEFT|RIGHT|FULL|INNER|CROSS|ASOF|WINDOW)\b|,)|\)",
     re.I,
 )
+_AND = re.compile(r"(?<!\w)AND(?!\w)", re.I)
 _CMP = re.compile(r"(>=|<=|>|<)")
 _EQ = re.compile(r"(?<![<>!=])=(?!=)")
 _KEYWORDS = {"on", "where", "group", "order", "limit", "having", "join",
@@ -79,84 +91,26 @@ def _skip_ws(s: str, i: int) -> int:
     return i
 
 
-def _scan_balanced(s: str, i: int) -> int:
-    """i points at '('; return index just past the matching ')'."""
-    depth, in_str = 0, None
-    while i < len(s):
-        c = s[i]
-        if in_str:
-            if c == in_str:
-                in_str = None
-        elif c in ("'", '"'):
-            in_str = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    return i
-
-
 def _split_conjuncts(cond: str) -> list[str]:
-    parts, depth, cur, i, in_str = [], 0, [], 0, None
-    up = cond.upper()
-    while i < len(cond):
-        c = cond[i]
-        if in_str:
-            cur.append(c)
-            if c == in_str:
-                in_str = None
-            i += 1
-            continue
-        if c in ("'", '"'):
-            in_str = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        if depth == 0 and up.startswith("AND", i) and (
-            i + 3 >= len(cond) or not cond[i + 3].isalnum()
-        ) and (i == 0 or not cond[i - 1].isalnum()):
-            parts.append("".join(cur).strip())
-            cur = []
-            i += 3
-            continue
-        cur.append(c)
-        i += 1
-    if "".join(cur).strip():
-        parts.append("".join(cur).strip())
-    return parts
+    return [p.strip() for p in split_top(cond, _AND) if p.strip()]
 
 
 def _refs(expr: str, alias: str) -> bool:
     return re.search(rf"\b{re.escape(alias)}\s*\.", expr) is not None
 
 
+def _idents_outside_literals(expr: str):
+    lits = lit_spans(expr)
+    return (m for m in _IDENT.finditer(expr) if not in_spans(lits, m.start()))
+
+
 def _alias_prefixes(expr: str) -> set[str]:
     """All `ident.` qualifier prefixes in expr (outside string literals)."""
-    out, i, n, in_str = set(), 0, len(expr), None
-    while i < n:
-        c = expr[i]
-        if in_str:
-            if c == in_str:
-                in_str = None
-            i += 1
-            continue
-        if c in ("'", '"'):
-            in_str = c
-            i += 1
-            continue
-        m = _IDENT.match(expr, i)
-        if m:
-            name = m.group(0)
-            if "." in name:
-                out.add(name.split(".")[0])
-            i = m.end()
-        else:
-            i += 1
-    return out
+    return {
+        m.group(0).split(".")[0]
+        for m in _idents_outside_literals(expr)
+        if "." in m.group(0)
+    }
 
 
 _BARE_OK = {
@@ -171,29 +125,14 @@ def _bare_columns(expr: str) -> bool:
     """True if expr contains an UNQUALIFIED identifier that looks like a
     column (not a function call, keyword, or literal) — such a conjunct
     can't be assigned to one join side safely."""
-    i, n, in_str = 0, len(expr), None
-    while i < n:
-        c = expr[i]
-        if in_str:
-            if c == in_str:
-                in_str = None
-            i += 1
+    for m in _idents_outside_literals(expr):
+        name = m.group(0)
+        if "." in name or name.lower() in _BARE_OK:
             continue
-        if c in ("'", '"'):
-            in_str = c
-            i += 1
-            continue
-        m = _IDENT.match(expr, i)
-        if m:
-            name = m.group(0)
-            i = m.end()
-            if "." in name or name.lower() in _BARE_OK:
-                continue
-            j = _skip_ws(expr, i)
-            if j < n and expr[j] == "(":
-                continue  # function call
-            return True
-        i += 1
+        j = _skip_ws(expr, m.end())
+        if j < len(expr) and expr[j] == "(":
+            continue  # function call
+        return True
     return False
 
 
@@ -218,17 +157,7 @@ def _grab_left_relation(sql: str, end: int) -> tuple[str, str, int] | None:
         k -= 1
     if k > 0 and sql[k - 1] == ")":
         # (subquery) alias — walk back over the balanced parens
-        depth = 0
-        p = k - 1
-        while p >= 0:
-            if sql[p] == ")":
-                depth += 1
-            elif sql[p] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            p -= 1
-        rel_start = p
+        rel_start = find_open_back(sql, k - 1)
     else:
         # bare table name (alias may BE the table name with no alias)
         p = k
@@ -291,30 +220,11 @@ def _from_schema(from_text: str) -> list[str] | None:
 def _top_level_positions(sql: str, end: int, word: str) -> list[int]:
     """Start indices of `word` at paren-depth 0 (literal-aware) in
     sql[:end]."""
-    out, depth, in_str, i = [], 0, None, 0
-    wl = len(word)
-    while i < end:
-        c = sql[i]
-        if in_str:
-            if c == in_str:
-                in_str = None
-        elif c in ("'", '"'):
-            in_str = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and sql[i : i + wl].upper() == word
-            and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_"))
-            and (
-                i + wl >= end
-                or not (sql[i + wl].isalnum() or sql[i + wl] == "_")
-            )
-        ):
-            out.append(i)
-        i += 1
+    pat = re.compile(rf"(?<!\w){word}(?!\w)", re.I)
+    out, pos, text = [], 0, sql[:end]
+    while (m := depth0_search(text, pat, pos)) is not None:
+        out.append(m.start())
+        pos = m.end()
     return out
 
 
@@ -330,21 +240,7 @@ def _find_alias_relation(
     same paren depth as `before` count — a `FROM x` inside an earlier
     subquery (e.g. a previous ASOF's pick plan) must not shadow the
     binding in this scope."""
-    # depth prefix (literal-aware) so candidates can be depth-filtered
-    depths, d, in_str = [0] * (before + 1), 0, None
-    for i in range(before):
-        c = sql[i]
-        if in_str:
-            if c == in_str:
-                in_str = None
-        elif c in ("'", '"'):
-            in_str = c
-        elif c == "(":
-            d += 1
-        elif c == ")":
-            d -= 1
-        depths[i + 1] = d
-    want = depths[before]
+    want = depth_at(sql, before)
     for m in reversed(
         list(
             re.finditer(
@@ -352,7 +248,7 @@ def _find_alias_relation(
             )
         )
     ):
-        if depths[m.start()] != want:
+        if depth_at(sql, m.start()) != want:
             continue
         j = m.start()
         k = j
@@ -361,18 +257,9 @@ def _find_alias_relation(
         if k == j:
             continue  # alias must be preceded by whitespace
         if k > 0 and sql[k - 1] == ")":
-            depth, p = 0, k - 1
-            while p >= 0:
-                if sql[p] == ")":
-                    depth += 1
-                elif sql[p] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                p -= 1
-            if p < 0:
+            rel_start = find_open_back(sql, k - 1)
+            if rel_start < 0:
                 continue
-            rel_start = p
         elif k > 0 and sql[k - 1] == ",":
             rel_start = j  # `..., alias` — bare table name in a FROM list
         else:
@@ -413,23 +300,6 @@ def _find_alias_relation(
     return None
 
 
-def _depth_at(sql: str, pos: int) -> int:
-    depth, in_str, i = 0, None, 0
-    while i < pos:
-        c = sql[i]
-        if in_str:
-            if c == in_str:
-                in_str = None
-        elif c in ("'", '"'):
-            in_str = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        i += 1
-    return depth
-
-
 def _star_select_fix(
     sql: str,
     asof_start: int,
@@ -442,10 +312,10 @@ def _star_select_fix(
     helper join columns don't leak into the output. Returns None (nothing
     to fix), "fallback" (can't expand safely — caller keeps the lateral
     path), or (span_start, span_end, replacement_text)."""
-    head_nolit = re.sub(r"'[^']*'|\"[^\"]*\"", "", sql[:asof_start])
-    if not re.search(r"(?<![\w'\"])\*", head_nolit):
+    head, lits = sql[:asof_start], lit_spans(sql)
+    if all(in_spans(lits, m.start()) for m in re.finditer(r"(?<![\w'\"])\*", head)):
         return None
-    if _depth_at(sql, asof_start) != 0:
+    if depth_at(sql, asof_start) != 0:
         return "fallback"  # nested scope — conservative
     sels = _top_level_positions(sql, asof_start, "SELECT")
     if not sels:
@@ -461,26 +331,7 @@ def _star_select_fix(
     if pm:
         prefix = span[: pm.end()]
         span = span[pm.end() :]
-    # split select-list items on top-level commas (literal-aware)
-    items, depth, buf, in_str = [], 0, [], None
-    for ch in span:
-        if in_str:
-            buf.append(ch)
-            if ch == in_str:
-                in_str = None
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            items.append("".join(buf))
-            buf = []
-            continue
-        buf.append(ch)
-    items.append("".join(buf))
+    items = split_top(span)
     rtext = ", ".join(f"{ralias}.`{c}`" for c in right_cols)
     changed = False
     out_items = []
@@ -603,7 +454,7 @@ def rewrite_asof(sql: str) -> str:
 
         # right relation: table name or (subquery), then optional alias
         if i < len(sql) and sql[i] == "(":
-            j = _scan_balanced(sql, i)
+            j = find_close(sql, i) + 1
             rtable = sql[i:j]
         else:
             mm = _IDENT.match(sql, i)
@@ -630,7 +481,7 @@ def rewrite_asof(sql: str) -> str:
         if sql[k : k + 15].upper() == "MATCH_CONDITION":
             p = _skip_ws(sql, k + 15)
             if p < len(sql) and sql[p] == "(":
-                pend = _scan_balanced(sql, p)
+                pend = find_close(sql, p) + 1
                 match_cond = sql[p + 1 : pend - 1].strip()
                 k = _skip_ws(sql, pend)
         if not sql[k : k + 2].upper() == "ON":
@@ -638,29 +489,8 @@ def rewrite_asof(sql: str) -> str:
         k = _skip_ws(sql, k + 2)
 
         # ON condition extends to the next top-level clause boundary
-        end, depth, in_str = k, 0, None
-        while end < len(sql):
-            c = sql[end]
-            if in_str:
-                if c == in_str:
-                    in_str = None
-                end += 1
-                continue
-            if c in ("'", '"'):
-                in_str = c
-                end += 1
-                continue
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            if depth == 0:
-                bm = _BOUNDARY.match(sql, end)
-                if bm and not (end > 0 and (sql[end - 1].isalnum() or sql[end - 1] == "_")):
-                    break
-            end += 1
+        bm = depth0_search(sql, _BOUNDARY, k)
+        end = bm.start() if bm else len(sql)
         cond = sql[k:end].strip()
 
         conjuncts = _split_conjuncts(cond)
@@ -808,19 +638,8 @@ def _try_pick_plan(
         lrel, _, rel_end = found
         # a depth-0 comma between the relation and the ASOF would put the
         # join-back ON out of scope of `lalias` — keep lateral there
-        depth, in_str = 0, None
-        for ch in sql[rel_end:asof_start]:
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                return None
+        if depth0_search(sql[rel_end:asof_start], ",") is not None:
+            return None
         lstart, seg_start = asof_start, asof_start
     else:
         return None  # unqualified keys on a non-FROM-adjacent left side

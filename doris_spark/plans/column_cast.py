@@ -34,6 +34,7 @@ import re
 from decimal import Decimal
 
 from doris_spark.plans import const_cast_fold as cf
+from doris_spark.plans.sqltok import find_close, split_args_top
 
 _REGISTERED = set()
 
@@ -307,14 +308,6 @@ def _packed_digits(col: str, is_date: bool, dst: str) -> str:
             f"THEN CAST({packed} AS {base.upper()}) END)")
 
 
-def _scan_balanced(s: str, i: int) -> int:
-    """i points at '('; return index just past the matching ')'.
-    Delegates to the shared tokenizer (plans/sqltok.py)."""
-    from doris_spark.plans.sqltok import find_close
-
-    return min(find_close(s, i) + 1, len(s))
-
-
 _JC_HEAD = re.compile(r"\bcast\s*\(\s*", re.I)
 _JC_TYPE = re.compile(
     r"\s+as\s+([A-Za-z_]+(?:\s*<[^<>]*(?:<[^<>]*>[^<>]*)*>)?"
@@ -340,7 +333,7 @@ def rewrite_json_casts(sql: str, strict: bool) -> str:
             r"cast\s*\(\s*('(?:[^'\\]|\\.)*')\s+as\s+jsonb?\s*\)",
             sql[j:], re.I)
         if tm:
-            k = _scan_balanced(sql, j + tm.end() - 1)
+            k = min(find_close(sql, j + tm.end() - 1) + 1, len(sql))
             arg = sql[j + tm.end(): k - 1]
             tj = f"to_json(named_struct('j', {arg}))"
             shim = f"substr({tj}, 6, length({tj}) - 6)"
@@ -461,13 +454,6 @@ def rewrite_column_casts(sql: str, col_types, strict: bool) -> str:
     return head + tail
 
 
-def _split_top_commas(s: str) -> list[str]:
-    """Shared-tokenizer top-level comma split (plans/sqltok.py)."""
-    from doris_spark.plans.sqltok import split_args_top
-
-    return split_args_top(s)
-
-
 def _order_by_hits_rewrite(head: str, tail: str) -> bool:
     """True when the statement's ORDER BY references (by alias or by
     select-list ordinal) a select item whose cast was rewritten to the
@@ -477,7 +463,7 @@ def _order_by_hits_rewrite(head: str, tail: str) -> bool:
         return False
     sel = re.sub(r"(?is)^\s*select\s+(distinct\s+)?", "", head)
     names, positions = set(), set()
-    for i, item in enumerate(_split_top_commas(sel), 1):
+    for i, item in enumerate(split_args_top(sel), 1):
         if "__doris_cast" not in item:
             continue
         positions.add(i)
@@ -490,7 +476,7 @@ def _order_by_hits_rewrite(head: str, tail: str) -> bool:
                 am = None
         if am is not None:
             names.add(am.group(1).lower())
-    for term in _split_top_commas(ob.group(1)):
+    for term in split_args_top(ob.group(1)):
         t = re.sub(r"(?i)\s+(asc|desc)(\s+nulls\s+(first|last))?\s*$",
                    "", term.strip()).strip()
         if t.isdigit() and int(t) in positions:

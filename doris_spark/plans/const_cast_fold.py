@@ -310,13 +310,13 @@ def fold_const_dec256(text: str, strict: bool,
     m = re.match(r"(?is)^\s*select\s+(.*?)\s*;?\s*$", text)
     if m is None:
         return None
-    from doris_spark.plans.sql_macros import _split_top
+    from doris_spark.plans.sqltok import split_args_top
 
     body = m.group(1)
     # no FROM/WHERE: pure constant select only
     if re.search(r"(?i)\bfrom\b", body):
         return None
-    items = _split_top(body)
+    items = split_args_top(body)
     out = []
     changed = False
     for raw in items:

@@ -14,6 +14,17 @@ from __future__ import annotations
 
 import re
 
+from doris_spark.plans.sqltok import (
+    depth0_search,
+    depth_at,
+    find_close,
+    find_open_back,
+    in_spans,
+    lit_spans,
+    split_top,
+    sub_outside_literals,
+)
+
 _MYSQL_FMT = {
     "Y": "yyyy", "y": "yy", "m": "MM", "c": "M", "d": "dd", "e": "d",
     "H": "HH", "k": "H", "h": "hh", "I": "hh", "l": "h", "i": "mm",
@@ -21,15 +32,6 @@ _MYSQL_FMT = {
     "a": "EEE", "W": "EEEE", "j": "DDD", "T": "HH:mm:ss", "r": "hh:mm:ss a",
     "%": "%",
 }
-
-
-# canonical scanners live in plans/sqltok.py (one tokenizer for every
-# rewrite tier); these names stay for this module's many call sites and
-# for typed_arith's historical `from dialect import _lit_spans`
-from doris_spark.plans.sqltok import lit_spans as _lit_spans  # noqa: E402
-from doris_spark.plans.sqltok import (  # noqa: E402
-    sub_outside_literals as _sub_outside_literals,
-)
 
 
 _MAKE_IVL = {
@@ -50,9 +52,6 @@ def make_interval_expr(count: str, unit: str) -> str | None:
     syntax refuses expressions like kint+1)."""
     tpl = _MAKE_IVL.get(unit.lower())
     return tpl.format(e=count) if tpl else None
-
-
-# _sub_outside_literals: imported from sqltok above.
 
 
 def _xlate_fmt(fmt: str) -> str:
@@ -96,20 +95,18 @@ def _bracket_arrays(s: str) -> str:
     word: list[str] = []
     last_word = ""
     gap = False  # whitespace between prev token and current char
-    in_str = None
-    for ch in s:
-        if in_str:
-            out.append(ch)
-            if ch == in_str:
-                in_str = None
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-            out.append(ch)
-            prev = ch
+    lit_end = dict(lit_spans(s))
+    i = 0
+    while i < len(s):
+        if i in lit_end:
+            out.append(s[i : lit_end[i]])
+            prev = s[i]
             word.clear()
             gap = False
+            i = lit_end[i]
             continue
+        ch = s[i]
+        i += 1
         if ch == "[":
             if prev.isalnum() or prev in ")]_'\"":
                 is_literal = gap and last_word.lower() in _SQL_KEYWORDS_BEFORE_LITERAL
@@ -209,21 +206,7 @@ def _cast_time_dt0(text: str) -> str:
         if m is None:
             out.append(text[i:])
             break
-        j, depth, in_str = m.end() - 1, 0, None
-        while j < n:
-            c = text[j]
-            if in_str:
-                if c == in_str:
-                    in_str = None
-            elif c in ("'", '"'):
-                in_str = c
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
+        j = find_close(text, m.end() - 1)
         body = text[m.end() : j]
         tm = re.search(r"\s+AS\s+TIME(?:V2)?\s*(?:\(\s*\d+\s*\))?\s*$", body, re.I)
         dm = re.search(
@@ -274,23 +257,9 @@ def _timediff_scale(sql: str) -> str:
         m = pat.search(sql, pos)
         if m is None:
             return sql
-        depth, k, in_str, n = 1, m.end(), None, len(sql)
-        top_commas = 0
-        while k < n and depth:
-            c = sql[k]
-            if in_str:
-                if c == in_str:
-                    in_str = None
-            elif c in ("'", '"'):
-                in_str = c
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif c == "," and depth == 1:
-                top_commas += 1
-            k += 1
+        k = find_close(sql, m.end() - 1) + 1
         args = sql[m.end() : k - 1]
+        top_commas = len(split_top(args)) - 1
         scales = [
             int(g) for g in re.findall(
                 r"\bAS\s+DATETIMEV?2?\s*\(\s*(\d)\s*\)", args, re.I
@@ -322,8 +291,8 @@ def _norm_dotted_datelit(m: re.Match) -> str:
     return f"CAST('{y:04d}-{mo:02d}-{d:02d}{m.group(4) or ''}' AS {m.group(5)}"
 
 
-_GB_TAIL = re.compile(
-    r"\s+(WITH\s+ROLLUP\b|HAVING\b|ORDER\s+BY\b|LIMIT\b)", re.I
+_GB_END = re.compile(
+    r"\s+(WITH\s+ROLLUP\b|HAVING\b|ORDER\s+BY\b|LIMIT\b)|\)", re.I
 )
 
 
@@ -337,30 +306,10 @@ def _group_by_dirs(s: str) -> str:
         m = pat.search(s, pos)
         if m is None:
             return s
-        # scan the grouping list: top-level until a tail keyword, a
-        # depth-0 ')', or end
-        i, depth, in_q, n = m.end(), 0, None, len(s)
-        end = n
-        while i < n:
-            c = s[i]
-            if in_q:
-                if c == in_q:
-                    in_q = None
-            elif c in ("'", '"'):
-                in_q = c
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                if depth == 0:
-                    end = i
-                    break
-                depth -= 1
-            elif depth == 0:
-                tm = _GB_TAIL.match(s, i)
-                if tm:
-                    end = i
-                    break
-            i += 1
+        # the grouping list runs to a top-level tail keyword, the close
+        # of the enclosing block, or the end
+        tm = depth0_search(s, _GB_END, m.end())
+        end = tm.start() if tm else len(s)
         glist = s[m.end():end]
         if not re.search(r"\b(ASC|DESC)\s*(,|$)", glist.strip(), re.I):
             pos = m.end()
@@ -416,36 +365,30 @@ def _dt_from_numeric_inline(x: str) -> str:
 def _quote_unicode_idents(s: str) -> str:
     """Doris accepts unquoted non-ASCII identifiers (列名); Spark requires
     backticks — add them, outside string literals and existing backticks."""
-    out, i, n, in_q = [], 0, len(s), None
-    ident = re.compile(r"[A-Za-z_0-9\u0080-\uffff]+")
+    out, i, n = [], 0, len(s)
+    lit_end = dict(lit_spans(s))
+    ident = re.compile(r"`[^`]*`?|[A-Za-z_0-9\u0080-\uffff]+")
     while i < n:
-        c = s[i]
-        if in_q:
-            out.append(c)
-            if c == in_q:
-                in_q = None
-            i += 1
-            continue
-        if c in ("'", '"', "`"):
-            in_q = c
-            out.append(c)
-            i += 1
+        if i in lit_end:
+            out.append(s[i : lit_end[i]])
+            i = lit_end[i]
             continue
         m = ident.match(s, i)
         if m:
             tok = m.group(0)
-            if any(ord(ch) > 127 for ch in tok):
+            if tok[0] != "`" and any(ord(ch) > 127 for ch in tok):
                 out.append(f"`{tok}`")
             else:
                 out.append(tok)
             i = m.end()
             continue
-        out.append(c)
+        out.append(s[i])
         i += 1
     return "".join(out)
 
 
 _RIGHT_SEMI = re.compile(r"\bright\s+(semi|anti)\s+join\b", re.I)
+_ON_USING = re.compile(r"\b(?:on|using)\b", re.I)
 _FROM_KWS = {
     "from", "join", "on", "where", "select", "union", "intersect",
     "except", "and", "or", "using", "all", "distinct", "by", "lateral",
@@ -461,10 +404,10 @@ def _rewrite_null_subscript(sql: str) -> str:
     declared array-typed (plans.type_hints). Arrays keep their NULL
     index; other bases keep the old sentinel lookup (NULL result,
     same as Doris)."""
-    spans = _lit_spans(sql)
+    spans = lit_spans(sql)
     out, last = [], 0
     for m in _NULL_SUB.finditer(sql):
-        if any(a <= m.start() < b for a, b in spans):
+        if in_spans(spans, m.start()):
             continue
         i = m.start() - 1
         while i >= 0 and sql[i] in " \t\n":
@@ -472,22 +415,7 @@ def _rewrite_null_subscript(sql: str) -> str:
         rewrite = True
         if i >= 0 and sql[i] == ")":
             # call base: rewrite only for map_agg(..)
-            depth, j, in_q = 0, i, None
-            while j >= 0:
-                c = sql[j]
-                if in_q:
-                    if c == in_q:
-                        in_q = None
-                elif c in ("'", '"'):
-                    in_q = c
-                elif c == ")":
-                    depth += 1
-                elif c == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j -= 1
-            k = j - 1
+            k = find_open_back(sql, i) - 1
             while k >= 0 and sql[k] in " \t\n":
                 k -= 1
             e = k
@@ -549,8 +477,6 @@ def _narrow_dec256_casts(sql: str) -> str:
     source's integral range fits (fe enable_decimal256, pinned by
     query_p0/join/test_join_decimal256*). Unknown sources fall through
     to the integral-preserving blanket rule."""
-    from doris_spark.plans.sqltok import find_close
-
     pos = 0
     while True:
         m = _CAST_HEAD.search(sql, pos)
@@ -589,7 +515,7 @@ def _rewrite_right_semi_anti(sql: str) -> str:
     table ref `name [alias]` or a parenthesized subquery `( ... )
     [alias]` at the start of a FROM item; anything else is left alone
     (pinned by nereids_tpch_p0 q4/q21). Each rewrite restarts the scan
-    on the mutated string (fresh finditer + _lit_spans) — continuing
+    on the mutated string (fresh finditer + lit_spans) — continuing
     with stale match objects after a chained-segment rewrite relocates
     earlier matches and would swap at stale offsets. Terminates because
     every rewrite converts a RIGHT semi/anti into LEFT."""
@@ -605,13 +531,9 @@ def _rsa_one_pass(sql: str):
     """One scan of `_rewrite_right_semi_anti`: perform the rightmost
     applicable swap and return the mutated SQL, or None if no RIGHT
     SEMI/ANTI join remains rewritable."""
-    spans = _lit_spans(sql)
-
-    def in_lit(i: int) -> bool:
-        return any(a <= i < b for a, b in spans)
-
+    spans = lit_spans(sql)
     for m in reversed(list(_RIGHT_SEMI.finditer(sql))):
-        if in_lit(m.start()):
+        if in_spans(spans, m.start()):
             continue
         kind = m.group(1).lower()
         # ---- chained left operand: when the text between the
@@ -623,7 +545,7 @@ def _rsa_one_pass(sql: str):
         seg_start = None
         depth_b, ib = 0, m.start() - 1
         while ib >= 0:
-            if in_lit(ib):
+            if in_spans(spans, ib):
                 ib -= 1
                 continue
             ch = sql[ib]
@@ -649,17 +571,7 @@ def _rsa_one_pass(sql: str):
             ib -= 1
         if seg_start is not None:
             seg = sql[seg_start:m.start()]
-            seg_depth, has_on = 0, False
-            for mo in re.finditer(r"[()]|\b(?:on|using)\b", seg, re.I):
-                if in_lit(seg_start + mo.start()):
-                    continue
-                t = mo.group(0)
-                if t == "(":
-                    seg_depth += 1
-                elif t == ")":
-                    seg_depth -= 1
-                elif seg_depth == 0:
-                    has_on = True
+            has_on = depth0_search(seg, _ON_USING) is not None
             if has_on and seg.strip() and "lateral" not in seg.lower():
                 p = m.end()
                 while p < len(sql) and sql[p].isspace():
@@ -667,16 +579,7 @@ def _rsa_one_pass(sql: str):
                 if p >= len(sql):
                     continue
                 if sql[p] == "(":
-                    depth_f, q = 0, p
-                    while q < len(sql):
-                        if sql[q] == "(":
-                            depth_f += 1
-                        elif sql[q] == ")":
-                            depth_f -= 1
-                            if depth_f == 0:
-                                break
-                        q += 1
-                    q += 1
+                    q = find_close(sql, p) + 1
                 else:
                     q = p
                     while q < len(sql) and (sql[q].isalnum()
@@ -721,18 +624,9 @@ def _rsa_one_pass(sql: str):
             continue
         lend = i + 1
         if sql[i] == ")":
-            depth = 0
-            while i >= 0:
-                if sql[i] == ")":
-                    depth += 1
-                elif sql[i] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                i -= 1
-            if i < 0:
+            lstart = find_open_back(sql, i)
+            if lstart < 0:
                 continue
-            lstart = i
         else:
             # identifier (alias or bare table); maybe preceded by its
             # base: `( ... ) alias` or `table alias`
@@ -747,18 +641,9 @@ def _rsa_one_pass(sql: str):
             while k >= 0 and sql[k].isspace():
                 k -= 1
             if k >= 0 and sql[k] == ")":
-                depth = 0
-                while k >= 0:
-                    if sql[k] == ")":
-                        depth += 1
-                    elif sql[k] == "(":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    k -= 1
-                if k < 0:
+                lstart = find_open_back(sql, k)
+                if lstart < 0:
                     continue
-                lstart = k
             elif k >= 0 and (sql[k].isalnum() or sql[k] in "_.`"):
                 j2 = k
                 while j2 >= 0 and (sql[j2].isalnum() or sql[j2] in "_.`"):
@@ -786,16 +671,7 @@ def _rsa_one_pass(sql: str):
         if p >= len(sql):
             continue
         if sql[p] == "(":
-            depth, q = 0, p
-            while q < len(sql):
-                if sql[q] == "(":
-                    depth += 1
-                elif sql[q] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                q += 1
-            q += 1
+            q = find_close(sql, p) + 1
         else:
             q = p
             while q < len(sql) and (sql[q].isalnum() or sql[q] in "_.`"):
@@ -833,29 +709,23 @@ def _rsa_one_pass(sql: str):
     return None
 
 
-def _split_select_items(s: str) -> list[str]:
-    """Depth/quote-aware top-level comma split of a select list."""
-    depth, buf, items, in_s = 0, [], [], None
-    for ch in s:
-        if in_s:
-            buf.append(ch)
-            if ch == in_s:
-                in_s = None
-            continue
-        if ch in ("'", '"'):
-            in_s = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            items.append("".join(buf))
-            buf = []
-            continue
-        buf.append(ch)
-    if "".join(buf).strip():
-        items.append("".join(buf))
-    return items
+_HAVING_CLAUSES = re.compile(r"(?<!\w)(GROUP|HAVING|ORDER|LIMIT)\b", re.I)
+_FROM_KW = re.compile(r"(?<!\w)FROM\b", re.I)
+_WHERE_KW = re.compile(r"(?<!\w)WHERE\b", re.I)
+_QUALIFY = re.compile(r"(?<![\w.])QUALIFY\b", re.I)
+_ORDER_LIMIT = re.compile(r"(?<!\w)(ORDER\s+BY|LIMIT)\b", re.I)
+# the end of a FROM list: a clause keyword, ';' or the block's close
+_FROM_LIST_END = re.compile(
+    r"\b(where|group|order|having|limit|union|intersect|except|window"
+    r"|qualify)\b|;|\)", re.I)
+_JOIN_KW = re.compile(r"\bjoin\b", re.I)
+_QUALIFIED_REF = re.compile(r"\b\w+\s*\.\s*`?\w")
+
+
+def _has_qualified_ref(text: str) -> bool:
+    """A `name.col` reference outside string literals."""
+    spans = lit_spans(text)
+    return any(not in_spans(spans, m.start()) for m in _QUALIFIED_REF.finditer(text))
 
 
 _COND_KW = {
@@ -878,32 +748,11 @@ def _having_no_group(sql: str, force_where_merge: bool = False) -> str:
     correctness_p0/test_group_having_alias."""
     if not re.match(r"\s*(SELECT|WITH)\b", sql, re.I):
         return sql
-    spans = _lit_spans(sql)
-
-    def in_lit(i: int) -> bool:
-        return any(a <= i < b for a, b in spans)
-
     # top-level clause keyword positions
-    pos = {}
-    depth, i, n = 0, 0, len(sql)
-    while i < n:
-        if in_lit(i):
-            i += 1
-            continue
-        c = sql[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and (c.isalpha()) and (
-            i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")
-        ):
-            m = re.match(r"(GROUP|HAVING|ORDER|LIMIT)\b", sql[i:], re.I)
-            if m:
-                pos.setdefault(m.group(1).upper(), i)
-                i += m.end()
-                continue
-        i += 1
+    pos, i, n = {}, 0, len(sql)
+    while (m := depth0_search(sql, _HAVING_CLAUSES, i)) is not None:
+        pos.setdefault(m.group(1).upper(), m.start())
+        i = m.end()
     if "HAVING" not in pos or "GROUP" in pos:
         return sql
     h = pos["HAVING"]
@@ -926,7 +775,7 @@ def _having_no_group(sql: str, force_where_merge: bool = False) -> str:
     # orders by a qualified inner reference (ORDER BY alias1.pk) must
     # have it mapped to its select-list alias (alias1.pk AS field1 ->
     # field1); unmappable qualified refs keep the statement untouched
-    if re.search(r"\b\w+\s*\.\s*`?\w", re.sub(r"'[^']*'|\"[^\"]*\"", "", tail)):
+    if _has_qualified_ref(tail):
         sm = re.match(r"\s*SELECT\s+(?:DISTINCT\s+)?(.*?)\s+FROM\b", inner,
                       re.I | re.S)
         if sm is None:
@@ -936,7 +785,7 @@ def _having_no_group(sql: str, force_where_merge: bool = False) -> str:
             return re.sub(r"\s+|`", "", t).lower()
 
         amap = {}
-        items = _split_select_items(sm.group(1))
+        items = split_top(sm.group(1))
         for it in items:
             am = re.search(r"\s+AS\s+(`?)(\w+)\1\s*$", it, re.I)
             if am:
@@ -945,11 +794,8 @@ def _having_no_group(sql: str, force_where_merge: bool = False) -> str:
         def map_ref(m2: re.Match) -> str:
             return amap.get(norm_ref(m2.group(0)), m2.group(0))
 
-        new_tail = re.sub(
-            r"\b\w+\s*\.\s*`?\w+`?", map_ref, tail
-        )
-        if re.search(r"\b\w+\s*\.\s*`?\w",
-                     re.sub(r"'[^']*'|\"[^\"]*\"", "", new_tail)):
+        new_tail = sub_outside_literals(r"\b\w+\s*\.\s*`?\w+`?", map_ref, tail)
+        if _has_qualified_ref(new_tail):
             return sql  # an unmappable qualified ref remains
         tail = new_tail
     # Doris resolves HAVING names the projection does not expose against
@@ -966,30 +812,14 @@ def _having_no_group(sql: str, force_where_merge: bool = False) -> str:
         hm3 = re.match(r"(\s*SELECT\s+)(DISTINCT\s+)?", inner, re.I)
         if hm3 is None or hm3.group(2):
             return sql
-        ispans3 = _lit_spans(inner)
-        fm3, wh3, rel, k = None, None, 0, hm3.end()
-        while k < len(inner):
-            if any(a <= k < b for a, b in ispans3):
-                k += 1
-                continue
-            c = inner[k]
-            if c == "(":
-                rel += 1
-            elif c == ")":
-                rel -= 1
-            elif rel == 0 and c.isalpha() and not (
-                inner[k - 1].isalnum() or inner[k - 1] == "_"
-            ):
-                if fm3 is None and re.match(r"(?i)FROM\b", inner[k:]):
-                    fm3 = k
-                elif re.match(r"(?i)WHERE\b", inner[k:]):
-                    wh3 = k
-                    break
-            k += 1
-        if fm3 is None:
+        fm3 = depth0_search(inner, _FROM_KW, hm3.end())
+        wm3 = depth0_search(inner, _WHERE_KW, hm3.end())
+        if fm3 is None or (wm3 is not None and wm3.start() < fm3.start()):
             return sql
+        fm3 = fm3.start()
+        wh3 = wm3.start() if wm3 else None
         amap3 = {}
-        for it in _split_select_items(inner[hm3.end():fm3]):
+        for it in split_top(inner[hm3.end():fm3]):
             am = re.search(r"\s+AS\s+(`?)(\w+)\1\s*$", it, re.I) or re.search(
                 r"\)\s+(`?)(\w+)\1\s*$", it
             )
@@ -1015,33 +845,13 @@ def _having_no_group(sql: str, force_where_merge: bool = False) -> str:
         return inner2 + (f" {tail}" if tail else "")
 
     hm2 = re.match(r"(\s*SELECT\s+)(DISTINCT\s+)?", inner, re.I)
-    fm_at = None
-    if hm2:
-        ispans = _lit_spans(inner)
-        rel, k = 0, hm2.end()
-        while k < len(inner):
-            if any(a <= k < b for a, b in ispans):
-                k += 1
-                continue
-            c = inner[k]
-            if c == "(":
-                rel += 1
-            elif c == ")":
-                rel -= 1
-            elif (
-                rel == 0
-                and c in "fF"
-                and not (inner[k - 1].isalnum() or inner[k - 1] == "_")
-                and re.match(r"(?i)FROM\b", inner[k:])
-            ):
-                fm_at = k
-                break
-            k += 1
+    fm2 = hm2 and depth0_search(inner, _FROM_KW, hm2.end())
+    fm_at = fm2.start() if fm2 else None
     extras: list[str] = []
     if hm2 and fm_at is not None and not hm2.group(2):
         sel_list = inner[hm2.end():fm_at]
         exposed = set()
-        for it in _split_select_items(sel_list):
+        for it in split_top(sel_list):
             am = re.search(r"\s+AS\s+(`?)(\w+)\1\s*$", it, re.I)
             if am:
                 exposed.add(am.group(2).lower())
@@ -1066,21 +876,13 @@ def _having_no_group(sql: str, force_where_merge: bool = False) -> str:
             extras.append(ref)
             return f"__hv{len(extras) - 1}"
 
-        cond2 = re.sub(
+        cond2 = sub_outside_literals(
             r"(?<![\w.`'\"])(?:\w+\s*\.\s*)?`?[A-Za-z_]\w*`?"
             r"(?!\s*\()(?![\w.])",
-            lambda m3: _matb(m3)
-            if not re.match(r"'", m3.group(0))
-            else m3.group(0),
-            re.sub(r"'[^']*'", lambda mq: "'" + "\x00" * (len(mq.group(0)) - 2) + "'", cond),
+            _matb,
+            cond,
         )
         if extras:
-            # restore literals in cond2 from the original by position
-            # (placeholders only masked content INSIDE quotes)
-            lit_iter = re.finditer(r"'[^']*'", cond)
-            cond2 = re.sub(
-                r"'\x00*'", lambda _m: next(lit_iter).group(0), cond2
-            )
             inner = (
                 inner[:fm_at].rstrip()
                 + ", "
@@ -1110,40 +912,23 @@ def _rewrite_qualify(sql: str) -> str:
     the condition are materialized as synthetic inner columns; alias
     references resolve against the projected row like Doris."""
     for _ in range(16):
-        spans = _lit_spans(sql)
-
-        def in_lit(i: int) -> bool:
-            return any(a <= i < b for a, b in spans)
-
+        spans = lit_spans(sql)
+        n = len(sql)
         # pick the DEEPEST qualify (innermost subquery first)
         best, best_depth = None, -1
-        depth, i, n = 0, 0, len(sql)
-        while i < n:
-            if in_lit(i):
-                i += 1
+        for qm in _QUALIFY.finditer(sql):
+            if in_spans(spans, qm.start()):
                 continue
-            c = sql[i]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif (
-                c in "qQ"
-                and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] in "_."))
-                and re.match(r"(?i)QUALIFY\b", sql[i:])
-            ):
-                if depth >= best_depth:
-                    best, best_depth = i, depth
-                i += 7
-                continue
-            i += 1
+            depth = depth_at(sql, qm.start())
+            if depth >= best_depth:
+                best, best_depth = qm.start(), depth
         if best is None:
             return sql
         q = best
         # enclosing SELECT: scan backward at relative depth 0
         rel, j, sel_start, blk_open = 0, q - 1, None, 0
         while j >= 0:
-            if not in_lit(j):
+            if not in_spans(spans, j):
                 c = sql[j]
                 if c == ")":
                     rel += 1
@@ -1166,35 +951,10 @@ def _rewrite_qualify(sql: str) -> str:
         # forward: condition ends at rel-0 ORDER/LIMIT, a closing ')',
         # or end of statement
         qe = q + len("QUALIFY")
-        rel, k, cond_end, blk_end = 0, qe, None, n
-        while k < n:
-            if in_lit(k):
-                k += 1
-                continue
-            c = sql[k]
-            if c == "(":
-                rel += 1
-            elif c == ")":
-                rel -= 1
-                if rel < 0:
-                    cond_end = cond_end if cond_end is not None else k
-                    blk_end = k
-                    break
-            elif c == ";" and rel == 0:
-                cond_end = cond_end if cond_end is not None else k
-                blk_end = k
-                break
-            elif (
-                rel == 0
-                and cond_end is None
-                and c.isalpha()
-                and not (sql[k - 1].isalnum() or sql[k - 1] == "_")
-                and re.match(r"(?i)(ORDER\s+BY|LIMIT)\b", sql[k:])
-            ):
-                cond_end = k
-            k += 1
-        if cond_end is None:
-            cond_end = blk_end = n
+        bm = depth0_search(sql, r"[);]", qe)
+        blk_end = bm.start() if bm else n
+        cm = depth0_search(sql[:blk_end], _ORDER_LIMIT, qe)
+        cond_end = cm.start() if cm else blk_end
         cond = sql[qe:cond_end].strip()
         tail = sql[cond_end:blk_end].strip()
         head = sql[sel_start:q].rstrip()
@@ -1219,26 +979,11 @@ def _rewrite_qualify(sql: str) -> str:
                 b -= 1
             if b < 0 or cond[b] != ")":
                 continue
-            depth2, b2 = 0, b
-            while b2 >= 0:
-                if cond[b2] == ")":
-                    depth2 += 1
-                elif cond[b2] == "(":
-                    depth2 -= 1
-                    if depth2 == 0:
-                        break
-                b2 -= 1
-            fs = b2
+            fs = find_open_back(cond, b)
             while fs > 0 and (cond[fs - 1].isalnum() or cond[fs - 1] == "_"):
                 fs -= 1
             # forward: close the OVER(...) spec
-            depth2, f2 = 1, om.end()
-            while f2 < len(cond) and depth2:
-                if cond[f2] == "(":
-                    depth2 += 1
-                elif cond[f2] == ")":
-                    depth2 -= 1
-                f2 += 1
+            f2 = find_close(cond, om.end() - 1) + 1
             out.append(cond[pos:fs])
             out.append(f"__qw{len(winexprs)}")
             winexprs.append(cond[fs:f2])
@@ -1248,30 +993,10 @@ def _rewrite_qualify(sql: str) -> str:
         if winexprs:
             # inject after the select list: before this block's FROM —
             # scan HEAD itself (it may have been rewritten above)
-            hspans = _lit_spans(head)
-            fm_at = None
-            rel, k = 0, 0
-            while k < len(head):
-                if any(a <= k < b for a, b in hspans):
-                    k += 1
-                    continue
-                c = head[k]
-                if c == "(":
-                    rel += 1
-                elif c == ")":
-                    rel -= 1
-                elif (
-                    rel == 0
-                    and c in "fF"
-                    and k > 0
-                    and not (head[k - 1].isalnum() or head[k - 1] == "_")
-                    and re.match(r"(?i)FROM\b", head[k:])
-                ):
-                    fm_at = k
-                    break
-                k += 1
-            if fm_at is None:
+            fm = depth0_search(head, _FROM_KW)
+            if fm is None:
                 return sql
+            fm_at = fm.start()
             inner = (
                 head[:fm_at].rstrip()
                 + ", "
@@ -1356,7 +1081,7 @@ def dialect(sql: str) -> str:
         return m.group(0)
 
     if re.search(r"\d[eE]\+?\d{3}", sql):
-        sql = _sub_outside_literals(
+        sql = sub_outside_literals(
             r"(?<![\w.])\d+(?:\.\d+)?[eE]\+?\d{3,}\b", _inf_lit, sql
         )
     # literals wider than DECIMAL256 (76 digits) are DOUBLE in Doris;
@@ -1368,7 +1093,7 @@ def dialect(sql: str) -> str:
         return m.group(0)
 
     if re.search(r"\d{20}", sql):
-        sql = _sub_outside_literals(
+        sql = sub_outside_literals(
             r"(?<![\w.])\d+\.\d{39,}(?![\w.])|"
             r"(?<![\w.])\d{39,}(?:\.\d+)?(?![\w.])",
             _wide_lit, sql,
@@ -1378,7 +1103,7 @@ def dialect(sql: str) -> str:
     # the function-argument position is rewritten (top-level SELECT
     # casts go through the column_cast tier) —
     # conditional_functions/test_if.groovy jsonb_exists_path cases
-    sql = _sub_outside_literals(
+    sql = sub_outside_literals(
         r"(?i)(\b(?:jsonb?_|explode_json_)\w+\s*\(\s*)CAST\s*\("
         r"((?:[^()']|'[^']*')+?)\s+AS\s+JSONB?\s*\)",
         lambda m: f"{m.group(1)}CAST(parse_json({m.group(2)}) AS STRING)",
@@ -1416,7 +1141,7 @@ def dialect(sql: str) -> str:
         # alternation-quantifier here backtracked catastrophically on
         # long function-call lists); lists containing parens are never
         # candidates for the literal-coercion rewrite anyway
-        sql = _sub_outside_literals(
+        sql = sub_outside_literals(
             r"(?i)\b(IN\s*\(\s*)([^()]*?)(\s*\))",
             _in_mixed, sql)
 
@@ -1429,13 +1154,13 @@ def dialect(sql: str) -> str:
                 )
             return m.group(0)
 
-        sql = _sub_outside_literals(
+        sql = sub_outside_literals(
             r"(?i)\bCAST\s*\(([^()]+)\s+AS\s+"
             r"(?:CHAR|VARCHAR(\(\d+\))?|STRING|TEXT)\s*\)\s*"
             r"(NOT\s+)?IN\s*\(([^()]*)\)",
             _cast_char_in, sql)
     # MySQL numeric truthiness for a bare integer WHERE/HAVING predicate
-    sql = _sub_outside_literals(
+    sql = sub_outside_literals(
         r"\b(WHERE|HAVING)\s+(\d+)\s*(?=;|$|\)|\bGROUP\b|\bORDER\b|\bLIMIT\b"
         r"|\bUNION\b|\bHAVING\b|\bWHERE\b)",
         lambda m: f"{m.group(1)} ({m.group(2)} <> 0) ",
@@ -1445,7 +1170,7 @@ def dialect(sql: str) -> str:
     # a bare NULL predicate filters every row (MySQL boolean context);
     # Spark rejects a VOID filter (pinned by empty_relation/
     # eliminate_empty.groovy `where Null` union/intersect/except cases)
-    sql = _sub_outside_literals(
+    sql = sub_outside_literals(
         r"\b(WHERE|HAVING)\s+NULL\s*(?=;|$|\)|\bGROUP\b|\bORDER\b|\bLIMIT\b"
         r"|\bUNION\b|\bINTERSECT\b|\bEXCEPT\b|\bHAVING\b)",
         lambda m: f"{m.group(1)} CAST(NULL AS BOOLEAN) ",
@@ -1453,7 +1178,7 @@ def dialect(sql: str) -> str:
         flags=re.I,
     )
     # MySQL LIMIT offset,count -> LIMIT count OFFSET offset
-    sql = _sub_outside_literals(
+    sql = sub_outside_literals(
         r"\bLIMIT\s+(\d+)\s*,\s*(\d+)",
         r"LIMIT \2 OFFSET \1",
         sql,
@@ -1461,7 +1186,7 @@ def dialect(sql: str) -> str:
     )
     # Doris join distribution hints `join [shuffle|broadcast|colocate|
     # bucket] t` are execution knobs, not semantics
-    sql = _sub_outside_literals(
+    sql = sub_outside_literals(
         r"(\bJOIN\s*)\[\s*(shuffle|broadcast|colocate|bucket)\s*\]",
         r"\1",
         sql,
@@ -1570,32 +1295,7 @@ def dialect(sql: str) -> str:
     # MySQL TIME(x) extracts the time part (TIME shim string). Quote-aware:
     # never rewrite inside string literals; never match word-suffixed
     # names (maketime, current_time have a word char before TIME).
-    def _time_fn(text: str) -> str:
-        out, i, n, in_str = [], 0, len(text), None
-        pat = re.compile(r"TIME\s*\(", re.I)
-        while i < n:
-            c = text[i]
-            if in_str:
-                out.append(c)
-                if c == in_str:
-                    in_str = None
-                i += 1
-                continue
-            if c in ("'", '"'):
-                in_str = c
-                out.append(c)
-                i += 1
-                continue
-            m = pat.match(text, i)
-            if m and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] in "_.")):
-                out.append("__doris_time(")
-                i = m.end()
-                continue
-            out.append(c)
-            i += 1
-        return "".join(out)
-
-    s = _time_fn(s)
+    s = sub_outside_literals(r"(?<![\w.])TIME\s*\(", "__doris_time(", s, re.I)
     # months/quarters/years_add|_sub on an OFFSET-suffixed literal: Doris
     # adds calendar months in the literal's own zone, THEN converts to the
     # session zone (the reverse order clamps end-of-month differently —
@@ -1700,7 +1400,7 @@ def dialect(sql: str) -> str:
     # inside a string literal (e.g. concat('a AS ', 'b')) must not be
     # treated as an alias opener; empty aliases get a placeholder name
     # (column names are compared positionally).
-    s = _sub_outside_literals(
+    s = sub_outside_literals(
         r"(\bAS\s+)'([^']*)'",
         lambda m: m.group(1) + "`" + (m.group(2) or "__empty_alias") + "`",
         s,
@@ -1709,7 +1409,7 @@ def dialect(sql: str) -> str:
     # MySQL string-literal alias directly after END / ')' (CASE ... END
     # 'alias' FROM — query_p0/subquery sql14); only before , or FROM so
     # predicate literals are never touched
-    s = _sub_outside_literals(
+    s = sub_outside_literals(
         r"(\bEND|\))\s+'([^']+)'(\s*(?:,|FROM\b))",
         r"\1 AS `\2`\3",
         s,
@@ -1886,9 +1586,10 @@ def dialect(sql: str) -> str:
         # matches inside string literals must be skipped ('x IS TRUE'
         # is data, not an operator); right-to-left processing keeps the
         # spans of yet-unvisited (earlier) matches valid after an edit
-        lit = _lit_spans(src)
+        lit = lit_spans(src)
+        lit_start = {b - 1: a for a, b in lit}
         for m in reversed(list(pat.finditer(src))):
-            if any(a <= m.start() < b for a, b in lit):
+            if in_spans(lit, m.start()):
                 continue
             i = m.start() - 1
             while i >= 0 and src[i].isspace():
@@ -1897,15 +1598,7 @@ def dialect(sql: str) -> str:
                 continue
             end = i + 1
             if src[i] == ")":
-                depth = 0
-                while i >= 0:
-                    if src[i] == ")":
-                        depth += 1
-                    elif src[i] == "(":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    i -= 1
+                i = find_open_back(src, i)
                 if i < 0:
                     continue
                 j = i - 1
@@ -1913,13 +1606,9 @@ def dialect(sql: str) -> str:
                     j -= 1
                 start = j + 1
             elif src[i] in "'\"":
-                q = src[i]
-                j = i - 1
-                while j >= 0 and src[j] != q:
-                    j -= 1
-                if j < 0:
+                if i not in lit_start:
                     continue
-                start = j
+                start = lit_start[i]
             elif src[i].isalnum() or src[i] in "_.`":
                 j = i
                 while j >= 0 and (src[j].isalnum() or src[j] in "_.`"):
@@ -2002,76 +1691,25 @@ def dialect(sql: str) -> str:
     # Parenthesize every comma-separated FROM item whose own top level
     # contains a JOIN (nereids_syntax_p0 using_join/join_order).
     def _comma_join_group(src: str) -> str:
-        spans_cj = _lit_spans(src)
-
-        def lit(i: int) -> bool:
-            return any(a <= i < b for a, b in spans_cj)
-
-        _CLAUSE = re.compile(
-            r"(?i)\b(where|group|order|having|limit|union|intersect"
-            r"|except|window|qualify)\b|;")
-        out_parts, pos = [], 0
+        spans_cj = lit_spans(src)
         for fm_ in re.finditer(r"(?i)\bfrom\b", src):
-            if lit(fm_.start()) or fm_.start() < pos:
+            if in_spans(spans_cj, fm_.start()):
                 continue
             seg_s = fm_.end()
-            depth, j = 0, seg_s
-            seg_e = len(src)
-            while j < len(src):
-                if not lit(j):
-                    ch = src[j]
-                    if ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                        if depth < 0:
-                            seg_e = j
-                            break
-                    elif depth == 0:
-                        cm_ = _CLAUSE.match(src, j)
-                        if cm_:
-                            seg_e = j
-                            break
-                j += 1
+            cm_ = depth0_search(src, _FROM_LIST_END, seg_s)
+            seg_e = cm_.start() if cm_ else len(src)
             seg = src[seg_s:seg_e]
             if "," not in seg or not re.search(r"(?i)\bjoin\b", seg):
                 continue
-            # top-level comma split of the segment
-            items, depth2, buf, base = [], 0, [], seg_s
-            for k2, ch in enumerate(seg):
-                if lit(seg_s + k2):
-                    buf.append(ch)
-                    continue
-                if ch == "(":
-                    depth2 += 1
-                elif ch == ")":
-                    depth2 -= 1
-                elif ch == "," and depth2 == 0:
-                    items.append("".join(buf))
-                    buf = []
-                    continue
-                buf.append(ch)
-            items.append("".join(buf))
+            items = split_top(seg)
             if len(items) < 2:
                 continue
-
-            def _has_top_join(it: str) -> bool:
-                d3 = 0
-                for mj in re.finditer(r"[()]|(?i:\bjoin\b)", it):
-                    t3 = mj.group(0)
-                    if t3 == "(":
-                        d3 += 1
-                    elif t3 == ")":
-                        d3 -= 1
-                    elif d3 == 0:
-                        return True
-                return False
 
             new_items = []
             changed_cj = False
             for it in items:
                 st = it.strip()
-                if (_has_top_join(it)
+                if (depth0_search(it, _JOIN_KW) is not None
                         and not re.search(r"(?i)\blateral\b", it)):
                     new_items.append(f" ({st}) ")
                     changed_cj = True
@@ -2188,7 +1826,7 @@ def dialect(sql: str) -> str:
         lambda m: f"__str_to_double('{m.group(1)}')",
         s)
     # MySQL logical XOR (truthiness of each side, NULL-propagating)
-    s = _sub_outside_literals(
+    s = sub_outside_literals(
         r"(?<![\w.])([\w.]+)\s+XOR\s+([\w.]+)(?![\w.])",
         r"(((\1) <> 0) <> ((\2) <> 0))",
         s,
@@ -2217,45 +1855,16 @@ def dialect(sql: str) -> str:
     # as positional brace lists, e.g. correctness_p0/test_struct_order_by).
     # A JSON text literal '{"a": 1}' is inside quotes and must stay text.
     def _split_brace_items(body: str) -> list[str] | None:
-        items, cur, depth, in_str = [], [], 0, None
-        for c in body:
-            if in_str:
-                cur.append(c)
-                if c == in_str:
-                    in_str = None
-                continue
-            if c in ("'", '"'):
-                in_str = c
-            elif c in "([{":
-                depth += 1
-            elif c in ")]}":
-                depth -= 1
-            elif c == "," and depth == 0:
-                items.append("".join(cur).strip())
-                cur = []
-                continue
-            cur.append(c)
-        if in_str or depth != 0:
+        if depth_at(body, len(body)) != 0:
             return None
-        items.append("".join(cur).strip())
-        return items
+        return [it.strip() for it in split_top(body)]
 
     def _split_map_entry(item: str) -> tuple[str, str] | None:
         """Split `key : value` at the single top-level colon, or None."""
-        depth, in_str = 0, None
-        for i, c in enumerate(item):
-            if in_str:
-                if c == in_str:
-                    in_str = None
-            elif c in ("'", '"'):
-                in_str = c
-            elif c in "([{":
-                depth += 1
-            elif c in ")]}":
-                depth -= 1
-            elif c == ":" and depth == 0:
-                return item[:i].strip(), item[i + 1 :].strip()
-        return None
+        m = depth0_search(item, ":")
+        if m is None:
+            return None
+        return item[: m.start()].strip(), item[m.end() :].strip()
 
     def _convert_brace_literal(span: str) -> str:
         """span is `{...}` (balanced); convert or return unchanged."""
@@ -2287,44 +1896,17 @@ def dialect(sql: str) -> str:
     def _convert_maps(text: str) -> str:
         # find top-level {..} spans that are OUTSIDE string literals
         # (map literals contain quoted keys, so a plain quote-split fails)
-        out, i, n, in_str = [], 0, len(text), None
-        while i < n:
-            c = text[i]
-            if in_str:
-                out.append(c)
-                if c == in_str:
-                    in_str = None
-                i += 1
+        out, i, lits = [], 0, lit_spans(text)
+        for bm in re.finditer(r"\{", text):
+            if bm.start() < i or in_spans(lits, bm.start()):
                 continue
-            if c in ("'", '"'):
-                in_str = c
-                out.append(c)
-                i += 1
-                continue
-            if c == "{":
-                depth, j, instr2 = 0, i, None
-                while j < n:
-                    cj = text[j]
-                    if instr2:
-                        if cj == instr2:
-                            instr2 = None
-                    elif cj in ("'", '"'):
-                        instr2 = cj
-                    elif cj == "{":
-                        depth += 1
-                    elif cj == "}":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    j += 1
-                if j >= n:
-                    out.append(text[i:])
-                    break
-                out.append(_convert_brace_literal(text[i : j + 1]))
-                i = j + 1
-                continue
-            out.append(c)
-            i += 1
+            j = find_close(text, bm.start())
+            if j >= len(text):
+                break
+            out.append(text[i : bm.start()])
+            out.append(_convert_brace_literal(text[bm.start() : j + 1]))
+            i = j + 1
+        out.append(text[i:])
         return "".join(out)
 
     s = _convert_maps(s)
@@ -2636,21 +2218,7 @@ def dialect(sql: str) -> str:
                 out.append(text[i:])
                 break
             # find the matching close paren of this CAST
-            j, depth, in_str = m.end() - 1, 0, None
-            while j < n:
-                c = text[j]
-                if in_str:
-                    if c == in_str:
-                        in_str = None
-                elif c in ("'", '"'):
-                    in_str = c
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
+            j = find_close(text, m.end() - 1)
             body = text[m.end() : j]
             is_try = bool(m.group(1))
             am = re.search(
@@ -2755,32 +2323,17 @@ def dialect(sql: str) -> str:
     # Doris array subscripts are 1-based and out-of-range-safe; rewrite
     # integer-literal subscripts to try_element_at (chains walk back over
     # balanced parens/brackets)
-    def _literal_spans(text: str) -> list[tuple[int, int]]:
-        """[start, end) spans of '...'/"..." string literals."""
-        spans, i, n = [], 0, len(text)
-        while i < n:
-            c = text[i]
-            if c in ("'", '"'):
-                j = i + 1
-                while j < n and text[j] != c:
-                    j += 1
-                spans.append((i, j + 1))
-                i = j + 1
-            else:
-                i += 1
-        return spans
-
     def _subscripts(text: str) -> str:
         sub = re.compile(r"\[\s*(-?\d+)\s*\]")
         changed = True
         while changed:
             changed = False
-            spans = _literal_spans(text)
+            spans = lit_spans(text)
             for m in sub.finditer(text):
                 # quoted text of the form ident[N] (JSON paths, LIKE
                 # patterns) must never be rewritten (spans recomputed
                 # after each mutation)
-                if any(a <= m.start() < b for a, b in spans):
+                if in_spans(spans, m.start()):
                     continue
                 k = m.start() - 1
                 if k < 0:
@@ -2791,16 +2344,7 @@ def dialect(sql: str) -> str:
                 while j >= 0:
                     c = text[j]
                     if c in ")]":
-                        depth = 0
-                        while j >= 0:
-                            if text[j] in ")]":
-                                depth += 1
-                            elif text[j] in "([":
-                                depth -= 1
-                                if depth == 0:
-                                    break
-                            j -= 1
-                        j -= 1
+                        j = find_open_back(text, j) - 1
                     elif c.isalnum() or c in "_.`":
                         j -= 1
                     else:
@@ -2835,9 +2379,9 @@ def dialect(sql: str) -> str:
         changed = True
         while changed:
             changed = False
-            spans = _literal_spans(text)
+            spans = lit_spans(text)
             for m in sub.finditer(text):
-                if any(a <= m.start() < b for a, b in spans):
+                if in_spans(spans, m.start()):
                     continue
                 k = m.start() - 1
                 if k < 0:
@@ -2847,16 +2391,7 @@ def dialect(sql: str) -> str:
                 while j >= 0:
                     c = text[j]
                     if c in ")]":
-                        depth = 0
-                        while j >= 0:
-                            if text[j] in ")]":
-                                depth += 1
-                            elif text[j] in "([":
-                                depth -= 1
-                                if depth == 0:
-                                    break
-                            j -= 1
-                        j -= 1
+                        j = find_open_back(text, j) - 1
                     elif c.isalnum() or c in "_.`":
                         j -= 1
                     else:
@@ -2919,27 +2454,12 @@ def dialect(sql: str) -> str:
             m = pat.search(text, pos)
             if m is None:
                 return text
-            depth, k, in_q, n = 1, m.end(), None, len(text)
-            commas = []
-            while k < n and depth:
-                c = text[k]
-                if in_q:
-                    if c == in_q:
-                        in_q = None
-                elif c in ("'", '"'):
-                    in_q = c
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                elif c == "," and depth == 1:
-                    commas.append(k)
-                k += 1
-            if depth or len(commas) != 1:
+            k = find_close(text, m.end() - 1) + 1
+            args = split_top(text[m.end() : k - 1])
+            if k > len(text) or len(args) != 2:
                 pos = m.end()
                 continue
-            a1 = text[m.end() : commas[0]].strip()
-            a2 = text[commas[0] + 1 : k - 1].strip()
+            a1, a2 = args[0].strip(), args[1].strip()
             fm = re.match(r"^['\"]([^'\"]*%[^'\"]*)['\"]$", a2)
             if fm is None:
                 pos = k
@@ -3005,7 +2525,7 @@ def dialect(sql: str) -> str:
         mk = make_interval_expr(n, unit)
         return f"{sign} {mk}" if mk is not None else m.group(0)
 
-    s = _sub_outside_literals(
+    s = sub_outside_literals(
         r"([+-])\s*INTERVAL\s+([^,()']+?)\s+"
         r"(day|week|hour|minute|second|month|quarter|year)s?\b",
         _bare_ivl,
@@ -3132,6 +2652,16 @@ def dialect(sql: str) -> str:
     return s
 
 
+_IN_SUB_TOKEN = re.compile(
+    r"[()]|(?<![\w`$.])(SELECT|FROM|ON|WHERE|GROUP|HAVING|ORDER|LIMIT|UNION"
+    r"|JOIN|INNER|LEFT|RIGHT|FULL|CROSS|USING)\b",
+    re.I,
+)
+_IN_SUB_SHAPE_BREAKERS = re.compile(
+    r"(?<![\w`])(GROUP|ORDER|LIMIT|UNION|INTERSECT|EXCEPT)(?![\w`])", re.I)
+_IN_SUB_WHERE = re.compile(r"(?<![\w`])WHERE(?![\w`])", re.I)
+
+
 def _in_subquery_spans(s: str) -> list[tuple[int, int]]:
     """[start, end) spans where an IN-subquery needs the three-valued
     expansion: SELECT-list spans (projection) and JOIN ON conditions.
@@ -3140,49 +2670,35 @@ def _in_subquery_spans(s: str) -> list[tuple[int, int]]:
     spans: list[tuple[int, int]] = []
     stack: list[tuple[int, int]] = []  # (depth, select-pos)
     on_start: tuple[int, int] | None = None
-    kw = re.compile(
-        r"(SELECT|FROM|ON|WHERE|GROUP|HAVING|ORDER|LIMIT|UNION|JOIN"
-        r"|INNER|LEFT|RIGHT|FULL|CROSS|USING)\b",
-        re.I,
-    )
-    depth, in_q, i, n = 0, None, 0, len(s)
-    while i < n:
-        c = s[i]
-        if in_q:
-            if c == in_q:
-                in_q = None
-        elif c in ("'", '"'):
-            in_q = c
-        elif c == "(":
+    lits = lit_spans(s)
+    depth = 0
+    for m in _IN_SUB_TOKEN.finditer(s):
+        i = m.start()
+        if in_spans(lits, i):
+            continue
+        if m.group() == "(":
             depth += 1
-        elif c == ")":
+        elif m.group() == ")":
             depth -= 1
             if on_start is not None and depth < on_start[0]:
                 spans.append((on_start[1], i))
                 on_start = None
             while stack and depth < stack[-1][0]:
                 stack.pop()
-        elif c.isalpha() and (
-            i == 0 or not (s[i - 1].isalnum() or s[i - 1] in "_`$.")
-        ):
-            m = kw.match(s, i)
-            if m:
-                word = m.group(1).upper()
-                if on_start is not None and depth == on_start[0] and word != "SELECT":
-                    spans.append((on_start[1], i))
-                    on_start = None
-                if word == "SELECT":
-                    stack.append((depth, m.end()))
-                elif word == "FROM":
-                    if stack and stack[-1][0] == depth:
-                        spans.append((stack.pop()[1], i))
-                elif word == "ON":
-                    on_start = (depth, m.end())
-                i = m.end()
-                continue
-        i += 1
+        else:
+            word = m.group(1).upper()
+            if on_start is not None and depth == on_start[0] and word != "SELECT":
+                spans.append((on_start[1], i))
+                on_start = None
+            if word == "SELECT":
+                stack.append((depth, m.end()))
+            elif word == "FROM":
+                if stack and stack[-1][0] == depth:
+                    spans.append((stack.pop()[1], i))
+            elif word == "ON":
+                on_start = (depth, m.end())
     if on_start is not None:
-        spans.append((on_start[1], n))
+        spans.append((on_start[1], len(s)))
     return spans
 
 
@@ -3212,48 +2728,22 @@ def _three_valued_in(s: str) -> str:
         if True:
             # matching close paren of the subquery
             po = s.index("(", m.start())
-            d2, k, q2 = 0, po, None
-            while k < len(s):
-                ch = s[k]
-                if q2:
-                    if ch == q2:
-                        q2 = None
-                elif ch in ("'", '"'):
-                    q2 = ch
-                elif ch == "(":
-                    d2 += 1
-                elif ch == ")":
-                    d2 -= 1
-                    if d2 == 0:
-                        break
-                k += 1
+            k = find_close(s, po)
             sub = s[po + 1 : k]
             # walk back over the probe expression X
             j = m.start() - 1
             while j >= 0 and s[j].isspace():
                 j -= 1
             end_x = j + 1
+            lit_start = {b - 1: a for a, b in lit_spans(s)}
             while j >= 0:
                 ch = s[j]
                 if ch in ")]":
-                    dd = 0
-                    while j >= 0:
-                        if s[j] in ")]":
-                            dd += 1
-                        elif s[j] in "([":
-                            dd -= 1
-                            if dd == 0:
-                                break
-                        j -= 1
+                    j = find_open_back(s, j) - 1
+                elif ch == "'":
+                    j = lit_start.get(j, j) - 1
+                elif ch.isalnum() or ch in "_.`":
                     j -= 1
-                elif ch.isalnum() or ch in "_.`'":
-                    if ch == "'":
-                        j -= 1
-                        while j >= 0 and s[j] != "'":
-                            j -= 1
-                        j -= 1
-                    else:
-                        j -= 1
                 else:
                     break
             start_x = j + 1
@@ -3295,65 +2785,12 @@ def _split_in_subquery(sub: str) -> tuple[str, str, int | None] | None:
     sm = re.match(r"\s*SELECT\s+(?:DISTINCT\s+)?", sub, re.I)
     if sm is None:
         return None
-    depth, in_q, i, n = 0, None, sm.end(), len(sub)
-    frm = None
-    while i < n:
-        c = sub[i]
-        if in_q:
-            if c == in_q:
-                in_q = None
-        elif c in ("'", '"'):
-            in_q = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            if c == ",":
-                return None
-            if (
-                c in "fF"
-                and sub[i : i + 4].upper() == "FROM"
-                and not (sub[i - 1].isalnum() or sub[i - 1] in "_`")
-                and not (
-                    i + 4 < n and (sub[i + 4].isalnum() or sub[i + 4] in "_`")
-                )
-            ):
-                frm = i
-                break
-        i += 1
-    if frm is None:
+    fm = depth0_search(sub, r"(?<![\w`])FROM(?![\w`])|,", sm.end(), re.I)
+    if fm is None or fm.group() == ",":
         return None
-    e = sub[sm.end() : frm].strip()
-    rest = sub[frm + 4 :].strip()
-    for w in ("GROUP", "ORDER", "LIMIT", "UNION", "INTERSECT", "EXCEPT"):
-        if _scan_depth0_word(rest, w) is not None:
-            return None
-    return e, rest, _scan_depth0_word(rest, "WHERE")
-
-
-def _scan_depth0_word(text: str, word: str) -> int | None:
-    depth, in_q, i, n, wl = 0, None, 0, len(text), len(word)
-    while i < n:
-        c = text[i]
-        if in_q:
-            if c == in_q:
-                in_q = None
-        elif c in ("'", '"'):
-            in_q = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and text[i : i + wl].upper() == word
-            and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] in "_`"))
-            and not (
-                i + wl < n
-                and (text[i + wl].isalnum() or text[i + wl] in "_`")
-            )
-        ):
-            return i
-        i += 1
-    return None
+    e = sub[sm.end() : fm.start()].strip()
+    rest = sub[fm.end() :].strip()
+    if depth0_search(rest, _IN_SUB_SHAPE_BREAKERS) is not None:
+        return None
+    wm = depth0_search(rest, _IN_SUB_WHERE)
+    return e, rest, wm.start() if wm else None

@@ -30,6 +30,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from doris_spark.plans.sqltok import find_close, lit_spans, split_args_top, split_top
+
 _AGG = re.compile(r"^(sum|count|min|max|avg)\s*\((.+)\)$", re.I | re.S)
 # FROM accepts a single table or an equi-join chain
 # (t1 JOIN t2 ON a = b [AND c = d] [JOIN ...]) for join-aware MVs.
@@ -49,27 +51,18 @@ _SHAPE = re.compile(
     re.I | re.S,
 )
 _RESERVED = {"where", "group", "having", "order", "limit"}
+_AND = re.compile(r"(?<!\w)AND(?!\w)", re.I)
 
 
 def _norm(e: str) -> str:
     """Canonical expression text: whitespace collapsed and case folded
     ONLY outside string literals — "status = 'a b'" must not normalize
     equal to "status = 'ab'" when matching MV where-conjuncts."""
-    out, i, n, in_q = [], 0, len(e), None
-    while i < n:
-        ch = e[i]
-        if in_q:
-            out.append(ch)
-            if ch == in_q:
-                in_q = None
-        elif ch in ("'", '"'):
-            in_q = ch
-            out.append(ch)
-        elif ch.isspace() or ch == "`":
-            pass
-        else:
-            out.append(ch.lower())
-        i += 1
+    out, last = [], 0
+    for a, b in lit_spans(e) + [(len(e), len(e))]:
+        out.append(re.sub(r"[\s`]+", "", e[last:a]).lower())
+        out.append(e[a:b])
+        last = b
     return "".join(out)
 
 
@@ -88,59 +81,7 @@ def _norm_join(text: str) -> str:
 
 def _split_conjuncts(text: str) -> list[str]:
     """Split a predicate on top-level AND (outside parens/strings)."""
-    out: list[str] = []
-    depth, in_str, last, i = 0, None, 0, 0
-    up = text.upper()
-    while i < len(text):
-        ch = text[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and up.startswith("AND", i)
-            and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_"))
-            and (i + 3 >= len(text) or not (text[i + 3].isalnum() or text[i + 3] == "_"))
-        ):
-            out.append(text[last:i].strip())
-            last = i + 3
-            i += 3
-            continue
-        i += 1
-    tail = text[last:].strip()
-    if tail:
-        out.append(tail)
-    return [p for p in out if p]
-
-
-def _split_top(text: str, sep: str = ",") -> list[str]:
-    parts, depth, buf, in_str = [], 0, [], None
-    for ch in text:
-        if in_str:
-            buf.append(ch)
-            if ch == in_str:
-                in_str = None
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == sep and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-            continue
-        buf.append(ch)
-    if "".join(buf).strip():
-        parts.append("".join(buf).strip())
-    return parts
+    return [p.strip() for p in split_top(text, _AND) if p.strip()]
 
 
 @dataclass
@@ -191,7 +132,9 @@ def _idents(expr: str) -> set[str]:
     """Bare identifiers in expr (lowercased, quotes stripped, function
     names excluded)."""
     out = set()
-    clean = re.sub(r"'[^']*'|\"[^\"]*\"", "", expr)
+    clean = expr
+    for a, b in reversed(lit_spans(expr)):
+        clean = clean[:a] + clean[b:]
     for m in re.finditer(r"([A-Za-z_][\w.]*)\s*(\()?", clean):
         if m.group(2):  # function call
             continue
@@ -288,7 +231,7 @@ def _try_one(sql: str, m: re.Match, mv: MVDef) -> str | None:
     order = unqualify(m.group("order") or "")
     select = unqualify(m.group("select"))
 
-    group_cols = [_norm(g) for g in _split_top(group)] if group else []
+    group_cols = [_norm(g) for g in split_args_top(group)] if group else []
     if not group_cols:
         return None  # pure-scan queries are out of scope (SPJG only)
     if not set(group_cols) <= mv.dims:
@@ -310,7 +253,7 @@ def _try_one(sql: str, m: re.Match, mv: MVDef) -> str | None:
 
     new_select = []
     out_aliases: set[str] = set()
-    for item in _split_top(select):
+    for item in split_args_top(select):
         expr, out_alias = _strip_alias(item)
         if out_alias:
             out_aliases.add(out_alias.lower())
@@ -331,23 +274,7 @@ def _try_one(sql: str, m: re.Match, mv: MVDef) -> str | None:
         """Rewrite aggregate calls inside HAVING/ORDER BY."""
         if not text:
             return text
-        out, ok = [], True
-
-        def sub(mm):
-            nonlocal ok
-            call_start = mm.start()
-            # find balanced close
-            depth, j = 0, mm.end() - 1
-            while j < len(text):
-                if text[j] == "(":
-                    depth += 1
-                elif text[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            return call_start, j + 1
-
+        out = []
         i = 0
         pat = re.compile(r"\b(sum|count|min|max|avg)\s*\(", re.I)
         while i < len(text):
@@ -355,7 +282,7 @@ def _try_one(sql: str, m: re.Match, mv: MVDef) -> str | None:
             if mm is None:
                 out.append(text[i:])
                 break
-            s, e = sub(mm)
+            s, e = mm.start(), find_close(text, mm.end() - 1) + 1
             out.append(text[i:s])
             r = _rewrite_agg(text[s:e], mv)
             if r is None:

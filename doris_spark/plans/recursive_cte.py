@@ -119,55 +119,14 @@ def recursive_union(
 
 import re as _re
 
-
-def _toplevel_spans(s: str):
-    """Indexes of characters at paren depth 0 and outside literals."""
-    from doris_spark.plans.dialect import _lit_spans
-
-    lits = sorted(_lit_spans(s))
-    li = 0
-    depth = 0
-    flat = []
-    for i, c in enumerate(s):
-        while li < len(lits) and lits[li][1] <= i:
-            li += 1
-        if li < len(lits) and lits[li][0] <= i:
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            flat.append(i)
-    return set(flat)
+from doris_spark.plans.sqltok import depth0_search, find_close
 
 
 _VIEW_SEQ = 0  # unique internal temp-view names across calls
 
 _REC_HEAD = _re.compile(r"^\s*WITH\s+RECURSIVE\s+", _re.I)
 _CTE_HEAD = _re.compile(r"\s*`?(\w+)`?\s*(?:\(([^)]*)\))?\s*AS\s*\(", _re.I)
-
-
-def _scan_balanced(text: str, start: int) -> int:
-    """Index just past the ')' matching the '(' that `start` follows
-    (depth already 1 at `start`), literal-aware."""
-    from doris_spark.plans.dialect import _lit_spans
-
-    lits = sorted(_lit_spans(text))
-    li = 0
-    depth, i, n = 1, start, len(text)
-    while i < n and depth:
-        while li < len(lits) and lits[li][1] <= i:
-            li += 1
-        if li < len(lits) and lits[li][0] <= i:
-            i = lits[li][1]
-            continue
-        if text[i] == "(":
-            depth += 1
-        elif text[i] == ")":
-            depth -= 1
-        i += 1
-    return i if not depth else -1
+_PLAIN_UNION = _re.compile(r"\bUNION\b(?!\s+ALL\b)", _re.I)
 
 
 _CAST_INT_RE = None  # compiled lazily (module import order)
@@ -217,8 +176,8 @@ def try_recursive_union_sql(engine, text: str):
         hm = _CTE_HEAD.match(text, pos)
         if hm is None:
             return None
-        end = _scan_balanced(text, hm.end())
-        if end < 0:
+        end = find_close(text, hm.end() - 1) + 1
+        if end > len(text):
             return None
         ctes.append((hm.group(1), hm.group(2),
                      text[hm.end(): end - 1]))
@@ -233,11 +192,12 @@ def try_recursive_union_sql(engine, text: str):
     def plain_union_split(body: str, name: str):
         """(anchor_sql, step_sql) at the first top-level plain UNION
         whose right side references `name`, else None."""
-        top = _toplevel_spans(body)
         ref = _re.compile(rf"(?<![\w.`]){name}(?![\w`])", _re.I)
-        for um in _re.finditer(r"\bUNION\b(?!\s+ALL\b)", body, _re.I):
-            if um.start() in top and ref.search(body[um.end():]):
+        pos = 0
+        while (um := depth0_search(body, _PLAIN_UNION, pos)) is not None:
+            if ref.search(body[um.end():]):
                 return body[: um.start()], body[um.end():]
+            pos = um.end()
         return None
 
     if not any(plain_union_split(b, n) for n, _, b in ctes):
@@ -268,9 +228,8 @@ def try_recursive_union_sql(engine, text: str):
             nm = _re.search(r"\(\s*WITH\s+RECURSIVE\b", sql, _re.I)
             if nm is None:
                 return sql
-            # _scan_balanced expects the index AFTER the '(' (depth 1)
-            end = _scan_balanced(sql, nm.start() + 1)
-            if end < 0:
+            end = find_close(sql, nm.start()) + 1
+            if end > len(sql):
                 return sql
             inner = sql[nm.start() + 1: end - 1]
             import os as _os

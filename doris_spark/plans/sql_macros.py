@@ -28,6 +28,8 @@ from __future__ import annotations
 import re
 from collections.abc import Callable, Sequence
 
+from doris_spark.plans.sqltok import find_close, in_spans, lit_spans, split_args_top
+
 Macro = Callable[[Sequence[str]], str]
 
 # lc_time_names session variable (MySQL semantics; the reference resolves
@@ -2499,17 +2501,13 @@ def _array_flatten_macro(args: Sequence[str]) -> str:
         # max nesting of [..] brackets / array(..) constructor calls
         # (the dialect layer may already have converted brackets)
         mx = d = 0
-        in_q = None
         stack: list[bool] = []
-        i = 0
-        while i < len(a):
-            ch = a[i]
-            if in_q:
-                if ch == in_q:
-                    in_q = None
-            elif ch in ("'", '"'):
-                in_q = ch
-            elif ch == "[":
+        lits = lit_spans(a)
+        for bm in re.finditer(r"[\[\]()]", a):
+            i, ch = bm.start(), bm.group()
+            if in_spans(lits, i):
+                continue
+            if ch == "[":
                 d += 1
                 mx = max(mx, d)
             elif ch == "]":
@@ -2522,10 +2520,8 @@ def _array_flatten_macro(args: Sequence[str]) -> str:
                 if is_arr:
                     d += 1
                     mx = max(mx, d)
-            elif ch == ")":
-                if stack and stack.pop():
-                    d -= 1
-            i += 1
+            elif stack and stack.pop():
+                d -= 1
         depth = mx
     flattens = (depth - 1) if depth is not None else 1
     out = a
@@ -2791,22 +2787,6 @@ MACROS["array_sortby"] = _array_sortby
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
-def _split_top(s: str) -> list[str]:
-    """Top-level comma split via the shared tokenizer (plans/sqltok.py),
-    preserving this module's historical trailing-empty-arg semantics
-    (`f(a,)` -> ['a', '']) which the shared splitter drops."""
-    from doris_spark.plans.sqltok import split_args_top
-
-    parts = split_args_top(s + "\x00")
-    if parts and parts[-1] == "\x00":
-        parts[-1] = ""
-    elif parts and parts[-1].endswith("\x00"):
-        parts[-1] = parts[-1][:-1].rstrip()
-    if parts == [""]:
-        return []
-    return parts
-
-
 _SET_LC = re.compile(
     r"^\s*SET\s+lc_time_names\s*=\s*'?([A-Za-z_]+)'?\s*;?\s*$", re.I
 )
@@ -2855,20 +2835,7 @@ def _lateral_view_udtfs(sql: str) -> str:
         fn = m.group(2).lower()
         if m.group(1) and not fn.endswith("_outer"):
             fn += "_outer"
-        # balanced args
-        depth, k, in_str, n = 1, m.end(), None, len(sql)
-        while k < n and depth:
-            c = sql[k]
-            if in_str:
-                if c == in_str:
-                    in_str = None
-            elif c in ("'", '"'):
-                in_str = c
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            k += 1
+        k = find_close(sql, m.end() - 1) + 1  # balanced args
         args = sql[m.end(): k - 1]
         tail = sql[k:]
         am = re.match(
@@ -2909,36 +2876,19 @@ _AGG_CALL = re.compile(
 def _attach_over(expansion: str, over_text: str) -> str:
     """Append `over_text` after every aggregate call in `expansion`."""
     out, i, n = [], 0, len(expansion)
+    lit_end = dict(lit_spans(expansion))
     while i < n:
-        c = expansion[i]
-        if c in ("'", '"'):
-            j = i + 1
-            while j < n and expansion[j] != c:
-                j += 1
-            out.append(expansion[i : j + 1])
-            i = j + 1
+        if i in lit_end:
+            out.append(expansion[i : lit_end[i]])
+            i = lit_end[i]
             continue
         m = _AGG_CALL.match(expansion, i)
         if m:
-            depth, k, in_str = 0, expansion.index("(", m.start()), None
-            while k < n:
-                ck = expansion[k]
-                if in_str:
-                    if ck == in_str:
-                        in_str = None
-                elif ck in ("'", '"'):
-                    in_str = ck
-                elif ck == "(":
-                    depth += 1
-                elif ck == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k += 1
+            k = find_close(expansion, m.end() - 1)
             out.append(expansion[i : k + 1] + " " + over_text)
             i = k + 1
             continue
-        out.append(c)
+        out.append(expansion[i])
         i += 1
     return "".join(out)
 
@@ -2984,8 +2934,6 @@ def rewrite(sql: str) -> str:
         from doris_spark.plans.asof_sql import rewrite_asof
 
         sql = rewrite_asof(sql)
-    from doris_spark.plans.sqltok import find_close, lit_spans
-
     out = []
     i = 0
     n = len(sql)
@@ -3014,7 +2962,7 @@ def rewrite(sql: str) -> str:
                     dmm and name.lower() in _DISTINCT_STRIP)
                 if want_distinct:
                     inner = inner[dmm.end():]
-                args = [rewrite(a) for a in _split_top(inner)]
+                args = [rewrite(a) for a in split_args_top(inner)]
                 expansion = MACROS[name.lower()](args)
                 if want_distinct and not expansion.startswith("__KEEP__("):
                     expansion = _insert_distinct(expansion)

@@ -41,7 +41,7 @@ from __future__ import annotations
 
 import re
 
-from doris_spark.plans.sqltok import lit_spans as _lit_spans
+from doris_spark.plans.sqltok import lit_spans
 from doris_spark.plans import type_hints
 
 # ---------------------------------------------------------------------------
@@ -468,7 +468,7 @@ class _Tok:
 
 def _tokenize(s: str):
     toks = []
-    lits = sorted(_lit_spans(s))
+    lits = lit_spans(s)
     li = 0
     i, n = 0, len(s)
     while i < n:

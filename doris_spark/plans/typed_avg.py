@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import re
 
-from doris_spark.plans.dialect import _lit_spans
+from doris_spark.plans.sqltok import find_close, in_spans, lit_spans
 
 _AVG_TOKEN = re.compile(r"(?<![\w.$])avg\s*\(", re.I)
 # the exact spelling sql_macros emits for 2-arg date_add/date_sub
@@ -102,37 +102,13 @@ def _collect_expr_types(jdf) -> dict[str, str]:
     return out
 
 
-def _in_lit_fn(stmt: str):
-    lits = _lit_spans(stmt)
-
-    def in_lit(i: int) -> bool:
-        return any(a <= i < b for a, b in lits)
-
-    return in_lit
-
-
-def _balanced_end(stmt: str, i: int, in_lit) -> int:
-    """Index just past the ')' matching the '(' at stmt[i]."""
-    depth = 0
-    while i < len(stmt):
-        if not in_lit(i):
-            if stmt[i] == "(":
-                depth += 1
-            elif stmt[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    return i + 1
-        i += 1
-    return -1
-
-
-def _avg_sites(stmt: str, in_lit):
+def _avg_sites(stmt: str, lits):
     """(start, end, arg, distinct, windowed) for textual avg(...) calls."""
     for m in _AVG_TOKEN.finditer(stmt):
-        if in_lit(m.start()):
+        if in_spans(lits, m.start()):
             continue
-        end = _balanced_end(stmt, m.end() - 1, in_lit)
-        if end < 0:
+        end = find_close(stmt, m.end() - 1) + 1
+        if end > len(stmt):
             return
         arg = stmt[m.end() : end - 1]
         dm = re.match(r"\s*DISTINCT\b", arg, re.I)
@@ -164,21 +140,21 @@ _DATE_TAIL = re.compile(
 )
 
 
-def _date_sites(stmt: str, in_lit):
+def _date_sites(stmt: str, lits):
     """Sites of the macro layer's 2-arg date_add/date_sub expansion:
     `(CAST((ARG) AS TIMESTAMP) ± make_interval(0, 0, 0, CAST((N) AS
     INT)))` — yields (start, end, arg, n, op)."""
     for m in _DATE_SITE.finditer(stmt):
-        if in_lit(m.start()):
+        if in_spans(lits, m.start()):
             continue
-        arg_end = _balanced_end(stmt, m.end() - 1, in_lit)
-        if arg_end < 0:
+        arg_end = find_close(stmt, m.end() - 1) + 1
+        if arg_end > len(stmt):
             continue
         tm = _DATE_TAIL.match(stmt, arg_end)
         if tm is None:
             continue
-        n_end = _balanced_end(stmt, tm.end() - 1, in_lit)
-        if n_end < 0:
+        n_end = find_close(stmt, tm.end() - 1) + 1
+        if n_end > len(stmt):
             continue
         rest = re.match(r"\s*AS\s+INT\s*\)\s*\)\s*\)", stmt[n_end:], re.I)
         if rest is None:
@@ -212,14 +188,14 @@ def _num_to_dt_literal(n: str) -> str | None:
     return f"TIMESTAMP'{d} {n[8:10]}:{n[10:12]}:{n[12:14]}'"
 
 
-def _date_cmp_sites(stmt: str, in_lit):
+def _date_cmp_sites(stmt: str, lits):
     """Comparisons of an identifier against an 8/14-digit integer
     literal (the MySQL/Doris date-number coercion: `d BETWEEN 20221111
     AND 20221113` matches DATE rows — Spark instead casts the int to
     DATE, yielding NULL). Yields (start, end, ident, [(numstart,
     numend, digits), ...])."""
     for m in _DATE_NUM_CMP.finditer(stmt):
-        if in_lit(m.start()):
+        if in_spans(lits, m.start()):
             continue
         if m.group(1) is not None:
             yield m.start(), m.end(), m.group(1), [
@@ -235,16 +211,16 @@ def _date_cmp_sites(stmt: str, in_lit):
 def doris_typed_fixup(spark, stmt: str, df) -> str | None:
     """Return a rewritten statement applying the typed rules above, or
     None when no call site needs (or safely admits) a rewrite."""
-    in_lit = _in_lit_fn(stmt)
+    lits = lit_spans(stmt)
     avg_sites = (
-        list(_avg_sites(stmt, in_lit)) if _AVG_TOKEN.search(stmt) else []
+        list(_avg_sites(stmt, lits)) if _AVG_TOKEN.search(stmt) else []
     )
     date_sites = (
-        list(_date_sites(stmt, in_lit))
+        list(_date_sites(stmt, lits))
         if "make_interval(0, 0, 0, CAST((" in stmt
         else []
     )
-    cmp_sites = list(_date_cmp_sites(stmt, in_lit))
+    cmp_sites = list(_date_cmp_sites(stmt, lits))
     if not avg_sites and not date_sites and not cmp_sites:
         return None
     try:

@@ -79,7 +79,7 @@ def test_is_true_inside_string_literal_untouched():
 
 
 def test_is_false_inside_double_quoted_literal_untouched():
-    from doris_spark.plans.dialect import _lit_spans  # noqa: F401
+    from doris_spark.plans.sqltok import lit_spans  # noqa: F401
     from doris_spark.plans.dialect import dialect
 
     out = dialect('SELECT "y IS NOT FALSE" AS s FROM t')

@@ -12,6 +12,8 @@ def test_bench_json_contract():
     env = dict(os.environ)
     env["SPARK_GRAFT_SF_DIR"] = "/root/testdata/sf0.001"
     env["SPARK_GRAFT_CPUS"] = "8"
+    # one timed pass: the assertions check the JSON contract, not timings
+    env["SPARK_GRAFT_BENCH_PASSES"] = "1"
     # Write the full-map sidecar to a temp path so this test never
     # clobbers the committed sf0.1 bench_full.json (VERDICT r11 #4).
     import tempfile

@@ -116,6 +116,39 @@ def test_update_string_literal_containing_where(eng):
     assert (1, 100.0, "call where needed") in _rows(eng)
 
 
+def test_update_escaped_quote_literal_holding_where(eng):
+    # a backslash-escaped quote does not end the literal, so the WHERE
+    # inside it is data and only order 1 is updated
+    res = eng.sql(
+        r"UPDATE dml_orders SET order_status = 'it\'s where x' "
+        "WHERE order_id = 1"
+    ).collect()
+    assert res[0].affected == 1
+    assert _rows(eng) == {
+        (1, 100.0, "it's where x"),
+        (2, 250.0, "Pending"),
+        (3, 75.5, "Shipped"),
+    }
+
+
+def test_delete_escaped_quote_literal_holding_and(spark):
+    # the predicate is one literal comparison AND a 1-based subscript:
+    # a scanner that ends the literal at \' hides tags[1] from the
+    # dialect and deletes row 2 instead
+    e = Engine(spark)
+    df = spark.createDataFrame(
+        [(1, "a' and b", ["x", "y"]), (2, "a' and b", ["y", "x"]),
+         (3, "a", ["x"])],
+        "id INT, note STRING, tags ARRAY<STRING>",
+    )
+    e.create_table(df, "dml_notes")
+    res = e.sql(
+        r"DELETE FROM dml_notes WHERE note = 'a\' and b' AND tags[1] = 'x'"
+    ).collect()
+    assert res[0].affected == 1
+    assert sorted(r.id for r in e.sql("SELECT id FROM dml_notes").collect()) == [2, 3]
+
+
 def test_dml_fragment_gets_dialect(eng, spark):
     # ADVICE r4: DML predicates share the query dialect — arr[1] is the
     # FIRST element in both DELETE and SELECT
@@ -160,6 +193,17 @@ def test_insert_values_unique_upsert(spark):
     eng.sql("INSERT INTO ins_uni VALUES (1, 15, 'stale')")
     got = {r["id"]: r["v"] for r in eng.sql("SELECT * FROM ins_uni").collect()}
     assert got[1] == "new"
+
+
+def test_insert_values_fallback_keeps_escaped_quote_paren(spark):
+    # (3, 4) puts a number in the string column, so Spark's inline table
+    # rejects the body and the python-side fallback splits the tuples
+    eng = Engine(spark)
+    base = spark.createDataFrame([(1, "a")], "id bigint, v string")
+    eng.create_table(base, "ins_esc")
+    eng.sql(r"INSERT INTO ins_esc VALUES (2, 'a\')b'), (3, 4)")
+    got = sorted(tuple(r) for r in eng.sql("SELECT * FROM ins_esc").collect())
+    assert got == [(1, "a"), (2, "a')b"), (3, "4")]
 
 
 def test_insert_select_and_partial_columns(spark):

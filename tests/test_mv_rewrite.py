@@ -80,6 +80,19 @@ def test_no_rewrite_on_unknown_aggregate_or_dim():
     assert try_rewrite("SELECT * FROM lineitem", [MV]) is None
 
 
+def test_where_literal_with_escaped_quote_stays_one_conjunct():
+    # 'x\' and o_orderstatus' is ONE literal: splitting its text at the
+    # AND would re-join it as `... AND o_orderstatus'` and change the data
+    lit = r"'x\' and o_orderstatus'"
+    out = try_rewrite(
+        f"SELECT o_orderstatus, count(*) AS n FROM orders "
+        f"WHERE o_orderpriority = {lit} GROUP BY o_orderstatus",
+        [MV],
+    )
+    assert out is not None
+    assert f"WHERE o_orderpriority = {lit}\n" in out[0]
+
+
 def test_having_rewrite():
     out = try_rewrite(
         "SELECT o_orderpriority, count(*) AS n FROM orders "

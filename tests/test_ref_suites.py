@@ -26,9 +26,15 @@ import subprocess
 import sys
 import pytest
 
+from tools.ref_suite_runner import SUITES_ROOT
+
 # Hour-scale replay tier: excluded from the default (driver/CI) run by
 # pytest.ini's `-m "not slow"`; run with `-m ""` for the full battery.
-pytestmark = pytest.mark.slow
+# The suites replay the reference checkout, so they skip without it.
+pytestmark = [
+    pytest.mark.slow,
+    pytest.mark.skipif(not os.path.isdir(SUITES_ROOT), reason="reference checkout absent"),
+]
 
 
 def _run(target: str, out_path: str, timeout: int = 900):

@@ -19,9 +19,15 @@ import subprocess
 import sys
 import pytest
 
+from tools.tpc_duck_parity import SUITE
+
 # Hour-scale replay tier: excluded from the default (driver/CI) run by
 # pytest.ini's `-m "not slow"`; run with `-m ""` for the full battery.
-pytestmark = pytest.mark.slow
+# The suites replay the reference checkout, so they skip without it.
+pytestmark = [
+    pytest.mark.slow,
+    pytest.mark.skipif(not os.path.isdir(SUITE), reason="reference checkout absent"),
+]
 
 
 def _run_parity(args, out_path, timeout=900):

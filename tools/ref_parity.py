@@ -2630,13 +2630,13 @@ def run_setup(eng, sql: str) -> None:
     # literal-aware: a QUOTED "-9...9" (39+ digits) is a string value
     # headed for a STRING/DOUBLE/shadow column — corrupting it to a
     # CAST(...) inside the quotes NULLed every largeint fixture row
-    from doris_spark.plans.dialect import _sub_outside_literals
+    from doris_spark.plans.sqltok import sub_outside_literals
 
-    sql = _sub_outside_literals(
+    sql = sub_outside_literals(
         _HUGE_INT, lambda m: f"CAST('{m.group(0)}' AS DOUBLE)", sql)
     # DECIMAL256-scale decimal literals (>38 total digits) likewise
     # exceed Spark's decimal parser — keep the magnitude as a double
-    sql = _sub_outside_literals(
+    sql = sub_outside_literals(
         r"(?<![\w.])-?\d+\.\d+(?![\w.])",
         lambda m: (
             f"CAST('{m.group(0)}' AS DOUBLE)"
@@ -3472,16 +3472,16 @@ def _group_by_alias_subst(text: str) -> str | None:
                    r"\blimit\b|;|$)", text)
     if m is None or gm is None:
         return None
-    from doris_spark.plans.sql_macros import _split_top
+    from doris_spark.plans.sqltok import split_args_top
 
     aliases: dict[str, str] = {}
-    for it in _split_top(m.group(1)):
+    for it in split_args_top(m.group(1)):
         am = re.match(r"(?is)^(.*?)\s+(?:AS\s+)?`?(\w+)`?\s*$", it.strip())
         if am and not _AGG_WORDS.search(am.group(1)):
             aliases[am.group(2).lower()] = am.group(1).strip()
     if not aliases:
         return None
-    items = [i.strip() for i in _split_top(gm.group(1))]
+    items = [i.strip() for i in split_args_top(gm.group(1))]
     changed = False
     out = []
     for it in items:
@@ -3506,12 +3506,12 @@ def _any_value_ungrouped(text: str) -> str | None:
                    r"\blimit\b|;|$)", text)
     if m is None or gm is None:
         return None
-    from doris_spark.plans.sql_macros import _split_top
+    from doris_spark.plans.sqltok import split_args_top
 
     gkeys = {i.strip().strip("`").lower()
-             for i in _split_top(gm.group(1))}
+             for i in split_args_top(gm.group(1))}
     out, changed = [], False
-    for it in _split_top(m.group(1)):
+    for it in split_args_top(m.group(1)):
         t = it.strip()
         am = re.match(r"(?is)^`?(\w+)`?(\s+(?:AS\s+)?`?\w+`?)?\s*$", t)
         if am and am.group(1).lower() not in gkeys:
@@ -4221,7 +4221,7 @@ def _rewrite_fn_args_each(sql: str, names: str, fix, each: bool = True):
     analyzer complained about instead of collateral-rewriting every
     same-named call (if_nullif27's innocent ifnull(upper(\"null\"),..)).
     `each=False`: single SQL with all sites rewritten."""
-    from doris_spark.plans.sql_macros import _split_top
+    from doris_spark.plans.sqltok import split_args_top
 
     pat = re.compile(rf"\b(?:{names})\s*\(", re.I)
     sites = []
@@ -4246,7 +4246,7 @@ def _rewrite_fn_args_each(sql: str, names: str, fix, each: bool = True):
             k += 1
         if k >= len(sql):
             break
-        args = _split_top(sql[m.end():k])
+        args = split_args_top(sql[m.end():k])
         new = fix([a.strip() for a in args])
         if new is not None:
             sites.append((m.end(), k, ", ".join(new)))
@@ -5586,9 +5586,9 @@ def _run_case_raw(eng, sql: str, expected: list[str], ordered: bool = False):
             # string concat — swap and retry (test_nullif if_nullif27).
             # The unmasked boolean may then hit a coalesce/ifnull type
             # mismatch — chain the FE-coercion fixer.
-            from doris_spark.plans.dialect import _sub_outside_literals
+            from doris_spark.plans.sqltok import sub_outside_literals
 
-            retry = _sub_outside_literals(r"\|\|", " OR ", dialect(sql))
+            retry = sub_outside_literals(r"\|\|", " OR ", dialect(sql))
             try:
                 rows = eng.sql(retry).collect()
             except Exception as exc2:
