@@ -10,11 +10,26 @@ unlike Python UDFs. No Python in any of these.
 
 Each entry: name -> (typed parameter list, return expression). Types are
 chosen to match Doris semantics documented in the reference impl files.
+
+Doris installs this surface once per frontend; here every session
+installs it, and the ~360 CREATEs, each parsed and analyzed on its own,
+are most of a session's set-up. register_all therefore submits them as
+one batch to a thread pool sized by the driver's CPUs (the JVM parses and
+analyzes them side by side), while the Python UDF registrations run on
+the calling thread. The batch is order-free because every name has one
+definition (SQL_FUNCTIONS merges two disjoint mappings), no body calls
+another name of the batch (tests/test_registry_batch.py checks both), and
+the Python helpers bodies do call are registered before the batch starts.
 """
 
 from __future__ import annotations
 
+import re as _re
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import SparkSession
+
+from doris_spark.functions.registry_ext import DORIS_SQL_FUNCTIONS_EXT
 
 # name -> (params-SQL, body-SQL). Registered as:
 #   CREATE OR REPLACE TEMPORARY FUNCTION name(params) RETURNS ... RETURN body
@@ -57,39 +72,6 @@ DORIS_SQL_FUNCTIONS: dict[str, tuple[str, str]] = {
     "hours_diff": ("a TIMESTAMP, b TIMESTAMP", "timestampdiff(HOUR, b, a)"),
     "minutes_diff": ("a TIMESTAMP, b TIMESTAMP", "timestampdiff(MINUTE, b, a)"),
     "seconds_diff": ("a TIMESTAMP, b TIMESTAMP", "timestampdiff(SECOND, b, a)"),
-    # per-unit floor/ceil (function_datetime_floor_ceil.cpp)
-    "year_floor": ("t TIMESTAMP", "date_trunc('YEAR', t)"),
-    "month_floor": ("t TIMESTAMP", "date_trunc('MONTH', t)"),
-    "week_floor": ("t TIMESTAMP", "date_trunc('WEEK', t)"),
-    "day_floor": ("t TIMESTAMP", "date_trunc('DAY', t)"),
-    "hour_floor": ("t TIMESTAMP", "date_trunc('HOUR', t)"),
-    "minute_floor": ("t TIMESTAMP", "date_trunc('MINUTE', t)"),
-    "second_floor": ("t TIMESTAMP", "date_trunc('SECOND', t)"),
-    "year_ceil": (
-        "t TIMESTAMP",
-        "CASE WHEN t = date_trunc('YEAR', t) THEN t ELSE date_trunc('YEAR', t) + make_interval(1) END",
-    ),
-    "month_ceil": (
-        "t TIMESTAMP",
-        "CASE WHEN t = date_trunc('MONTH', t) THEN t ELSE date_trunc('MONTH', t) + make_interval(0, 1) END",
-    ),
-    "day_ceil": (
-        "t TIMESTAMP",
-        "CASE WHEN t = date_trunc('DAY', t) THEN t ELSE date_trunc('DAY', t) + make_interval(0, 0, 0, 1) END",
-    ),
-    "hour_ceil": (
-        "t TIMESTAMP",
-        "CASE WHEN t = date_trunc('HOUR', t) THEN t ELSE date_trunc('HOUR', t) + make_interval(0, 0, 0, 0, 1) END",
-    ),
-    "minute_ceil": (
-        "t TIMESTAMP",
-        "CASE WHEN t = date_trunc('MINUTE', t) THEN t ELSE date_trunc('MINUTE', t) + make_interval(0, 0, 0, 0, 0, 1) END",
-    ),
-    "second_ceil": (
-        "t TIMESTAMP",
-        "CASE WHEN t = date_trunc('SECOND', t) THEN t ELSE date_trunc('SECOND', t) + make_interval(0, 0, 0, 0, 0, 0, 1) END",
-    ),
-    "yearweek": ("t TIMESTAMP", "year(t) * 100 + weekofyear(t)"),
     # MySQL/Doris quirk: the Monday of 1970-01-01..03 would fall in 1969,
     # which TO_MONDAY clamps to the epoch date itself.
     "to_monday": (
@@ -546,8 +528,9 @@ DORIS_SQL_FUNCTIONS: dict[str, tuple[str, str]] = {
     ),
 }
 
-
-import re as _re
+# Every SQL-UDF definition, one per name: what register_all CREATEs and
+# what Engine.sql inlines on its retry ladder.
+SQL_FUNCTIONS: dict[str, tuple[str, str]] = {**DORIS_SQL_FUNCTIONS, **DORIS_SQL_FUNCTIONS_EXT}
 
 # Date-shift functions whose result must stay inside the Doris datetime
 # domain [0001-01-01, 9999-12-31]; outside it Doris yields NULL, while a
@@ -570,53 +553,57 @@ def clamp_datetime_domain(name: str, body: str) -> str:
     )
 
 
+def _create(spark: SparkSession, name: str, params: str, body: str) -> None:
+    body = clamp_datetime_domain(name, body)
+    spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params}) RETURN {body}")
+
+
 def register_all(spark: SparkSession) -> int:
     """Install the Doris-only function names as SQL temporary functions.
-    Returns the number registered. Idempotent (CREATE OR REPLACE)."""
-    from doris_spark.functions import pyfns as _pyfns
+    Returns the number registered. Idempotent (CREATE OR REPLACE).
 
-    # MySQL datetime kernel first: str_to_date/time_format bodies below
-    # reference __mysql_strptime/__mysql_strftime at analysis time.
-    n = _pyfns.register_mysql_datetime(spark)
-    n += _pyfns.register_math_kernels(spark)
-    from doris_spark.functions import geo2 as _geo2
-
-    # __wkt_num before the SQL loop: st_astext's body references it
-    n += _geo2.register_helpers(spark)
-    for name, (params, body) in DORIS_SQL_FUNCTIONS.items():
-        body = clamp_datetime_domain(name, body)
-        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params}) RETURN {body}")
-        n += 1
+    The SQL_FUNCTIONS CREATEs run as one batch on a pool sized by the
+    driver's CPUs while the Python registrations run on this thread; the
+    first CREATE that fails is raised once every CREATE has finished."""
     from doris_spark.functions import (
         ai,
+        crypto,
         dicts,
         geo2,
         json_mut,
         pyfns,
         regexps,
-        registry_ext,
         textdist,
         tvf,
         udtf,
     )
+    from doris_spark.session import driver_cpus
 
-    # __apn_encode must exist before registry_ext: SQL UDF bodies are
-    # analyzed at CREATE time (auto_partition_name references it)
+    # The Python helpers SQL bodies call: a body is analyzed at CREATE
+    # time, so these must exist before the batch starts.
+    n = pyfns.register_mysql_datetime(spark)
+    n += pyfns.register_math_kernels(spark)
+    n += geo2.register_helpers(spark)
     n += pyfns.register_apn_helper(spark)
     n += pyfns.register_crc32_internal(spark)
     n += pyfns.register_charset(spark)
-    n += registry_ext.register_all(spark)
-    n += pyfns.register(spark)
-    n += geo2.register(spark)
-    n += tvf.register(spark)
-    n += ai.register(spark)
-    n += dicts.register(spark)
-    from doris_spark.functions import crypto as _crypto
-
-    n += _crypto.register(spark)
-    n += json_mut.register_aliases(spark)
-    n += json_mut.register(spark)
-    n += textdist.register(spark)
-    n += regexps.register(spark)
-    n += udtf.register(spark)
+    with ThreadPoolExecutor(max_workers=driver_cpus()) as pool:
+        futures = [
+            pool.submit(_create, spark, name, params, body)
+            for name, (params, body) in SQL_FUNCTIONS.items()
+        ]
+        n += len(futures)
+        n += pyfns.register(spark)
+        n += geo2.register(spark)
+        n += tvf.register(spark)
+        n += ai.register(spark)
+        n += dicts.register(spark)
+        n += crypto.register(spark)
+        n += json_mut.register_aliases(spark)
+        n += json_mut.register(spark)
+        n += textdist.register(spark)
+        n += regexps.register(spark)
+        n += udtf.register(spark)
+    for f in futures:
+        f.result()
     return n

@@ -32,8 +32,6 @@ Known, documented divergences from the reference:
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
-
 OMIT = "__OMIT__"
 
 # Shared SQL fragments (inlined; SQL UDFs cannot call each other at
@@ -173,17 +171,6 @@ DORIS_SQL_FUNCTIONS_EXT: dict[str, tuple[str, str]] = {
     "quarters_add": ("t TIMESTAMP, n INT", "t + make_interval(0, 3 * n)"),
     "quarters_sub": ("t TIMESTAMP, n INT", "t - make_interval(0, 3 * n)"),
     "quarters_diff": ("a TIMESTAMP, b TIMESTAMP", "timestampdiff(MONTH, b, a) div 3"),
-    "quarter_floor": ("t TIMESTAMP", "date_trunc('QUARTER', t)"),
-    "quarter_ceil": (
-        "t TIMESTAMP",
-        "CASE WHEN t = date_trunc('QUARTER', t) THEN t "
-        "ELSE date_trunc('QUARTER', t) + make_interval(0, 3) END",
-    ),
-    "week_ceil": (
-        "t TIMESTAMP",
-        "CASE WHEN t = date_trunc('WEEK', t) THEN t "
-        "ELSE date_trunc('WEEK', t) + make_interval(0, 0, 1) END",
-    ),
     # period: YYYYMM packed months (MySQL PERIOD_ADD/PERIOD_DIFF)
     "period_add": (
         "p BIGINT, n INT",
@@ -695,12 +682,6 @@ DORIS_SQL_FUNCTIONS_EXT: dict[str, tuple[str, str]] = {
     # JSON (function_json.cpp / function_jsonb.cpp); mutation fns live in
     # functions/json_mut.py, these are the pure-SQL members
     # =================================================================
-    "json_extract": (
-        # Doris returns JSON text (strings stay quoted) — to_json(variant)
-        "j STRING, p STRING",
-        "to_json(try_variant_get(try_parse_json(j), p))",
-    ),
-    "jsonb_extract": ("j STRING, p STRING", "to_json(try_variant_get(try_parse_json(j), p))"),
     "json_extract_no_quotes": ("j STRING, p STRING", "get_json_object(j, p)"),
     "json_extract_string": ("j STRING, p STRING", "get_json_object(j, p)"),
     "json_extract_int": ("j STRING, p STRING", "CAST(get_json_object(j, p) AS INT)"),
@@ -950,17 +931,6 @@ DORIS_SQL_FUNCTIONS_EXT: dict[str, tuple[str, str]] = {
     "format_round": ("x DOUBLE, d INT", "format_number(x, d)"),
     "format": ("fmt STRING, x DOUBLE", "format_number(x, CAST(fmt AS INT))"),
 }
-
-
-def register_all(spark: SparkSession) -> int:
-    from doris_spark.functions.registry import clamp_datetime_domain
-
-    n = 0
-    for name, (params, body) in DORIS_SQL_FUNCTIONS_EXT.items():
-        body = clamp_datetime_domain(name, body)
-        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params}) RETURN {body}")
-        n += 1
-    return n
 
 
 # Batch 2: straggler names surfaced by tools/fn_audit.py after the main

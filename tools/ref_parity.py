@@ -3531,15 +3531,14 @@ def _inline_udfs_in_lambda(text: str) -> str | None:
     variable (array_map(x -> ipv4_to_ipv6(x), a) -> MISSING_ATTRIBUTES).
     Doris's FE inlines scalar function bodies before planning; mirror that
     by substituting single-parameter SQL-UDF bodies textually."""
-    from doris_spark.functions.registry import DORIS_SQL_FUNCTIONS
-    from doris_spark.functions.registry_ext import DORIS_SQL_FUNCTIONS_EXT
+    from doris_spark.functions.registry import SQL_FUNCTIONS
 
     changed = False
 
     def sub_one(m):
         nonlocal changed
         fn, raw_args = m.group(1).lower(), m.group(2)
-        spec = DORIS_SQL_FUNCTIONS.get(fn) or DORIS_SQL_FUNCTIONS_EXT.get(fn)
+        spec = SQL_FUNCTIONS.get(fn)
         if spec is None:
             return m.group(0)
         params, body = spec
