@@ -141,7 +141,7 @@ class Engine:
             # An externally built session still needs the Doris function
             # surface — prepare_session is idempotent per session, so
             # repeated Engine construction doesn't re-pay the registration
-            # (8.8-11.2 s on a cold JVM, ~3 s on a warm one, 4 vCPUs).
+            # (~9 s on a fresh JVM, 2-3 s on a warm one, 4 vCPUs).
             from doris_spark.session import prepare_session
 
             prepare_session(spark)

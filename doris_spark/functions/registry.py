@@ -19,7 +19,7 @@ analyzes them side by side), while the Python UDF registrations run on
 the calling thread. The batch is order-free because every name has one
 definition (SQL_FUNCTIONS merges two disjoint mappings), no body calls
 another name of the batch (tests/test_registry_batch.py checks both), and
-the Python helpers bodies do call are registered before the batch starts.
+the Python helpers that bodies call are registered before the batch starts.
 """
 
 from __future__ import annotations

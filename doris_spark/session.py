@@ -139,8 +139,9 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     Sets the runtime confs the fixture data requires and installs the Doris
     function-name surface. Idempotent per session: a repeat call returns at
     once, and a call that raises leaves the session unmarked, so the next
-    call registers again. The first call costs 8.8-11.2 s on a cold JVM
-    and ~3 s on a warm one (`spark.newSession()`), on 4 vCPUs.
+    call registers again. The first call on a session takes 9.1-9.6 s
+    when it is the JVM's first (its parser and analyzer not yet compiled)
+    and 2.3-3.0 s on a later `spark.newSession()`, measured on 4 vCPUs.
     """
     if session_token(spark) in _PREPARED:
         return spark
