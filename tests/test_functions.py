@@ -36,8 +36,7 @@ SMOKE_OVERRIDES = {
 }
 
 # Names registry_ext defines with optional period/origin (or mode)
-# parameters; called with the one TIMESTAMP argument of the shorter form
-# registry.py used to define beside them.
+# parameters, smoke-called with their one required TIMESTAMP argument.
 ONE_TIMESTAMP_ARG = (
     "day_ceil", "day_floor", "hour_ceil", "hour_floor", "minute_ceil",
     "minute_floor", "month_ceil", "month_floor", "second_ceil",

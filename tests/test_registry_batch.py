@@ -83,7 +83,7 @@ def test_failed_create_raises_after_the_whole_batch(spark, monkeypatch):
 
     bad = next(iter(SQL_FUNCTIONS))  # submitted first, fails first
     params, _ = SQL_FUNCTIONS[bad]
-    monkeypatch.setitem(registry.SQL_FUNCTIONS, bad, (params, "__batch_probe_missing(1)"))
+    monkeypatch.setitem(SQL_FUNCTIONS, bad, (params, "__batch_probe_missing(1)"))
     done = []
     create = registry._create
 
