@@ -1,10 +1,17 @@
 """Query registry: the engine's public correctness surface.
 
-Each entry registers a (name, builder, oracle_sql) triple. Builders take
+Each entry maps a name to a builder and, usually, an oracle_sql. Builders take
 (spark, sf_dir) and return a DataFrame; oracle_sql is equivalent ANSI SQL for
 DuckDB over the same parquet fixtures (driver contract in __spark_entry__.py).
 Column names are aliased identically on both sides — the driver hashes values
 after sorting columns by name.
+
+A query can instead register one SQL text (`sql_query`): Engine.sql runs
+it as the query, and DuckDB runs the same text as the oracle. A TPC-H, SSB,
+ClickBench or TPC-DS query keeps a hand-built builder only when its text
+cannot run through Engine.sql unchanged, disagrees with DuckDB, runs slower
+than the builder beyond noise, or is a builder the benchmark times
+(CHANGES.md gives each kept builder's reason).
 
 A query with oracle=None gets the driver's weaker rows-only check (used for
 genuinely non-SQL-expressible ops, e.g. MinHash LSH dedup).
@@ -12,6 +19,7 @@ genuinely non-SQL-expressible ops, e.g. MinHash LSH dedup).
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 from typing import Optional
 
@@ -76,6 +84,28 @@ def query(name: str, oracle: Optional[str] = None):
         return fn
 
     return deco
+
+
+def run_sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """`text` through Engine.sql over the fixture tables of `sf_dir`.
+
+    Only the fixture tables whose names occur in `text` as words are
+    (re-)registered as temp views: each registration costs ~4 ms, and a
+    word match can only register too many, never too few. A DataFrame
+    already returned keeps the tables it was analyzed against."""
+    from doris_spark.engine import Engine
+    from doris_spark.session import load_tables
+
+    for name, df in load_tables(spark, sf_dir).items():
+        if re.search(rf"\b{name}\b", text):
+            df.createOrReplaceTempView(name)
+    return Engine(spark).sql(text)
+
+
+def sql_query(name: str, text: str) -> None:
+    """Register one SQL text as both the query (run_sql) and its oracle."""
+    QUERIES[name] = lambda spark, sf_dir: run_sql(spark, sf_dir, text)
+    ORACLES[name] = text
 
 
 def load_all() -> None:

@@ -7,7 +7,9 @@ filtered aggregates, NDV, top-K by traffic, time bucketing, JSON
 property extraction, substring search — adapted to the driver's events
 and documents tables. Each is a single declarative statement so
 Catalyst plans the scan pruning/partial aggregation; the parquet scan
-should show 1-3 column ReadSchema on every one of these.
+should show 1-3 column ReadSchema on every one of these. A query
+registered with `sql_query` is its oracle text run through Engine.sql; the
+others keep a DataFrame builder.
 """
 
 from __future__ import annotations
@@ -15,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from doris_spark.queries import merge_sorted, query
+from doris_spark.queries import merge_sorted, query, sql_query
 from doris_spark.session import load_tables
 
 
@@ -262,18 +264,10 @@ def cb_minute_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "cb_point_lookup",
-    oracle="SELECT user_id, count(*) AS c FROM events WHERE user_id = 42 GROUP BY user_id",
+    "SELECT user_id, count(*) AS c FROM events WHERE user_id = 42 GROUP BY user_id",
 )
-def cb_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickBench Q19 shape (queries.sql:36): point predicate on a key
-    column — the filter must reach the parquet scan (PushedFilters) so
-    row groups without the key are skipped via min/max stats."""
-    ev = load_tables(spark, sf_dir)["events"]
-    return ev.filter(F.col("user_id") == 42).groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("c")
-    )
 
 
 @query(
@@ -298,25 +292,15 @@ def cb_like_min_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "cb_scan_order_by_ts",
-    oracle="""
+    """
 SELECT event_id, user_id, event_type
 FROM events
 WHERE event_type = 'purchase'
 ORDER BY ts, event_id LIMIT 10
 """,
 )
-def cb_scan_order_by_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickBench Q23-25 shape (queries.sql:40-43): filtered scan ordered
-    by time, LIMIT — TakeOrderedAndProject, never a full sort."""
-    ev = load_tables(spark, sf_dir)["events"]
-    return (
-        ev.filter(F.col("event_type") == "purchase")
-        .orderBy("ts", "event_id")
-        .select("event_id", "user_id", "event_type")
-        .limit(10)
-    )
 
 
 @query(
@@ -376,26 +360,15 @@ def cb_regex_key_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "cb_sum_expr_batch",
-    oracle="""
+    """
 SELECT round(sum(value), 4) AS s0, round(sum(value + 1), 4) AS s1,
        round(sum(value + 2), 4) AS s2, round(sum(value + 3), 4) AS s3,
        round(sum(value + 4), 4) AS s4
 FROM events
 """,
 )
-def cb_sum_expr_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickBench Q29 shape (queries.sql:46, the 90-SUM column batch):
-    many arithmetic SUMs in one pass — whole-stage codegen evaluates the
-    expression batch without re-scanning."""
-    ev = load_tables(spark, sf_dir)["events"]
-    return ev.agg(
-        *[
-            F.round(F.sum(F.col("value") + i), 4).alias(f"s{i}")
-            for i in range(5)
-        ]
-    )
 
 
 @query(
@@ -514,25 +487,14 @@ def cb_multi_like_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "cb_order_two_cols",
-    oracle="""
+    """
 SELECT ts, event_type FROM events
 WHERE event_type <> ''
 ORDER BY ts, event_type LIMIT 10
 """,
 )
-def cb_order_two_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickBench Q26 shape (queries.sql:44): two-column ORDER BY with a
-    small LIMIT — TakeOrderedAndProject (per-partition top-10 heaps),
-    never a full sort."""
-    ev = load_tables(spark, sf_dir)["events"]
-    return (
-        ev.filter(F.col("event_type") != "")
-        .select("ts", "event_type")
-        .orderBy("ts", "event_type")
-        .limit(10)
-    )
 
 
 @query(
@@ -588,9 +550,9 @@ def cb_two_key_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "cb_derived_keys",
-    oracle="""
+    """
 SELECT user_id AS u, user_id - 1 AS u1, user_id - 2 AS u2, user_id - 3 AS u3,
        count(*) AS c
 FROM events
@@ -598,21 +560,6 @@ GROUP BY user_id, user_id - 1, user_id - 2, user_id - 3
 ORDER BY c DESC, u LIMIT 10
 """,
 )
-def cb_derived_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickBench Q35 shape (queries.sql:53): grouping on arithmetic
-    derivations of one key — Catalyst recognizes the functional
-    dependency's cardinality (same hash distribution as user_id alone);
-    the derived columns are computed pre-shuffle, once."""
-    ev = load_tables(spark, sf_dir)["events"]
-    u = F.col("user_id")
-    return (
-        ev.groupBy(
-            u.alias("u"), (u - 1).alias("u1"), (u - 2).alias("u2"), (u - 3).alias("u3")
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "u")
-        .limit(10)
-    )
 
 
 @query(
@@ -658,39 +605,20 @@ def cb_ndv_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "cb_phrase_topk",
-    oracle="""
+    """
 SELECT source, count(*) AS c FROM documents
 WHERE source <> '' GROUP BY source
 ORDER BY c DESC, source LIMIT 10
 """,
 )
-def cb_phrase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickBench Q12 shape (queries.sql:30): string-keyed heavy-hitter
-    count with a non-empty filter and top-10."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    return (
-        docs.filter(F.col("source") != "")
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "source")
-        .limit(10)
-    )
 
 
-@query(
+sql_query(
     "cb_count_like",
-    oracle="SELECT count(*) AS n FROM documents WHERE text LIKE '%google%' OR text LIKE '%spark%'",
+    "SELECT count(*) AS n FROM documents WHERE text LIKE '%google%' OR text LIKE '%spark%'",
 )
-def cb_count_like(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickBench Q20 shape (queries.sql:38): bare COUNT under substring
-    predicates — the LIKEs evaluate in the scan stage; no shuffle beyond
-    the single-row final."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    return docs.filter(
-        F.col("text").contains("google") | F.col("text").contains("spark")
-    ).agg(F.count(F.lit(1)).alias("n"))
 
 
 @query(
@@ -759,23 +687,13 @@ def cb_phrase_user_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "cb_user_phrase_bare_count",
-    oracle="""
+    """
 SELECT user_id, event_type, count(*) AS c FROM events
 GROUP BY user_id, event_type ORDER BY c DESC, user_id, event_type LIMIT 10
 """,
 )
-def cb_user_phrase_bare_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickBench Q17 shape (queries.sql:34): two-key (near-unique x
-    low-card) group count ordered by the bare COUNT(*) expression."""
-    ev = load_tables(spark, sf_dir)["events"]
-    return (
-        ev.groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "user_id", "event_type")
-        .limit(10)
-    )
 
 
 @query(
@@ -827,39 +745,20 @@ def cb_const_key_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "cb_dated_topk_offset",
-    oracle="""
+    """
 SELECT event_type, count(*) AS pv FROM events
 WHERE ts >= '2024-01-02' AND ts < '2024-01-05'
   AND value > 0.1 AND user_id % 2 = 0 AND event_type <> ''
 GROUP BY event_type ORDER BY pv DESC, event_type LIMIT 5 OFFSET 2
 """,
 )
-def cb_dated_topk_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickBench Q37-39 shape (queries.sql:54-56): date-window + flag
-    filters, grouped pageview top-k read at an OFFSET page — the offset
-    evaluates after the global top-(k+offset) heap, not a full sort."""
-    ev = load_tables(spark, sf_dir)["events"]
-    return (
-        ev.filter(
-            (F.col("ts") >= "2024-01-02")
-            & (F.col("ts") < "2024-01-05")
-            & (F.col("value") > 0.1)
-            & (F.col("user_id") % 2 == 0)
-            & (F.col("event_type") != "")
-        )
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("pv"))
-        .orderBy(F.desc("pv"), "event_type")
-        .offset(2)
-        .limit(5)
-    )
 
 
-@query(
+sql_query(
     "cb_case_src_dst",
-    oracle="""
+    """
 SELECT doc_id % 5 AS src_kind,
        CASE WHEN doc_id % 5 = 0 THEN source ELSE '' END AS src,
        lang AS dst, count(*) AS pv
@@ -868,22 +767,6 @@ GROUP BY doc_id % 5, CASE WHEN doc_id % 5 = 0 THEN source ELSE '' END, lang
 ORDER BY pv DESC, src_kind, src, dst LIMIT 10 OFFSET 5
 """,
 )
-def cb_case_src_dst(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickBench Q40 shape (queries.sql:57): a CASE-derived grouping
-    column (traffic source attribution) grouped with raw keys, paged
-    output. documents.doc_id stands in for the user key."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    kind = (F.col("doc_id") % 5).alias("src_kind")
-    src = F.when(F.col("doc_id") % 5 == 0, F.col("source")).otherwise(
-        F.lit("")
-    )
-    return (
-        docs.groupBy(kind, src.alias("src"), F.col("lang").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("pv"))
-        .orderBy(F.desc("pv"), "src_kind", "src", "dst")
-        .offset(5)
-        .limit(10)
-    )
 
 
 @query(

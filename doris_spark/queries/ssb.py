@@ -13,7 +13,9 @@ these reproduce all 13 query shapes on the TPC-H-ish fixtures:
 - regions/nations through supplier/customer -> nation -> region
 - city := n_name || '_' || (key % 5)   (fixture has no city column)
 
-Scale notes: every query is the canonical SSB plan — fact scan with
+A query registered with `sql_query` is its oracle text run through
+Engine.sql, planned by Catalyst. Scale notes for the DataFrame builders
+kept here: each is the canonical SSB plan — fact scan with
 pushed-down dim filters, BROADCAST dimension joins (nation/region/part/
 supplier are bounded), one partial+final aggregate, ORDER BY on the
 grouped keys. No shuffle beyond the group-by; the date dim is derived
@@ -26,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from doris_spark.queries import merge_sorted, query, year_between
+from doris_spark.queries import merge_sorted, query, sql_query, year_between
 from doris_spark.session import load_tables
 
 _REV = "l_extendedprice * (1 - l_discount)"
@@ -124,9 +126,9 @@ def ssb_q1_1(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"))
 
 
-@query(
+sql_query(
     "ssb_q1_2",
-    oracle=f"""
+    f"""
 WITH lineorder AS ({_LINEORDER})
 SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
 FROM lineorder
@@ -134,16 +136,6 @@ WHERE d_year = 1996 AND d_month = 1
   AND l_discount BETWEEN 0.04 AND 0.06 AND l_quantity BETWEEN 26 AND 35
 """,
 )
-def ssb_q1_2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SSB q1.2: one-month probe (q1.1 narrowed to a yearmonth)."""
-    lo = _lineorder(load_tables(spark, sf_dir))
-    # d_year=1996 & d_month=1 as one exact pushable range (guide §6)
-    return lo.filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1996-02-01"))
-        & F.col("l_discount").between(0.04, 0.06)
-        & F.col("l_quantity").between(26, 35)
-    ).agg(F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"))
 
 
 @query(

@@ -8,7 +8,9 @@ contribution shares with QUALIFY-style top-k (q67), customer bucketing
 (q34), channel intersection (q38), decile segmentation, rollup reports
 with GROUPING flags (q18/q22/q27) — on the tables we have.
 
-Scale notes: every query is a single declarative plan. Dimension joins
+A query registered with `sql_query` is its oracle text run through
+Engine.sql, planned by Catalyst. Scale notes for the DataFrame builders
+kept here: each is a single declarative plan. Dimension joins
 broadcast (nation/region/part are bounded); fact-side aggregates are
 partial+final (map-side combine); window functions partition on the
 grouped key so the shuffle feeding the window is the same one the
@@ -21,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from doris_spark.functions.dicts import nation_geo_exprs
-from doris_spark.queries import merge_sorted, query, year_between
+from doris_spark.queries import merge_sorted, query, sql_query, year_between
 from doris_spark.session import load_tables
 
 # Final ORDER BY policy (round 11): queries whose result set is bounded by
@@ -227,9 +229,9 @@ def ds_cumulative_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(merge_sorted, "mon")
 
 
-@query(
+sql_query(
     "ds_decile_spend",
-    oracle="""
+    """
 WITH spend AS (
   SELECT o_custkey, round(sum(o_totalprice), 4) AS tot
   FROM orders GROUP BY o_custkey
@@ -245,23 +247,6 @@ SELECT CAST(d AS INT) AS decile, count(*) AS n,
 FROM dec GROUP BY d ORDER BY d
 """,
 )
-def ds_decile_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decile segmentation of customer lifetime spend (ntile; ties broken
-    by custkey so bucket assignment is deterministic)."""
-    o = load_tables(spark, sf_dir)["orders"]
-    spend = o.groupBy("o_custkey").agg(F.round(F.sum("o_totalprice"), 4).alias("tot"))
-    w = Window.orderBy(F.desc("tot"), "o_custkey")
-    dec = spend.select("tot", F.ntile(10).over(w).cast("int").alias("decile"))
-    return (
-        dec.groupBy("decile")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("tot"), 4).alias("total_spend"),
-            F.round(F.min("tot"), 4).alias("min_spend"),
-            F.round(F.max("tot"), 4).alias("max_spend"),
-        )
-        .transform(merge_sorted, "decile")
-    )
 
 
 @query(
@@ -304,9 +289,9 @@ def ds_brand_type_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_returned_ratio",
-    oracle="""
+    """
 SELECT n_name,
        round(sum(CASE WHEN l_returnflag = 'R' THEN l_extendedprice END)
              / sum(l_extendedprice), 6) AS ret_ratio,
@@ -319,26 +304,6 @@ ORDER BY ret_ratio DESC, n_name
 LIMIT 10
 """,
 )
-def ds_returned_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Returns-analysis shape (TPC-DS catalog_returns family): per supplier
-    nation, ratio of returned revenue to total revenue, top 10."""
-    t = load_tables(spark, sf_dir)
-    j = (
-        t["lineitem"]
-        .join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
-        .withColumn("n_name", nation_geo_exprs(spark, sf_dir, F.col("s_nationkey"))[0])
-        .filter(F.col("n_name").isNotNull())
-    )
-    ret = F.sum(F.when(F.col("l_returnflag") == "R", F.col("l_extendedprice")))
-    return (
-        j.groupBy("n_name")
-        .agg(
-            F.round(ret / F.sum("l_extendedprice"), 6).alias("ret_ratio"),
-            F.count("*").alias("line_cnt"),
-        )
-        .orderBy(F.desc("ret_ratio"), "n_name")
-        .limit(10)
-    )
 
 
 @query(
@@ -418,9 +383,9 @@ def ds_q5_channel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_q11_yoy_two_channel",
-    oracle="""
+    """
 WITH spend AS (
   SELECT o_custkey, year(o_orderdate) AS yr,
          sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -442,32 +407,6 @@ WHERE hi_cur / hi_prev > lo_cur / lo_prev
 ORDER BY o_custkey, yr
 """,
 )
-def ds_q11_yoy_two_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q11/q74 shape: customers whose year-over-year growth in the
-    'high-priority' channel beats their growth in the other channel.
-    Single aggregate to (custkey, yr), then a lag window per customer —
-    NOT a self-join — so the comparison is one shuffle total."""
-    t = load_tables(spark, sf_dir)
-    hi = F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), F.col("o_totalprice")).otherwise(0)
-    spend = t["orders"].groupBy(
-        "o_custkey", F.year("o_orderdate").alias("yr")
-    ).agg(
-        F.sum(hi).alias("hi"),
-        F.sum(F.col("o_totalprice") - hi).alias("lo"),
-    )
-    w = Window.partitionBy("o_custkey").orderBy("yr")
-    lag_yr = F.lag("yr").over(w)
-    out = spend.select(
-        "o_custkey", "yr", "hi", "lo",
-        F.lag("hi").over(w).alias("hi_prev"),
-        F.lag("lo").over(w).alias("lo_prev"),
-        lag_yr.alias("yr_prev"),
-    ).filter(
-        (F.col("yr_prev") == F.col("yr") - 1)
-        & (F.col("hi_prev") > 0) & (F.col("lo_prev") > 0)
-        & (F.col("hi") / F.col("hi_prev") > F.col("lo") / F.col("lo_prev"))
-    )
-    return out.select("o_custkey", "yr").orderBy("o_custkey", "yr")
 
 
 @query(
@@ -1104,9 +1043,9 @@ def ds_q36_margin_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_q41_distinct_or",
-    oracle="""
+    """
 SELECT DISTINCT p_name
 FROM part
 WHERE (p_brand LIKE 'Brand#1%' AND p_size BETWEEN 1 AND 20 AND p_type LIKE '%BRASS%')
@@ -1116,19 +1055,6 @@ ORDER BY p_name
 LIMIT 100
 """,
 )
-def ds_q41_distinct_or(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q41 shape (query41.sql): DISTINCT product names under an
-    OR-of-ANDs predicate battery. The whole disjunction is one scan
-    predicate (no union of scans); distinct + top-100 plans as partial
-    distinct -> TakeOrderedAndProject."""
-    t = load_tables(spark, sf_dir)
-    p = t["part"]
-    cond = (
-        (F.col("p_brand").like("Brand#1%") & F.col("p_size").between(1, 20) & F.col("p_type").like("%BRASS%"))
-        | (F.col("p_brand").like("Brand#2%") & F.col("p_size").between(25, 40) & F.col("p_type").like("%STEEL%"))
-        | (F.col("p_brand").like("Brand#3%") & F.col("p_size").between(10, 30) & F.col("p_type").like("%COPPER%"))
-    )
-    return p.filter(cond).select("p_name").distinct().orderBy("p_name").limit(100)
 
 
 @query(
@@ -2516,9 +2442,9 @@ def ds_q45_list_or_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_q49_return_ratios",
-    oracle="""
+    """
 WITH ratios AS (
   SELECT l_linestatus AS channel, p_brand,
          round(sum(CASE WHEN l_returnflag = 'R' THEN l_quantity ELSE 0 END)
@@ -2534,24 +2460,6 @@ QUALIFY rnk <= 10
 ORDER BY channel, rnk
 """,
 )
-def ds_q49_return_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q49 shape (query49.sql): worst return ratios per channel,
-    top-10 each — WindowGroupLimit prunes before the final sort."""
-    t = load_tables(spark, sf_dir)
-    ratios = (
-        t["lineitem"]
-        .join(F.broadcast(t["part"]), F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy(F.col("l_linestatus").alias("channel"), F.col("p_brand"))
-        .agg(F.round(
-            F.sum(F.when(F.col("l_returnflag") == "R", F.col("l_quantity")).otherwise(0.0))
-            / F.sum("l_quantity"), 6).alias("ret_ratio"))
-    )
-    w = Window.partitionBy("channel").orderBy(F.col("ret_ratio").desc(), F.col("p_brand"))
-    return (
-        ratios.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 10)
-        .orderBy("channel", "rnk")
-    )
 
 
 @query(
@@ -2873,9 +2781,9 @@ def ds_q68_high_value_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_q69_exclusive_customers",
-    oracle="""
+    """
 SELECT c_mktsegment, count(*) AS customers
 FROM customer
 WHERE c_custkey IN (
@@ -2888,32 +2796,6 @@ WHERE c_custkey IN (
 GROUP BY c_mktsegment ORDER BY c_mktsegment
 """,
 )
-def ds_q69_exclusive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q69 shape (query69.sql): customers active in one channel
-    and absent from another. The semi+anti pair on the same in-window
-    orders collapses to ONE per-custkey flag aggregate: a left join
-    marks orders carrying a returned line, the groupBy is the distinct,
-    and active-and-never-returned is a flag filter — one orders scan
-    and one customer join instead of two of each."""
-    t = load_tables(spark, sf_dir)
-    in_window = t["orders"].filter(
-        (F.col("o_orderdate") >= "1997-01-01") & (F.col("o_orderdate") < "1998-01-01"))
-    eligible = (
-        in_window
-        .join(t["lineitem"].filter(F.col("l_returnflag") == "R").select("l_orderkey"),
-              F.col("o_orderkey") == F.col("l_orderkey"), "left")
-        .groupBy(F.col("o_custkey").alias("c_custkey"))
-        .agg(F.max(F.when(F.col("l_orderkey").isNotNull(), F.lit(1))).alias("returned"))
-        .filter(F.col("returned").isNull())
-        .select("c_custkey")
-    )
-    return (
-        t["customer"]
-        .join(eligible, "c_custkey", "left_semi")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("customers"))
-        .transform(merge_sorted, "c_mktsegment")
-    )
 
 
 @query(
@@ -3092,9 +2974,9 @@ def ds_q77_sales_returns_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(merge_sorted, "gid", "channel", "nation")
 
 
-@query(
+sql_query(
     "ds_q78_channel_ratio",
-    oracle="""
+    """
 SELECT o_custkey AS custkey, year(l_shipdate) AS yr,
        CAST(sum(CASE WHEN l_linestatus = 'O' THEN l_quantity ELSE 0 END) AS DOUBLE) AS open_qty,
        CAST(sum(CASE WHEN l_linestatus = 'F' THEN l_quantity ELSE 0 END) AS DOUBLE) AS filled_qty,
@@ -3106,36 +2988,6 @@ HAVING open_qty > 0 AND filled_qty > 0 AND open_qty / filled_qty > 2.0
 ORDER BY custkey, yr
 """,
 )
-def ds_q78_channel_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q78 shape (query78.sql): per customer-year ratio of one
-    channel's quantity to another's, kept when heavily skewed — the
-    channel split is conditional aggregation, not a self-join."""
-    t = load_tables(spark, sf_dir)
-    oq = F.sum(F.when(F.col("l_linestatus") == "O", F.col("l_quantity")).otherwise(0.0))
-    fq = F.sum(F.when(F.col("l_linestatus") == "F", F.col("l_quantity")).otherwise(0.0))
-    # Aggregate BEFORE the join (r12, guide §2.3): the channel split
-    # needs only lineitem columns, so the order-grain conditional sums
-    # run first (map-side partials) and the orders join moves one row
-    # per (order, ship-year) instead of every line; the custkey rollup
-    # then sums the partials — exact, because l_quantity is integral
-    # (integer sums in double are order-independent).
-    per_order = (
-        t["lineitem"]
-        .groupBy("l_orderkey", F.year("l_shipdate").alias("yr"))
-        .agg(oq.alias("o_part"), fq.alias("f_part"))
-    )
-    oq2, fq2 = F.sum("o_part"), F.sum("f_part")
-    return (
-        per_order
-        .join(t["orders"].select("o_orderkey", "o_custkey"),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy(F.col("o_custkey").alias("custkey"), "yr")
-        .agg(oq2.alias("open_qty"), fq2.alias("filled_qty"),
-             F.round(oq2 / fq2, 6).alias("ratio"))
-        .filter((F.col("open_qty") > 0) & (F.col("filled_qty") > 0)
-                & (F.col("open_qty") / F.col("filled_qty") > 2.0))
-        .orderBy("custkey", "yr")
-    )
 
 
 @query(
@@ -3274,9 +3126,9 @@ def ds_q4_three_channel_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_q10_active_demographics",
-    oracle="""
+    """
 SELECT c_mktsegment, n_name, count(*) AS customers
 FROM customer JOIN nation ON c_nationkey = n_nationkey
 WHERE c_custkey IN (
@@ -3291,52 +3143,6 @@ GROUP BY c_mktsegment, n_name
 ORDER BY c_mktsegment, n_name
 """,
 )
-def ds_q10_active_demographics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q10 shape (query10.sql): demographic counts of customers
-    active in one channel AND present in at least one of two others.
-    The active and urgent sets are per-custkey flags from ONE scan of
-    orders (the OR of the two pushed-down predicates prunes the scan);
-    only the returns set, which needs the lineitem join, is a separate
-    input, unioned into the SAME flag aggregate (one shuffle resolves
-    all three memberships) — two orders scans and one customer semi
-    join instead of three and two, no distincts."""
-    t = load_tables(spark, sf_dir)
-    in_window = (F.col("o_orderdate") >= "1997-01-01") & (F.col("o_orderdate") < "1998-01-01")
-    is_urgent = F.col("o_orderpriority") == "1-URGENT"
-    flag_src = (
-        t["orders"]
-        .filter(in_window | is_urgent)
-        .select(F.col("o_custkey").alias("c_custkey"),
-                F.when(in_window, F.lit(1)).alias("active"),
-                F.when(is_urgent, F.lit(1)).alias("urgent"),
-                F.lit(None).cast("int").alias("ret"))
-    )
-    ret_src = (
-        t["orders"].join(t["lineitem"].filter(F.col("l_returnflag") == "R"),
-                         F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(F.col("o_custkey").alias("c_custkey"),
-                F.lit(None).cast("int").alias("active"),
-                F.lit(None).cast("int").alias("urgent"),
-                F.lit(1).alias("ret"))
-    )
-    eligible = (
-        flag_src.unionByName(ret_src)
-        .groupBy("c_custkey")
-        .agg(F.max("active").alias("active"), F.max("urgent").alias("urgent"),
-             F.max("ret").alias("ret"))
-        .filter(F.col("active").isNotNull()
-                & (F.col("urgent").isNotNull() | F.col("ret").isNotNull()))
-        .select("c_custkey")
-    )
-    return (
-        t["customer"]
-        .join(eligible, "c_custkey", "left_semi")
-        .withColumn("n_name", nation_geo_exprs(spark, sf_dir, F.col("c_nationkey"))[0])
-        .filter(F.col("n_name").isNotNull())
-        .groupBy("c_mktsegment", "n_name")
-        .agg(F.count("*").alias("customers"))
-        .transform(merge_sorted, "c_mktsegment", "n_name")
-    )
 
 
 @query(
@@ -3588,9 +3394,9 @@ def ds_q86_hierarchy_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.withColumn("rank_in_parent", F.row_number().over(w)).transform(merge_sorted, "gid", "ptype", "brand")
 
 
-@query(
+sql_query(
     "ds_q87_channel_except",
-    oracle="""
+    """
 SELECT count(*) AS exclusive_customers FROM (
   SELECT DISTINCT o_custkey FROM orders
   WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
@@ -3603,33 +3409,6 @@ SELECT count(*) AS exclusive_customers FROM (
 )
 """,
 )
-def ds_q87_channel_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q87 shape (query87.sql): customers in the first channel
-    and neither of the other two — chained EXCEPT DISTINCT. The two
-    year sides are per-custkey flags from ONE scan of orders (EXCEPT
-    DISTINCT ≡ grouped flags with y97 AND NOT y98 — the groupBy is the
-    distinct); only the returns side, which needs the lineitem join,
-    stays a separate anti-join input."""
-    t = load_tables(spark, sf_dir)
-    od = F.col("o_orderdate")
-    per_cust = (
-        t["orders"]
-        .filter((od >= "1997-01-01") & (od < "1999-01-01"))
-        .groupBy("o_custkey")
-        .agg(
-            F.max(F.when(od < "1998-01-01", F.lit(1))).alias("y97"),
-            F.max(F.when(od >= "1998-01-01", F.lit(1))).alias("y98"),
-        )
-        .filter(F.col("y97").isNotNull() & F.col("y98").isNull())
-        .select("o_custkey")
-    )
-    ret = (
-        t["orders"].join(t["lineitem"].filter(F.col("l_returnflag") == "R"),
-                         F.col("o_orderkey") == F.col("l_orderkey"))
-        .select("o_custkey").distinct()
-    )
-    return per_cust.join(ret, "o_custkey", "left_anti").agg(
-        F.count("*").alias("exclusive_customers"))
 
 
 @query(

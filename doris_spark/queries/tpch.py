@@ -5,7 +5,9 @@ suite (regression-test/suites/nereids_tpch_p0/tpch/q*.groovy); these are the sam
 query shapes adapted to the fixture schema (TESTDATA.md — no partsupp table, no
 l_commitdate/l_receiptdate/l_shipmode, no o_shippriority).
 
-Scale design notes (100 TB):
+A query registered with `sql_query` is its oracle text run through
+Engine.sql, planned by Catalyst. The rest keep a DataFrame builder, and the
+scale design notes below are about those builders (100 TB):
 - region/nation are broadcast unconditionally (fixed cardinality 5/25).
 - customer/supplier/part joins use plain equi-joins: at SF100k those are
   shuffle joins on the join key; AQE demotes to broadcast when a side is small.
@@ -21,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doris_spark.functions.dicts import nation_geo_exprs
-from doris_spark.queries import merge_sorted, query
+from doris_spark.queries import merge_sorted, query, sql_query
 from doris_spark.session import load_tables
 
 
@@ -112,9 +114,9 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Lateness condition adapted: l_shipdate > o_orderdate + 60 days
 # (fixture has no l_commitdate/l_receiptdate).
 # --------------------------------------------------------------------------
-@query(
+sql_query(
     "tpch_q4",
-    oracle="""
+    """
 SELECT o_orderpriority, count(*) AS order_count
 FROM orders
 WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
@@ -128,24 +130,6 @@ GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """,
 )
-def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
-    orders = t["orders"].filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-10-01").cast("timestamp"))
-    )
-    late = t["lineitem"].select("l_orderkey", "l_shipdate")
-    semi = orders.join(
-        late,
-        (F.col("l_orderkey") == F.col("o_orderkey"))
-        & (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAY")),
-        "left_semi",
-    )
-    return (
-        semi.groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .transform(merge_sorted, "o_orderpriority")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -404,9 +388,9 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Q10 — returned-item reporting: top 20 customers by lost revenue
 # --------------------------------------------------------------------------
-@query(
+sql_query(
     "tpch_q10",
-    oracle="""
+    """
 SELECT c_custkey, c_name,
        sum(l_extendedprice * (1 - l_discount)) AS revenue,
        c_acctbal, n_name
@@ -422,26 +406,6 @@ ORDER BY revenue DESC, c_custkey
 LIMIT 20
 """,
 )
-def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
-    return (
-        t["customer"]
-        .join(
-            t["orders"].filter(
-                (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-                & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
-            ),
-            F.col("c_custkey") == F.col("o_custkey"),
-        )
-        .join(t["lineitem"].filter(F.col("l_returnflag") == "R"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .withColumn("n_name", nation_geo_exprs(spark, sf_dir, F.col("c_nationkey"))[0])
-        .filter(F.col("n_name").isNotNull())
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
-        .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
-    )
 
 
 # --------------------------------------------------------------------------
@@ -722,9 +686,9 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q20-analog — suppliers who shipped more than N units of bolt parts
 # (nested semi-join chain)
 # --------------------------------------------------------------------------
-@query(
+sql_query(
     "tpch_q20",
-    oracle="""
+    """
 SELECT s_name, s_acctbal
 FROM supplier
 WHERE s_suppkey IN (
@@ -738,27 +702,6 @@ WHERE s_suppkey IN (
 ORDER BY s_name
 """,
 )
-def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
-    bolt_parts = t["part"].filter(F.col("p_name").like("%bolt%")).select("p_partkey")
-    shippers = (
-        t["lineitem"]
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-        )
-        .join(bolt_parts, F.col("l_partkey") == F.col("p_partkey"), "left_semi")
-        .groupBy("l_suppkey")
-        .agg(F.sum("l_quantity").alias("sq"))
-        .filter(F.col("sq") > 100)
-        .select("l_suppkey")
-    )
-    return (
-        t["supplier"]
-        .join(shippers, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
-        .select("s_name", "s_acctbal")
-        .orderBy("s_name")
-    )
 
 
 # --------------------------------------------------------------------------

@@ -640,7 +640,7 @@ def test_modify_of_key_column_keeps_one_row_per_key(spark):
 
 def _job_count(spark, action):
     """Spark jobs `action()` starts, counted through a job group and the
-    status tracker (as tools/jobcount.py counts them)."""
+    status tracker (as tools/qtime.py counts them)."""
     import uuid
 
     sc = spark.sparkContext

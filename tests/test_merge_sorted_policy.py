@@ -46,10 +46,11 @@ def test_no_inline_single_partition_sorts():
 
 
 def test_merge_sorted_is_used():
-    """The helper is live code (r11 verdict flagged it as dead)."""
+    """The helper is live code (r11 verdict flagged it as dead). The floor
+    is the exact count, so removing a call site lowers it on purpose."""
     n = 0
     for p in _sources():
         if p.endswith("__init__.py"):
             continue
         n += open(p).read().count("merge_sorted")
-    assert n >= 90, f"expected >=90 merge_sorted call sites, found {n}"
+    assert n >= 114, f"expected >=114 merge_sorted call sites, found {n}"

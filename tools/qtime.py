@@ -1,15 +1,22 @@
-"""Time a subset of registered queries on a hot session.
+"""Time registered queries on a hot session, with their jobs and stages.
 
-Usage: python tools/qtime.py q1 q2 ... [--passes N] [--sf DIR] [--explain]
+Usage: python tools/qtime.py [names...] [--passes N] [--sf DIR] [--sql] [--explain]
 
-Prints per-query seconds (min over passes) — the same methodology as
-bench.py but restricted to the named queries, for fast optimization
-iteration. --explain additionally writes plans/r11/<name>_current.txt.
+Runs one warm-up pass over the named queries (every registered query when
+none is named), then N hot passes (default 5). For each query it prints the
+median and quartiles of its pass seconds and the Spark jobs and stages of
+its last pass, counted by job group. With --sql, each query's oracle text
+also runs through Engine.sql (`queries.run_sql`, the path of a SQL-text
+query), alternating with the builder: which side runs first flips every
+pass. A query that fails prints its error instead of times.
+--explain writes each builder's formatted plan to $QTIME_PLANS_DIR
+(default plans/r12).
 """
 
 from __future__ import annotations
 
 import os
+import statistics
 import sys
 import time
 
@@ -19,11 +26,19 @@ from doris_spark import queries as Q
 from doris_spark.session import get_spark
 
 
+def quartiles(xs: list[float]) -> tuple[float, float, float]:
+    """(median, Q1, Q3) of the pass seconds."""
+    if len(xs) == 1:
+        return xs[0], xs[0], xs[0]
+    q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return med, q1, q3
+
+
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
-    passes = 2
+    args = sys.argv[1:]
+    passes = 5
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    explain = False
+    explain = with_sql = False
     names: list[str] = []
     i = 0
     while i < len(args):
@@ -32,32 +47,75 @@ def main() -> None:
             passes = int(args[i + 1]); i += 2
         elif a == "--sf":
             sf_dir = args[i + 1]; i += 2
+        elif a == "--sql":
+            with_sql = True; i += 1
         elif a == "--explain":
             explain = True; i += 1
         else:
             names.append(a); i += 1
     Q.load_all()
+    names = names or sorted(Q.QUERIES)
     unknown = [n for n in names if n not in Q.QUERIES]
     if unknown:
         print("unknown:", unknown); sys.exit(1)
     spark = get_spark("qtime")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    tracker = sc.statusTracker()
     Q.QUERIES["tpch_q1"](spark, sf_dir).collect()
     import pandas as _pd  # noqa: F401
     from pyspark.sql import functions as _F
 
     _noop = _F.pandas_udf(lambda s: s, "long")
     spark.range(32).select(_noop("id")).collect()
-    best: dict[str, float] = {}
-    for p in range(passes):
-        for name in names:
-            t0 = time.perf_counter()
-            Q.QUERIES[name](spark, sf_dir).collect()
-            sec = round(time.perf_counter() - t0, 3)
-            best[name] = min(best.get(name, 1e9), sec)
+
+    runners = {"builder": lambda n: Q.QUERIES[n](spark, sf_dir)}
+    if with_sql:
+        missing = [n for n in names if n not in Q.ORACLES]
+        if missing:
+            print("no oracle:", missing); sys.exit(1)
+        runners["sql"] = lambda n: Q.run_sql(spark, sf_dir, Q.ORACLES[n])
+    secs = {(n, side): [] for n in names for side in runners}
+    jobs: dict[tuple[str, str], tuple[int, int]] = {}
+    errors: dict[tuple[str, str], str] = {}
+
+    def run(name: str, side: str, p: int) -> None:
+        key = (name, side)
+        if key in errors:
+            return
+        group = f"qtime:{name}:{side}:{p}"
+        sc.setJobGroup(group, group)
+        t0 = time.perf_counter()
+        try:
+            runners[side](name).collect()
+            sec = time.perf_counter() - t0
+        except Exception as exc:  # report it and keep timing the rest
+            errors[key] = f"{type(exc).__name__}: {str(exc).splitlines()[0][:120]}"
+            return
+        finally:
+            sc.setJobGroup(None, None)
             spark.catalog.clearCache()
+        if p > 0:
+            secs[key].append(sec)
+        job_ids = tracker.getJobIdsForGroup(group)
+        stages = sum(len(info.stageIds) for info in map(tracker.getJobInfo, job_ids) if info)
+        jobs[key] = (len(job_ids), stages)
+
+    sides = list(runners)
+    for p in range(passes + 1):  # pass 0 is the warm-up
+        for name in names:
+            for side in sides if p % 2 == 0 else sides[::-1]:
+                run(name, side, p)
+
+    print(f"{'query':32s} {'side':8s} {'median':>8s} {'q1':>8s} {'q3':>8s} {'jobs':>5s} {'stages':>6s}")
     for name in names:
-        print(f"{best[name]:8.3f}  {name}")
+        for side in sides:
+            key = (name, side)
+            if key in errors:
+                print(f"{name:32s} {side:8s} error {errors[key]}")
+                continue
+            med, q1, q3 = quartiles(secs[key])
+            print(f"{name:32s} {side:8s} {med:8.3f} {q1:8.3f} {q3:8.3f} {jobs[key][0]:5d} {jobs[key][1]:6d}")
     if explain:
         outdir = os.environ.get("QTIME_PLANS_DIR", "plans/r12")
         suffix = os.environ.get("QTIME_PLANS_SUFFIX", "_current")
