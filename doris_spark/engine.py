@@ -190,10 +190,10 @@ class Engine:
         %-format strings, 1-based subscripts, map/array literals,
         composite interval units, JSON-text casts) runs first, then the
         macro layer (plans/sql_macros.py — Doris-only aggregate
-        spellings, lambda-first array calls, lc_time_names); both
-        validated against the reference's own golden suites
-        (tools/ref_parity.py). Table-model views from create_table are
-        visible as temp views. UPDATE/DELETE statements (Doris DML,
+        spellings, lambda-first array calls, lc_time_names);
+        tests/data/rewrite_corpus.jsonl pins the text both produce.
+        Table-model views from create_table are visible as temp views.
+        UPDATE/DELETE statements (Doris DML,
         fe/.../nereids/trees/plans/commands/UpdateCommand.java /
         DeleteFromCommand.java) execute as snapshot rewrites of the
         backing DataFrame — see _dml()."""
@@ -351,11 +351,10 @@ class Engine:
         if "cast" in text.lower():
             # decimal256 / integer-overflow constant casts: fold
             # driver-side at full precision (plans/const_cast_fold.py).
-            # typed=True keeps native Spark result types on this API
-            # path (cast('5' as int) stays INT); only values Spark has
-            # no type for (decimal p>38, largeint beyond int64) render
-            # as strings. The golden-text suite path folds untyped in
-            # tools/ref_parity.py before reaching here.
+            # The fold emits typed literals, so native Spark result
+            # types survive (cast('5' as int) stays INT); only values
+            # Spark has no type for (decimal p>38, largeint beyond
+            # int64) render as strings.
             from doris_spark.plans.const_cast_fold import (
                 fold_const_dec256,
                 fold_worthy,
@@ -364,7 +363,7 @@ class Engine:
             if fold_worthy(text):
                 strict = self.spark.conf.get(
                     "enable_strict_cast", "false").lower() == "true"
-                folded = fold_const_dec256(text, strict, typed=True)
+                folded = fold_const_dec256(text, strict)
                 if folded is not None:
                     text = folded
         if _re.search(r"\*\s+REPLACE\s*\(", text, _re.I):

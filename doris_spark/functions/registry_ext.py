@@ -1,8 +1,9 @@
 """Round-2 extension of the Doris scalar-function registry (SQL-UDF tier).
 
-Closes the bulk of the name gap found by tools/fn_audit.py against the
-reference registry (fe/fe-core/src/main/java/org/apache/doris/catalog/
-BuiltinScalarFunctions.java). Same mechanism as functions/registry.py:
+Closes the bulk of the name gap between the engine and the Doris
+registry (fe/fe-core/src/main/java/org/apache/doris/catalog/
+BuiltinScalarFunctions.java); tests/data/sql_surface.txt pins the
+resulting SQL surface. Same mechanism as functions/registry.py:
 every entry becomes CREATE OR REPLACE TEMPORARY FUNCTION name(params)
 RETURN body — a Catalyst SQL UDF that inlines into the plan and stays in
 whole-stage codegen (no Python anywhere in this module).
@@ -933,7 +934,7 @@ DORIS_SQL_FUNCTIONS_EXT: dict[str, tuple[str, str]] = {
 }
 
 
-# Batch 2: straggler names surfaced by tools/fn_audit.py after the main
+# Batch 2: straggler names from the Doris registry, added after the main
 # extension landed.
 DORIS_SQL_FUNCTIONS_EXT.update(
     {

@@ -19,13 +19,15 @@ FE's constant folder would, using Python's arbitrary-precision Decimal:
   included — the BE cast table truncates, verified against
   to_int/from_str/test_cast_to_bigint_from_str_with_fraction_const.out
   ('+0000.5' -> 0, '+0001.5' -> 1)
-- decimal/string -> double/float (float32 via numpy), keeping nan sign
-  ('-nan' renders) and inf spellings
+- decimal/string -> double/float (float32 via numpy), parsing the C
+  spellings of nan and inf ('-nan', 'inf')
 
-The fold replaces the select item with its RENDERED literal (scale
-digits always shown, '-0' normalized to '0'), so the golden comparator
-sees byte-identical output. Only statements mentioning a decimal
-precision > 38 are touched; anything non-literal is left unfolded.
+The fold replaces the select item with a TYPED literal where Spark
+has the type (CAST(1 AS INT), CAST('NaN' AS DOUBLE), DECIMAL(p<=38));
+only values Spark cannot type (decimal p>38, largeint beyond int64)
+become their rendered string (scale digits always shown, '-0'
+normalized to '0'). Only select items that fold_worthy flags are
+touched; anything non-literal is left unfolded.
 """
 
 from __future__ import annotations
@@ -210,11 +212,9 @@ def _render(v) -> str:
     if v[0] == "int":
         return str(v[1])
     if v[0] in ("double", "float"):
+        # nan/inf never get here: _eval's STRING target renders them
+        # itself and _typed_emit emits them as typed literals
         f = v[1]
-        if math.isnan(f):
-            return "-nan" if math.copysign(1.0, f) < 0 else "nan"
-        if math.isinf(f):
-            return "inf" if f > 0 else "-inf"
         if v[0] == "float":
             try:
                 import numpy as np
@@ -300,13 +300,10 @@ def _typed_emit(it: str, v) -> str:
     return f"'{lit}'"
 
 
-def fold_const_dec256(text: str, strict: bool,
-                      typed: bool = False) -> str | None:
-    """Fold every decimal256-involving constant cast chain in the
-    top-level select list; returns the rewritten statement or None.
-    typed=False renders string literals (golden-text suite path);
-    typed=True emits typed literals so the engine API keeps native
-    Spark result types."""
+def fold_const_dec256(text: str, strict: bool) -> str | None:
+    """Fold every foldable constant cast chain (fold_worthy) in the
+    top-level select list into a typed literal, so the result keeps
+    its native Spark type; returns the rewritten statement or None."""
     m = re.match(r"(?is)^\s*select\s+(.*?)\s*;?\s*$", text)
     if m is None:
         return None
@@ -331,14 +328,7 @@ def fold_const_dec256(text: str, strict: bool,
                     and _NANINF_LIT.search(it))):
             try:
                 v = _eval(it, strict)
-                if typed:
-                    out.append(_typed_emit(it, v) + alias)
-                elif v is _NULL:
-                    out.append("CAST(NULL AS STRING)" + alias)
-                else:
-                    lit = _render(v).replace("\\", "\\\\").replace(
-                        "'", "\\'")
-                    out.append(f"'{lit}'" + alias)
+                out.append(_typed_emit(it, v) + alias)
                 changed = True
                 continue
             except _NoFold:

@@ -6,8 +6,8 @@ map/array literals, composite interval units). This module is that
 dialect layer for Engine.sql: a pure-text, quote-aware rewriter applied
 BEFORE the macro layer (plans/sql_macros.py), so a Doris user's SQL
 runs verbatim. It is deliberately not a full parser — each rule is a
-targeted, quote/paren-aware transform, validated case-by-case against
-the reference's own golden suites (tools/ref_parity.py).
+targeted, quote/paren-aware transform. tests/data/rewrite_corpus.jsonl
+pins the text each rule produces.
 """
 
 from __future__ import annotations
@@ -1100,8 +1100,8 @@ def dialect(sql: str) -> str:
         )
     # CAST(x AS JSON) as an ARGUMENT of a json function: Spark has no
     # JSON type — parse+normalize to the engine's JSON text form. Only
-    # the function-argument position is rewritten (top-level SELECT
-    # casts go through the column_cast tier) —
+    # the function-argument position is rewritten (a top-level
+    # CAST(x AS JSON) is left as written) —
     # conditional_functions/test_if.groovy jsonb_exists_path cases
     sql = sub_outside_literals(
         r"(?i)(\b(?:jsonb?_|explode_json_)\w+\s*\(\s*)CAST\s*\("
@@ -1260,7 +1260,7 @@ def dialect(sql: str) -> str:
         sql)
     # CAST(<date/datetime COLUMN> AS numeric): Doris yields the packed
     # digits (cast('2012-03-14' date AS BIGINT) = 20120314) — only when
-    # DDL-time type hints identify the column (harness/table contexts);
+    # DDL-time type hints identify the column (Engine schema changes);
     # unknown columns keep Spark semantics
     def _cast_dt_col_numeric(m: re.Match) -> str:
         from doris_spark.plans import type_hints as _th
@@ -1880,8 +1880,8 @@ def dialect(sql: str) -> str:
             # Doris allows NULL map keys ({null: v}); Spark's MapType
             # bans them at runtime. Shim: NUL-prefixed sentinel string
             # (sorts before every printable key, matching Doris's
-            # null-key-first map ordering); the harness comparator
-            # renders it back as the unquoted null key.
+            # null-key-first map ordering); results show the sentinel
+            # as the key.
             kv = ", ".join(
                 f"concat(char(0), 'null'), {v}"
                 if k.upper() == "NULL"
@@ -1913,8 +1913,8 @@ def dialect(sql: str) -> str:
     # NOTE: element_at(expr, bare_identifier) is deliberately NOT rewritten
     # to struct field access here — a map/array lookup with a column-valued
     # key (element_at(m, key_col)) is the common case and must stay native.
-    # Struct element_at is resolved by the typed retry in tools/ref_parity.py
-    # (only when Spark's analyzer proves the operand is a struct).
+    # Struct element_at needs the operand's type, which this text pass
+    # does not have (tests/test_fn_closure.py pins it as a strict xfail).
     # numeric element_at is out-of-range-safe in Doris; index 0 is NULL
     # (a hard error even for Spark's try_element_at — probe past the end)
     s = re.sub(
@@ -2229,8 +2229,8 @@ def dialect(sql: str) -> str:
                 am = None  # plain CAST(x AS JSON) is handled elsewhere
             # JSON-text parse only applies to string-valued sources: a
             # quoted literal, or a bare column that the native CAST path
-            # can't be (complex-to-complex casts stay native CAST — the
-            # fallback retry in tools/ref_parity handles string columns)
+            # can't be (complex-to-complex casts stay native CAST, and
+            # so does a string COLUMN, whose type this pass cannot see)
             src_expr = body[: am.start()].strip() if am else ""
             if am and re.fullmatch(r"'(?:[^']|'')*'|\"[^\"]*\"", src_expr):
                 typ = " ".join(am.group(1).split())

@@ -173,21 +173,14 @@ def _sum_bool_aware(args: Sequence[str], zero: bool) -> str:
 
 
 def _group_bit(op: str, args: Sequence[str]) -> str:
-    """group_bit_{and,or,xor}: exact int128 over LARGEINT via the
-    __x256_ shadow; BIGINT cast for unshadowed largeint hints; plain
+    """group_bit_{and,or,xor}: BIGINT cast for largeint hints; plain
     Spark bit_{op} otherwise."""
     a = args[0].strip() if args else ""
     cm = re.fullmatch(r"`?(?:\w+\.)?(\w+)`?", a)
     if cm:
         from doris_spark.plans import type_hints as th
 
-        name = cm.group(1)
-        if (th.lookup(name) or "").startswith("largeint"):
-            if th.has_shadow(name):
-                shadow = f"__x256_{name.lower()}"
-                return (f"__int128_fold(collect_list("
-                        f"coalesce({shadow}, CAST({a} AS STRING))), "
-                        f"'{op}')")
+        if (th.lookup(cm.group(1)) or "").startswith("largeint"):
             return f"bit_{op}(CAST({a} AS BIGINT))"
     return f"bit_{op}({a})"
 
@@ -1376,9 +1369,7 @@ MACROS: dict[str, Macro] = {
     "boolor_agg": _rename("bool_or"),
     # group_bit_* (nereids_function_p0/agg_function/agg.groovy
     # LargeInt family): LARGEINT columns are DOUBLE-backed, so bit ops
-    # route through the exact-digit __x256_ shadow as an int128
-    # two's-complement fold (plans/column_cast.py __int128_fold);
-    # non-shadowed largeint hints fall back to a BIGINT cast
+    # over a largeint hint take a BIGINT cast
     "group_bit_and": lambda a: _group_bit("and", a),
     "group_bit_or": lambda a: _group_bit("or", a),
     "group_bit_xor": lambda a: _group_bit("xor", a),

@@ -2,9 +2,9 @@
 
 Spark's TimestampType carries no scale, but Doris DATETIMEV2(n) renders
 with exactly n fractional digits ('2012-03-01 01:00:01.000000' for
-n=6) — information that lives only in the Doris DDL. The DDL handlers
-(tools/ref_parity.py run_setup, Engine DDL paths) register each
-column's declared Doris type here, and scale-sensitive string macros
+n=6) — information that lives only in the Doris DDL. The Engine's
+schema-change path (plans/schema_change.py) registers each column's
+declared Doris type here, and scale-sensitive string macros
 (array_join over array<datetimev2(n)> — pinned by
 nereids_function_p0/scalar_function/Array.groovy) consult it by bare
 column name. A name declared with CONFLICTING types across tables is
@@ -17,51 +17,15 @@ import re
 
 COLUMN_TYPES: dict[str, str] = {}
 _CONFLICT: set[str] = set()
-# statement-scoped overlay: when the harness knows the statement's FROM
-# is a single table, that table's declared types take precedence and
-# BYPASS the cross-table conflict set (common column names like k2 are
-# declared with different types across suite tables; the global map
-# alone would drop them)
-SCOPED: dict[str, str] = {}
-
-
-def set_scope(cols) -> None:
-    """cols: iterable of (name, doris_type_string) for the statement's
-    single FROM table. Replaces any previous scope."""
-    SCOPED.clear()
-    for name, typ in cols:
-        SCOPED[str(name).strip("`").lower()] = re.sub(
-            r"\s+", "", str(typ).lower())
-
-
-def clear_scope() -> None:
-    SCOPED.clear()
 
 
 def lookup(key: str) -> str | None:
-    """Scoped-first column-type lookup. Scoped names ignore _CONFLICT;
-    global names in _CONFLICT return None (conservative)."""
+    """Column-type lookup by bare name; names in _CONFLICT return None
+    (conservative)."""
     k = str(key).strip("`").lower()
-    if k in SCOPED:
-        return SCOPED[k]
     if k in _CONFLICT:
         return None
     return COLUMN_TYPES.get(k)
-
-
-# columns that carry an exact-digit `__x256_<name>` STRING shadow twin
-# (DECIMAL256 / LARGEINT — created by the DDL paths that narrow them);
-# rewrites may reference the shadow ONLY for names registered here
-SHADOWED: set[str] = set()
-
-
-def register_shadowed(names) -> None:
-    for n in names:
-        SHADOWED.add(str(n).strip("`").lower())
-
-
-def has_shadow(key: str) -> bool:
-    return str(key).strip("`").lower() in SHADOWED
 
 
 def register_columns(cols) -> None:

@@ -24,8 +24,8 @@ regression-test/suites/nereids_arith_p0/*:
 
 A text-only pass can apply these rules when every leaf's Doris type is
 known: table columns come from the DDL-time hints
-(plans/type_hints.py, registered by the suite harness and Engine DDL
-paths), literals carry their own types, CAST leaves are typed by their
+(plans/type_hints.py, registered by the Engine's schema-change path),
+literals carry their own types, CAST leaves are typed by their
 target. Any region with an un-typable leaf is left exactly as written
 (Spark semantics) — the pass is additive and conservative, and it is a
 no-op for programmatic DataFrame queries (no hints registered).
@@ -337,9 +337,9 @@ def _emit(op: str, lv: _Val, rv: _Val) -> _Val | None:
             # Spark's bit ops don't take DECIMAL(38,0); int64 carries the
             # in-range LARGEINT values (documented platform narrowing)
             tgt = ("i", 8)
-        # LARGEINT columns are physically DOUBLE (ref_parity DDL
-        # narrowing), so a leaf that CLAIMS ('i',16) must still be cast
-        # to DECIMAL(38,0) before div/bit ops: force the cast here.
+        # a LARGEINT-hinted leaf CLAIMS ('i',16) but its physical
+        # column type may differ (DOUBLE), so it must still be cast to
+        # DECIMAL(38,0) before div/bit ops: force the cast here.
         name = _spark_type_name(tgt)
         lc = _Val(f"CAST({left.text} AS {name})", tgt)
         rc = _Val(f"CAST({right.text} AS {name})", tgt)
@@ -920,7 +920,7 @@ def arith_rewrite(stmt: str) -> str:
     arithmetic region of `stmt`. Regions with unknown leaves, INTERVAL
     arithmetic, subqueries, or any parse surprise are left byte-for-byte
     untouched (Spark semantics)."""
-    if not type_hints.COLUMN_TYPES and not type_hints.SCOPED:
+    if not type_hints.COLUMN_TYPES:
         return stmt
     if not _ARITH_CHARS.search(stmt):
         return stmt

@@ -5,25 +5,12 @@
    each rewrite instead of swapping at stale offsets.
 2. plans.dialect _is_bool_sub: IS [NOT] TRUE/FALSE inside a string
    literal is data, not an operator — left untouched.
-3. tools.ref_suite_runner multi-statement split: quote-aware (a ';'
-   inside a string literal must not split the file).
-4. tools.ref_parity._eval_list_builders: '**' (power) rejected and
-   operand magnitude bounded — no hang/OOM from untrusted fixtures.
-5. tools.ref_parity statement-scoped type hints: skipped when the
-   statement contains a subquery (second SELECT/FROM), so a subquery
-   column sharing a name with the outer table keeps its own type.
 """
 
 from __future__ import annotations
 
 import re
-import sys
-import time
 from pathlib import Path
-
-TOOLS = str(Path(__file__).resolve().parents[1] / "tools")
-if TOOLS not in sys.path:
-    sys.path.insert(0, TOOLS)
 
 
 def test_right_semi_double_chain_rewrites_and_runs(spark):
@@ -85,88 +72,6 @@ def test_is_false_inside_double_quoted_literal_untouched():
     out = dialect('SELECT "y IS NOT FALSE" AS s FROM t')
     assert "y IS NOT FALSE" in out, out
     assert "CAST" not in out.upper() or "BOOLEAN" not in out.upper(), out
-
-
-def test_suite_runner_split_is_quote_aware():
-    import ref_parity as rp
-
-    stmts = rp._split_statements(
-        "select ';' as a;\nselect 'b;c' as b;  select 1"
-    )
-    assert len(stmts) == 3, stmts
-    assert "';'" in stmts[0] and "'b;c'" in stmts[1]
-    # and the runner actually uses the quote-aware splitter
-    src = (Path(TOOLS) / "ref_suite_runner.py").read_text()
-    assert "rp._split_statements" in src
-    assert 'nb.split(";")' not in src
-
-
-def test_list_builder_rejects_power_and_huge_operands():
-    import ref_parity as rp
-
-    groovy = (
-        'def vals = []\n'
-        'for (i in 1..2) { vals.add("(${9**9**9})") }\n'
-        'sql "INSERT INTO t VALUES " + vals.join(", ")\n'
-    )
-    t0 = time.time()
-    out = rp._eval_list_builders(groovy)
-    assert time.time() - t0 < 5.0
-    assert "9**9**9" not in out or "INSERT INTO t VALUES (" not in out
-    # huge literals are bounded too
-    groovy2 = (
-        'def vals = []\n'
-        'for (i in 1..1) { vals.add("(${9999999999999999 * '
-        '9999999999999999})") }\n'
-        'sql "INSERT INTO t VALUES " + vals.join(", ")\n'
-    )
-    out2 = rp._eval_list_builders(groovy2)
-    assert "99999999999999980000" not in out2
-
-
-def test_type_hint_scope_skips_subquery_statements():
-    """A statement with an IN-subquery must NOT pin the outer table's
-    declared types (the subquery's same-named column may differ)."""
-    import ref_parity as rp
-    from doris_spark.plans import type_hints as th
-
-    rp._TABLE_META["th_outer_t"] = {
-        "cols": [("k2", "smallint", False)], "seq_col": None,
-    }
-    # the hazard needs an actual name collision: the subquery's table
-    # declares the SAME column name with a DIFFERENT type
-    rp._TABLE_META["other_t"] = {
-        "cols": [("k2", "int", False)], "seq_col": None,
-    }
-    try:
-        captured = {}
-
-        def fake_run(eng, sql, expected, ordered, applicable,
-                     td_applicable):
-            captured["scope"] = dict(th.SCOPED)
-            return True
-
-        orig = rp._run_case_scoped
-        rp._run_case_scoped = fake_run
-        try:
-            rp.run_case(
-                None,
-                "SELECT k2 FROM th_outer_t WHERE k2 IN "
-                "(SELECT k2 FROM other_t)",
-                [], False,
-            )
-            sub_scope = captured.get("scope")
-            rp.run_case(None, "SELECT k2 FROM th_outer_t", [], False)
-            plain_scope = captured.get("scope")
-        finally:
-            rp._run_case_scoped = orig
-        assert "k2" not in sub_scope, "subquery statement was scoped"
-        assert plain_scope.get("k2") == "smallint", (
-            "single-table scoping regressed"
-        )
-    finally:
-        rp._TABLE_META.pop("th_outer_t", None)
-        rp._TABLE_META.pop("other_t", None)
 
 
 def test_codebook_disk_sidecar_cross_process_reuse(spark, tmp_path):

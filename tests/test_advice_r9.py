@@ -9,9 +9,7 @@
    cache is LRU-bounded.
 3. plans.sql_macros _fe_var/_fe_cov: centered moments — no raw-moment
    catastrophic cancellation over large-offset values.
-4. plans.column_cast rewrite_column_casts: skipped when ORDER BY
-   references a rewritten (STRING-returning) cast by alias or ordinal.
-5. plans.dialect `internal.` catalog strip: anchored so a table alias
+4. plans.dialect `internal.` catalog strip: anchored so a table alias
    or column literally named `internal` is left alone.
 """
 
@@ -124,23 +122,6 @@ def test_foreach_stats_centered_moments(spark):
     ).collect()[0].v
     # dx = ±2, dy = ±3 -> covar_samp = (2*3 + 2*3)/1 = 12
     assert cov_v[0] == pytest.approx(12.0, abs=1e-6)
-
-
-def test_column_cast_order_by_guard():
-    from doris_spark.plans.column_cast import _order_by_hits_rewrite
-
-    assert _order_by_hits_rewrite(
-        "select __doris_cast(`c`, 'str|int|0') as a, b", " from t order by a"
-    )
-    assert _order_by_hits_rewrite(
-        "select __doris_cast(`c`, 'str|int|0'), b", " from t order by 1 desc"
-    )
-    assert not _order_by_hits_rewrite(
-        "select __doris_cast(`c`, 'str|int|0') as a, b", " from t order by b"
-    )
-    assert not _order_by_hits_rewrite(
-        "select __doris_cast(`c`, 'str|int|0') as a, b", " from t order by 2"
-    )
 
 
 def test_dialect_internal_strip_is_anchored():

@@ -1,13 +1,22 @@
 """Round-2 closure batch: ai/dict SQL names, jsonb aliases, batch-2
-scalars — plus the audit invariant that no reference name is missing."""
+scalars; the committed SQL surface; the Engine.sql paths that only
+statements Spark rejects reach; and strict xfails for the Doris
+semantics Engine.sql does not implement yet."""
 
 from __future__ import annotations
 
+import datetime
+import math
 import os
+import subprocess
+from pathlib import Path
 
 import pytest
-
-import tools.fn_audit as audit
+from pyspark.errors import (
+    AnalysisException,
+    ArithmeticException,
+    NumberFormatException,
+)
 
 CASES = [
     ("edit_distance('kitten', 'sitting')", 3),
@@ -106,25 +115,364 @@ def test_sql_surface_keeps_committed_names(spark):
     assert not missing, missing
 
 
-@pytest.mark.skipif(not os.path.isdir(audit.REF), reason="reference checkout absent")
-def test_audit_zero_missing(spark):
-    """The judge-facing invariant: every name in the reference FE
-    registries is SQL-callable, operator-level, or a declared non-goal."""
-    have = _sql_callable(spark)
-    for fname in (
-        "BuiltinScalarFunctions.java",
-        "BuiltinAggregateFunctions.java",
-        "BuiltinTableGeneratingFunctions.java",
-        "BuiltinWindowFunctions.java",
-        "BuiltinTableValuedFunctions.java",
-    ):
-        ref = audit.ref_names(fname)
-        missing = [
-            n
-            for n in ref
-            if n not in have
-            and n not in audit.NON_GOALS
-            and n not in audit.OPERATOR_LEVEL
-            and n not in audit.TVF_MODULE
-        ]
-        assert not missing, (fname, missing)
+@pytest.fixture(scope="module")
+def eng(spark):
+    from doris_spark.engine import Engine
+
+    # k -> s is a functional dependency, so an ungrouped s has one value
+    # per k group
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW fc_t AS SELECT * FROM VALUES "
+        "(1, 'a', 10), (1, 'a', 20), (2, 'b', 5) AS v(k, s, v)"
+    )
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW fc_m AS SELECT * FROM VALUES "
+        "(1, map('b', 1)), (2, map('a', 2)), (3, map('a', 1)) AS v(id, m)"
+    )
+    return Engine(spark)
+
+
+def _rows(df) -> list[tuple]:
+    # NaN != NaN: compare it by name
+    return [
+        tuple("NaN" if isinstance(c, float) and math.isnan(c) else c for c in r)
+        for r in df.collect()
+    ]
+
+
+def _same(sql: str, got: list[tuple], want: list[tuple]) -> bool:
+    if "ORDER BY" in sql.upper():
+        return got == want
+    return sorted(got, key=repr) == sorted(want, key=repr)
+
+
+# Statements Spark rejects and Engine.sql runs: each one reaches a path
+# of Engine.sql that no other tier-1 statement does.
+# (id, sql, rows, schema or None)
+ENGINE_PATHS = [
+    ("from_dual", "SELECT 1 + 1 AS x FROM dual", [(2,)], None),
+    (
+        "star_replace",
+        "SELECT * REPLACE (v * 2 AS v) FROM fc_t",
+        [(1, "a", 20), (1, "a", 40), (2, "b", 10)],
+        "struct<k:int,s:string,v:int>",
+    ),
+    (
+        "cte_prefix_alias_list",
+        "WITH c (kk) AS (SELECT * FROM fc_t) SELECT kk, s FROM c",
+        [(1, "a"), (1, "a"), (2, "b")],
+        None,
+    ),
+    (
+        # the implicit BIGINT cast breaks Spark's exact grouping-expression
+        # match in HAVING; _grouping_having_rewrite aliases it
+        "grouping_sets_having",
+        "SELECT CAST(k AS BIGINT) + 1 AS k1, sum(v) AS sv FROM fc_t "
+        "GROUP BY GROUPING SETS ((CAST(k AS BIGINT) + 1), ()) "
+        "HAVING (CAST(k AS BIGINT) + 1) > 2",
+        [(3, 5)],
+        None,
+    ),
+    (
+        # SQL functions are not allowed in Generate: inlining retry
+        "sql_function_in_lateral_view",
+        "SELECT k, e FROM fc_t LATERAL VIEW explode(array_range(k)) tmp AS e",
+        [(1, 0), (1, 0), (2, 0), (2, 1)],
+        None,
+    ),
+    ("having_without_group_by", "SELECT k FROM fc_t HAVING k > 1", [(2,)], None),
+    # typed constant fold (plans/const_cast_fold.py): Doris truncates
+    # fractional strings, NULLs an overflow and parses C nan spellings
+    ("fold_fraction_to_int", "SELECT CAST('1.9' AS INT) AS a", [(1,)], "struct<a:int>"),
+    (
+        "fold_overflow_to_null",
+        "SELECT CAST('3000000000' AS INT) AS a",
+        [(None,)],
+        "struct<a:int>",
+    ),
+    (
+        "fold_minus_nan",
+        "SELECT CAST('-nan' AS DOUBLE) AS a",
+        [("NaN",)],
+        "struct<a:double>",
+    ),
+]
+
+
+@pytest.mark.parametrize(
+    "sql,want,schema", [p[1:] for p in ENGINE_PATHS], ids=[p[0] for p in ENGINE_PATHS]
+)
+def test_engine_sql_path(spark, eng, sql, want, schema):
+    df = eng.sql(sql)
+    assert _same(sql, _rows(df), want), (sql, _rows(df))
+    if schema is not None:
+        assert df.schema.simpleString() == schema
+    with pytest.raises(Exception):
+        spark.sql(sql).collect()
+
+
+def _gap(name, sql, want, raises, error, why):
+    """`error` is the Spark error class the statement raises today (None
+    when it returns wrong rows instead)."""
+    reason = f"{error}: {why}" if error else why
+    return pytest.param(
+        sql,
+        want,
+        error,
+        id=name,
+        marks=pytest.mark.xfail(strict=True, raises=raises, reason=reason),
+    )
+
+
+# Doris semantics Engine.sql lacks. The expected rows follow the Doris
+# rule each case names; a change that implements one flips its xfail.
+SEMANTIC_GAPS = [
+    _gap(
+        "ungrouped_dependent_column",
+        "SELECT k, s, sum(v) AS sv FROM fc_t GROUP BY k",
+        [(1, "a", 30), (2, "b", 5)],
+        AnalysisException,
+        "MISSING_AGGREGATION",
+        "Doris accepts a column that depends on the GROUP BY key",
+    ),
+    _gap(
+        "group_by_alias_shadows_column",
+        "SELECT v % 2 AS k, count(*) AS n FROM fc_t GROUP BY k",
+        [(0, 2), (1, 1)],
+        AnalysisException,
+        "MISSING_AGGREGATION",
+        "Doris binds a GROUP BY name to the select alias before the column",
+    ),
+    _gap(
+        "ambiguous_group_by_binds_alias",
+        "SELECT a.k AS k, count(*) AS n FROM fc_t a JOIN fc_t b ON a.k = b.k "
+        "GROUP BY k",
+        [(1, 4), (2, 1)],
+        AnalysisException,
+        "AMBIGUOUS_REFERENCE",
+        "Doris binds the name to the select alias",
+    ),
+    _gap(
+        "order_by_aggregate_of_alias",
+        "SELECT abs(v) AS xx FROM fc_t GROUP BY abs(v) ORDER BY min(xx) DESC",
+        [(20,), (10,), (5,)],
+        AnalysisException,
+        "MISSING_ATTRIBUTES",
+        "Doris resolves a select alias inside an ORDER BY aggregate",
+    ),
+    _gap(
+        "having_without_group_by_in_subquery",
+        "SELECT k, v FROM fc_t WHERE k IN (SELECT k FROM fc_t HAVING k > 1)",
+        [(2, 5)],
+        AnalysisException,
+        "MISSING_GROUP_BY",
+        "Doris reads a HAVING with no GROUP BY and no "
+        "aggregate as WHERE, in subqueries too",
+    ),
+    _gap(
+        "correlated_scalar_in_join_on",
+        "SELECT a.k, b.v FROM fc_t a JOIN fc_t b ON a.k = b.k "
+        "AND b.v = (SELECT max(v) FROM fc_t c WHERE c.k = a.k)",
+        [(1, 20), (1, 20), (2, 5)],
+        AnalysisException,
+        "UNSUPPORTED_CORRELATED_SCALAR_SUBQUERY",
+        "Doris allows a correlated scalar subquery in JOIN ON",
+    ),
+    _gap(
+        "int_plus_int_widens",
+        "SELECT 2147483647 + 1 AS x",
+        [(2147483648,)],
+        ArithmeticException,
+        "ARITHMETIC_OVERFLOW",
+        "Doris widens INT + INT to BIGINT",
+    ),
+    _gap(
+        "if_numeric_condition",
+        "SELECT if(1, 'y', 'n') AS x",
+        [("y",)],
+        AnalysisException,
+        "UNEXPECTED_INPUT_TYPE",
+        "Doris casts the IF condition to BOOLEAN",
+    ),
+    _gap(
+        "if_boolean_and_numeric_branches",
+        "SELECT if(true, 1, false) AS x",
+        [(1,)],
+        AnalysisException,
+        "DATA_DIFF_TYPES",
+        "Doris coerces the BOOLEAN branch to the numeric one",
+    ),
+    _gap(
+        "if_boolean_and_string_branches",
+        "SELECT if(false, 'x', false) AS x",
+        [("0",)],
+        AssertionError,
+        None,
+        "Spark returns BOOLEAN false; Doris coerces to VARCHAR and renders '0'",
+    ),
+    _gap(
+        "coalesce_datetime_and_packed_int",
+        "SELECT coalesce(CAST(NULL AS TIMESTAMP), 20200102) AS x",
+        [(datetime.datetime(2020, 1, 2),)],
+        AnalysisException,
+        "DATA_DIFF_TYPES",
+        "Doris reads the integer as packed yyyymmdd digits",
+    ),
+    _gap(
+        "date_equals_packed_int",
+        "SELECT DATE '2020-01-02' = 20200102 AS x",
+        [(True,)],
+        AnalysisException,
+        "BINARY_OP_DIFF_TYPES",
+        "Doris reads the integer as a packed date",
+    ),
+    _gap(
+        "date_equals_decimal",
+        "SELECT DATE '2019-09-09' = 20190909.0 AS x",
+        [(True,)],
+        AnalysisException,
+        "BINARY_OP_DIFF_TYPES",
+        "Doris compares as DOUBLE with the date as packed digits",
+    ),
+    _gap(
+        "date_format_of_date",
+        "SELECT date_format(DATE '2020-03-04', '%Y-%m') AS x",
+        [("2020-03",)],
+        AnalysisException,
+        "CAST_WITH_FUNC_SUGGESTION",
+        "the format macro's integer branch casts DATE to BIGINT",
+    ),
+    _gap(
+        "order_by_map",
+        "SELECT id FROM fc_m ORDER BY m",
+        [(3,), (2,), (1,)],
+        AnalysisException,
+        "INVALID_ORDERING_TYPE",
+        "Doris orders a MAP by (keys, values)",
+    ),
+    _gap(
+        "count_distinct_bitmap",
+        "SELECT count(DISTINCT b) AS c FROM (SELECT bitmap_from_string('1,2') "
+        "AS b UNION ALL SELECT bitmap_from_string('2,3')) t",
+        [(3,)],
+        AssertionError,
+        None,
+        "counts distinct arrays (2); Doris counts the bitmap union (3)",
+    ),
+    _gap(
+        "in_bitmap_subquery",
+        "SELECT k FROM fc_t WHERE k IN (SELECT bitmap_from_string('1,3'))",
+        [(1,), (1,)],
+        AnalysisException,
+        "IN_SUBQUERY_DATA_TYPE_MISMATCH",
+        "Doris tests bitmap membership",
+    ),
+    _gap(
+        "struct_element_at_by_name",
+        "SELECT element_at(named_struct('a', 1, 'b', 2), 'b') AS x",
+        [(2,)],
+        AnalysisException,
+        "UNEXPECTED_INPUT_TYPE",
+        "Doris reads a struct field by name",
+    ),
+    _gap(
+        "sql_function_inside_lambda",
+        "SELECT transform(array('1.2.3.4'), x -> ipv4_to_ipv6(x)) AS a",
+        [(["::ffff:1.2.3.4"],)],
+        AnalysisException,
+        "MISSING_ATTRIBUTES",
+        "Doris inlines the function body before planning",
+    ),
+    _gap(
+        "array_probe_coerces_to_element_type",
+        "SELECT array_except(array('a', 'b'), array(NULL, 3)) AS a",
+        [(["a", "b"],)],
+        AnalysisException,
+        "BINARY_ARRAY_DIFF_TYPES",
+        "Doris casts the probe array to the element type",
+    ),
+    _gap(
+        "cast_string_column_fraction_to_int",
+        "SELECT CAST(s AS INT) AS x FROM VALUES ('1.9') AS v(s)",
+        [(1,)],
+        NumberFormatException,
+        "CAST_INVALID_INPUT",
+        "Doris truncates a fractional string column cast to INT",
+    ),
+    _gap(
+        "case_date_and_int_branches",
+        "SELECT CASE WHEN k = 1 THEN DATE '2020-01-01' ELSE 20200102 END AS x "
+        "FROM fc_t",
+        [(datetime.date(2020, 1, 1),)] * 2 + [(datetime.date(2020, 1, 2),)],
+        AnalysisException,
+        "DATA_DIFF_TYPES",
+        "Doris reads the integer branch as a packed date",
+    ),
+    _gap(
+        "least_date_and_string",
+        "SELECT least(DATE '2020-01-02', '2020-01-01') AS x",
+        [(datetime.date(2020, 1, 1),)],
+        AnalysisException,
+        "DATA_DIFF_TYPES",
+        "Doris casts the string to the date side",
+    ),
+    _gap(
+        "order_by_ordinal_past_select_list",
+        "SELECT k FROM fc_t ORDER BY 1, 2",
+        [(1,), (1,), (2,)],
+        AnalysisException,
+        "ORDER_BY_POS_OUT_OF_RANGE",
+        "Doris ignores an ordinal past the select list",
+    ),
+    _gap(
+        "distinct_order_by_expression",
+        "SELECT DISTINCT k + 1 FROM fc_t ORDER BY k + 1",
+        [(2,), (3,)],
+        AnalysisException,
+        "UNRESOLVED_COLUMN",
+        "Doris matches the ORDER BY expression to the select item",
+    ),
+    _gap(
+        "pipes_as_or",
+        "SELECT (k > 1) || (k < 0) AS x FROM fc_t",
+        [(False,), (False,), (True,)],
+        AssertionError,
+        None,
+        "Spark concatenates; Doris reads || as logical OR",
+    ),
+    _gap(
+        "union_int_and_string",
+        "SELECT 1 AS a UNION ALL SELECT 'x' AS a",
+        [("1",), ("x",)],
+        NumberFormatException,
+        "CAST_INVALID_INPUT",
+        "Doris unions INT and VARCHAR as VARCHAR",
+    ),
+]
+
+
+@pytest.mark.parametrize("sql,want,error", SEMANTIC_GAPS)
+def test_doris_semantics_gap(eng, sql, want, error):
+    try:
+        got = _rows(eng.sql(sql))
+    except Exception as e:
+        if error is None or error not in str(e):
+            pytest.fail(f"{sql}: expected {error}, got {e}")
+        raise
+    assert _same(sql, got, want), (sql, got)
+
+
+def test_no_python_file_names_the_reference_checkout():
+    """The Doris golden-suite checkout that the deleted replay tools
+    read is gone for good; no tracked Python file may name its path."""
+    root = Path(__file__).resolve().parents[1]
+    # built from parts so that this file does not match itself
+    needle = "/".join(("", "root", "reference"))
+    try:
+        files = subprocess.run(
+            ["git", "ls-files", "*.py"], cwd=root, capture_output=True, text=True, check=True
+        ).stdout.split()
+    except (OSError, subprocess.CalledProcessError):
+        files = [str(p.relative_to(root)) for p in root.rglob("*.py")]
+    hits = [f for f in files if needle in (root / f).read_text(errors="replace")]
+    assert not hits, hits
