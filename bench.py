@@ -28,18 +28,9 @@ def main() -> None:
     Q.load_all()
     spark = get_spark("doris_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
-    # Warm up the JVM + parquet footers once (cold-start excluded, matching
-    # the reference's hot-run gates in BASELINE.md).
-    Q.QUERIES["tpch_q1"](spark, sf_dir).collect()
-    # Warm up the Python UDF workers + Arrow serde path too: the first
-    # pandas-UDF job in a session pays daemon/worker fork and Arrow init
-    # (~seconds) that would otherwise land on whichever UDF query sorts
-    # first alphabetically.
-    import pandas as _pd
-    from pyspark.sql import functions as _F
-
-    _noop = _F.pandas_udf(lambda s: s, "long")
-    spark.range(32).select(_noop("id")).collect()
+    # Cold start excluded, matching the reference's hot-run gates in
+    # BASELINE.md.
+    Q.warm_up(spark, sf_dir)
 
     n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
     timings: dict[str, float] = {}

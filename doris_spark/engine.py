@@ -196,27 +196,16 @@ class Engine:
         UPDATE/DELETE statements (Doris DML,
         fe/.../nereids/trees/plans/commands/UpdateCommand.java /
         DeleteFromCommand.java) execute as snapshot rewrites of the
-        backing DataFrame — see _dml()."""
-        from doris_spark.plans.dialect import dialect
-        from doris_spark.plans.sql_macros import rewrite
-
+        backing DataFrame — see _dml(). Queries run through _prepare."""
         ex = _re.match(r"^\s*EXPLAIN\b(\s+(?:VERBOSE|EXTENDED|FORMATTED|CODEGEN|COST))?\s+", text, _re.I)
         if ex is not None:
             # Doris EXPLAIN [VERBOSE] (StmtExecutor explain path): the
-            # inner statement goes through the SAME dialect/macro/MV
-            # pipeline, so EXPLAIN shows the plan that sql() would run —
-            # including a transparent-MV scan when the rewrite fires.
+            # inner statement goes through the same preparation as a
+            # query (_prepare), so EXPLAIN shows the plan that sql() would
+            # run — including a transparent-MV scan when the rewrite fires.
             mode = (ex.group(1) or "").strip().upper()
             mode = {"VERBOSE": "EXTENDED"}.get(mode, mode)
-            inner = text[ex.end():]
-            self.last_mv_rewrite = None
-            if self._mvs:
-                from doris_spark.plans.mv_rewrite import try_rewrite
-
-                hit = try_rewrite(inner, self._mvs)
-                if hit is not None:
-                    inner, self.last_mv_rewrite = hit
-            stmt = rewrite(dialect(inner))
+            stmt, _ = self._prepare(text[ex.end():])
             return self.spark.sql(f"EXPLAIN {mode} {stmt}" if mode else f"EXPLAIN {stmt}")
         sv = _re.match(
             r"^\s*SET\s+(?:SESSION\s+|GLOBAL\s+)?`?time_zone`?\s*=\s*'?([^';]+)'?\s*;?\s*$",
@@ -348,6 +337,29 @@ class Engine:
         ins = self._insert(text)
         if ins is not None:
             return ins
+        if _re.match(r"\s*WITH\s+RECURSIVE\b", text, _re.I):
+            # plain-UNION (distinct) recursion: Spark's native UnionLoop
+            # only takes UNION ALL — evaluate with the semi-naive driver
+            # loop (plans/recursive_cte.py); UNION ALL falls through to
+            # the native path
+            from doris_spark.plans.recursive_cte import (
+                try_recursive_union_sql,
+            )
+
+            rec = try_recursive_union_sql(self, text)
+            if rec is not None:
+                return rec
+        return self._prepare(text)[1]
+
+    def _prepare(self, text: str) -> tuple[str, DataFrame]:
+        """Prepare one query the way sql() runs it: the constant fold,
+        `* REPLACE`, the transparent-MV rewrite, `FROM dual`, the dialect
+        and macro layers, typed arithmetic, the analysis retries and the
+        typed pass. Returns the final Spark SQL text and its analyzed
+        DataFrame; sql() and EXPLAIN both call this."""
+        from doris_spark.plans.dialect import dialect
+        from doris_spark.plans.sql_macros import rewrite
+
         if "cast" in text.lower():
             # decimal256 / integer-overflow constant casts: fold
             # driver-side at full precision (plans/const_cast_fold.py).
@@ -373,18 +385,6 @@ class Engine:
             expanded = self._expand_star_replace(text)
             if expanded is not None:
                 text = expanded
-        if _re.match(r"\s*WITH\s+RECURSIVE\b", text, _re.I):
-            # plain-UNION (distinct) recursion: Spark's native UnionLoop
-            # only takes UNION ALL — evaluate with the semi-naive driver
-            # loop (plans/recursive_cte.py); UNION ALL falls through to
-            # the native path
-            from doris_spark.plans.recursive_cte import (
-                try_recursive_union_sql,
-            )
-
-            rec = try_recursive_union_sql(self, text)
-            if rec is not None:
-                return rec
         self.last_mv_rewrite = None
         if self._mvs:
             from doris_spark.plans.mv_rewrite import try_rewrite
@@ -431,7 +431,7 @@ class Engine:
                 wrapped = _grouping_having_rewrite(stmt)
                 if wrapped is not None:
                     try:
-                        df = self.spark.sql(wrapped)
+                        df, stmt = self.spark.sql(wrapped), wrapped
                     except Exception:
                         pass
             if df is None and "ASSIGNMENT_ARITY_MISMATCH" in msg and \
@@ -482,10 +482,10 @@ class Engine:
 
                 fixed = doris_typed_fixup(self.spark, stmt, df)
                 if fixed is not None:
-                    df = self.spark.sql(fixed)
+                    df, stmt = self.spark.sql(fixed), fixed
             except Exception:
                 pass
-        return df
+        return stmt, df
 
     def _expand_star_replace(self, text: str):
         """Expand `* REPLACE (expr AS col, ...) [EXCEPT (cols)]` using

@@ -762,27 +762,6 @@ def npoints(g: Geom) -> int | None:
     return len(_points_of(g))
 
 
-def _angle_at(p1, p2, p3) -> float:
-    """Angle at p2 between rays p2->p1 and p2->p3, radians [0, pi]."""
-    v1 = (p1[0] - p2[0], p1[1] - p2[1])
-    v2 = (p3[0] - p2[0], p3[1] - p2[1])
-    n1 = math.hypot(*v1)
-    n2 = math.hypot(*v2)
-    if n1 == 0 or n2 == 0:
-        return float("nan")
-    c = max(-1.0, min(1.0, (v1[0] * v2[0] + v1[1] * v2[1]) / (n1 * n2)))
-    return math.acos(c)
-
-
-def _azimuth(p1, p2) -> float | None:
-    """Azimuth from p1 to p2, radians clockwise from north (PostGIS/Doris
-    convention, st_azimuth in geo.cpp)."""
-    dx, dy = p2[0] - p1[0], p2[1] - p1[1]
-    if dx == 0 and dy == 0:
-        return None
-    return math.atan2(dx, dy) % (2 * math.pi)
-
-
 def _bearing_rad(p, q) -> float:
     """Initial great-circle bearing p->q, (lat, lng) DEGREES in, radians
     [0, 2pi) out."""

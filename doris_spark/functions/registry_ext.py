@@ -45,12 +45,6 @@ _JSON_VAL = (
 )
 _Q = "substring(to_json(array({v})), 2, length(to_json(array({v}))) - 2)"
 
-# MySQL WEEK() mode helpers, dayofweek(): 1=Sunday..7=Saturday.
-# mode 0: Sunday-start, weeks 0..53, week 1 = week of the first Sunday.
-_W0 = (
-    "(CASE WHEN dayofyear({d}) < ((8 - dayofweek(trunc({d}, 'YEAR'))) % 7) + 1 THEN 0 "
-    "ELSE CAST((dayofyear({d}) - (((8 - dayofweek(trunc({d}, 'YEAR'))) % 7) + 1)) / 7 AS INT) + 1 END)"
-)
 
 # Doris get_json_* path normalization: `$.[0]` -> `$[0]`, quoted keys
 # `."k"` -> `['k']` (Spark's JsonPath grammar). chr(39) = single quote.
@@ -1117,11 +1111,6 @@ for _unit, _months in (("month", 1), ("quarter", 3), ("year", 12)):
     DORIS_SQL_FUNCTIONS_EXT[f"{_unit}_floor"] = _f
     DORIS_SQL_FUNCTIONS_EXT[f"{_unit}_ceil"] = _c
 
-# MySQL WEEK mode 5 (Monday-start, week 1 = week of the first Monday).
-_W5 = (
-    "(CASE WHEN dayofyear({d}) < ((9 - dayofweek(trunc({d}, 'YEAR'))) % 7) + 1 THEN 0 "
-    "ELSE CAST((dayofyear({d}) - (((9 - dayofweek(trunc({d}, 'YEAR'))) % 7) + 1)) / 7 AS INT) + 1 END)"
-)
 
 DORIS_SQL_FUNCTIONS_EXT.update(
     {

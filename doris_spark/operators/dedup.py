@@ -170,24 +170,6 @@ def minhash_lsh_pairs(
     return out.distinct() if dedup else out
 
 
-# ----------------------------------------------------------- ngram jaccard
-
-
-def ngram_jaccard(
-    left: DataFrame,
-    text_a: str,
-    text_b: str,
-    shingle_n: int = 3,
-):
-    """Column expression: Jaccard similarity of n-gram shingle sets between
-    two text columns of the same row (use after a candidate join)."""
-    sa = F.array_distinct(token_shingles(text_a, shingle_n))
-    sb = F.array_distinct(token_shingles(text_b, shingle_n))
-    inter = F.size(F.array_intersect(sa, sb))
-    union = F.size(F.array_union(sa, sb))
-    return F.when(union == 0, F.lit(0.0)).otherwise(inter.cast("double") / union.cast("double"))
-
-
 # ------------------------------------------------------------------ simhash
 
 

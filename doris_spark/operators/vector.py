@@ -61,20 +61,6 @@ def dot(a, b):
     )
 
 
-def dot_unrolled(a, b, dim: int):
-    """Inner product unrolled to a flat left-associated sum for a known
-    dimension. Identical fp result to `dot` (same left-to-right
-    accumulation order). NOTE: measured ~1.7x slower than the zip_with
-    fold on dim-64 self-joins (2x64 null-checked GetArrayItem
-    extractions vs one array traversal) — prefer `dot` unless profiling
-    shows otherwise."""
-    ca, cb = _c(a), _c(b)
-    out = ca[0].cast("double") * cb[0].cast("double")
-    for i in range(1, dim):
-        out = out + ca[i].cast("double") * cb[i].cast("double")
-    return out
-
-
 def norm(a):
     return F.sqrt(dot(a, a))
 

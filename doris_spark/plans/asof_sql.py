@@ -204,19 +204,6 @@ def _right_schema(rtable: str) -> list[tuple[str, str]] | None:
         return None
 
 
-def _from_schema(from_text: str) -> list[str] | None:
-    """Output column names of an arbitrary FROM clause (single relation
-    or join chain), via a LIMIT-0 probe."""
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        return None
-    try:
-        df = spark.sql(f"SELECT * FROM {from_text} LIMIT 0")
-        return [f.name for f in df.schema.fields]
-    except Exception:
-        return None
-
-
 def _top_level_positions(sql: str, end: int, word: str) -> list[int]:
     """Start indices of `word` at paren-depth 0 (literal-aware) in
     sql[:end]."""

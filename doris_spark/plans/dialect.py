@@ -25,14 +25,6 @@ from doris_spark.plans.sqltok import (
     sub_outside_literals,
 )
 
-_MYSQL_FMT = {
-    "Y": "yyyy", "y": "yy", "m": "MM", "c": "M", "d": "dd", "e": "d",
-    "H": "HH", "k": "H", "h": "hh", "I": "hh", "l": "h", "i": "mm",
-    "s": "ss", "S": "ss", "f": "SSSSSS", "p": "a", "b": "MMM", "M": "MMMM",
-    "a": "EEE", "W": "EEEE", "j": "DDD", "T": "HH:mm:ss", "r": "hh:mm:ss a",
-    "%": "%",
-}
-
 
 _MAKE_IVL = {
     "day": "make_dt_interval({e})",
@@ -52,31 +44,6 @@ def make_interval_expr(count: str, unit: str) -> str | None:
     syntax refuses expressions like kint+1)."""
     tpl = _MAKE_IVL.get(unit.lower())
     return tpl.format(e=count) if tpl else None
-
-
-def _xlate_fmt(fmt: str) -> str:
-    """MySQL %-pattern -> Java datetime pattern; literal text quoted."""
-    out, lit = [], []
-
-    def flush():
-        if lit:
-            text = "".join(lit)
-            out.append("'" + text.replace("'", "''") + "'" if re.search(r"[A-Za-z']", text) else text)
-            lit.clear()
-
-    i = 0
-    while i < len(fmt):
-        if fmt[i] == "%" and i + 1 < len(fmt):
-            tok = _MYSQL_FMT.get(fmt[i + 1])
-            if tok is not None:
-                flush()
-                out.append(tok)
-                i += 2
-                continue
-        lit.append(fmt[i])
-        i += 1
-    flush()
-    return "".join(out)
 
 
 _SQL_KEYWORDS_BEFORE_LITERAL = {

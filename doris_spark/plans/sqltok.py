@@ -214,12 +214,3 @@ def depth_at(text: str, pos: int) -> int:
             break
         depth += d
     return depth
-
-
-def scan_ident_back(text: str, i: int) -> tuple[int, str]:
-    """Scan an identifier ENDING at index i (inclusive); returns
-    (start_index, identifier) — identifier may be ''."""
-    k = i
-    while k >= 0 and (text[k].isalnum() or text[k] == "_"):
-        k -= 1
-    return k + 1, text[k + 1 : i + 1]

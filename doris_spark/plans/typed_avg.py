@@ -35,10 +35,6 @@ import re
 from doris_spark.plans.sqltok import find_close, in_spans, lit_spans
 
 _AVG_TOKEN = re.compile(r"(?<![\w.$])avg\s*\(", re.I)
-# the exact spelling sql_macros emits for 2-arg date_add/date_sub
-_DATE_TOKEN = re.compile(
-    r"\(CAST\(\((?=.)", re.I
-)
 _DECIMAL_T = re.compile(r"decimal\((\d+),(\d+)\)")
 
 
@@ -265,8 +261,3 @@ def doris_typed_fixup(spark, stmt: str, df) -> str | None:
         pos = end
     out.append(stmt[pos:])
     return "".join(out)
-
-
-# Backwards-compat name used by earlier round-7 commits/tests
-def doris_avg_fixup(spark, stmt: str, df):
-    return doris_typed_fixup(spark, stmt, df)

@@ -15,13 +15,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from doris_spark.functions.dicts import nation_geo_exprs
-from doris_spark.queries import merge_sorted, query
+from doris_spark.queries import merge_sorted, query, sql_query
 from doris_spark.session import load_tables, register_views
-
-
-def _sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(text)
 
 
 # ---------------------------------------------------------------- windows
@@ -91,9 +86,9 @@ def win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "win_topn",
-    oracle="""
+    """
 SELECT o_custkey, o_orderkey, o_totalprice
 FROM (
   SELECT o_custkey, o_orderkey, o_totalprice,
@@ -104,17 +99,6 @@ FROM (
 WHERE rn <= 3
 """,
 )
-def win_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition top-N: Catalyst's InferWindowGroupLimit plans per-partition
-    top-k (reference analog: CreatePartitionTopNFromWindow.java +
-    partition_sort_sink_operator.h) — no full sort of each partition."""
-    orders = load_tables(spark, sf_dir)["orders"]
-    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-    )
 
 
 @query(
@@ -193,33 +177,22 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "agg_grouping_sets",
-    oracle="""
+    """
 SELECT o_orderstatus, o_orderpriority, count(*) AS cnt, sum(o_totalprice) AS total
 FROM orders
 GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 ORDER BY o_orderstatus, o_orderpriority
 """,
 )
-def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(
-        spark,
-        sf_dir,
-        """
-        SELECT o_orderstatus, o_orderpriority, count(*) AS cnt, sum(o_totalprice) AS total
-        FROM orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        ORDER BY o_orderstatus, o_orderpriority
-        """,
-    )
 
 
 # ------------------------------------------------------------------ setops
 
-@query(
+sql_query(
     "setops_mix",
-    oracle="""
+    """
 WITH y96 AS (SELECT o_custkey FROM orders
              WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
                AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'),
@@ -237,28 +210,6 @@ SELECT 'any_union' AS tag, count(*) AS cnt
 FROM (SELECT * FROM y96 UNION SELECT * FROM y97 UNION SELECT * FROM y98) c
 """,
 )
-def setops_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_tables(spark, sf_dir)["orders"]
-
-    def year_slice(y: int) -> DataFrame:
-        return orders.filter(
-            (F.col("o_orderdate") >= F.lit(f"{y}-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(f"{y + 1}-01-01").cast("timestamp"))
-        ).select("o_custkey")
-
-    y96, y97, y98 = year_slice(1996), year_slice(1997), year_slice(1998)
-    both = y96.intersect(y97).agg(F.count(F.lit(1)).alias("cnt")).select(
-        F.lit("both_96_97").alias("tag"), "cnt"
-    )
-    only96 = y96.subtract(y97).agg(F.count(F.lit(1)).alias("cnt")).select(
-        F.lit("only_96").alias("tag"), "cnt"
-    )
-    anyu = (
-        y96.union(y97).union(y98).distinct().agg(F.count(F.lit(1)).alias("cnt")).select(
-            F.lit("any_union").alias("tag"), "cnt"
-        )
-    )
-    return both.unionByName(only96).unionByName(anyu)
 
 
 @query(
@@ -459,9 +410,9 @@ def collect_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------- null-aware anti join
 
-@query(
+sql_query(
     "null_aware_anti",
-    oracle="""
+    """
 SELECT count(*) AS cnt FROM customer
 WHERE c_nationkey NOT IN (
   SELECT CASE WHEN s_acctbal < 1000 THEN NULL ELSE s_nationkey END
@@ -469,21 +420,6 @@ WHERE c_nationkey NOT IN (
 )
 """,
 )
-def null_aware_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT IN over a subquery that can produce NULL — null-aware anti join
-    (Doris NULL_AWARE_LEFT_ANTI, join/null_aware_left_anti_join_impl.cpp).
-    Catalyst plans this natively from the NOT IN form."""
-    return _sql(
-        spark,
-        sf_dir,
-        """
-        SELECT count(*) AS cnt FROM customer
-        WHERE c_nationkey NOT IN (
-          SELECT CASE WHEN s_acctbal < 1000 THEN NULL ELSE s_nationkey END
-          FROM supplier
-        )
-        """,
-    )
 
 
 # ----------------------------------------------------------- CTE reuse
@@ -596,9 +532,9 @@ def scalar_string_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "scalar_math_fns",
-    oracle="""
+    """
 SELECT p_partkey,
        abs(p_retailprice - 1000)        AS a,
        round(p_retailprice, 1)          AS r1,
@@ -624,32 +560,6 @@ SELECT p_partkey,
 FROM part WHERE p_partkey < 100
 """,
 )
-def scalar_math_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load_tables(spark, sf_dir)["part"].filter(F.col("p_partkey") < 100)
-    return p.select(
-        "p_partkey",
-        F.abs(F.col("p_retailprice") - 1000).alias("a"),
-        F.round("p_retailprice", 1).alias("r1"),
-        F.ceil("p_retailprice").alias("ce"),
-        F.floor("p_retailprice").alias("fl"),
-        F.sqrt("p_retailprice").alias("sq"),
-        F.cbrt("p_retailprice").alias("cb"),
-        F.log("p_retailprice").alias("lns"),
-        F.log10("p_retailprice").alias("l10"),
-        F.log2("p_retailprice").alias("l2"),
-        F.exp(F.col("p_size") / 50.0).alias("ex"),
-        F.pow("p_size", F.lit(2)).alias("p2"),
-        (F.col("p_partkey") % 7).alias("md"),
-        F.signum(F.col("p_retailprice") - 1000).alias("sg"),
-        F.greatest("p_size", F.lit(25)).alias("gr"),
-        F.least("p_size", F.lit(25)).alias("le"),
-        F.sin("p_size").alias("sn"),
-        F.cos("p_size").alias("cs"),
-        F.atan2(F.col("p_size").cast("double"), F.lit(10.0)).alias("at2"),
-        F.degrees(F.col("p_size") / 100.0).alias("dg"),
-        F.radians(F.col("p_size") * 1.0).alias("rd"),
-        F.lit(None).cast("double").alias("pival"),
-    ).withColumn("pival", F.lit(3.141592653589793))
 
 
 @query(
@@ -701,9 +611,9 @@ def scalar_date_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "scalar_conditional_fns",
-    oracle="""
+    """
 SELECT s_suppkey,
        CASE WHEN s_acctbal > 5000 THEN 'rich'
             WHEN s_acctbal > 0 THEN 'ok' ELSE 'neg' END AS bal_class,
@@ -718,23 +628,6 @@ SELECT s_suppkey,
 FROM supplier
 """,
 )
-def scalar_conditional_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = load_tables(spark, sf_dir)["supplier"]
-    return s.select(
-        "s_suppkey",
-        F.when(F.col("s_acctbal") > 5000, "rich")
-        .when(F.col("s_acctbal") > 0, "ok")
-        .otherwise("neg")
-        .alias("bal_class"),
-        F.when(F.col("s_acctbal") > 0, "pos").otherwise("nonpos").alias("ifx"),
-        F.coalesce(F.nullif(F.col("s_name"), F.col("s_name")), F.col("s_name")).alias("coal"),
-        F.nullif(F.col("s_nationkey"), F.lit(0)).alias("nif"),
-        F.ifnull(F.nullif(F.col("s_nationkey"), F.col("s_nationkey")), F.lit(-1)).alias("inull"),
-        F.greatest(F.col("s_acctbal"), F.lit(0.0)).alias("g0"),
-        F.least(F.col("s_acctbal"), F.lit(0.0)).alias("l0"),
-        F.isnull("s_acctbal").alias("isn"),
-        F.col("s_acctbal").isNotNull().alias("isnn"),
-    )
 
 
 @query(
@@ -837,9 +730,9 @@ def null_edge_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "win_range_frames",
-    oracle="""
+    """
 SELECT * FROM (
   SELECT o_orderkey,
          round(CAST(sum(o_totalprice) OVER (
@@ -854,27 +747,3 @@ SELECT * FROM (
 ) x WHERE o_orderkey < 500 ORDER BY o_orderkey
 """,
 )
-def win_range_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RANGE frames, both flavors the reference executes
-    (TAnalyticWindowType RANGE, PlanNodes.thrift:1302-1308): value-offset
-    (1000.0 PRECEDING over a numeric order key) and time-interval offset
-    (INTERVAL 30 DAY over a timestamp). RANGE frames are value-bounded
-    sets, so results are order-stable across engines; the outer filter
-    runs after the window (QUALIFY-style)."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT * FROM (
-          SELECT o_orderkey,
-                 round(sum(o_totalprice) OVER (
-                     PARTITION BY o_orderstatus ORDER BY o_totalprice
-                     RANGE BETWEEN 1000.0 PRECEDING AND CURRENT ROW), 2)
-                   AS near_price_sum,
-                 count(*) OVER (
-                     PARTITION BY o_orderstatus ORDER BY o_orderdate
-                     RANGE BETWEEN INTERVAL 30 DAY PRECEDING AND CURRENT ROW)
-                   AS cnt_30d
-          FROM orders
-        ) x WHERE o_orderkey < 500 ORDER BY o_orderkey
-        """
-    )

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from doris_spark.queries import merge_sorted, query
+from doris_spark.queries import merge_sorted, query, sql_query
 from doris_spark.session import register_views
 
 
@@ -67,9 +67,9 @@ def doris_fn_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ip_fns",
-    oracle="""
+    """
 WITH ips AS (
   SELECT c_custkey, (c_custkey * 2654435761) % 4294967296 AS n
   FROM customer WHERE c_custkey < 200
@@ -86,28 +86,6 @@ SELECT c_custkey, n,
 FROM ips ORDER BY c_custkey
 """,
 )
-def ip_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IPv4 family (be/src/exprs/function/function_ip.cpp):
-    num↔string round trip, validation, CIDR membership. IPs derived
-    deterministically from custkey (Knuth-hash spread over the full
-    address space); the oracle recomputes with shift arithmetic."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        WITH ips AS (
-          SELECT c_custkey, (c_custkey * 2654435761) % 4294967296 AS n
-          FROM customer WHERE c_custkey < 200
-        )
-        SELECT c_custkey, n,
-               ipv4_num_to_string(n)                         AS ip,
-               ipv4_string_to_num(ipv4_num_to_string(n))     AS roundtrip,
-               is_ipv4_string(ipv4_num_to_string(n))         AS valid,
-               is_ipv4_string('999.1.1.1')                   AS invalid,
-               is_ip_address_in_range(ipv4_num_to_string(n), '10.0.0.0/8')  AS in_10_8,
-               is_ip_address_in_range(ipv4_num_to_string(n), '160.0.0.0/4') AS in_a0_4
-        FROM ips ORDER BY c_custkey
-        """
-    )
 
 
 _MASK_DUCK = ("regexp_replace(regexp_replace(regexp_replace({c}, '[A-Z]', 'X', 'g'), "

@@ -26,7 +26,7 @@ from doris_spark.operators.funnel import (
     window_funnel,
 )
 from doris_spark.operators.table_models import unique_key_view
-from doris_spark.queries import merge_sorted, query
+from doris_spark.queries import merge_sorted, query, sql_query
 from doris_spark.session import load_tables
 
 # DuckDB reads events.ts as TIMESTAMP_NS; truncate to micros exactly like
@@ -427,9 +427,9 @@ def ev_asof_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ev_json",
-    oracle="""
+    """
 SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 AS k_mod,
        count(*) AS cnt,
        sum(value) AS total_value,
@@ -439,20 +439,6 @@ GROUP BY 1
 ORDER BY 1
 """,
 )
-def ev_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON property extraction (Doris jsonb_extract family →
-    get_json_object)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    k = F.get_json_object("props", "$.k")
-    return (
-        ev.groupBy((k.cast("bigint") % 10).alias("k_mod"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum("value").alias("total_value"),
-            F.max(k).alias("max_k_str"),
-        )
-        .orderBy("k_mod")
-    )
 
 
 @query(

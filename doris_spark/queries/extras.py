@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from doris_spark.queries import merge_sorted, query
+from doris_spark.queries import merge_sorted, query, sql_query
 from doris_spark.session import load_tables, register_views
 
 
@@ -139,26 +139,15 @@ def gen_numbers_tvf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "gen_stack",
-    oracle="""
+    """
 SELECT n_name, 'key' AS kind, CAST(n_nationkey AS BIGINT) AS v FROM nation
 UNION ALL
 SELECT n_name, 'region' AS kind, CAST(n_regionkey AS BIGINT) AS v FROM nation
 ORDER BY n_name, kind
 """,
 )
-def gen_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """stack / unpivot (wide → long) — Doris lateral view of struct arrays."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT n_name, kind, v FROM nation
-        LATERAL VIEW stack(2, 'key', CAST(n_nationkey AS BIGINT),
-                              'region', CAST(n_regionkey AS BIGINT)) s AS kind, v
-        ORDER BY n_name, kind
-        """
-    )
 
 
 @query(
@@ -265,9 +254,9 @@ def gen_tvf_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "json_mutation",
-    oracle="""
+    """
 SELECT event_id,
        '{"k":' || json_extract_string(props, '$.k') || ',"b":5}'  AS set_new,
        '{"k":' || json_extract_string(props, '$.k') || '}'        AS insert_existing,
@@ -278,25 +267,6 @@ SELECT event_id,
 FROM events WHERE event_id < 40 ORDER BY event_id
 """,
 )
-def json_mutation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """json_insert / json_replace / json_set / json_remove (jsonb mutation
-    family, function_jsonb.cpp) as registered pandas UDFs. The oracle
-    builds the expected compact-serialized documents by string
-    construction. insert on an existing key and replace on a missing key
-    are no-ops (MySQL semantics)."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT event_id,
-               json_set(props, '$.b', '5')            AS set_new,
-               json_insert(props, '$.k', '1')         AS insert_existing,
-               json_replace(props, '$.k', '99')       AS replace_existing,
-               json_remove(props, '$.k')              AS removed,
-               json_replace(props, '$.missing', '1')  AS replace_missing,
-               json_set(props, '$.t', concat('"', event_type, '"')) AS set_str
-        FROM events WHERE event_id < 40 ORDER BY event_id
-        """
-    )
 
 
 @query(
@@ -361,9 +331,9 @@ def json_build_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
-@query(
+sql_query(
     "variant_shim",
-    oracle="""
+    """
 SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val,
        count(*) AS cnt
 FROM events
@@ -372,25 +342,11 @@ HAVING count(*) > 5
 ORDER BY k_val
 """,
 )
-def variant_shim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VARIANT column shim: parse the JSON props into a map once
-    (schema-on-read; Doris data_type_variant.h / variant_element), then
-    group on an element. from_json runs in the scan projection — the
-    subcolumn-pruning analog is Spark's JSON column pruning."""
-    ev = load_tables(spark, sf_dir)["events"]
-    v = F.from_json("props", "map<string,string>")
-    return (
-        ev.select(v.getItem("k").cast("bigint").alias("k_val"))
-        .groupBy("k_val")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") > 5)
-        .orderBy("k_val")
-    )
 
 
-@query(
+sql_query(
     "variant_native",
-    oracle="""
+    """
 SELECT event_id,
        CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val,
        CAST(json_extract_string(props, '$.k') AS DOUBLE) AS k_dbl,
@@ -400,25 +356,6 @@ SELECT event_id,
 FROM events WHERE event_id < 40 ORDER BY event_id
 """,
 )
-def variant_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Doris VARIANT via Spark 4's native VariantType (data_type_variant.h;
-    subcolumn access = variant_get with typed extraction — the
-    VariantSubPathPruning analog is Spark's variant pushdown). Compare
-    with `variant_shim` (map-based fallback for Spark 3.x)."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT event_id,
-               variant_get(v, '$.k', 'bigint')          AS k_val,
-               CAST(variant_get(v, '$.k') AS DOUBLE)    AS k_dbl,
-               schema_of_variant(v)                     AS sch,
-               to_json(v)                               AS rt,
-               try_variant_get(v, '$.missing', 'string') AS miss
-        FROM (SELECT event_id, parse_json(props) AS v FROM events
-              WHERE event_id < 40)
-        ORDER BY event_id
-        """
-    )
 
 
 # ------------------------------------------------------------- aggregates
@@ -719,9 +656,9 @@ def agg_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------------- geo
 
-@query(
+sql_query(
     "geo_fns",
-    oracle="""
+    """
 WITH pts AS (
   SELECT c_custkey,
          CAST((c_custkey % 360) - 180.0 AS DOUBLE) AS lon,
@@ -739,26 +676,6 @@ FROM pts
 ORDER BY c_custkey
 """,
 )
-def geo_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geo subset (st_point/st_x/st_y/st_astext/st_distance_sphere as
-    registered SQL UDFs; haversine on the 6371km sphere)."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        WITH pts AS (
-          SELECT c_custkey,
-                 st_point(CAST((c_custkey % 360) - 180.0 AS DOUBLE),
-                          CAST((c_custkey % 180) - 90.0 AS DOUBLE)) AS p
-          FROM customer WHERE c_custkey < 100
-        )
-        SELECT c_custkey,
-               st_astext(p) AS wkt,
-               st_x(p) AS x, st_y(p) AS y,
-               st_distance_sphere(st_x(p), st_y(p), 0.0d, 0.0d) AS dist_to_origin
-        FROM pts
-        ORDER BY c_custkey
-        """
-    )
 
 
 @query(
@@ -1048,9 +965,9 @@ def decimal_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "agg_topn_weighted",
-    oracle="""
+    """
 SELECT o_orderstatus, o_orderpriority, w, rnk FROM (
   SELECT o_orderstatus, o_orderpriority,
          round(sum(o_totalprice), 2) AS w,
@@ -1063,36 +980,11 @@ WHERE rnk <= 2
 ORDER BY o_orderstatus, rnk
 """,
 )
-def agg_topn_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """topn_weighted(col, weight, k)
-    (be/src/exprs/aggregate/aggregate_function_topn.h weighted variant):
-    values ranked by SUM of weights instead of occurrence count. Same
-    distributed-safe shape as agg_topn — partial weighted sums shuffle
-    once, then partition top-k (InferWindowGroupLimit prunes per
-    partition)."""
-    orders = load_tables(spark, sf_dir)["orders"]
-    sums = orders.groupBy("o_orderstatus", "o_orderpriority").agg(
-        F.sum("o_totalprice").alias("w_raw")
-    )
-    w = Window.partitionBy("o_orderstatus").orderBy(
-        F.desc("w_raw"), F.asc("o_orderpriority")
-    )
-    return (
-        sums.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 2)
-        .select(
-            "o_orderstatus",
-            "o_orderpriority",
-            F.round(F.col("w_raw"), 2).alias("w"),
-            "rnk",
-        )
-        .orderBy("o_orderstatus", "rnk")
-    )
 
 
-@query(
+sql_query(
     "geo_predicates",
-    oracle="""
+    """
 SELECT c_custkey,
        (c_custkey % 100) > 10 AND (c_custkey % 100) < 70
        AND ((c_custkey * 7) % 100) > 10 AND ((c_custkey * 7) % 100) < 70
@@ -1117,32 +1009,6 @@ WHERE c_custkey <= 400
 ORDER BY c_custkey
 """,
 )
-def geo_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WKT geometry predicates (functions/geo2.py; reference
-    be/src/exprs/function/geo/): st_contains / planar st_distance /
-    st_azimuth over derived points against a fixed rectangle, with the
-    DuckDB oracle recomputing each predicate in plain arithmetic
-    (axis-aligned rectangle => containment is two BETWEENs)."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT c_custkey,
-               st_contains('POLYGON ((10 10, 70 10, 70 70, 10 70, 10 10))',
-                           concat('POINT (', CAST(c_custkey % 100 AS STRING), ' ',
-                                  CAST((c_custkey * 7) % 100 AS STRING), ')')) AS inside,
-               round(st_distance('POINT (0 0)',
-                                 concat('POINT (', CAST(c_custkey % 100 AS STRING), ' ',
-                                        CAST((c_custkey * 7) % 100 AS STRING), ')')), 6) AS dist0,
-               round(st_azimuth('POINT (0 0)',
-                                concat('POINT (', CAST(c_custkey % 100 AS STRING), ' ',
-                                       CAST((c_custkey * 7) % 100 AS STRING), ')')), 6) AS az,
-               st_geometrytype('POLYGON ((10 10, 70 10, 70 70, 10 70, 10 10))') AS gtype,
-               st_numpoints('POLYGON ((10 10, 70 10, 70 70, 10 70, 10 10))') AS np
-        FROM customer
-        WHERE c_custkey <= 400
-        ORDER BY c_custkey
-        """
-    )
 
 
 @query(

@@ -21,21 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def table_files(spark: SparkSession, path: str) -> DataFrame:
-    """One row per data file: path, bytes, modification time, row count
-    (SHOW TABLETS / information_schema.files analog)."""
-    df = spark.read.parquet(path)
-    return (
-        df.select(
-            F.col("_metadata.file_path").alias("file_path"),
-            F.col("_metadata.file_size").alias("file_bytes"),
-            F.col("_metadata.file_modification_time").alias("modified"),
-        )
-        .groupBy("file_path", "file_bytes", "modified")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-    )
-
-
 def table_partitions(
     spark: SparkSession, path: str, partition_cols: list[str] | None = None
 ) -> DataFrame:

@@ -257,6 +257,66 @@ def test_explain_plain_query(spark):
     assert rows and "Physical Plan" in "\n".join(r[0] for r in rows)
 
 
+def _explain(eng, stmt: str) -> str:
+    return "\n".join(r[0] for r in eng.sql(stmt).collect())
+
+
+def test_explain_from_dual(spark):
+    """EXPLAIN runs the `FROM dual` rewrite that sql() runs."""
+    from doris_spark.engine import Engine
+
+    plan = _explain(Engine(spark), "EXPLAIN EXTENDED SELECT 1 + 1 AS x FROM dual")
+    assert "TABLE_OR_VIEW_NOT_FOUND" not in plan
+    assert "x: int" in plan and "Project [2 AS x" in plan
+
+
+def test_explain_folds_constant_cast(spark):
+    """EXPLAIN runs the constant fold: Doris truncates '1.9' to INT 1."""
+    from doris_spark.engine import Engine
+
+    plan = _explain(Engine(spark), "EXPLAIN SELECT CAST('1.9' AS INT) AS a")
+    assert "Error occurred" not in plan
+    assert "Physical Plan" in plan and "1 AS a" in plan
+
+
+def test_explain_shows_typed_avg(spark):
+    """EXPLAIN runs the typed pass: avg over DECIMAL(10,2) is the
+    truncated DECIMAL(38,4) that sql() returns, not Spark's decimal(14,6)."""
+    from decimal import Decimal
+
+    from doris_spark.engine import Engine
+
+    eng = Engine(spark)
+    spark.sql(
+        "SELECT * FROM VALUES (CAST(1.25 AS DECIMAL(10,2))), "
+        "(CAST(2.50 AS DECIMAL(10,2))) AS t(x)"
+    ).createOrReplaceTempView("explain_dec")
+    stmt = "SELECT avg(x) AS a FROM explain_dec"
+    assert eng.sql(stmt).collect()[0]["a"] == Decimal("1.8750")
+    plan = _explain(eng, f"EXPLAIN EXTENDED {stmt}")
+    assert "a: decimal(38,4)" in plan and "decimal(14,6)" not in plan
+
+
+def test_typed_avg_after_grouping_sets_having_retry(spark):
+    """The typed pass re-plans the text the grouping-sets HAVING retry
+    planned, so avg keeps the Doris DECIMAL(38,4) type there too."""
+    from decimal import Decimal
+
+    from doris_spark.engine import Engine
+
+    spark.sql(
+        "SELECT * FROM VALUES (1, CAST(1.25 AS DECIMAL(10,2))), "
+        "(2, CAST(2.50 AS DECIMAL(10,2))), (2, CAST(2.00 AS DECIMAL(10,2))) AS t(k, x)"
+    ).createOrReplaceTempView("gs_dec")
+    df = Engine(spark).sql(
+        "SELECT CAST(k AS BIGINT) + 1 AS k1, avg(x) AS a FROM gs_dec "
+        "GROUP BY GROUPING SETS ((CAST(k AS BIGINT) + 1), ()) "
+        "HAVING (CAST(k AS BIGINT) + 1) > 2"
+    )
+    assert df.schema["a"].dataType.simpleString() == "decimal(38,4)"
+    assert [tuple(r) for r in df.collect()] == [(3, Decimal("2.2500"))]
+
+
 def test_ctas_then_dml_roundtrip(spark):
     from doris_spark.engine import Engine
 

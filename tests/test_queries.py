@@ -1,5 +1,7 @@
 """Every registered query must hash-match its DuckDB oracle (driver's t2 gate,
-mirrored locally). Queries without an oracle get a rows-run check."""
+mirrored locally), and follow the final ORDER BY of its oracle text when
+that text ends in one over output columns. Queries without an oracle get
+a rows-run check."""
 
 from __future__ import annotations
 

@@ -1,6 +1,6 @@
 """Time registered queries on a hot session, with their jobs and stages.
 
-Usage: python tools/qtime.py [names...] [--passes N] [--sf DIR] [--sql] [--explain]
+Usage: python tools/qtime.py [names...] [--passes N] [--sf DIR] [--sql] [--explain DIR]
 
 Runs one warm-up pass over the named queries (every registered query when
 none is named), then N hot passes (default 5). For each query it prints the
@@ -9,8 +9,7 @@ its last pass, counted by job group. With --sql, each query's oracle text
 also runs through Engine.sql (`queries.run_sql`, the path of a SQL-text
 query), alternating with the builder: which side runs first flips every
 pass. A query that fails prints its error instead of times.
---explain writes each builder's formatted plan to $QTIME_PLANS_DIR
-(default plans/r12).
+--explain DIR writes each query's formatted plan to DIR/<name>.txt.
 """
 
 from __future__ import annotations
@@ -38,7 +37,8 @@ def main() -> None:
     args = sys.argv[1:]
     passes = 5
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    explain = with_sql = False
+    explain = None
+    with_sql = False
     names: list[str] = []
     i = 0
     while i < len(args):
@@ -50,7 +50,7 @@ def main() -> None:
         elif a == "--sql":
             with_sql = True; i += 1
         elif a == "--explain":
-            explain = True; i += 1
+            explain = args[i + 1]; i += 2
         else:
             names.append(a); i += 1
     Q.load_all()
@@ -62,12 +62,7 @@ def main() -> None:
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
     tracker = sc.statusTracker()
-    Q.QUERIES["tpch_q1"](spark, sf_dir).collect()
-    import pandas as _pd  # noqa: F401
-    from pyspark.sql import functions as _F
-
-    _noop = _F.pandas_udf(lambda s: s, "long")
-    spark.range(32).select(_noop("id")).collect()
+    Q.warm_up(spark, sf_dir)
 
     runners = {"builder": lambda n: Q.QUERIES[n](spark, sf_dir)}
     if with_sql:
@@ -117,12 +112,10 @@ def main() -> None:
             med, q1, q3 = quartiles(secs[key])
             print(f"{name:32s} {side:8s} {med:8.3f} {q1:8.3f} {q3:8.3f} {jobs[key][0]:5d} {jobs[key][1]:6d}")
     if explain:
-        outdir = os.environ.get("QTIME_PLANS_DIR", "plans/r12")
-        suffix = os.environ.get("QTIME_PLANS_SUFFIX", "_current")
-        os.makedirs(outdir, exist_ok=True)
+        os.makedirs(explain, exist_ok=True)
         for name in names:
             df = Q.QUERIES[name](spark, sf_dir)
-            with open(f"{outdir}/{name}{suffix}.txt", "w") as fh:
+            with open(os.path.join(explain, f"{name}.txt"), "w") as fh:
                 fh.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
             spark.catalog.clearCache()
