@@ -39,6 +39,17 @@ _DELETE_HEAD_RE = _re.compile(
 # the first WHERE outside literals and parens ends a SET list / DELETE
 # head (`SET note = 'call where needed'` holds one inside a literal)
 _WHERE_RE = _re.compile(r"(?<![\w`])WHERE\b", _re.I)
+# a statement spark.sql only plans: a query, with no command keyword at
+# depth 0 (`WITH c AS (...) INSERT ...` and `FROM t INSERT ...` are commands)
+_QUERY_HEAD_RE = _re.compile(r"\s*\(*\s*(?:SELECT|WITH|VALUES|FROM|TABLE)\b", _re.I)
+_COMMAND_WORD_RE = _re.compile(
+    r"(?<![\w`.])(?:INSERT|UPDATE|DELETE|MERGE|CREATE|DROP|ALTER|TRUNCATE)\b", _re.I
+)
+
+
+def _is_query(text: str) -> bool:
+    return _QUERY_HEAD_RE.match(text) is not None and \
+        depth0_search(text, _COMMAND_WORD_RE) is None
 
 
 def _values_literal_df(spark, tuples, use_cols):
@@ -199,13 +210,22 @@ class Engine:
         backing DataFrame — see _dml(). Queries run through _prepare."""
         ex = _re.match(r"^\s*EXPLAIN\b(\s+(?:VERBOSE|EXTENDED|FORMATTED|CODEGEN|COST))?\s+", text, _re.I)
         if ex is not None:
-            # Doris EXPLAIN [VERBOSE] (StmtExecutor explain path): the
-            # inner statement goes through the same preparation as a
-            # query (_prepare), so EXPLAIN shows the plan that sql() would
-            # run — including a transparent-MV scan when the rewrite fires.
+            # Doris EXPLAIN [VERBOSE] (StmtExecutor explain path): a
+            # query goes through the same preparation as sql() (_prepare),
+            # so EXPLAIN shows the plan that sql() would run — including a
+            # transparent-MV scan when the rewrite fires. _prepare analyzes
+            # with spark.sql, which RUNS a command, so an explained INSERT,
+            # CTAS or DROP gets only the text layers.
             mode = (ex.group(1) or "").strip().upper()
             mode = {"VERBOSE": "EXTENDED"}.get(mode, mode)
-            stmt, _ = self._prepare(text[ex.end():])
+            inner = text[ex.end():]
+            if _is_query(inner):
+                stmt, _ = self._prepare(inner)
+            else:
+                from doris_spark.plans.dialect import dialect
+                from doris_spark.plans.sql_macros import rewrite
+
+                stmt = rewrite(dialect(inner))
             return self.spark.sql(f"EXPLAIN {mode} {stmt}" if mode else f"EXPLAIN {stmt}")
         sv = _re.match(
             r"^\s*SET\s+(?:SESSION\s+|GLOBAL\s+)?`?time_zone`?\s*=\s*'?([^';]+)'?\s*;?\s*$",

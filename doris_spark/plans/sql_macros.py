@@ -2307,7 +2307,8 @@ for _fn in ("week", "weekofyear", "yearweek", "dayofweek", "dayofyear",
 
 
 # --- AGG_STATE combinators for value-position aggregates -----------------
-# (these SQL spellings cover the agg_state<max_by(...)> /
+# (functions/combinators.py covers sum/count/min/max/avg as DataFrame
+# expressions; these SQL spellings cover the agg_state<max_by(...)> /
 # agg_state<group_concat(...)> generic-column pattern pinned by
 # nereids_syntax_p0/any_value.groovy sql_any21-24.)
 MACROS["max_by_state"] = (

@@ -7,8 +7,10 @@ Column names are aliased identically on both sides — the driver hashes values
 after sorting columns by name.
 
 A query can instead register one SQL text (`sql_query`): Engine.sql runs
-it as the query, and DuckDB runs the same text as the oracle. A query keeps
-a hand-built builder only when its text cannot run through Engine.sql
+it as the query, and DuckDB runs the same text as the oracle. When the text
+calls Doris functions DuckDB lacks (IP, geo, JSON mutation, VARIANT), the
+oracle is a second text that computes the same answer another way. A query
+keeps a hand-built builder only when its text cannot run through Engine.sql
 unchanged, disagrees with DuckDB, runs slower than the builder beyond
 noise, exercises a statement that is not a SELECT, or is a builder the
 benchmark times (CHANGES.md gives each kept builder's reason).
@@ -102,10 +104,11 @@ def run_sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
     return Engine(spark).sql(text)
 
 
-def sql_query(name: str, text: str) -> None:
-    """Register one SQL text as both the query (run_sql) and its oracle."""
+def sql_query(name: str, text: str, oracle: Optional[str] = None) -> None:
+    """Register one SQL text as the query (run_sql) and, unless `oracle`
+    is given, as its oracle too."""
     QUERIES[name] = lambda spark, sf_dir: run_sql(spark, sf_dir, text)
-    ORACLES[name] = text
+    ORACLES[name] = text if oracle is None else oracle
 
 
 def warm_up(spark: SparkSession, sf_dir: str) -> None:

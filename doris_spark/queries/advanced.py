@@ -6,7 +6,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from doris_spark.functions import sketches as SK
-from doris_spark.queries import merge_sorted, query, stable_key, sql_query
+from doris_spark.queries import merge_sorted, query, stable_key
 from doris_spark.session import load_tables
 
 
@@ -264,9 +264,9 @@ def sketch_orthogonal_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-sql_query(
+@query(
     "agg_state_combinators",
-    """
+    oracle="""
 SELECT l_returnflag,
        CAST(sum(l_quantity) AS DOUBLE) AS sum_qty,
        count(l_extendedprice) AS cnt_price,
@@ -278,6 +278,40 @@ GROUP BY l_returnflag
 ORDER BY l_returnflag
 """,
 )
+def agg_state_combinators(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """AGG_STATE combinators: _state at fine grain, _union regroup,
+    _merge finalize (functions/combinators.py). Mirrors an AGG_KEYS
+    table holding stored partial states that are rolled up at query
+    time; states are struct columns with exact (decimal) partials, so
+    the three-level rollup is bit-identical to a direct aggregate."""
+    from doris_spark.functions import combinators as C
+
+    li = load_tables(spark, sf_dir)["lineitem"]
+    fine = li.groupBy("l_returnflag", "l_linestatus", "l_suppkey").agg(
+        C.sum_state("l_quantity").alias("qty_st"),
+        C.count_state("l_extendedprice").alias("price_ct"),
+        C.min_state("l_discount").alias("disc_st"),
+        C.max_state("l_tax").alias("tax_st"),
+        C.avg_state("l_quantity").alias("qty_avg_st"),
+    )
+    mid = fine.groupBy("l_returnflag", "l_linestatus").agg(
+        C.sum_union("qty_st").alias("qty_st"),
+        C.count_union("price_ct").alias("price_ct"),
+        C.min_union("disc_st").alias("disc_st"),
+        C.max_union("tax_st").alias("tax_st"),
+        C.avg_union("qty_avg_st").alias("qty_avg_st"),
+    )
+    return (
+        mid.groupBy("l_returnflag")
+        .agg(
+            C.sum_merge("qty_st").cast("double").alias("sum_qty"),
+            C.count_merge("price_ct").alias("cnt_price"),
+            C.min_merge("disc_st").cast("double").alias("min_disc"),
+            C.max_merge("tax_st").cast("double").alias("max_tax"),
+            C.avg_merge("qty_avg_st").alias("avg_qty"),
+        )
+        .transform(merge_sorted, "l_returnflag")
+    )
 
 
 @query(

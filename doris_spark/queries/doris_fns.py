@@ -75,6 +75,20 @@ WITH ips AS (
   FROM customer WHERE c_custkey < 200
 )
 SELECT c_custkey, n,
+       ipv4_num_to_string(n)                         AS ip,
+       ipv4_string_to_num(ipv4_num_to_string(n))     AS roundtrip,
+       is_ipv4_string(ipv4_num_to_string(n))         AS valid,
+       is_ipv4_string('999.1.1.1')                   AS invalid,
+       is_ip_address_in_range(ipv4_num_to_string(n), '10.0.0.0/8')  AS in_10_8,
+       is_ip_address_in_range(ipv4_num_to_string(n), '160.0.0.0/4') AS in_a0_4
+FROM ips ORDER BY c_custkey
+""",
+    oracle="""
+WITH ips AS (
+  SELECT c_custkey, (c_custkey * 2654435761) % 4294967296 AS n
+  FROM customer WHERE c_custkey < 200
+)
+SELECT c_custkey, n,
        CAST((n >> 24) & 255 AS VARCHAR) || '.' || CAST((n >> 16) & 255 AS VARCHAR)
          || '.' || CAST((n >> 8) & 255 AS VARCHAR) || '.' || CAST(n & 255 AS VARCHAR)
          AS ip,

@@ -142,6 +142,12 @@ def gen_numbers_tvf(spark: SparkSession, sf_dir: str) -> DataFrame:
 sql_query(
     "gen_stack",
     """
+SELECT n_name, kind, v FROM nation
+LATERAL VIEW stack(2, 'key', CAST(n_nationkey AS BIGINT),
+                      'region', CAST(n_regionkey AS BIGINT)) s AS kind, v
+ORDER BY n_name, kind
+""",
+    oracle="""
 SELECT n_name, 'key' AS kind, CAST(n_nationkey AS BIGINT) AS v FROM nation
 UNION ALL
 SELECT n_name, 'region' AS kind, CAST(n_regionkey AS BIGINT) AS v FROM nation
@@ -258,6 +264,16 @@ sql_query(
     "json_mutation",
     """
 SELECT event_id,
+       json_set(props, '$.b', '5')            AS set_new,
+       json_insert(props, '$.k', '1')         AS insert_existing,
+       json_replace(props, '$.k', '99')       AS replace_existing,
+       json_remove(props, '$.k')              AS removed,
+       json_replace(props, '$.missing', '1')  AS replace_missing,
+       json_set(props, '$.t', concat('"', event_type, '"')) AS set_str
+FROM events WHERE event_id < 40 ORDER BY event_id
+""",
+    oracle="""
+SELECT event_id,
        '{"k":' || json_extract_string(props, '$.k') || ',"b":5}'  AS set_new,
        '{"k":' || json_extract_string(props, '$.k') || '}'        AS insert_existing,
        '{"k":99}'                                                 AS replace_existing,
@@ -334,6 +350,14 @@ def json_build_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 sql_query(
     "variant_shim",
     """
+SELECT CAST(from_json(props, 'map<string,string>')['k'] AS BIGINT) AS k_val,
+       count(*) AS cnt
+FROM events
+GROUP BY 1
+HAVING count(*) > 5
+ORDER BY k_val
+""",
+    oracle="""
 SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val,
        count(*) AS cnt
 FROM events
@@ -347,6 +371,17 @@ ORDER BY k_val
 sql_query(
     "variant_native",
     """
+SELECT event_id,
+       variant_get(v, '$.k', 'bigint')          AS k_val,
+       CAST(variant_get(v, '$.k') AS DOUBLE)    AS k_dbl,
+       schema_of_variant(v)                     AS sch,
+       to_json(v)                               AS rt,
+       try_variant_get(v, '$.missing', 'string') AS miss
+FROM (SELECT event_id, parse_json(props) AS v FROM events
+      WHERE event_id < 40)
+ORDER BY event_id
+""",
+    oracle="""
 SELECT event_id,
        CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val,
        CAST(json_extract_string(props, '$.k') AS DOUBLE) AS k_dbl,
@@ -659,6 +694,20 @@ def agg_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 sql_query(
     "geo_fns",
     """
+WITH pts AS (
+  SELECT c_custkey,
+         st_point(CAST((c_custkey % 360) - 180.0 AS DOUBLE),
+                  CAST((c_custkey % 180) - 90.0 AS DOUBLE)) AS p
+  FROM customer WHERE c_custkey < 100
+)
+SELECT c_custkey,
+       st_astext(p) AS wkt,
+       st_x(p) AS x, st_y(p) AS y,
+       st_distance_sphere(st_x(p), st_y(p), 0.0d, 0.0d) AS dist_to_origin
+FROM pts
+ORDER BY c_custkey
+""",
+    oracle="""
 WITH pts AS (
   SELECT c_custkey,
          CAST((c_custkey % 360) - 180.0 AS DOUBLE) AS lon,
@@ -985,6 +1034,23 @@ ORDER BY o_orderstatus, rnk
 sql_query(
     "geo_predicates",
     """
+SELECT c_custkey,
+       st_contains('POLYGON ((10 10, 70 10, 70 70, 10 70, 10 10))',
+                   concat('POINT (', CAST(c_custkey % 100 AS STRING), ' ',
+                          CAST((c_custkey * 7) % 100 AS STRING), ')')) AS inside,
+       round(st_distance('POINT (0 0)',
+                         concat('POINT (', CAST(c_custkey % 100 AS STRING), ' ',
+                                CAST((c_custkey * 7) % 100 AS STRING), ')')), 6) AS dist0,
+       round(st_azimuth('POINT (0 0)',
+                        concat('POINT (', CAST(c_custkey % 100 AS STRING), ' ',
+                               CAST((c_custkey * 7) % 100 AS STRING), ')')), 6) AS az,
+       st_geometrytype('POLYGON ((10 10, 70 10, 70 70, 10 70, 10 10))') AS gtype,
+       st_numpoints('POLYGON ((10 10, 70 10, 70 70, 10 70, 10 10))') AS np
+FROM customer
+WHERE c_custkey <= 400
+ORDER BY c_custkey
+""",
+    oracle="""
 SELECT c_custkey,
        (c_custkey % 100) > 10 AND (c_custkey % 100) < 70
        AND ((c_custkey * 7) % 100) > 10 AND ((c_custkey * 7) % 100) < 70

@@ -80,16 +80,38 @@ def canon_rows(col_names, rows):
 _ORDER_BY = re.compile(r"\bORDER\s+BY\b", re.I)
 _LIMIT_TAIL = re.compile(r"\s+LIMIT\s+\d+(?:\s+OFFSET\s+\d+)?\s*;?\s*$", re.I)
 _SORT_KEY = re.compile(
-    r"\s*(?:\w+\.)?(`?)(\w+)\1(?:\s+(ASC|DESC))?(?:\s+NULLS\s+(FIRST|LAST))?\s*$", re.I
+    r"\s*(?:(\w+)\.)?(`?)(\w+)\2(?:\s+(ASC|DESC))?(?:\s+NULLS\s+(FIRST|LAST))?\s*$", re.I
 )
+_SELECT = re.compile(r"\bSELECT\b", re.I)
+_FROM = re.compile(r"\bFROM\b", re.I)
+_PASSTHROUGH = re.compile(r"\s*(?:DISTINCT\s+)?(\w+\.(\w+))(?:\s+(?:AS\s+)?(\w+))?\s*", re.I)
+
+
+def _passthrough_columns(sql: str, end: int) -> set[str]:
+    """The qualified columns (`a.rev`) that the last top-level SELECT list
+    before `end` outputs unchanged under their own names, lower-cased."""
+    sel, pos = None, 0
+    while (m := depth0_search(sql, _SELECT, pos)) is not None and m.start() < end:
+        sel, pos = m, m.end()
+    frm = sel and depth0_search(sql, _FROM, sel.end())
+    if frm is None:
+        return set()
+    out = set()
+    for item in split_top(sql[sel.end():frm.start()].replace("`", "")):
+        m = _PASSTHROUGH.fullmatch(item)
+        if m is not None and (m.group(3) or m.group(2)).lower() == m.group(2).lower():
+            out.add(m.group(1).lower())
+    return out
 
 
 def order_keys(sql: str, columns: list[str]) -> list[tuple[str, bool, bool]] | None:
     """The sort keys of the top-level ORDER BY that ends `sql` (a LIMIT
     may follow), as (column name, descending, nulls first). Each key must
-    be an ordinal or a name, bare or qualified by a table alias, of one of
-    `columns`, the text's output columns; otherwise, or when the text ends
-    in no such ORDER BY, None. Nulls sort first ascending and last
+    be an ordinal or the name of one of `columns`, the text's output
+    columns. A key qualified by a table alias (`a.rev`) names an input
+    column, so it counts only when the SELECT list outputs that column
+    unchanged (`a.rev` or `a.rev AS rev`). Otherwise, or when the text
+    ends in no such ORDER BY, None. Nulls sort first ascending and last
     descending unless the key says otherwise (Spark's default)."""
     last, pos = None, 0
     while (m := depth0_search(sql, _ORDER_BY, pos)) is not None:
@@ -102,7 +124,9 @@ def order_keys(sql: str, columns: list[str]) -> list[tuple[str, bool, bool]] | N
         m = _SORT_KEY.fullmatch(item)
         if m is None:
             return None
-        ref = m.group(2)
+        qual, ref = m.group(1), m.group(3)
+        if qual is not None and f"{qual}.{ref}".lower() not in _passthrough_columns(sql, last.start()):
+            return None
         if ref.isdigit():
             if not 1 <= int(ref) <= len(columns):
                 return None
@@ -111,8 +135,8 @@ def order_keys(sql: str, columns: list[str]) -> list[tuple[str, bool, bool]] | N
             name = columns[lower.index(ref.lower())]
         else:
             return None
-        desc = (m.group(3) or "").upper() == "DESC"
-        nulls = (m.group(4) or "").upper()
+        desc = (m.group(4) or "").upper() == "DESC"
+        nulls = (m.group(5) or "").upper()
         keys.append((name, desc, nulls == "FIRST" if nulls else not desc))
     return keys
 

@@ -257,26 +257,43 @@ def test_explain_plain_query(spark):
     assert rows and "Physical Plan" in "\n".join(r[0] for r in rows)
 
 
-def _explain(eng, stmt: str) -> str:
-    return "\n".join(r[0] for r in eng.sql(stmt).collect())
+@pytest.mark.parametrize(
+    "stmt, absent, present",
+    [
+        # the `FROM dual` rewrite
+        ("EXPLAIN EXTENDED SELECT 1 + 1 AS x FROM dual",
+         "TABLE_OR_VIEW_NOT_FOUND", ("x: int", "Project [2 AS x")),
+        # the constant fold: Doris truncates '1.9' to INT 1
+        ("EXPLAIN SELECT CAST('1.9' AS INT) AS a",
+         "Error occurred", ("Physical Plan", "1 AS a")),
+    ],
+    ids=["from_dual", "constant_cast"],
+)
+def test_explain_runs_query_preparation(spark, stmt, absent, present):
+    """EXPLAIN prepares a query the way sql() does."""
+    plan = "\n".join(r[0] for r in Engine(spark).sql(stmt).collect())
+    assert absent not in plan
+    assert all(p in plan for p in present)
 
 
-def test_explain_from_dual(spark):
-    """EXPLAIN runs the `FROM dual` rewrite that sql() runs."""
-    from doris_spark.engine import Engine
-
-    plan = _explain(Engine(spark), "EXPLAIN EXTENDED SELECT 1 + 1 AS x FROM dual")
-    assert "TABLE_OR_VIEW_NOT_FOUND" not in plan
-    assert "x: int" in plan and "Project [2 AS x" in plan
-
-
-def test_explain_folds_constant_cast(spark):
-    """EXPLAIN runs the constant fold: Doris truncates '1.9' to INT 1."""
-    from doris_spark.engine import Engine
-
-    plan = _explain(Engine(spark), "EXPLAIN SELECT CAST('1.9' AS INT) AS a")
-    assert "Error occurred" not in plan
-    assert "Physical Plan" in plan and "1 AS a" in plan
+def test_explain_runs_no_command(spark):
+    """An explained INSERT, CTAS or DROP is planned, never run: the
+    query preparation analyzes with spark.sql, which runs commands."""
+    eng = Engine(spark)
+    spark.sql("DROP TABLE IF EXISTS explain_cmd_t")
+    spark.sql("DROP TABLE IF EXISTS explain_ctas_t")
+    spark.sql("CREATE TABLE explain_cmd_t (id INT) USING parquet")
+    spark.sql("INSERT INTO explain_cmd_t VALUES (1)")
+    for stmt in (
+        "EXPLAIN INSERT INTO explain_cmd_t SELECT id + 1 FROM explain_cmd_t",
+        "EXPLAIN WITH c AS (SELECT 7 AS id) INSERT INTO explain_cmd_t SELECT id FROM c",
+        "EXPLAIN CREATE TABLE explain_ctas_t USING parquet AS SELECT 1 AS id",
+        "EXPLAIN DROP TABLE explain_cmd_t",
+    ):
+        eng.sql(stmt).collect()
+    assert spark.table("explain_cmd_t").count() == 1
+    assert not spark.catalog.tableExists("explain_ctas_t")
+    spark.sql("DROP TABLE explain_cmd_t")
 
 
 def test_explain_shows_typed_avg(spark):
@@ -293,7 +310,7 @@ def test_explain_shows_typed_avg(spark):
     ).createOrReplaceTempView("explain_dec")
     stmt = "SELECT avg(x) AS a FROM explain_dec"
     assert eng.sql(stmt).collect()[0]["a"] == Decimal("1.8750")
-    plan = _explain(eng, f"EXPLAIN EXTENDED {stmt}")
+    plan = "\n".join(r[0] for r in eng.sql(f"EXPLAIN EXTENDED {stmt}").collect())
     assert "a: decimal(38,4)" in plan and "decimal(14,6)" not in plan
 
 

@@ -22,7 +22,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # One query per risk class: nanos-timestamp read, SQL-registry functions,
 # pandas-UDF boundary, plain tpch join/agg, text pipeline w/ repartition,
 # and a SQL-text query (queries.sql_query), which registers its own views.
-_SMOKE = ["tpch_q1", "ev_tumbling", "doris_fn_matrix", "sketch_bitmap_roaring", "txt_langid", "ssb_q1_2"]
+_SMOKE = ["tpch_q1", "ev_tumbling", "doris_fn_matrix", "json_mutation", "txt_langid", "ssb_q1_2"]
 
 _SCRIPT = textwrap.dedent(
     """

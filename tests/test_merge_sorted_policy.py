@@ -53,4 +53,4 @@ def test_merge_sorted_is_used():
         if p.endswith("__init__.py"):
             continue
         n += open(p).read().count("merge_sorted")
-    assert n >= 113, f"expected >=113 merge_sorted call sites, found {n}"
+    assert n >= 114, f"expected >=114 merge_sorted call sites, found {n}"
