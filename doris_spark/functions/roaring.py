@@ -156,8 +156,8 @@ def bitmap_union_compressed(df, keys: Sequence[str], value_col: str,
     """bitmap_union(to_bitmap(value)) GROUP BY keys — compressed tier.
 
     Two-level plan: mapInPandas partial bitmaps per (keys, partition),
-    one shuffle of compressed partials, grouped-agg merge. Returns a
-    DataFrame (keys..., out_col binary).
+    one shuffle of compressed partials, a grouped-agg pandas UDF merge.
+    Returns a DataFrame (keys..., out_col binary).
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import BinaryType, StructField, StructType
@@ -187,12 +187,13 @@ def bitmap_union_compressed(df, keys: Sequence[str], value_col: str,
 
     partials = src.mapInPandas(_partial, schema=part_schema)
 
-    def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        head = pdf.iloc[[0]][keys].copy()
-        head[out_col] = [merge(list(pdf[out_col]))]
-        return head
+    # A grouped-agg UDF, not a grouped map: the planner sees an aggregate
+    # and knows it returns at most one row per group.
+    @F.pandas_udf(BinaryType())
+    def _merge(blobs: pd.Series) -> bytes:
+        return merge(list(blobs))
 
-    return partials.groupBy(*keys).applyInPandas(_merge_group, schema=part_schema)
+    return partials.groupBy(*keys).agg(_merge(out_col).alias(out_col))
 
 
 def bitmap_count_col(col):

@@ -1118,6 +1118,27 @@ def _mmh3_macro(kernel: str, cast: str | None = None) -> "Macro":
     return m
 
 
+def _split_part(args: Sequence[str]) -> str:
+    """Doris split_part(s, sep, n): NULL for n = 0, an empty or absent
+    separator, or n past the last part; a negative n counts parts from
+    the right. A positive literal n runs Spark's native split_part, which
+    returns '' past the last part, inside a CASE that keeps those NULLs;
+    any other n runs the `__split_part` kernel."""
+    if len(args) != 3:
+        return "__KEEP__(" + ", ".join(args) + ")"
+    s, sep, n = args
+    if not re.fullmatch(r"\s*\d+\s*", n) or int(n) == 0:
+        return f"__split_part({s}, {sep}, CAST({n} AS INT))"
+    n = int(n)
+    # n - 1 separators must occur: each one replaced by '' shortens s by
+    # length(sep), as split_part counts them (left to right, no overlap)
+    return (
+        f"(CASE WHEN {sep} <> '' AND instr({s}, {sep}) > 0"
+        f" AND length({s}) - length(replace({s}, {sep}, '')) >= {n - 1} * length({sep})"
+        f" THEN split_part({s}, {sep}, {n}) END)"
+    )
+
+
 MACROS: dict[str, Macro] = {
     # Doris reports a MySQL-compatible version string
     # (GlobalVariable.java VERSION = "5.7.99")
@@ -1478,13 +1499,9 @@ MACROS: dict[str, Macro] = {
     "money_format": _tpl(
         "__format_round(CAST({0} AS STRING), 2, typeof({0}))"),
     # initcap capitalizes after ANY non-alphanumeric (Spark only splits
-    # on whitespace); split_part: index 0/out-of-range -> NULL and
-    # negative indexes re-split from the RIGHT (python kernels)
+    # on whitespace)
     "initcap": _tpl("__doris_initcap({0})"),
-    "split_part": (lambda args: (
-        f"__split_part({args[0]}, {args[1]}, CAST({args[2]} AS INT))"
-        if len(args) == 3
-        else "__KEEP__(" + ", ".join(args) + ")")),
+    "split_part": _split_part,
     # string<->int codec (function_encode_varchar.cpp): reversed bytes
     # packed into the int's high bytes; largeint returns as text (the
     # 127-bit range exceeds DECIMAL(38))

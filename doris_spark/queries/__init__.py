@@ -43,25 +43,6 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 
-def merge_sorted(df: DataFrame, *cols) -> DataFrame:
-    """Final ORDER BY for BOUNDED result sets — single merge partition
-    (the Doris ResultSink merge-exchange analog: the coordinator merges
-    for the final ORDER BY) instead of a range exchange, whose
-    bound-sampling pass costs a full extra job and exchange.
-
-    ONLY for results bounded by fixed group-key cardinality (status
-    flags, nations, brands, years, buckets, ...) with algebraic
-    aggregates: those stay a few hundred rows at ANY scale factor, so a
-    single sorted partition is the scale-correct plan. Results that grow
-    with the data (per-customer, per-document, per-order rows) must keep
-    the range-partitioned global sort. Time-window keys (hourly
-    tumbling/sliding buckets) count as bounded here because cardinality
-    scales with the RETENTION WINDOW's span (fixture: a fixed range;
-    production: the TTL), not with row volume — revisit if a consumer
-    ever sorts unbounded-history windows."""
-    return df.coalesce(1).sortWithinPartitions(*cols)
-
-
 def year_between(col, lo: int, hi: Optional[int] = None):
     """Pushdown-friendly year predicate: `year(col) in [lo, hi]` expressed
     as a half-open timestamp range. Plain comparisons reach the parquet

@@ -6,7 +6,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from doris_spark.functions import sketches as SK
-from doris_spark.queries import merge_sorted, query, stable_key
+from doris_spark.queries import query, stable_key
 from doris_spark.session import load_tables
 
 
@@ -105,9 +105,12 @@ def rec_cte_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
             levels.append(level)
         reach = reduce(lambda a, b: a.unionAll(b), levels)
         # Eager so the scoped confs govern the actual execution.
+        # Sorted before the checkpoint: its rows keep that order, and the
+        # sort runs under the scoped confs too.
         out = (
             reach.groupBy("node")
             .agg(F.min("depth").alias("min_depth"))
+            .orderBy("node")
             .localCheckpoint(eager=True)
         )
     finally:
@@ -116,9 +119,7 @@ def rec_cte_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-    # Final ORDER BY on the bounded (≤25-row) result: single merge
-    # partition, same rule as every bounded final sort.
-    return merge_sorted(out, "node")
+    return out
 
 
 @query(
@@ -144,12 +145,9 @@ def sketch_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     between group bitmaps (exact distinct-set semantics; array<bigint>
     representation — see functions/sketches.py)."""
     li = load_tables(spark, sf_dir)["lineitem"]
-    # Both self-join sides consume this aggregate; materialize the 3-row
-    # bitmap table once instead of building it per side.
-    per_flag = (
-        li.groupBy("l_returnflag").agg(SK.bitmap_agg("l_suppkey").alias("bm"))
-        .localCheckpoint(eager=False)
-    )
+    # Both self-join sides read this aggregate's one shuffle: AQE reuses
+    # the exchange, and its runtime row count bounds the final sort.
+    per_flag = li.groupBy("l_returnflag").agg(SK.bitmap_agg("l_suppkey").alias("bm"))
     a = per_flag.select(F.col("l_returnflag").alias("flag_a"), F.col("bm").alias("bm_a"))
     b = per_flag.select(F.col("l_returnflag").alias("flag_b"), F.col("bm").alias("bm_b"))
     pairs = a.join(b, F.col("flag_a") < F.col("flag_b"))
@@ -161,7 +159,7 @@ def sketch_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         SK.bitmap_count(SK.bitmap_or("bm_a", "bm_b")).alias("or_count"),
         SK.bitmap_count(SK.bitmap_xor("bm_a", "bm_b")).alias("xor_count"),
         SK.bitmap_contains("bm_a", 3).alias("has_3"),
-    ).transform(merge_sorted, "flag_a", "flag_b")
+    ).orderBy("flag_a", "flag_b")
 
 
 @query(
@@ -185,7 +183,7 @@ def sketch_bitmap_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             SK.bitmap_union_count("l_suppkey").alias("supp_ndv"),
             SK.bitmap_union_count("l_partkey").alias("part_ndv"),
         )
-        .transform(merge_sorted, "l_linestatus")
+        .orderBy("l_linestatus")
     )
 
 
@@ -221,7 +219,7 @@ def sketch_bitmap_roaring(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_min(arr).alias("min_supp"),
             F.array_max(arr).alias("max_supp"),
         )
-        .transform(merge_sorted, "l_linestatus")
+        .orderBy("l_linestatus")
     )
 
 
@@ -260,7 +258,7 @@ def sketch_orthogonal_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "intersect_count"
             ),
         )
-        .transform(merge_sorted, "l_linestatus")
+        .orderBy("l_linestatus")
     )
 
 
@@ -310,7 +308,7 @@ def agg_state_combinators(spark: SparkSession, sf_dir: str) -> DataFrame:
             C.max_merge("tax_st").cast("double").alias("max_tax"),
             C.avg_merge("qty_avg_st").alias("avg_qty"),
         )
-        .transform(merge_sorted, "l_returnflag")
+        .orderBy("l_returnflag")
     )
 
 
@@ -361,7 +359,7 @@ def sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(0)
             .alias("ndv_within_5pct"),
         )
-        .transform(merge_sorted, "o_orderstatus")
+        .orderBy("o_orderstatus")
     )
 
 
@@ -443,7 +441,7 @@ def sketch_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("p50_within_5pct"),
             "p50_disc",
         )
-        .transform(merge_sorted, "l_returnflag")
+        .orderBy("l_returnflag")
     )
 
 
@@ -490,7 +488,7 @@ def sketch_bitmap_string(spark: SparkSession, sf_dir: str) -> DataFrame:
         SK.bitmap_to_string(SK.bitmap_subset_limit("bm", 30, 3)).alias("lim3"),
         SK.bitmap_to_string(SK.bitmap_remove("bm", 7)).alias("removed7"),
         F.size(SK.bitmap_subset_in_range("bm", 10, 20)).alias("in_range_cnt"),
-    ).transform(merge_sorted, "l_returnflag")
+    ).orderBy("l_returnflag")
 
 
 @query(
@@ -535,7 +533,7 @@ def mtmv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         mv.read()
         .select(F.col("yr").cast("int").alias("yr"), "o_orderstatus", "cnt", "total")
-        .transform(merge_sorted, "yr", "o_orderstatus")
+        .orderBy("yr", "o_orderstatus")
     )
 
 
@@ -645,7 +643,7 @@ def meta_scan_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
     parts = table_partitions(spark, path, ["o_orderpriority"])
     assert parts.filter(F.col("n_files") < 1).count() == 0
-    return parts.select("o_orderpriority", "n_rows").transform(merge_sorted, "o_orderpriority")
+    return parts.select("o_orderpriority", "n_rows").orderBy("o_orderpriority")
 
 
 @query(

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from doris_spark.functions.dicts import nation_geo_exprs
-from doris_spark.queries import merge_sorted, query, sql_query
+from doris_spark.queries import query, sql_query
 from doris_spark.session import load_tables, register_views
 
 
@@ -131,9 +131,9 @@ def win_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- grouping sets / rollup
 
-@query(
+sql_query(
     "agg_rollup",
-    oracle="""
+    """
 SELECT l_returnflag, l_linestatus,
        grouping(l_returnflag) * 2 + grouping(l_linestatus) AS gid,
        sum(l_quantity) AS sum_qty, count(*) AS cnt
@@ -142,23 +142,11 @@ GROUP BY ROLLUP (l_returnflag, l_linestatus)
 ORDER BY gid, l_returnflag, l_linestatus
 """,
 )
-def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_tables(spark, sf_dir)["lineitem"]
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.grouping_id().alias("gid"),
-            F.sum("l_quantity").alias("sum_qty"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-        .select("l_returnflag", "l_linestatus", "gid", "sum_qty", "cnt")
-        .transform(merge_sorted, "gid", "l_returnflag", "l_linestatus")
-    )
 
 
-@query(
+sql_query(
     "agg_cube",
-    oracle="""
+    """
 SELECT l_returnflag, l_linestatus,
        grouping(l_returnflag) * 2 + grouping(l_linestatus) AS gid,
        sum(l_extendedprice) AS sum_price
@@ -167,14 +155,6 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 ORDER BY gid, l_returnflag, l_linestatus
 """,
 )
-def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_tables(spark, sf_dir)["lineitem"]
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(F.grouping_id().alias("gid"), F.sum("l_extendedprice").alias("sum_price"))
-        .select("l_returnflag", "l_linestatus", "gid", "sum_price")
-        .transform(merge_sorted, "gid", "l_returnflag", "l_linestatus")
-    )
 
 
 sql_query(
@@ -261,13 +241,13 @@ def distinct_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum_distinct(F.col("l_quantity")).alias("sd_qty"),
             F.count(F.lit(1)).alias("cnt"),
         )
-        .transform(merge_sorted, "l_returnflag")
+        .orderBy("l_returnflag")
     )
 
 
-@query(
+sql_query(
     "stats_agg",
-    oracle="""
+    """
 SELECT l_returnflag,
        corr(l_quantity, l_extendedprice)       AS corr_qp,
        covar_pop(l_quantity, l_extendedprice)  AS covp,
@@ -285,25 +265,6 @@ GROUP BY l_returnflag
 ORDER BY l_returnflag
 """,
 )
-def stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_tables(spark, sf_dir)["lineitem"]
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.corr("l_quantity", "l_extendedprice").alias("corr_qp"),
-            F.covar_pop("l_quantity", "l_extendedprice").alias("covp"),
-            F.covar_samp("l_quantity", "l_extendedprice").alias("covs"),
-            F.stddev_pop("l_quantity").alias("sdp"),
-            F.stddev_samp("l_quantity").alias("sds"),
-            F.var_pop("l_quantity").alias("vp"),
-            F.var_samp("l_quantity").alias("vs"),
-            F.regr_slope("l_extendedprice", "l_quantity").alias("rslope"),
-            F.regr_intercept("l_extendedprice", "l_quantity").alias("rint"),
-            F.regr_r2("l_extendedprice", "l_quantity").alias("rr2"),
-            F.regr_count("l_extendedprice", "l_quantity").alias("rcnt"),
-        )
-        .transform(merge_sorted, "l_returnflag")
-    )
 
 
 @query(
@@ -372,7 +333,7 @@ def skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.skewness("v"), 6).alias("skew"),
             F.round(F.kurtosis("v"), 6).alias("kurt"),
         )
-        .transform(merge_sorted, "l_returnflag")
+        .orderBy("l_returnflag")
     )
 
 
@@ -469,15 +430,15 @@ def cte_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("rev") / F.sum("rev").over(w)).alias("share"),
             (F.col("rev") - F.avg("rev").over(w)).alias("vs_avg"),
         )
-        .transform(merge_sorted, F.desc("rev"), "n_name")
+        .orderBy(F.desc("rev"), "n_name")
     )
 
 
 # --------------------------------------------------- scalar function matrix
 
-@query(
+sql_query(
     "scalar_string_fns",
-    oracle="""
+    """
 SELECT c_custkey,
        upper(c_name)                             AS up,
        lower(c_mktsegment)                       AS lo,
@@ -503,33 +464,6 @@ FROM customer
 WHERE c_custkey < 100
 """,
 )
-def scalar_string_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String-function matrix (BuiltinScalarFunctions.java string tier —
-    all direct Spark builtins)."""
-    c = load_tables(spark, sf_dir)["customer"].filter(F.col("c_custkey") < 100)
-    return c.select(
-        "c_custkey",
-        F.upper("c_name").alias("up"),
-        F.lower("c_mktsegment").alias("lo"),
-        F.substring("c_name", 10, 5).alias("sub"),
-        F.length("c_name").alias("len"),
-        F.concat(F.col("c_name"), F.lit("#"), F.col("c_mktsegment")).alias("cat"),
-        F.lpad(F.col("c_custkey").cast("string"), 8, "0").alias("padded"),
-        F.regexp_replace("c_name", "Customer", "Cust").alias("repl"),
-        F.reverse(F.col("c_mktsegment")).alias("rev"),
-        F.split_part(F.col("c_name"), F.lit("#"), F.lit(2)).alias("spart"),
-        F.instr(F.col("c_name"), "#").alias("pos"),
-        F.trim(F.concat(F.lit("  "), F.col("c_mktsegment"), F.lit("  "))).alias("trimmed"),
-        F.substring("c_name", 1, 4).alias("l4"),
-        F.col("c_name").substr(F.length("c_name") - 3, F.lit(4)).alias("r4"),
-        F.repeat(F.substring("c_mktsegment", 1, 1), 3).alias("rep"),
-        F.translate(F.col("c_mktsegment"), "AEIOU", "aeiou").alias("trans"),
-        F.levenshtein(F.col("c_mktsegment"), F.lit("BUILDING")).alias("lev"),
-        F.md5(F.col("c_name").cast("binary")).alias("h"),
-        F.col("c_name").contains("#00").alias("has00"),
-        F.col("c_name").startswith("Customer").alias("sw"),
-        F.col("c_name").endswith("0").alias("ew"),
-    )
 
 
 sql_query(

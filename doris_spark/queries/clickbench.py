@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from doris_spark.queries import merge_sorted, query, sql_query
+from doris_spark.queries import query, sql_query
 from doris_spark.session import load_tables
 
 
@@ -75,7 +75,7 @@ def cb_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ev.groupBy("event_type")
         .agg(F.count("*").alias("n"))
-        .transform(merge_sorted, F.desc("n"), "event_type")
+        .orderBy(F.desc("n"), "event_type")
     )
 
 
@@ -157,7 +157,7 @@ def cb_json_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("kb").isNotNull())
         .groupBy("kb")
         .agg(F.count("*").alias("n"))
-        .transform(merge_sorted, "kb")
+        .orderBy("kb")
     )
 
 
@@ -175,7 +175,7 @@ def cb_substring_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("text").contains("merge"))
         .groupBy("lang")
         .agg(F.count("*").alias("n"))
-        .transform(merge_sorted, F.desc("n"), "lang")
+        .orderBy(F.desc("n"), "lang")
     )
 
 
@@ -217,7 +217,7 @@ def cb_grouped_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("c"),
             F.countDistinct("user_id").alias("u"),
         )
-        .transform(merge_sorted, F.desc("c"), "event_type")
+        .orderBy(F.desc("c"), "event_type")
     )
 
 
@@ -637,7 +637,7 @@ def cb_nonzero_group_order_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("value") > 0.5)
         .groupBy((F.col("user_id") % 10).alias("ub"))
         .agg(F.count(F.lit(1)).alias("c"))
-        .transform(merge_sorted, F.desc("c"), "ub")
+        .orderBy(F.desc("c"), "ub")
     )
 
 

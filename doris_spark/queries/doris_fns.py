@@ -1,17 +1,31 @@
-"""Driver-gate query exercising the registered Doris-name SQL functions
-(doris_spark/functions/registry.py) end-to-end through spark.sql, with a
-DuckDB oracle recomputing each semantic independently."""
+"""Driver-gate queries exercising the registered Doris-name SQL functions
+(doris_spark/functions/registry.py) end-to-end, through Engine.sql or
+spark.sql, with a DuckDB oracle recomputing each semantic independently."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from doris_spark.queries import merge_sorted, query, sql_query
+from doris_spark.queries import query, sql_query
 from doris_spark.session import register_views
 
 
-@query(
+sql_query(
     "doris_fn_matrix",
+    """
+SELECT o_orderkey,
+       years_add(o_orderdate, 1)                              AS plus1y,
+       months_diff(o_orderdate, TIMESTAMP '1995-01-01 00:00:00') AS mdiff,
+       month_ceil(o_orderdate)                                AS mceil,
+       truncate(o_totalprice, 1)                              AS trunc1,
+       strcmp(o_orderstatus, 'O')                             AS sc,
+       to_days(CAST(o_orderdate AS DATE))                     AS td,
+       ipv4_num_to_string(o_orderkey * 65536)                 AS ip,
+       yearweek(o_orderdate)                                  AS yw,
+       null_or_empty(o_orderpriority)                         AS noe
+FROM orders
+WHERE o_orderkey < 200
+""",
     oracle="""
 SELECT o_orderkey,
        o_orderdate + INTERVAL 1 YEAR AS plus1y,
@@ -47,24 +61,6 @@ FROM orders
 WHERE o_orderkey < 200
 """,
 )
-def doris_fn_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT o_orderkey,
-               years_add(o_orderdate, 1)                              AS plus1y,
-               months_diff(o_orderdate, TIMESTAMP '1995-01-01 00:00:00') AS mdiff,
-               month_ceil(o_orderdate)                                AS mceil,
-               truncate(o_totalprice, 1)                              AS trunc1,
-               strcmp(o_orderstatus, 'O')                             AS sc,
-               to_days(CAST(o_orderdate AS DATE))                     AS td,
-               ipv4_num_to_string(o_orderkey * 65536)                 AS ip,
-               yearweek(o_orderdate)                                  AS yw,
-               null_or_empty(o_orderpriority)                         AS noe
-        FROM orders
-        WHERE o_orderkey < 200
-        """
-    )
 
 
 sql_query(
@@ -106,8 +102,32 @@ _MASK_DUCK = ("regexp_replace(regexp_replace(regexp_replace({c}, '[A-Z]', 'X', '
               "'[a-z]', 'x', 'g'), '[0-9]', 'n', 'g')")
 
 
-@query(
+# URL family (function_string_url.cpp: protocol/domain/domain_without_www/
+# top_level_domain/extract_url_parameter) and mask family (mask/
+# mask_first_n/mask_last_n) over synthesized URLs; the oracle derives
+# every expected value from the construction.
+sql_query(
     "url_mask_fns",
+    """
+WITH u AS (
+  SELECT c_custkey, c_name,
+         concat('https://www.', lower(c_mktsegment), '.example.com/p?id=',
+                CAST(c_custkey AS STRING), '&seg=', lower(c_mktsegment),
+                '#frag') AS url
+  FROM customer WHERE c_custkey < 200
+)
+SELECT c_custkey,
+       protocol(url)                        AS proto,
+       domain(url)                          AS dom,
+       domain_without_www(url)              AS dom_no_www,
+       top_level_domain(url)                AS tld,
+       extract_url_parameter(url, 'id')     AS id_param,
+       extract_url_parameter(url, 'seg')    AS seg_param,
+       mask(c_name)                         AS masked,
+       mask_first_n(c_name, 4)              AS mask4,
+       mask_last_n(c_name, 3)               AS mask_last3
+FROM u ORDER BY c_custkey
+""",
     oracle=f"""
 WITH u AS (
   SELECT c_custkey, c_name,
@@ -132,34 +152,6 @@ SELECT c_custkey,
 FROM u ORDER BY c_custkey
 """,
 )
-def url_mask_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL family (function_string_url.cpp: protocol/domain/
-    domain_without_www/top_level_domain/extract_url_parameter) and mask
-    family (mask/mask_first_n/mask_last_n) over synthesized URLs; the
-    oracle derives every expected value from the construction."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        WITH u AS (
-          SELECT c_custkey, c_name,
-                 concat('https://www.', lower(c_mktsegment), '.example.com/p?id=',
-                        CAST(c_custkey AS STRING), '&seg=', lower(c_mktsegment),
-                        '#frag') AS url
-          FROM customer WHERE c_custkey < 200
-        )
-        SELECT c_custkey,
-               protocol(url)                        AS proto,
-               domain(url)                          AS dom,
-               domain_without_www(url)              AS dom_no_www,
-               top_level_domain(url)                AS tld,
-               extract_url_parameter(url, 'id')     AS id_param,
-               extract_url_parameter(url, 'seg')    AS seg_param,
-               mask(c_name)                         AS masked,
-               mask_first_n(c_name, 4)              AS mask4,
-               mask_last_n(c_name, 3)               AS mask_last3
-        FROM u ORDER BY c_custkey
-        """
-    )
 
 
 @query(
@@ -277,5 +269,5 @@ def dict_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(name_of.alias("nation_name"), "c_acctbal")
         .groupBy("nation_name")
         .agg(F.count(F.lit(1)).alias("n_customers"), F.sum("c_acctbal").alias("total_bal"))
-        .transform(merge_sorted, "nation_name")
+        .orderBy("nation_name")
     )

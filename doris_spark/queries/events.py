@@ -26,7 +26,7 @@ from doris_spark.operators.funnel import (
     window_funnel,
 )
 from doris_spark.operators.table_models import unique_key_view
-from doris_spark.queries import merge_sorted, query, sql_query
+from doris_spark.queries import query, sql_query
 from doris_spark.session import load_tables
 
 # DuckDB reads events.ts as TIMESTAMP_NS; truncate to micros exactly like
@@ -54,7 +54,7 @@ def ev_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("total_value"))
         .select(F.col("w.start").alias("window_start"), "event_type", "cnt", "total_value")
-        .transform(merge_sorted, "window_start", "event_type")
+        .orderBy("window_start", "event_type")
     )
 
 
@@ -81,7 +81,7 @@ def ev_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("total_value"))
         .select(F.col("w.start").alias("window_start"), "cnt", "total_value")
-        .transform(merge_sorted, "window_start")
+        .orderBy("window_start")
     )
 
 
@@ -173,7 +173,7 @@ def ev_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         steps=["signup", "view", "purchase"], window_seconds=24 * 3600,
     )
     return (
-        lv.groupBy("level").agg(F.count(F.lit(1)).alias("n_users")).transform(merge_sorted, "level")
+        lv.groupBy("level").agg(F.count(F.lit(1)).alias("n_users")).orderBy("level")
     )
 
 
@@ -511,7 +511,7 @@ def ev_funnel_default(spark: SparkSession, sf_dir: str) -> DataFrame:
         mode="default",
     )
     return (
-        lv.groupBy("level").agg(F.count(F.lit(1)).alias("n_users")).transform(merge_sorted, "level")
+        lv.groupBy("level").agg(F.count(F.lit(1)).alias("n_users")).orderBy("level")
     )
 
 
@@ -569,7 +569,7 @@ def ev_funnel_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         mode="deduplication",
     )
     return (
-        lv.groupBy("level").agg(F.count(F.lit(1)).alias("n_users")).transform(merge_sorted, "level")
+        lv.groupBy("level").agg(F.count(F.lit(1)).alias("n_users")).orderBy("level")
     )
 
 
@@ -627,7 +627,7 @@ def ev_funnel_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         mode="fixed",
     )
     return (
-        lv.groupBy("level").agg(F.count(F.lit(1)).alias("n_users")).transform(merge_sorted, "level")
+        lv.groupBy("level").agg(F.count(F.lit(1)).alias("n_users")).orderBy("level")
     )
 
 

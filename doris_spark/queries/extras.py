@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from doris_spark.queries import merge_sorted, query, sql_query
+from doris_spark.queries import query, sql_query
 from doris_spark.session import load_tables, register_views
 
 
@@ -476,7 +476,7 @@ def agg_count_by_enum(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "null_cnt"
             ),
         )
-        .transform(merge_sorted, "o_orderstatus")
+        .orderBy("o_orderstatus")
     )
 
 
@@ -540,7 +540,7 @@ def agg_array_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ",",
             ).alias("common_vals")
         )
-        .transform(merge_sorted, "l_returnflag")
+        .orderBy("l_returnflag")
     )
 
 

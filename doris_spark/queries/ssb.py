@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from doris_spark.queries import merge_sorted, query, sql_query, year_between
+from doris_spark.queries import query, sql_query, year_between
 from doris_spark.session import load_tables
 
 _REV = "l_extendedprice * (1 - l_discount)"
@@ -172,7 +172,7 @@ def _flight2(spark, sf_dir, part_pred, part_pred_sql):
         .join(F.broadcast(sg.filter(F.col("s_region") == "AMERICA")), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("d_year", "p_brand")
         .agg(F.round(F.sum("lo_revenue"), 2).alias("revenue"))
-        .transform(merge_sorted, "d_year", "p_brand")
+        .orderBy("d_year", "p_brand")
     )
     return out
 
@@ -226,7 +226,7 @@ def _flight3(spark, sf_dir, cg_col, sg_col, cg_pred, sg_pred, years, order_rev=T
         .agg(F.round(F.sum("lo_revenue"), 2).alias("revenue"))
     )
     if order_rev:
-        out = out.transform(merge_sorted, F.asc("d_year"), F.desc("revenue"), cg_col, sg_col)
+        out = out.orderBy(F.asc("d_year"), F.desc("revenue"), cg_col, sg_col)
     return out
 
 
@@ -317,7 +317,7 @@ def ssb_q4_1(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("d_year", "c_nation")
         .agg(F.round(F.sum(F.col("lo_revenue") - F.col("lo_supplycost")), 2).alias("profit"))
-        .transform(merge_sorted, "d_year", "c_nation")
+        .orderBy("d_year", "c_nation")
     )
 
 
@@ -348,7 +348,7 @@ def ssb_q4_2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("d_year", "s_nation", "p_type")
         .agg(F.round(F.sum(F.col("lo_revenue") - F.col("lo_supplycost")), 2).alias("profit"))
-        .transform(merge_sorted, "d_year", "s_nation", "p_type")
+        .orderBy("d_year", "s_nation", "p_type")
     )
 
 
@@ -378,5 +378,5 @@ def ssb_q4_3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("d_year", "s_city", "p_brand")
         .agg(F.round(F.sum(F.col("lo_revenue") - F.col("lo_supplycost")), 2).alias("profit"))
-        .transform(merge_sorted, "d_year", "s_city", "p_brand")
+        .orderBy("d_year", "s_city", "p_brand")
     )

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from doris_spark.operators import dedup as D
 from doris_spark.operators import textops as T
-from doris_spark.queries import merge_sorted, query, stable_key
+from doris_spark.queries import query, stable_key
 from doris_spark.session import ensure_parallelism, load_tables
 
 # DuckDB-side shared fragments (must mirror operators/textops.py +
@@ -97,7 +97,7 @@ def txt_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("lang", T.lang_id("text").alias("predicted"))
         .groupBy("lang", "predicted")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .transform(merge_sorted, "lang", "predicted")
+        .orderBy("lang", "predicted")
     )
 
 
@@ -149,7 +149,7 @@ def txt_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("source", T.fingerprint("text").alias("f"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.countDistinct("f").alias("n_distinct_fp"))
-        .transform(merge_sorted, "source")
+        .orderBy("source")
     )
 
 
@@ -182,7 +182,7 @@ def txt_match(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(T.match_phrase_prefix("text", "spark jo"), 1).otherwise(0)
             ).alias("n_phrase_prefix"),
         )
-        .transform(merge_sorted, "lang")
+        .orderBy("lang")
     )
 
 
@@ -233,7 +233,7 @@ def txt_match_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("n_terms") == len(terms), 1).otherwise(0)
             ).alias("n_all"),
         )
-        .transform(merge_sorted, "lang")
+        .orderBy("lang")
     )
 
 
@@ -505,7 +505,7 @@ def txt_search_dsl(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.groupBy("lang")
         .agg(F.sum(F.when(hit, 1).otherwise(0)).alias("n_hits"))
-        .transform(merge_sorted, "lang")
+        .orderBy("lang")
     )
 
 
@@ -744,5 +744,5 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg(F.size(T.tokenize("text"))), 6).alias("avg_tokens"),
             F.sum(F.length("text")).cast("bigint").alias("total_chars"),
         )
-        .transform(merge_sorted, "lang")
+        .orderBy("lang")
     )

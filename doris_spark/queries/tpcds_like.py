@@ -23,17 +23,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from doris_spark.functions.dicts import nation_geo_exprs
-from doris_spark.queries import merge_sorted, query, sql_query, year_between
+from doris_spark.queries import query, sql_query, year_between
 from doris_spark.session import load_tables
-
-# Final ORDER BY policy (round 11): queries whose result set is bounded by
-# fixed group-key cardinality (brands, nations, years, buckets, rollup
-# levels, ...) with algebraic aggregates sort on a SINGLE merge partition
-# (.coalesce(1).sortWithinPartitions — the Doris ResultSink merge-exchange
-# analog) instead of a range exchange: the range-partitioner's
-# bound-sampling pass is a whole extra job that costs more than sorting a
-# few hundred rows at any scale. Results that grow with the data keep the
-# range-partitioned global orderBy.
 
 
 @query(
@@ -66,7 +57,7 @@ def ds_yoy_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     return yr.select(
         "p_brand", "yr", "rev",
         F.round(F.col("rev") / F.lag("rev").over(w), 6).alias("yoy"),
-    ).transform(merge_sorted, "p_brand", "yr")
+    ).orderBy("p_brand", "yr")
 
 
 @query(
@@ -107,7 +98,7 @@ def ds_rollup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("n_name", F.lit("ALL")).alias("nation"),
         F.coalesce("c_mktsegment", F.lit("ALL")).alias("segment"),
         "gid", "orders_cnt", "rev", "avg_rev",
-    ).transform(merge_sorted, "gid", "nation", "segment")
+    ).orderBy("gid", "nation", "segment")
 
 
 @query(
@@ -143,7 +134,7 @@ def ds_customer_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("cnt").cast("bigint").alias("min_orders"),
             F.max("cnt").cast("bigint").alias("max_orders"),
         )
-        .transform(merge_sorted, "bucket")
+        .orderBy("bucket")
     )
 
 
@@ -170,7 +161,7 @@ def ds_channel_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "event_type", "dow", "n",
         F.round(F.col("n") / F.sum("n").over(w), 6).alias("share"),
-    ).transform(merge_sorted, "event_type", "dow")
+    ).orderBy("event_type", "dow")
 
 
 @query(
@@ -226,7 +217,7 @@ def ds_cumulative_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mon", "rev", "orders_cnt",
         F.round(F.sum("rev").over(w), 4).alias("cum_rev"),
         F.row_number().over(ws).cast("bigint").alias("month_seq"),
-    ).transform(merge_sorted, "mon")
+    ).orderBy("mon")
 
 
 sql_query(
@@ -329,7 +320,7 @@ def ds_monthly_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select(
         "mon", "mau",
         F.round(F.col("mau") / F.lag("mau").over(w), 6).alias("mom_ratio"),
-    ).transform(merge_sorted, "mon")
+    ).orderBy("mon")
 
 
 @query(
@@ -379,7 +370,7 @@ def ds_q5_channel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("p_brand", F.lit("ALL")).alias("brand"),
             "sales", "returns_amt", "profit",
         )
-        .transform(merge_sorted, "channel", "brand")
+        .orderBy("channel", "brand")
     )
 
 
@@ -451,7 +442,7 @@ def ds_q14_cross_channel_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_lines"),
             F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("rev"),
         )
-        .transform(merge_sorted, "p_brand")
+        .orderBy("p_brand")
     )
 
 
@@ -509,7 +500,7 @@ def ds_q47_monthly_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_months",
             "prev_rev", "next_rev",
         )
-        .transform(merge_sorted, "p_brand", "yr", "mon")
+        .orderBy("p_brand", "yr", "mon")
     )
 
 
@@ -559,7 +550,7 @@ def ds_q57_nation_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
         v.filter(F.col("rev_rank") <= 3)
         .select("n_name", "yr", "mon", "rev",
                 F.round("sum_year_raw", 2).alias("sum_year"), "rev_rank")
-        .transform(merge_sorted, "n_name", "rev_rank", "yr", "mon")
+        .orderBy("n_name", "rev_rank", "yr", "mon")
     )
 
 
@@ -596,7 +587,7 @@ def ds_q33_mfgr_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         u.groupBy("p_type")
         .agg(F.round(F.sum("amt"), 2).alias("total_amt"), F.count(F.lit(1)).alias("n"))
-        .transform(merge_sorted, F.desc("total_amt"), "p_type")
+        .orderBy(F.desc("total_amt"), "p_type")
     )
 
 
@@ -635,7 +626,7 @@ def ds_q35_customer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("c_acctbal"), 2).alias("max_bal"),
             F.round(F.min("c_acctbal"), 2).alias("min_bal"),
         )
-        .transform(merge_sorted, "n_name", "c_mktsegment")
+        .orderBy("n_name", "c_mktsegment")
     )
 
 
@@ -739,7 +730,7 @@ def ds_q75_yoy_decline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("qty").alias("qty_cur"),
         "qty_prev",
         F.round(F.col("amt") - F.col("amt_prev"), 2).alias("amt_delta"),
-    ).transform(merge_sorted, "amt_delta", "p_brand", "yr")
+    ).orderBy("amt_delta", "p_brand", "yr")
 
 
 @query(
@@ -787,7 +778,7 @@ def ds_q89_rolling_brand_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p_brand", "l_linestatus", "yr", "mon", "rev",
                 F.round("sum_m", 2).alias("sum_monthly"),
                 F.col("n_m").alias("n_m"))
-        .transform(merge_sorted, "p_brand", "l_linestatus", "yr", "mon")
+        .orderBy("p_brand", "l_linestatus", "yr", "mon")
     )
 
 
@@ -917,7 +908,7 @@ def ds_q2_wow_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rev_1995").isNotNull() & F.col("rev_1996").isNotNull())
         .select("wk", "rev_1995", "rev_1996",
                 F.round(F.col("rev_1996") / F.col("rev_1995"), 6).alias("ratio"))
-        .transform(merge_sorted, "wk")
+        .orderBy("wk")
     )
 
 
@@ -976,7 +967,7 @@ def ds_q31_qoq_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("n_name",
                 F.round(F.col("hi_q2") / F.col("hi_q1"), 6).alias("hi_growth"),
                 F.round(F.col("lo_q2") / F.col("lo_q1"), 6).alias("lo_growth"))
-        .transform(merge_sorted, "n_name")
+        .orderBy("n_name")
     )
 
 
@@ -1039,7 +1030,7 @@ def ds_q36_margin_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lochierarchy",
             F.rank().over(w).alias("rnk"),
         )
-        .transform(merge_sorted, F.desc("lochierarchy"), "nation", "rnk", "brand")
+        .orderBy(F.desc("lochierarchy"), "nation", "rnk", "brand")
     )
 
 
@@ -1136,7 +1127,7 @@ def ds_q54_segment_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         tot.groupBy(F.floor(F.col("t") / 50000).cast("int").alias("segment"))
         .agg(F.count(F.lit(1)).alias("num_customers"))
-        .transform(merge_sorted, "segment")
+        .orderBy("segment")
     )
 
 
@@ -1355,7 +1346,7 @@ def ds_q6_above_avg_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .filter(F.col("cnt") >= 10)
-        .transform(merge_sorted, "cnt", "n_name")
+        .orderBy("cnt", "n_name")
     )
 
 
@@ -1391,7 +1382,7 @@ def ds_q15_or_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(F.round(F.sum("o_totalprice"), 2).alias("total"))
         .filter(F.col("total") > 50000)
-        .transform(merge_sorted, "n_name")
+        .orderBy("n_name")
     )
 
 
@@ -1557,7 +1548,7 @@ def ds_q59_dow_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("fri_b") / F.col("fri"), 6).alias("fri_ratio"),
             F.round(F.col("sun_b") / F.col("sun"), 6).alias("sun_ratio"),
         )
-        .transform(merge_sorted, "wk")
+        .orderBy("wk")
     )
 
 
@@ -1593,7 +1584,7 @@ def ds_q63_above_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         m.withColumn("a", F.avg("s").over(w))
         .filter(F.col("s") > 1.1 * F.col("a"))
         .select("p_type", "ym", F.round("s", 2).alias("monthly"), F.round("a", 2).alias("trend"))
-        .transform(merge_sorted, "p_type", "ym")
+        .orderBy("p_type", "ym")
     )
 
 
@@ -1628,7 +1619,7 @@ def ds_q98_category_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p_type", "p_brand", F.round("rev", 2).alias("rev"),
             F.round(F.col("rev") * 100 / F.sum("rev").over(w), 4).alias("share"),
         )
-        .transform(merge_sorted, "p_type", "p_brand")
+        .orderBy("p_type", "p_brand")
     )
 
 
@@ -1706,7 +1697,7 @@ def ds_q17_variation(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.filter((F.col("cnt") >= 5) & (cov > 0.62))
         .select("p_brand", "n_name", F.round("mean_qty", 4).alias("mean_qty"),
                 F.round(cov, 4).alias("cov"))
-        .transform(merge_sorted, "p_brand", "n_name")
+        .orderBy("p_brand", "n_name")
     )
 
 
@@ -1753,7 +1744,7 @@ def ds_q62_latency_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
             band(lat.between(91, 120)).alias("d120"),
             band(lat > 120).alias("dmore"),
         )
-        .transform(merge_sorted, "n_name")
+        .orderBy("n_name")
     )
 
 
@@ -1778,7 +1769,7 @@ def ds_q3_brand_year(spark: SparkSession, sf_dir: str) -> DataFrame:
               F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.year("l_shipdate").alias("yr"), F.col("p_brand"))
         .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("rev"))
-        .transform(merge_sorted, "yr", F.col("rev").desc(), "p_brand")
+        .orderBy("yr", F.col("rev").desc(), "p_brand")
     )
 
 
@@ -1816,7 +1807,7 @@ def ds_q7_item_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("l_discount"), 6).alias("avg_disc"),
             F.count("*").alias("cnt"),
         )
-        .transform(merge_sorted, "p_brand")
+        .orderBy("p_brand")
     )
 
 
@@ -1853,7 +1844,7 @@ def ds_q8_preferred_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_name").isNotNull())
         .groupBy("n_name")
         .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("rev"))
-        .transform(merge_sorted, "n_name")
+        .orderBy("n_name")
     )
 
 
@@ -1887,7 +1878,7 @@ def ds_q12_type_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     return itemrev.select(
         "p_type", "p_brand", "rev",
         F.round(F.col("rev") * 100.0 / F.sum("rev").over(w), 6).alias("revshare"),
-    ).transform(merge_sorted, "p_type", "p_brand")
+    ).orderBy("p_type", "p_brand")
 
 
 @query(
@@ -1980,7 +1971,7 @@ def ds_q19_cross_nation_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_nationkey") != F.col("s_nationkey"))
         .groupBy("p_brand")
         .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("rev"))
-        .transform(merge_sorted, "p_brand")
+        .orderBy("p_brand")
     )
 
 
@@ -2051,7 +2042,7 @@ def ds_q22_qty_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("p_type", F.lit("ALL")).alias("ptype"),
         F.coalesce("p_brand", F.lit("ALL")).alias("brand"),
         "gid", "avg_qty", "cnt",
-    ).transform(merge_sorted, "gid", "ptype", "brand")
+    ).orderBy("gid", "ptype", "brand")
 
 
 @query(
@@ -2200,7 +2191,7 @@ def ds_q37_inventory_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p_brand")
         .agg(F.count("*").alias("sold_lines"),
              F.round(F.sum("l_extendedprice"), 4).alias("rev"))
-        .transform(merge_sorted, "p_brand")
+        .orderBy("p_brand")
     )
 
 
@@ -2280,7 +2271,7 @@ def ds_q40_net_before_after(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(F.when(sd < "1998-01-01", net).otherwise(0.0)), 4).alias("rev_before"),
             F.round(F.sum(F.when(sd >= "1998-01-01", net).otherwise(0.0)), 4).alias("rev_after"),
         )
-        .transform(merge_sorted, "p_brand")
+        .orderBy("p_brand")
     )
 
 
@@ -2304,7 +2295,7 @@ def ds_q42_category_month(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(t["part"]), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.year("l_shipdate").alias("yr"), F.col("p_type"))
         .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("rev"))
-        .transform(merge_sorted, F.col("rev").desc(), "yr", "p_type")
+        .orderBy(F.col("rev").desc(), "yr", "p_type")
     )
 
 
@@ -2438,7 +2429,7 @@ def ds_q45_list_or_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
                 | F.col("is_big").isNotNull())
         .groupBy("n_name")
         .agg(F.round(F.sum("o_totalprice"), 4).alias("rev"))
-        .transform(merge_sorted, "n_name")
+        .orderBy("n_name")
     )
 
 
@@ -2497,7 +2488,7 @@ def ds_q50_return_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(band(lat <= 30, "d30"), band(lat.between(31, 60), "d60"),
              band(lat.between(61, 90), "d90"), band(lat > 90, "dmore"))
-        .transform(merge_sorted, "n_name")
+        .orderBy("n_name")
     )
 
 
@@ -2536,7 +2527,7 @@ def ds_q53_quarterly_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("avg_raw") > 0)
                 & (F.abs(F.col("rev") - F.col("avg_raw")) / F.col("avg_raw") > 0.1))
         .select("p_brand", "qtr", "rev", F.round("avg_raw", 6).alias("avg_rev"))
-        .transform(merge_sorted, "p_brand", "qtr")
+        .orderBy("p_brand", "qtr")
     )
 
 
@@ -2569,7 +2560,7 @@ def ds_q56_channel_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         chan.groupBy("p_brand")
         .agg(F.round(F.sum("rev"), 4).alias("total_rev"))
-        .transform(merge_sorted, F.col("total_rev").desc(), "p_brand")
+        .orderBy(F.col("total_rev").desc(), "p_brand")
     )
 
 
@@ -2627,7 +2618,7 @@ def ds_q58_equal_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.round(F.sum("rev_a"), 4).alias("tot_a"),
              F.round(F.sum("rev_n"), 4).alias("tot_n"),
              F.round(F.sum("rev_r"), 4).alias("tot_r"))
-        .transform(merge_sorted, "p_brand")
+        .orderBy("p_brand")
     )
 
 
@@ -2704,7 +2695,7 @@ def ds_q64_price_drop_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p_brand")
         .agg(F.count("*").alias("drop_pairs"),
              F.round(F.avg(F.col("prev_price") - F.col("avg_price")), 6).alias("avg_drop"))
-        .transform(merge_sorted, "p_brand")
+        .orderBy("p_brand")
     )
 
 
@@ -2747,7 +2738,7 @@ def ds_q66_monthly_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_name").isNotNull())
         .groupBy("n_name")
         .agg(*[m(n) for n in range(1, 13)])
-        .transform(merge_sorted, "n_name")
+        .orderBy("n_name")
     )
 
 
@@ -2858,7 +2849,7 @@ def ds_q70_top_nations_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("r_name", F.lit("ALL")).alias("region"),
         F.coalesce("n_name", F.lit("ALL")).alias("nation"),
         "gid", "rev",
-    ).transform(merge_sorted, "gid", "region", "nation")
+    ).orderBy("gid", "region", "nation")
 
 
 @query(
@@ -2898,7 +2889,7 @@ def ds_q72_inventory_shortfall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(t["part"]), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand")
         .agg(F.count("*").alias("short_lines"))
-        .transform(merge_sorted, "p_brand")
+        .orderBy("p_brand")
     )
 
 
@@ -2931,7 +2922,7 @@ def ds_q76_null_channel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.coalesce("p_brand", F.lit("UNKNOWN")).alias("brand"))
         .agg(F.count("*").alias("cnt"),
              F.round(F.sum("l_extendedprice"), 4).alias("rev"))
-        .transform(merge_sorted, "channel", "yr", "brand")
+        .orderBy("channel", "yr", "brand")
     )
 
 
@@ -2971,7 +2962,7 @@ def ds_q77_sales_returns_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("l_linestatus", F.lit("ALL")).alias("channel"),
         F.coalesce("n_name", F.lit("ALL")).alias("nation"),
         "gid", "sales_rev", "returns_rev",
-    ).transform(merge_sorted, "gid", "channel", "nation")
+    ).orderBy("gid", "channel", "nation")
 
 
 sql_query(
@@ -3070,7 +3061,7 @@ def ds_q80_channel_net(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select(
         F.coalesce("l_linestatus", F.lit("ALL")).alias("channel"),
         "gid", "gross_rev", "returned_rev", "net_rev",
-    ).transform(merge_sorted, "gid", "channel")
+    ).orderBy("gid", "channel")
 
 
 @query(
@@ -3231,7 +3222,7 @@ def ds_q25_profit_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(leg("1997-04-01", "1997-05-01", False, "sold_net"),
              leg("1997-05-01", "1997-08-01", True, "returned_net"),
              leg("1997-08-01", "1997-11-01", False, "resold_net"))
-        .transform(merge_sorted, "p_brand")
+        .orderBy("p_brand")
     )
 
 
@@ -3280,7 +3271,7 @@ def ds_q83_return_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.col("w1") * 100.0 / tot, 6).alias("w1_pct"),
                 F.round(F.col("w2") * 100.0 / tot, 6).alias("w2_pct"),
                 F.round(F.col("w3") * 100.0 / tot, 6).alias("w3_pct"))
-        .transform(merge_sorted, "p_brand")
+        .orderBy("p_brand")
     )
 
 
@@ -3353,7 +3344,7 @@ def ds_q85_reason_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.avg("l_extendedprice"), 6).alias("avg_refund"),
              F.round(F.avg("l_discount"), 6).alias("avg_disc"),
              F.count("*").alias("cnt"))
-        .transform(merge_sorted, "reason_band")
+        .orderBy("reason_band")
     )
 
 
@@ -3391,7 +3382,7 @@ def ds_q86_hierarchy_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy(
         "gid", F.when(F.col("gid") == 0, F.col("ptype"))
     ).orderBy(F.col("rev").desc(), "ptype", "brand")
-    return g.withColumn("rank_in_parent", F.row_number().over(w)).transform(merge_sorted, "gid", "ptype", "brand")
+    return g.withColumn("rank_in_parent", F.row_number().over(w)).orderBy("gid", "ptype", "brand")
 
 
 sql_query(
@@ -3435,7 +3426,7 @@ def ds_q91_returns_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.month("l_shipdate").alias("mon"), F.col("c_mktsegment"),
                  F.col("o_orderpriority"))
         .agg(F.round(F.sum("l_extendedprice"), 4).alias("loss"))
-        .transform(merge_sorted, "mon", "c_mktsegment", "o_orderpriority")
+        .orderBy("mon", "c_mktsegment", "o_orderpriority")
     )
 
 

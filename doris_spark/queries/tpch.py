@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doris_spark.functions.dicts import nation_geo_exprs
-from doris_spark.queries import merge_sorted, query, sql_query
+from doris_spark.queries import query, sql_query
 from doris_spark.session import load_tables
 
 
@@ -69,7 +69,7 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.avg("l_discount").alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
-        .transform(merge_sorted, "l_returnflag", "l_linestatus")
+        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -176,7 +176,7 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n_name", n_name)
         .groupBy("n_name")
         .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
-        .transform(merge_sorted, F.desc("revenue"), "n_name")
+        .orderBy(F.desc("revenue"), "n_name")
     )
 
 
@@ -266,7 +266,7 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("supp_nation", "cust_nation", "l_year")
         .agg(F.sum("volume").alias("revenue"))
-        .transform(merge_sorted, "supp_nation", "cust_nation", "l_year")
+        .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -335,7 +335,7 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.sum("volume")
             ).alias("mkt_share")
         )
-        .transform(merge_sorted, "o_year")
+        .orderBy("o_year")
     )
 
 
@@ -381,7 +381,7 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("nation", F.year("o_orderdate").alias("o_year"), amount)
         .groupBy("nation", "o_year")
         .agg(F.sum("amount").alias("sum_profit"))
-        .transform(merge_sorted, "nation", F.desc("o_year"))
+        .orderBy("nation", F.desc("o_year"))
     )
 
 
@@ -447,7 +447,7 @@ def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(hi, 1).otherwise(0)).alias("high_line_count"),
             F.sum(F.when(~hi, 1).otherwise(0)).alias("low_line_count"),
         )
-        .transform(merge_sorted, "l_linestatus")
+        .orderBy("l_linestatus")
     )
 
 
@@ -484,7 +484,7 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_cust.groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("custdist"))
-        .transform(merge_sorted, F.desc("custdist"), F.desc("c_count"))
+        .orderBy(F.desc("custdist"), F.desc("c_count"))
     )
 
 
@@ -736,7 +736,7 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("c_mktsegment").alias("cntrycode"))
         .agg(F.count(F.lit(1)).alias("numcust"), F.sum("c_acctbal").alias("totacctbal"))
-        .transform(merge_sorted, "cntrycode")
+        .orderBy("cntrycode")
     )
 
 
@@ -953,7 +953,7 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("ps_suppkey").alias("supplier_cnt"))
-        .transform(merge_sorted, F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
+        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
     )
 
 

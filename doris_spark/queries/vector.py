@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doris_spark.operators import vector as V
-from doris_spark.queries import merge_sorted, query, stable_key
+from doris_spark.queries import query, stable_key
 from doris_spark.session import load_tables
 
 # DuckDB-side: cast float list to double list (mirrors the Spark-side
@@ -159,7 +159,7 @@ def vec_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("dim") < 8)
         .groupBy("label", "dim")
         .agg(F.round(F.avg(F.col("v").cast("double")), 8).alias("centroid_v"))
-        .transform(merge_sorted, "label", "dim")
+        .orderBy("label", "dim")
     )
 
 

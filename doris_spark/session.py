@@ -23,6 +23,8 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
+from doris_spark import jvm
+
 # Tables shipped by the driver (TESTDATA.md).
 TABLES = (
     "region",
@@ -59,6 +61,16 @@ def get_spark(app_name: str = "doris_spark", cpus: int | None = None) -> SparkSe
     In production this would run on a multi-executor cluster; locally we use
     local[N]. Every config below is cluster-safe (nothing local-mode-specific
     except the master URL).
+
+    The session loads the engine's extension (`doris_spark/jvm`): an AQE
+    rule that finishes a root ORDER BY in one sorted partition when the
+    runtime row counts of the stages below it bound its input to at most
+    `BoundedFinalSort.MAX_ROWS` rows, so the range exchange and its
+    sampling job are skipped. `spark.sql.extensions` and the driver class
+    path are read only when the JVM starts. A session that another caller
+    built, or any session built while a JVM already ran in this process,
+    has no rule: its results are the same rows in the same order, and each
+    final sort pays the range exchange's sampling job.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -90,6 +102,9 @@ def get_spark(app_name: str = "doris_spark", cpus: int | None = None) -> SparkSe
         .config("spark.sql.cbo.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Bounded final sorts merge in one partition (doris_spark/jvm).
+        .config("spark.sql.extensions", jvm.EXTENSION_CLASS)
+        .config("spark.driver.extraClassPath", jvm.JAR)
     )
     spark = builder.getOrCreate()
     # Runtime confs + Doris function-name surface (§2.8) — same path a
@@ -142,6 +157,11 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     call registers again. The first call on a session takes 9.1-9.6 s
     when it is the JVM's first (its parser and analyzer not yet compiled)
     and 2.3-3.0 s on a later `spark.newSession()`, measured on 4 vCPUs.
+
+    It cannot add the bounded-final-sort rule that `get_spark` installs:
+    `spark.sql.extensions` is a static conf. On a session without it every
+    query still returns the same rows in the same order, but each final
+    ORDER BY plans a range exchange, whose sampling costs one more job.
     """
     if session_token(spark) in _PREPARED:
         return spark

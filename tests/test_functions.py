@@ -247,3 +247,42 @@ def test_regexp_variants(spark):
     assert rows["anchored"] == "aaX"   # first match of 'a$' is the LAST char
     assert rows["no_match"] is None
     assert rows["hit"] == "42"
+
+
+# Doris split_part through Engine.sql: index 0, an empty or absent
+# separator, an index past the last part and NULL inputs give NULL; a
+# negative index counts parts from the right; an empty part stays ''.
+SPLIT_PART = [
+    ("second", "'a,b,c'", "','", "2", "b"),
+    ("empty_part", "'a,,c'", "','", "2", ""),
+    ("last", "'a::b::c'", "'::'", "3", "c"),
+    ("index_0", "'a,b,c'", "','", "0", None),
+    ("empty_separator", "'a,b,c'", "''", "1", None),
+    ("absent_separator", "'a,b,c'", "'|'", "1", None),
+    ("past_last", "'a,b,c'", "','", "4", None),
+    ("null_string", "NULL", "','", "1", None),
+    ("null_separator", "'a,b'", "NULL", "1", None),
+    ("null_index", "'a,b'", "','", "NULL", None),
+    ("negative", "'a,b,c'", "','", "-1", "c"),
+    ("negative_first", "'a,b,c'", "','", "-3", "a"),
+    ("negative_past_first", "'a,b,c'", "','", "-4", None),
+    ("column_index", "'a,b,c'", "','", "i", "b"),
+]
+
+
+@pytest.fixture(scope="module")
+def engine(spark):
+    from doris_spark.engine import Engine
+
+    return Engine(spark)
+
+
+@pytest.mark.parametrize(
+    "s,sep,index,want", [c[1:] for c in SPLIT_PART], ids=[c[0] for c in SPLIT_PART]
+)
+def test_split_part_doris_semantics(engine, s, sep, index, want):
+    sql = (
+        f"SELECT split_part(s, {sep}, {index}) AS r "
+        f"FROM VALUES (CAST({s} AS STRING), 2) AS v(s, i)"
+    )
+    assert engine.sql(sql).collect()[0].r == want
