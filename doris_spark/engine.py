@@ -116,7 +116,7 @@ from doris_spark.operators.table_models import (
     merge_touched_keys,
     unique_key_view,
 )
-from doris_spark.session import get_spark, register_views
+from doris_spark.session import get_spark, prepare_session, register_views
 
 
 def _keys_view(meta: Mapping) -> Callable[[DataFrame], DataFrame] | None:
@@ -146,24 +146,18 @@ class Engine:
     """Session facade: SQL entry point + table-model-aware catalog."""
 
     def __init__(self, spark: SparkSession | None = None, cpus: int | None = None):
-        if spark is None:
-            spark = get_spark(cpus=cpus)
-        else:
-            # An externally built session still needs the Doris function
-            # surface — prepare_session is idempotent per session, so
-            # repeated Engine construction doesn't re-pay the registration
-            # (~9 s on a fresh JVM, 2-3 s on a warm one, 4 vCPUs).
-            from doris_spark.session import prepare_session
-
-            prepare_session(spark)
-        self.spark = spark
+        # The engine runs in the engine session of the given session: the
+        # jar's rules and the Doris function surface, derived once per
+        # session (prepare_session is idempotent, so repeated construction
+        # does not re-pay the registration, ~9 s on a fresh JVM).
+        self.spark = get_spark(cpus=cpus) if spark is None else prepare_session(spark)
         # table name -> merge-on-read view (DUP tables map to themselves)
         self._views: dict[str, DataFrame] = {}
         # table name -> partition count of its pinned snapshot (tables whose
         # view was pinned by a write; see _publish)
         self._parts: dict[str, int] = {}
         # one-row local relation the statement replies select from (_reply)
-        self._unit = spark.sql("SELECT * FROM VALUES (0) AS __unit(x)")
+        self._unit = self.spark.sql("SELECT * FROM VALUES (0) AS __unit(x)")
         # table name -> keys-model metadata (for INSERT re-merge)
         self._meta: dict[str, dict] = {}
         # transparent MV rewrite catalog (plans/mv_rewrite.py)
@@ -424,7 +418,7 @@ class Engine:
                 text,
                 flags=_re.I,
             )
-        stmt = rewrite(dialect(text))
+        stmt = rewrite(dialect(text), self.spark)
         # Doris binary-arithmetic coercion (plans/typed_arith.py):
         # packed-digit date arithmetic, fixed-point promotion, Doris
         # decimal precision/scale, BIGINT-folded bit ops / DIV. Pure
@@ -487,24 +481,6 @@ class Engine:
                         msg = str(e2)
             if df is None:
                 raise
-        if (
-            _re.search(r"(?i)(?<![\w.$])avg\s*\(", stmt)
-            or "make_interval(0, 0, 0, CAST((" in stmt
-            or _re.search(r"(?i)(?:[=<>]\s*|\bBETWEEN\s+)\d{8}", stmt)
-        ):
-            # typed pass (plans/typed_avg.py): Doris avg(DECIMAL(p,s<4))
-            # scale-4 truncation, and DATE-typed date_add/date_sub for
-            # DATE inputs — only decidable after analysis, so re-plan
-            # when a call site matches. Any failure falls back to the
-            # first analysis (Spark semantics).
-            try:
-                from doris_spark.plans.typed_avg import doris_typed_fixup
-
-                fixed = doris_typed_fixup(self.spark, stmt, df)
-                if fixed is not None:
-                    df, stmt = self.spark.sql(fixed), fixed
-            except Exception:
-                pass
         return stmt, df
 
     def _expand_star_replace(self, text: str):

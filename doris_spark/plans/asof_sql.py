@@ -49,7 +49,7 @@ a domain join — fine at doc scale): MIXED non-equality conjuncts
 (t.v < q.v — a pair predicate the window carry can't express),
 residuals with unqualified columns, unqualified left keys on a
 join-chain left side, a bare `*` over a join-chain left side, or no
-resolvable SparkSession to type the right columns.
+session given to type the right columns in.
 """
 
 from __future__ import annotations
@@ -65,8 +65,6 @@ from doris_spark.plans.sqltok import (
     lit_spans,
     split_top,
 )
-
-from pyspark.sql import SparkSession
 
 _ASOF = re.compile(r"\bASOF\s+(LEFT\s+|INNER\s+)?JOIN\b", re.I)
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_.]*")
@@ -191,9 +189,9 @@ def _grab_left_relation(sql: str, end: int) -> tuple[str, str, int] | None:
     return sql[rel_start:end].strip(), alias, rel_start
 
 
-def _right_schema(rtable: str) -> list[tuple[str, str]] | None:
-    """[(name, ddl_type)] of the right relation, or None if unresolvable."""
-    spark = SparkSession.getActiveSession()
+def _right_schema(spark, rtable: str) -> list[tuple[str, str]] | None:
+    """[(name, ddl_type)] of the right relation in `spark`'s catalog, or
+    None if unresolvable (or no session is given)."""
     if spark is None:
         return None
     try:
@@ -427,8 +425,10 @@ def _pick_rewrite(
     return sql[:lstart] + repl + sql[end:]
 
 
-def rewrite_asof(sql: str) -> str:
-    """Expand every ASOF join in `sql`; non-ASOF SQL passes through."""
+def rewrite_asof(sql: str, spark=None) -> str:
+    """Expand every ASOF join in `sql`; non-ASOF SQL passes through.
+    `spark` types the right relation's columns for the pick rewrite;
+    without it, the lateral fallback runs."""
     while True:
         m = _ASOF.search(sql)
         if m is None:
@@ -517,7 +517,7 @@ def rewrite_asof(sql: str) -> str:
 
         # ---------------- scale-safe pick plan (preferred) ----------------
         planned = _try_pick_plan(
-            sql, m.start(), rtable, ralias, kind, conjuncts, (cj, cm), end
+            sql, m.start(), rtable, ralias, kind, conjuncts, (cj, cm), end, spark
         )
         if planned is not None:
             sql = planned
@@ -545,6 +545,7 @@ def _try_pick_plan(
     conjuncts: list[str],
     ineq: tuple[str, re.Match],
     end: int,
+    spark,
 ) -> str | None:
     """Attempt the union+window pick rewrite; None -> lateral fallback."""
     cj, cm = ineq
@@ -631,7 +632,7 @@ def _try_pick_plan(
     else:
         return None  # unqualified keys on a non-FROM-adjacent left side
 
-    schema = _right_schema(rtable)
+    schema = _right_schema(spark, rtable)
     if schema is None:
         return None
 

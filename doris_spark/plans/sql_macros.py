@@ -893,9 +893,10 @@ def _date_arith(args: Sequence[str], sign: str) -> str:
     registrations): expands to the TYPED TIMESTAMP shape. Day-count
     forms — bare integer second arg, or a literal/non-literal
     `INTERVAL n DAY` — emit the exact `make_interval(0, 0, 0,
-    CAST((n) AS INT))` template that the typed post-analysis pass
-    (plans/typed_avg.doris_typed_fixup) matches to narrow DATE inputs
-    back to Spark's date_add/date_sub. Other interval units keep their
+    CAST((n) AS INT))` template that the analyzer rule
+    `doris_spark/jvm/src/dorisspark/DorisTypes.java` matches, resolved,
+    to narrow DATE inputs back to Spark's date_add/date_sub: keep the
+    two in sync. Other interval units keep their
     interval expression (timestamp-typed; the comparator compares
     datetime instants semantically). The macro path handles argument
     expressions of ANY nesting depth — the dialect's regex tier only
@@ -1691,10 +1692,10 @@ MACROS: dict[str, Macro] = {
     # return DATE for date inputs (DateAdd.java computeSignature). The
     # 2-arg form expands to the TYPED TIMESTAMP shape below — so
     # compositions (`date_add(d,1) + INTERVAL 1 DAY`, nested datediff)
-    # keep real datetime typing — and the typed post-analysis pass
-    # (plans/typed_avg.py doris_typed_fixup) narrows sites whose input
-    # is DATE back to Spark's date_add/date_sub (DATE-typed). The exact
-    # spelling here is the pass's match template: keep them in sync.
+    # keep real datetime typing — and the analyzer rule DorisTypes
+    # (doris_spark/jvm) narrows sites whose input is DATE back to
+    # Spark's date_add/date_sub (DATE-typed). _date_arith's docstring
+    # names the template that rule matches.
     # INTERVAL forms and 3-arg spellings pass through untouched.
     "date_add": (lambda args: _date_arith(args, "+")),
     "date_sub": (lambda args: _date_arith(args, "-")),
@@ -2901,10 +2902,12 @@ def _attach_over(expansion: str, over_text: str) -> str:
     return "".join(out)
 
 
-def rewrite(sql: str) -> str:
+def rewrite(sql: str, spark=None) -> str:
     """Expand Doris-spelling calls into Spark SQL (recursive, innermost
     args first, string literals untouched). SET lc_time_names is captured
-    as session-variable state and forwarded as a harmless Spark SET."""
+    as session-variable state and forwarded as a harmless Spark SET.
+    `spark` is the session whose catalog an ASOF join's right relation
+    is typed in (plans/asof_sql.py)."""
     m = _SET_LC.match(sql)
     if m:
         set_lc_time_names(m.group(1))
@@ -2941,7 +2944,7 @@ def rewrite(sql: str) -> str:
     if "asof" in sql.lower():
         from doris_spark.plans.asof_sql import rewrite_asof
 
-        sql = rewrite_asof(sql)
+        sql = rewrite_asof(sql, spark)
     out = []
     i = 0
     n = len(sql)

@@ -4,7 +4,7 @@ The one literal rule for every text pass of the engine. These modules
 scan SQL through it and keep no scanner of their own: engine.py (DML,
 INSERT ... VALUES, `* REPLACE`, the SQL-UDF inlining and CTE-alias
 retries), plans/dialect.py, plans/sql_macros.py, plans/typed_arith.py,
-plans/typed_avg.py, plans/unnest_rewrite.py, plans/asof_sql.py,
+plans/unnest_rewrite.py, plans/asof_sql.py,
 plans/mv_rewrite.py, plans/recursive_cte.py and
 plans/const_cast_fold.py. Two round-10 bugs (chained RIGHT SEMI/ANTI
 rewriting at stale offsets, `_is_bool_sub` corrupting string literals)

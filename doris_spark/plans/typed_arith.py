@@ -386,8 +386,8 @@ def _emit(op: str, lv: _Val, rv: _Val) -> _Val | None:
         name = _spark_type_name(ret)
         if op == "/":
             # the BE's int128 decimal division TRUNCATES toward zero at
-            # the result scale (same behavior typed_avg.py pins for
-            # avg); CAST alone would round HALF_UP
+            # the result scale (the same truncation the DorisTypes
+            # analyzer rule applies to avg); CAST alone would round HALF_UP
             # (nereids_arith_p0 DecimalV2_BigInt: 24.3952/5354529 ->
             # 0.0000045, not 0.0000046)
             s = ret[2] if ret[1] <= 38 else 0

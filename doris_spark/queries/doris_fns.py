@@ -154,8 +154,25 @@ FROM u ORDER BY c_custkey
 )
 
 
-@query(
+# convert_tz (IANA zones incl. half-hour offsets and DST edges — events
+# span a March DST switch), the MySQL date_format tokens, dayname/monthname
+# and unix_timestamp: the date/time string surface of SURVEY §2.8, in
+# Doris's spelling. Doris names days and months in full (`Monday`,
+# `January`), so the oracle formats with DuckDB's `%A`/`%B`.
+sql_query(
     "tz_datefmt_fns",
+    """
+SELECT event_id,
+       convert_tz(ts, 'UTC', 'America/New_York') AS ny,
+       convert_tz(ts, 'UTC', 'Asia/Tokyo')       AS tokyo,
+       convert_tz(ts, 'Asia/Kolkata', 'UTC')     AS from_ist,
+       date_format(ts, '%Y-%m-%d %H:%i:%s')      AS fmt_full,
+       date_format(ts, '%d/%m/%Y')               AS fmt_dmy,
+       dayname(ts)                               AS dname,
+       monthname(ts)                             AS mname,
+       unix_timestamp(ts)                        AS unix_ts
+FROM events WHERE event_id < 100 ORDER BY event_id
+""",
     oracle="""
 WITH t AS (
   SELECT event_id, make_timestamp(epoch_ns(ts) // 1000) AS ts
@@ -167,33 +184,12 @@ SELECT event_id,
        (ts AT TIME ZONE 'Asia/Kolkata') AT TIME ZONE 'UTC'     AS from_ist,
        strftime(ts, '%Y-%m-%d %H:%M:%S') AS fmt_full,
        strftime(ts, '%d/%m/%Y')          AS fmt_dmy,
-       strftime(ts, '%a')                AS dname,
-       strftime(ts, '%b')                AS mname,
+       strftime(ts, '%A')                AS dname,
+       strftime(ts, '%B')                AS mname,
        CAST(floor(epoch(ts)) AS BIGINT)  AS unix_ts
 FROM t ORDER BY event_id
 """,
 )
-def tz_datefmt_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """convert_tz (IANA zones incl. half-hour offsets and DST edges —
-    events span a March DST switch), date_format token matrix, dayname/
-    monthname, unix_timestamp — the date/time string surface of SURVEY
-    §2.8. The oracle uses DuckDB's AT TIME ZONE chain and strftime
-    equivalents."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT event_id,
-               convert_tz(CAST(ts AS TIMESTAMP_NTZ), 'UTC', 'America/New_York') AS ny,
-               convert_tz(CAST(ts AS TIMESTAMP_NTZ), 'UTC', 'Asia/Tokyo')       AS tokyo,
-               convert_tz(CAST(ts AS TIMESTAMP_NTZ), 'Asia/Kolkata', 'UTC')     AS from_ist,
-               date_format(ts, 'yyyy-MM-dd HH:mm:ss') AS fmt_full,
-               date_format(ts, 'dd/MM/yyyy')          AS fmt_dmy,
-               dayname(ts)                            AS dname,
-               monthname(ts)                          AS mname,
-               unix_timestamp(ts)                     AS unix_ts
-        FROM events WHERE event_id < 100 ORDER BY event_id
-        """
-    )
 
 
 @query(

@@ -56,21 +56,12 @@ def driver_cpus() -> int:
 
 
 def get_spark(app_name: str = "doris_spark", cpus: int | None = None) -> SparkSession:
-    """Build (or reuse) a SparkSession tuned for analytics.
+    """Build (or reuse) a SparkSession tuned for analytics, and return the
+    engine's session over it (`prepare_session`).
 
     In production this would run on a multi-executor cluster; locally we use
     local[N]. Every config below is cluster-safe (nothing local-mode-specific
     except the master URL).
-
-    The session loads the engine's extension (`doris_spark/jvm`): an AQE
-    rule that finishes a root ORDER BY in one sorted partition when the
-    runtime row counts of the stages below it bound its input to at most
-    `BoundedFinalSort.MAX_ROWS` rows, so the range exchange and its
-    sampling job are skipped. `spark.sql.extensions` and the driver class
-    path are read only when the JVM starts. A session that another caller
-    built, or any session built while a JVM already ran in this process,
-    has no rule: its results are the same rows in the same order, and each
-    final sort pays the range exchange's sampling job.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -102,14 +93,8 @@ def get_spark(app_name: str = "doris_spark", cpus: int | None = None) -> SparkSe
         .config("spark.sql.cbo.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        # Bounded final sorts merge in one partition (doris_spark/jvm).
-        .config("spark.sql.extensions", jvm.EXTENSION_CLASS)
-        .config("spark.driver.extraClassPath", jvm.JAR)
     )
-    spark = builder.getOrCreate()
-    # Runtime confs + Doris function-name surface (§2.8) — same path a
-    # driver-provided foreign session goes through.
-    return prepare_session(spark)
+    return prepare_session(builder.getOrCreate())
 
 
 def session_token(spark: SparkSession) -> tuple[int, str]:
@@ -126,9 +111,13 @@ def session_token(spark: SparkSession) -> tuple[int, str]:
 # without pinning any data.
 _TABLE_CACHE: dict[tuple[tuple[int, str], str], dict[str, DataFrame]] = {}
 
-# Sessions already passed through prepare_session (same keying rationale
-# as _TABLE_CACHE).
+# Engine sessions already passed through prepare_session (same keying
+# rationale as _TABLE_CACHE).
 _PREPARED: set[tuple[int, str]] = set()
+
+# Caller's session token -> (caller's session, the engine session derived
+# from it). Holding the caller keeps its id() from being recycled.
+_DERIVED: dict[tuple[int, str], tuple[SparkSession, SparkSession]] = {}
 
 # Runtime confs every entry path needs regardless of who built the session.
 # All of these are SQLConf runtime-settable (not static/core confs).
@@ -147,46 +136,73 @@ _REQUIRED_RUNTIME_CONFS = {
 
 
 def prepare_session(spark: SparkSession) -> SparkSession:
-    """Make ANY SparkSession able to run this engine — including a vanilla one
-    the driver built itself (the queries()/entry() contract passes us an
+    """The engine's session for `spark`: the only way a session enters the
+    engine, whoever built it (the queries()/entry() contract passes an
     arbitrary session; nothing guarantees it came from get_spark()).
 
-    Sets the runtime confs the fixture data requires and installs the Doris
-    function-name surface. Idempotent per session: a repeat call returns at
-    once, and a call that raises leaves the session unmarked, so the next
-    call registers again. The first call on a session takes 9.1-9.6 s
-    when it is the JVM's first (its parser and analyzer not yet compiled)
-    and 2.3-3.0 s on a later `spark.newSession()`, measured on 4 vCPUs.
+    The engine's session carries the rules of `doris_spark/jvm` (Doris
+    result types in the analyzer, bounded final sorts in AQE), the runtime
+    confs the fixture data requires and the Doris function-name surface.
+    A session that already carries the rules (a `newSession()` of an
+    engine session, say) is prepared in place. Any other session is left
+    as it is: the engine session is derived from it (`_derive`), shares
+    its catalog and starts from a copy of its confs, functions and temp
+    views, and is not made the active session.
 
-    It cannot add the bounded-final-sort rule that `get_spark` installs:
-    `spark.sql.extensions` is a static conf. On a session without it every
-    query still returns the same rows in the same order, but each final
-    ORDER BY plans a range exchange, whose sampling costs one more job.
+    Idempotent: a repeat call with either session returns the same engine
+    session object at once, and a call that raises leaves the engine
+    session unmarked, so the next call registers again. Registration
+    takes 9.1-9.6 s when it is the JVM's first (its parser and analyzer
+    not yet compiled) and 2.3-3.0 s on a later session, measured on 4
+    vCPUs; deriving takes about 0.1 s.
     """
     if session_token(spark) in _PREPARED:
         return spark
+    if session_token(spark) in _DERIVED:
+        engine = _DERIVED[session_token(spark)][1]
+    elif _has_rules(spark):
+        engine = spark
+    else:
+        engine = _derive(spark)
+        _DERIVED[session_token(spark)] = (spark, engine)
+    if session_token(engine) in _PREPARED:
+        return engine
     for k, v in _REQUIRED_RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            # Read-only on some builds — get_spark() already sets it at
-            # builder time; a foreign session without it will surface a
-            # clear read error rather than a silent wrong answer.
-            pass
-    try:
-        # A foreign session typically has the 200-partition default; size
-        # shuffles to the actual core count (AQE coalesces upward cases).
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-    except Exception:
-        pass
+        engine.conf.set(k, v)
+    # A foreign session typically has the 200-partition default; size
+    # shuffles to the actual core count (AQE coalesces upward cases).
+    engine.conf.set("spark.sql.shuffle.partitions", str(engine.sparkContext.defaultParallelism))
     from doris_spark.functions import register_all
 
-    register_all(spark)
-    _PREPARED.add(session_token(spark))
-    return spark
+    register_all(engine)
+    _PREPARED.add(session_token(engine))
+    return engine
+
+
+def _has_rules(spark: SparkSession) -> bool:
+    rules = spark._jsparkSession.sessionState().adaptiveRulesHolder().runtimeOptimizerRules()
+    return f"{jvm.RULE_MARKER}@" in rules.toString()
+
+
+def _derive(spark: SparkSession) -> SparkSession:
+    """A session over `spark`'s SharedState (one catalog, one cache) that
+    starts as a clone of its SessionState, with the extensions listed in
+    its `spark.sql.extensions` plus the engine's. `ADD JAR` puts the jar on
+    the shared class loader; it changes nothing else of `spark`."""
+    jss = spark._jsparkSession
+    j = spark._jvm
+    loader = jss.sharedState().jarClassLoader()
+    if not any(url.getPath() == jvm.JAR for url in loader.getURLs()):
+        spark.sql(f"ADD JAR '{jvm.JAR}'")
+    exts = j.org.apache.spark.sql.SparkSessionExtensions()
+    listed = spark.sparkContext.getConf().get("spark.sql.extensions", "")
+    for name in [*filter(None, (n.strip() for n in listed.split(","))), jvm.EXTENSION_CLASS]:
+        j.java.lang.Class.forName(name, True, loader).newInstance().apply(exts)
+    empty = j.PythonUtils.toScalaMap(j.java.util.HashMap())
+    derived = getattr(j, "org.apache.spark.sql.classic.SparkSession")(
+        jss.sparkContext(), j.scala.Some(jss.sharedState()), j.scala.Some(jss.sessionState()),
+        exts, empty, empty)
+    return SparkSession(spark.sparkContext, derived)
 
 
 def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
@@ -196,7 +212,7 @@ def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, Dat
     in Spark the parquet scan already gives predicate pushdown, column pruning,
     and row-group stats pruning (zone-map analog) for free.
     """
-    prepare_session(spark)
+    spark = prepare_session(spark)
     sf_dir = sf_dir or default_sf_dir()
     key = (session_token(spark), sf_dir)
     if key in _TABLE_CACHE:

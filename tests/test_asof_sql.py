@@ -272,3 +272,35 @@ def test_pick_plan_residual_conjuncts(spark):
         "ON t.sym = q.sym AND t.ts >= q.ts AND t.v < q.px"
     )
     assert "LATERAL" in out
+
+
+def test_select_star_reads_the_right_side_in_the_engine_session(spark):
+    """The pick rewrite types the right relation of a `SELECT *` in the
+    engine's own session, not in the active one. The fixture's engine
+    session is derived from the session `get_spark` built; that session is
+    made the active one here, and cannot see the engine's temp views."""
+    from pyspark.sql import SparkSession
+
+    from doris_spark.engine import Engine
+
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY VIEW __s_t AS "
+        "SELECT * FROM VALUES (1,'A',10),(2,'A',25),(3,'B',7) v(id,sym,ts)"
+    )
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY VIEW __s_q AS "
+        "SELECT * FROM VALUES ('A',5,1.0),('A',20,2.0),('B',30,3.0) v(qsym,qts,px)"
+    )
+    other = SparkSession.builder.getOrCreate()
+    other.createDataFrame([(1,)], "x INT")  # makes `other` the active session
+    assert other is not spark and SparkSession.getActiveSession() is other
+    assert not other.catalog.tableExists("__s_q")
+    df = Engine(spark).sql(
+        "SELECT * FROM __s_t t "
+        "ASOF LEFT JOIN __s_q q MATCH_CONDITION(t.ts >= q.qts) ON t.sym = q.qsym "
+        "ORDER BY t.id"
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Window" in plan and "BroadcastNestedLoop" not in plan
+    assert df.columns == ["id", "sym", "ts", "qsym", "qts", "px"]
+    assert [(r.id, r.qts) for r in df.collect()] == [(1, 5), (2, 20), (3, None)]

@@ -5,9 +5,11 @@ its OWN session — none of get_spark()'s builder-time configs are present.
 Round-1 failure mode: every oracle check died at the parquet read
 (PARQUET_TYPE_ILLEGAL on events.parquet TIMESTAMP(NANOS)) because the nanos
 conf, UTC timezone, and function registry only existed on get_spark()
-sessions. prepare_session() (doris_spark/session.py) now makes any session
-self-sufficient; this test proves it in a clean subprocess where no
-doris_spark session bootstrapping has run.
+sessions. prepare_session() (doris_spark/session.py) now derives the
+engine's session from any session; this test proves it in a clean
+subprocess where no doris_spark session bootstrapping has run: the
+queries run with the engine's rules (bounded final sorts, Doris avg
+types) and the driver's own session keeps its confs.
 """
 
 from __future__ import annotations
@@ -19,10 +21,18 @@ import textwrap
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# One query per risk class: nanos-timestamp read, SQL-registry functions,
-# pandas-UDF boundary, plain tpch join/agg, text pipeline w/ repartition,
-# and a SQL-text query (queries.sql_query), which registers its own views.
-_SMOKE = ["tpch_q1", "ev_tumbling", "doris_fn_matrix", "json_mutation", "txt_langid", "ssb_q1_2"]
+# One query per risk class, with its row count at sf0.001: nanos-timestamp
+# read, SQL-registry functions, pandas-UDF boundary, plain tpch join/agg,
+# text pipeline w/ repartition, and a SQL-text query (queries.sql_query),
+# which registers its own views.
+_SMOKE = {
+    "tpch_q1": 6,
+    "ev_tumbling": 868,
+    "doris_fn_matrix": 200,
+    "json_mutation": 40,
+    "txt_langid": 10,
+    "ssb_q1_2": 1,
+}
 
 _SCRIPT = textwrap.dedent(
     """
@@ -40,15 +50,25 @@ _SCRIPT = textwrap.dedent(
     )
 
     import __spark_entry__ as e
+    from doris_spark.engine import Engine
 
     df = e.entry(spark)
-    assert df.count() >= 0
+    assert len(df.collect()) > 0
+    final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert "rangepartitioning" not in final, final
+
+    avg = Engine(spark).sql(
+        "SELECT avg(CAST(x AS DECIMAL(10,2))) AS a FROM VALUES (1), (2), (2) AS t(x)")
+    assert avg.schema["a"].dataType.simpleString() == "decimal(38,4)"
+    assert str(avg.collect()[0]["a"]) == "1.6666"
 
     qs = e.queries()
-    for name in {smoke!r}:
+    for name, want in {smoke!r}.items():
         out = qs[name](spark, "/root/testdata/sf0.001")
         n = out.count()
+        assert n == want, (name, n, want)
         print(f"OK {{name}} rows={{n}}", flush=True)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
     print("DRIVER_SIM_PASS", flush=True)
     """
 ).format(repo=REPO, smoke=_SMOKE)

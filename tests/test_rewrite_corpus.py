@@ -21,6 +21,7 @@ entries changed and why):
 from __future__ import annotations
 
 import ast
+import hashlib
 import json
 import os
 import subprocess
@@ -103,8 +104,10 @@ TARGETED = [
 
 
 def _test_sql_literals() -> list[tuple[str, str]]:
-    """(file:line, text) for each string literal passed first to `.sql(`
-    in tests/*.py, in file then source order."""
+    """(file:digest, text) for each string literal passed first to `.sql(`
+    in tests/*.py, in file then source order. The id is keyed by the
+    text, not its line, so an edit elsewhere in a file renames nothing; a
+    text repeated in one file gets `#2`, `#3`, ... in source order."""
     out = []
     tests_dir = os.path.join(ROOT, "tests")
     for fname in sorted(os.listdir(tests_dir)):
@@ -123,7 +126,11 @@ def _test_sql_literals() -> list[tuple[str, str]]:
                 and isinstance(node.args[0].value, str)
             ):
                 found.append((node.lineno, node.col_offset, node.args[0].value))
-        out += [(f"{fname}:{ln}", s) for ln, _c, s in sorted(found)]
+        seen: dict[str, int] = {}
+        for _ln, _c, s in sorted(found):
+            key = f"{fname}:{hashlib.md5(s.encode()).hexdigest()[:10]}"
+            seen[key] = seen.get(key, 0) + 1
+            out.append((key if seen[key] == 1 else f"{key}#{seen[key]}", s))
     return out
 
 
