@@ -368,9 +368,10 @@ class Engine:
     def _prepare(self, text: str) -> tuple[str, DataFrame]:
         """Prepare one query the way sql() runs it: the constant fold,
         `* REPLACE`, the transparent-MV rewrite, `FROM dual`, the dialect
-        and macro layers, typed arithmetic, the analysis retries and the
-        typed pass. Returns the final Spark SQL text and its analyzed
-        DataFrame; sql() and EXPLAIN both call this."""
+        and macro layers, typed arithmetic and the analysis retries. The
+        one analysis applies the analyzer rules of doris_spark/jvm (Doris
+        avg and date_add types). Returns the final Spark SQL text and its
+        analyzed DataFrame; sql() and EXPLAIN both call this."""
         from doris_spark.plans.dialect import dialect
         from doris_spark.plans.sql_macros import rewrite
 
