@@ -27,7 +27,8 @@ _q.load_all()
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return _q.QUERIES["tpch_q1"](prepare_session(spark), "/root/testdata/sf0.001")
+    spark = prepare_session(spark)
+    return _q.QUERIES["tpch_q1"](spark, "/root/testdata/sf0.001")
 
 
 def _in_engine_session(fn: Callable[[SparkSession, str], DataFrame]):

@@ -9,7 +9,7 @@ sessions. prepare_session() (doris_spark/session.py) now derives the
 engine's session from any session; this test proves it in a clean
 subprocess where no doris_spark session bootstrapping has run: the
 queries run with the engine's rules (bounded final sorts, Doris avg
-types) and the driver's own session keeps its confs.
+types) and the calling session keeps its own confs.
 """
 
 from __future__ import annotations
