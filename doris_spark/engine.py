@@ -9,21 +9,25 @@ This class is that surface on Spark (SURVEY §7.0 design stance):
     eng.sql("SELECT years_add(o_orderdate, 1) ... ")   # full fn surface
     eng.create_table(df, "t", keys_type="UNIQUE_KEYS",
                      keys=["id"], sequence_col="ver")
-    eng.table("t")                      # merge-on-read view
+    eng.table("t")                      # its merged snapshot
 
 Everything heavy is delegated: SQL goes straight to Spark SQL (Catalyst
 optimizes; the Doris-only function names are session-registered SQL/pandas
-UDFs — functions/registry.py), table models are merge-on-read views
-(operators/table_models.py), layout goes through sources/layout.py.
+UDFs — functions/registry.py), table models are merged once at CREATE and
+pinned as snapshots that every write replaces (operators/table_models.py),
+layout goes through sources/layout.py.
 """
 
 from __future__ import annotations
 
+import operator
 import re as _re
 from collections.abc import Callable, Mapping, Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from doris_spark.plans.sqltok import (
     depth0_search,
@@ -120,8 +124,8 @@ from doris_spark.session import get_spark, prepare_session, register_views
 
 
 def _keys_view(meta: Mapping) -> Callable[[DataFrame], DataFrame] | None:
-    """The merge-on-read view function of a table's keys model (None for
-    DUP_KEYS, whose rows are the table)."""
+    """The merge function of a table's keys model (None for DUP_KEYS, whose
+    rows are the table)."""
     kt = meta["keys_type"]
     if kt == "UNIQUE_KEYS":
         return lambda df: unique_key_view(
@@ -142,6 +146,56 @@ def _counting(df: DataFrame, cond: str = "true") -> tuple[DataFrame, Observation
     return flagged.observe(obs, F.count_if(F.col("__hit")).alias("n")), obs
 
 
+def _driver_rows(df: DataFrame, cols: Sequence[Column]) -> list | None:
+    """The rows of `df.select(*cols)` when `df`'s optimized plan is a
+    LocalRelation (a foldable VALUES list): the driver already holds them,
+    so the collect runs no Spark job. None for any other plan."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return None
+    return df.select(*cols).collect()
+
+
+def _exact_key(col: str, dtype) -> Column | None:
+    """`col` in a form whose collected Python value `_key_literal` turns
+    back into the same key: TIMESTAMP as its unix micros (a Python datetime
+    is read in the process's local zone, which can be ambiguous) and DATE as
+    its day number (pyspark cannot send a date before year 1000 back), the
+    column itself for types whose values round-trip. None for other types."""
+    if isinstance(dtype, T.TimestampType):
+        return F.unix_micros(F.col(col))
+    if isinstance(dtype, T.DateType):
+        return F.unix_date(F.col(col))
+    if isinstance(dtype, (T.NumericType, T.StringType, T.BooleanType)):
+        return F.col(col)
+    return None
+
+
+def _key_literal(value, dtype) -> Column:
+    if isinstance(dtype, T.TimestampType):
+        return F.timestamp_micros(F.lit(value))
+    if isinstance(dtype, T.DateType):
+        return F.date_from_unix_date(F.lit(value))
+    return F.lit(value).cast(dtype)
+
+
+def _key_match(keys: Sequence[str], dtypes: Sequence, rows: Sequence[tuple]) -> Column:
+    """Null-safe literal predicate over a table: its key equals one of
+    `rows` (key tuples as `_exact_key` collects them). It is never NULL, so
+    its negation keeps the rows it does not match."""
+    rows = set(map(tuple, rows))
+    if len(keys) == 1:
+        k, vals = F.col(keys[0]), {r[0] for r in rows}
+        lits = [_key_literal(v, dtypes[0]) for v in vals if v is not None]
+        match = (k.isNotNull() & k.isin(*lits)) if lits else F.lit(False)
+        return match | k.isNull() if None in vals else match
+    return reduce(operator.or_, [
+        reduce(operator.and_, [
+            F.col(k).eqNullSafe(_key_literal(v, t)) for k, t, v in zip(keys, dtypes, r)])
+        for r in rows
+    ], F.lit(False))
+
+
 class Engine:
     """Session facade: SQL entry point + table-model-aware catalog."""
 
@@ -151,10 +205,11 @@ class Engine:
         # session (prepare_session is idempotent, so repeated construction
         # does not re-pay the registration, ~9 s on a fresh JVM).
         self.spark = get_spark(cpus=cpus) if spark is None else prepare_session(spark)
-        # table name -> merge-on-read view (DUP tables map to themselves)
+        # table name -> its pinned snapshot (DUP tables map to their
+        # DataFrame until the first write)
         self._views: dict[str, DataFrame] = {}
-        # table name -> partition count of its pinned snapshot (tables whose
-        # view was pinned by a write; see _publish)
+        # table name -> partition count of its pinned snapshot (UNIQUE and
+        # AGG tables from CREATE on, DUP tables after a write; see _publish)
         self._parts: dict[str, int] = {}
         # one-row local relation the statement replies select from (_reply)
         self._unit = self.spark.sql("SELECT * FROM VALUES (0) AS __unit(x)")
@@ -796,7 +851,7 @@ class Engine:
 
     def table(self, name: str) -> DataFrame:
         """DataFrame handle honoring the table's keys model (UNIQUE/AGG
-        tables resolve to their merge-on-read view)."""
+        tables resolve to their merged snapshot)."""
         if name in self._views:
             return self._views[name]
         return self.spark.table(name)
@@ -814,13 +869,17 @@ class Engine:
         Doris InsertIntoTableCommand analog on the keys-model catalog:
         new rows are appended to the table snapshot and the keys model
         re-applies — UNIQUE tables upsert (latest sequence_col wins),
-        AGG tables re-aggregate, DUP tables append. The batch is pinned
-        first (and counted in that job); a UNIQUE or AGG merge then
+        AGG tables re-aggregate, DUP tables append. A UNIQUE or AGG merge
         re-merges only the stored rows whose keys the batch carries
         (table_models.merge_touched_keys), so its cost follows the batch,
         not the table. The new snapshot is pinned with localCheckpoint
         like the UPDATE/DELETE path (one statement = one visible
-        transaction). Returns the 1-row affected-count reply (the MySQL
+        transaction). A batch whose rows the driver holds (a foldable
+        VALUES list) makes that pin the statement's one job: its keys
+        match as literals and the touched rows merge in one partition. Any
+        other batch (INSERT ... SELECT, VALUES the inline table rejects)
+        is pinned first and counted in that job, and its keys are
+        broadcast. Returns the 1-row affected-count reply (the MySQL
         OK packet). Tables created outside create_table (plain views) are
         not insert targets."""
         import re
@@ -893,7 +952,17 @@ class Engine:
                 for c in target_cols
             ]
         )
-        ai = self._meta[name].get("auto_increment")
+        meta = self._meta[name]
+        keys = meta["keys"]
+        # A foldable VALUES list optimizes to a LocalRelation: the driver
+        # already holds its rows, so the batch needs no pin, the affected
+        # count is theirs, and the keys it touches become a literal
+        # predicate. Any other batch is pinned below. (A DUP table has no
+        # keys; a constant column still gives the row count.)
+        exact = [_exact_key(k, sch[k]) for k in keys]
+        rows = (_driver_rows(aligned, exact or [F.lit(0)])
+                if all(e is not None for e in exact) else None)
+        ai = meta.get("auto_increment")
         if ai:
             # Doris AUTO_INCREMENT (table-design/auto-increment.md):
             # NULL/omitted values get fresh ids above the current max.
@@ -903,39 +972,52 @@ class Engine:
 
             start = cur.agg(F.max(ai)).first()[0] or 0
             w = _W.orderBy(F.monotonically_increasing_id())
-            aligned = aligned.withColumn(
+            # driver rows: the window runs in the batch's one partition (no
+            # exchange), in row order, so the ids are the ones computed here
+            aligned = (aligned if rows is None else aligned.coalesce(1)).withColumn(
                 ai,
                 F.coalesce(
                     F.col(ai), (F.lit(start) + F.row_number().over(w)).cast(sch[ai])
                 ),
             )
-        # pin the batch, counting it in the same job: the merge below reads
-        # it twice (its keys and its rows), and both reads must see the
-        # same rows even when the source is not deterministic
-        src, obs = _counting(aligned)
-        pinned = src.drop("__hit").localCheckpoint(eager=True)
-        # a relation built over the pinned rows, not the checkpoint itself:
-        # the checkpoint keeps its source plan's constraints, and when the
-        # batch was selected from this very table the optimizer fails on
-        # them in the merge's union (Union.rewriteConstraints: key not found)
-        batch = DataFrame(
-            self.spark._jsparkSession.createDataFrame(
-                pinned._jdf.rdd(), pinned._jdf.schema()),
-            self.spark,
-        )
+            if rows is not None and ai in keys:
+                i = keys.index(ai)
+                rows = [r[:i] + ((start + n + 1) if r[i] is None else r[i],) + r[i + 1:]
+                        for n, r in enumerate(rows)]
+        key_match = None
+        if rows is not None:
+            batch, affected = aligned, len(rows)
+            if keys:
+                key_match = _key_match(keys, [sch[k] for k in keys], rows)
+        else:
+            # pin the batch, counting it in the same job: the merge below
+            # reads it twice (its keys and its rows), and both reads must
+            # see the same rows even when the source is not deterministic
+            src, obs = _counting(aligned)
+            pinned = src.drop("__hit").localCheckpoint(eager=True)
+            affected = obs.get["n"]
+            # a relation built over the pinned rows, not the checkpoint
+            # itself: the checkpoint keeps its source plan's constraints,
+            # and when the batch was selected from this very table the
+            # optimizer fails on them in the merge's union
+            # (Union.rewriteConstraints: key not found)
+            batch = DataFrame(
+                self.spark._jsparkSession.createDataFrame(
+                    pinned._jdf.rdd(), pinned._jdf.schema()),
+                self.spark,
+            )
 
-        meta = self._meta[name]
         merge = _keys_view(meta)
         if merge is None:
             view = cur.unionByName(batch)
         else:
-            view = merge_touched_keys(cur, batch, meta["keys"], merge)
+            view = merge_touched_keys(cur, batch, keys, merge, key_match)
             if name in self._parts:
                 # the union adds the merged rows' partitions: fold them back
                 # in, so reads over the snapshot keep its task count
                 view = view.coalesce(max(1, self._parts[name]))
         self._publish(name, view)
-        return self._reply("affected_rows", obs.get["n"])
+        return self._reply("affected_rows", affected)
 
     def _catalog_insert_complex(self, name: str, text: str, m):
         """INSERT INTO <catalog table> VALUES with string literals bound
@@ -1014,12 +1096,16 @@ class Engine:
     ) -> DataFrame:
         """CREATE TABLE with a Doris keys model (KeysType.java:25-29).
 
-        DUP_KEYS: the DataFrame as-is. UNIQUE_KEYS: merge-on-read latest-
-        row-per-key view (sequence_col orders versions; delete_col drops
-        keys). AGG_KEYS: per-column pre-aggregation view (agg_spec maps
-        value column -> SUM/MIN/MAX/REPLACE/REPLACE_IF_NOT_NULL). The view
-        is registered as a temp view under `name` so sql() sees merged
-        semantics — exactly what a Doris reader gets."""
+        DUP_KEYS: the DataFrame as-is, registered as a plain view.
+        UNIQUE_KEYS: the latest row per key (sequence_col orders versions;
+        delete_col drops keys). AGG_KEYS: per-column pre-aggregation
+        (agg_spec maps value column -> SUM/MIN/MAX/REPLACE/
+        REPLACE_IF_NOT_NULL). A UNIQUE or AGG table is merged once at
+        CREATE and the result pinned as its first snapshot (_publish, as
+        every write pins its snapshot), so reads scan merged rows and no
+        write pays the whole-table merge. The table is registered as a
+        temp view under `name` so sql() sees merged semantics — exactly
+        what a Doris reader gets."""
         kt = keys_type.upper()
         if kt == "UNIQUE_KEYS":
             if not keys or sequence_col is None:
@@ -1037,13 +1123,14 @@ class Engine:
             "agg_spec": dict(agg_spec) if agg_spec else None,
             "auto_increment": auto_increment,
         }
-        merge = _keys_view(meta)
-        view = merge(df) if merge else df
-        view.createOrReplaceTempView(name)
-        self._views[name] = view
-        self._parts.pop(name, None)
         self._meta[name] = meta
-        return view
+        merge = _keys_view(meta)
+        if merge is not None:
+            return self._publish(name, merge(df))
+        df.createOrReplaceTempView(name)
+        self._views[name] = df
+        self._parts.pop(name, None)
+        return df
 
     def register_mv(
         self,

@@ -1021,45 +1021,25 @@ def _time_floor_ceil(unit_micros: int) -> tuple[str, str]:
     (function_datetime_floor_ceil.cpp; origin defaults to 0001-01-01).
 
     The arithmetic runs on WALL-CLOCK time, not instants: Doris floors the
-    session's naive datetime. Naive micros are assembled from calendar
-    FIELDS (datediff on the date part + session-local time-of-day), never
-    via to_utc_timestamp round trips — zone conversion at the year-1
-    origin would drag in pre-standard LMT offsets (e.g. Asia/Shanghai
-    +08:05:43). Field extraction and make_timestamp both follow the
-    session timezone, so the result is correct under any session zone
-    (and bit-identical to the previous instant math under the engine's
-    pinned UTC default)."""
+    naive datetime. Both ends are cast to TIMESTAMP_NTZ, which has no zone,
+    so the micros between them and the rebuilt value are exact in every
+    zone and on both sides of 0001-01-01 (no zone conversion at the year-1
+    origin, whose pre-standard LMT offsets such as Asia/Shanghai's
+    +08:05:43 would shift the result)."""
     params = (
         "t TIMESTAMP, p INT DEFAULT 1, "
         "origin TIMESTAMP DEFAULT TIMESTAMP '0001-01-01 00:00:00'"
     )
-
-    def naive(x: str) -> str:
-        # wall-clock micros since 0001-01-01 00:00:00 (proleptic)
-        return (
-            f"(CAST(datediff(CAST({x} AS DATE), DATE '0001-01-01') AS BIGINT)"
-            f" * {86_400_000_000}"
-            f" + CAST(hour({x}) * 3600 + minute({x}) * 60 + second({x}) AS BIGINT) * 1000000"
-            f" + (unix_micros({x}) - unix_micros(date_trunc('SECOND', {x}))))"
-        )
+    o = "CAST(origin AS TIMESTAMP_NTZ)"
+    d = f"timestampdiff(MICROSECOND, {o}, CAST(t AS TIMESTAMP_NTZ))"
+    length = f"(CAST(p AS BIGINT) * {unit_micros})"
 
     def rebuild(m: str) -> str:
-        # naive micros -> session-local timestamp, by fields
-        d = f"date_add(DATE '0001-01-01', CAST({m} div {86_400_000_000} AS INT))"
-        rem = f"pmod({m}, {86_400_000_000})"
-        return (
-            f"make_timestamp(year({d}), month({d}), day({d}), "
-            f"CAST({rem} div 3600000000 AS INT), "
-            f"CAST(pmod({rem}, 3600000000) div 60000000 AS INT), "
-            f"CAST(pmod({rem}, 60000000) AS DECIMAL(16,6)) / 1000000)"
-        )
+        return f"CAST(timestampadd(MICROSECOND, {m}, {o}) AS TIMESTAMP)"
 
-    nt, no = naive("t"), naive("origin")
-    d = f"({nt} - {no})"
-    length = f"(CAST(p AS BIGINT) * {unit_micros})"
-    fl = rebuild(f"({no} + ({d} - pmod({d}, {length})))")
+    fl = rebuild(f"{d} - pmod({d}, {length})")
     ce = rebuild(
-        f"({no} + ({d} - pmod({d}, {length}) + IF(pmod({d}, {length}) = 0, 0, {length})))"
+        f"{d} - pmod({d}, {length}) + IF(pmod({d}, {length}) = 0, 0, {length})"
     )
     return (params, fl), (params, ce)
 

@@ -1,4 +1,4 @@
-"""Doris table models re-expressed as Spark merge-on-read views.
+"""Doris table models re-expressed as Spark merges, run once at CREATE.
 
 Reference: fe/fe-core/src/main/java/org/apache/doris/catalog/KeysType.java:25
 (DUP_KEYS / UNIQUE_KEYS / AGG_KEYS) and per-column aggregate types
@@ -6,16 +6,18 @@ fe/fe-catalog/.../catalog/AggregateType.java:29-38; merge-on-write delete
 bitmaps be/src/storage/delete/delete_bitmap_calculator.h.
 
 - DUP_KEYS: plain append table — the DataFrame itself.
-- UNIQUE_KEYS: upsert semantics — merge-on-read view keeps the row with the
-  highest sequence value per key (Doris sequence column,
+- UNIQUE_KEYS: upsert semantics — keeps the row with the highest sequence
+  value per key (Doris sequence column,
   be/src/load/.../partial_update_info.h). row_number window, one shuffle on
   the key; Catalyst may rewrite to InferWindowGroupLimit (partition top-1).
-- AGG_KEYS: per-column pre-aggregation view (SUM/MIN/MAX/REPLACE).
+- AGG_KEYS: per-column pre-aggregation (SUM/MIN/MAX/REPLACE).
 
-An INSERT into a UNIQUE or AGG table re-merges only the keys its batch
-carries (merge_touched_keys): like a merge-on-write load, which writes the
-new rows plus a delete bitmap for the keys they supersede, its cost follows
-the batch, not the table.
+Engine.create_table merges a UNIQUE or AGG table once, at CREATE, and pins
+the result as the table's first snapshot (merge-on-write: every read scans
+merged rows). An INSERT then re-merges only the keys its batch carries
+(merge_touched_keys): like a merge-on-write load, which writes the new rows
+plus a delete bitmap for the keys they supersede, its cost follows the
+batch, not the table.
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ import operator
 from collections.abc import Callable, Mapping, Sequence
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -35,7 +37,7 @@ def unique_key_view(
     delete_col: str | None = None,
     tiebreak: Sequence[str] = (),
 ) -> DataFrame:
-    """Merge-on-read UNIQUE_KEYS view: latest row (max sequence_col, then
+    """UNIQUE_KEYS merge: latest row (max sequence_col, then
     `tiebreak` desc) per key; rows flagged in `delete_col` drop the key."""
     order = [F.col(sequence_col).desc()] + [F.col(t).desc() for t in tiebreak]
     w = Window.partitionBy(*keys).orderBy(*order)
@@ -51,7 +53,7 @@ def agg_key_view(
     agg_spec: Mapping[str, str],
     sequence_col: str | None = None,
 ) -> DataFrame:
-    """AGG_KEYS pre-aggregation view. agg_spec maps value column → one of
+    """AGG_KEYS pre-aggregation. agg_spec maps value column → one of
     SUM / MIN / MAX / REPLACE / REPLACE_IF_NOT_NULL (AggregateType.java).
     REPLACE needs `sequence_col` to define arrival order deterministically.
     """
@@ -81,6 +83,7 @@ def merge_touched_keys(
     batch: DataFrame,
     keys: Sequence[str],
     view: Callable[[DataFrame], DataFrame],
+    key_match: Column | None = None,
 ) -> DataFrame:
     """`view(cur ∪ batch)` for a `cur` that is already `view`'s output (at
     most one merged row per key), re-merging only the keys `batch` touches:
@@ -89,14 +92,26 @@ def merge_touched_keys(
 
     Rows whose key the batch does not carry pass through unchanged. Keys match
     null-safely, because the window and groupBy of the views put NULL keys in
-    one group. K (the batch's key columns) is broadcast, so the stored side
-    is never shuffled; only the touched rows and the batch are merged."""
-    bk = [f"__bk{i}" for i in range(len(keys))]
-    touched_keys = F.broadcast(batch.select(*[F.col(k).alias(b) for k, b in zip(keys, bk)]))
-    on = reduce(operator.and_, [F.col(k).eqNullSafe(F.col(b)) for k, b in zip(keys, bk)])
-    kept = cur.join(touched_keys, on, "left_anti")
-    touched = cur.join(touched_keys, on, "left_semi")
-    return kept.unionByName(view(touched.unionByName(batch)))
+    one group. By default K (the batch's key columns) is broadcast, so the
+    stored side is never shuffled; only the touched rows and the batch are
+    merged.
+
+    `key_match`, when given, is K as a predicate over `cur`: true exactly on
+    the rows whose key the batch carries, and never NULL (the caller builds
+    it from key values it already holds). The stored side is then split by a
+    filter instead of a join, and the touched rows plus the batch, which the
+    caller bounds, are merged in one partition, so the merge adds no
+    exchange."""
+    if key_match is None:
+        bk = [f"__bk{i}" for i in range(len(keys))]
+        touched_keys = F.broadcast(batch.select(*[F.col(k).alias(b) for k, b in zip(keys, bk)]))
+        on = reduce(operator.and_, [F.col(k).eqNullSafe(F.col(b)) for k, b in zip(keys, bk)])
+        kept = cur.join(touched_keys, on, "left_anti")
+        merged = view(cur.join(touched_keys, on, "left_semi").unionByName(batch))
+    else:
+        kept = cur.filter(~key_match)
+        merged = view(cur.filter(key_match).unionByName(batch).coalesce(1))
+    return kept.unionByName(merged)
 
 
 def partial_update(

@@ -1245,8 +1245,8 @@ def dml_insert_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INSERT INTO DML surface (InsertIntoTableCommand analog) through
     Engine.sql on a UNIQUE-keys table: an INSERT..SELECT upserts new
     versions of the high-price orders (sequence column 2 beats 1) and an
-    INSERT..VALUES adds a brand-new key; the merge-on-read view shows
-    latest-version rows. The oracle recomputes the upsert as a
+    INSERT..VALUES adds a brand-new key; the table, merged at CREATE and
+    on every write, shows latest-version rows. The oracle recomputes the upsert as a
     row_number window over the unioned versions."""
     from doris_spark.engine import Engine
 

@@ -8,7 +8,8 @@ that also counts the affected rows; at lakehouse scale the same statements
 map to Delta/Iceberg MERGE/DELETE. An INSERT into a UNIQUE or AGG table
 re-merges only the keys its batch touches
 (table_models.merge_touched_keys); the tests below pin that against the
-whole-table re-merge, and pin that statement replies run no Spark job.
+whole-table re-merge, and pin that statement replies run no Spark job and
+how many jobs each write runs.
 """
 
 from __future__ import annotations
@@ -647,8 +648,8 @@ def test_touched_keys_insert_matches_whole_table_remerge(spark):
 
 def test_insert_select_from_the_table_itself(spark):
     """A batch selected from the target table shares its lineage; the merge
-    must still replace exactly the touched keys, on the lazy base view and
-    on a pinned snapshot."""
+    must still replace exactly the touched keys, on the snapshot pinned at
+    CREATE and on the one a write pinned."""
     eng = Engine(spark)
     base = spark.createDataFrame(
         [(i, 1, f"v{i}") for i in range(1, 7)], "id bigint, ver bigint, v string")
@@ -744,10 +745,107 @@ def test_write_replies_run_no_job_and_update_delete_one_job(spark):
         reply = eng.sql(text)
         assert _job_count(spark, reply.collect) == 0, text
         assert reply.schema[0].dataType.simpleString() == "bigint"
-    # the table is a pinned snapshot now: each UPDATE / DELETE is one pass
+    # the table is a pinned snapshot (from CREATE on): each UPDATE / DELETE is one pass
     for text, where in (("UPDATE tk_jobs SET v = 0 WHERE v = 3", "v = 3"),
                         ("DELETE FROM tk_jobs WHERE v = 0", "v = 0")):
         n = eng.sql(f"SELECT count(*) FROM tk_jobs WHERE {where}").collect()[0][0]
         out = []
         assert _job_count(spark, lambda t=text: out.append(eng.sql(t).collect())) == 1, text
         assert out[0][0]["affected"] == n
+
+
+def test_fresh_keyed_tables_read_their_merge(spark):
+    """A UNIQUE or AGG table read before any write returns the keys model
+    applied to the CREATE input: the merge runs once, at CREATE."""
+    from doris_spark.operators.table_models import agg_key_view, unique_key_view
+
+    eng = Engine(spark)
+    df = spark.createDataFrame(
+        [(1, 1, "a", 2.0, False), (1, 3, "b", 5.0, False), (1, 2, "c", 1.0, True),
+         (2, 1, None, 4.0, False), (2, 2, "d", None, True), (None, 1, "n", 3.0, False),
+         (None, 4, None, 6.0, False), (3, 1, "e", 7.0, False)],
+        "id int, ver int, r string, s double, del boolean")
+    eng.create_table(df, "fresh_uni", keys_type="UNIQUE_KEYS", keys=["id"],
+                     sequence_col="ver", delete_col="del")
+    assert _sorted(eng.sql("SELECT * FROM fresh_uni")) == _sorted(
+        unique_key_view(df, ["id"], "ver", delete_col="del"))
+    spec = {"ver": "MAX", "r": "REPLACE", "s": "SUM", "del": "MAX"}
+    eng.create_table(df, "fresh_agg", keys_type="AGG_KEYS", keys=["id"],
+                     sequence_col="ver", agg_spec=spec)
+    assert _sorted(eng.sql("SELECT * FROM fresh_agg")) == _sorted(
+        agg_key_view(df, ["id"], spec, sequence_col="ver"))
+
+
+def test_values_insert_matches_keys_of_every_literal_type(spark):
+    """An INSERT VALUES batch matches stored keys through literals: keys of
+    TIMESTAMP (one microsecond apart), DATE, DECIMAL, FLOAT (-0.0 against
+    0.0), BOOLEAN and STRING, with NULLs, merge with the stored rows they
+    equal and no others, as the keys model over the whole table does."""
+    from doris_spark.operators.table_models import unique_key_view
+
+    eng = Engine(spark)
+    keys = ["ts", "d", "m", "f", "b", "s"]
+    types = ["timestamp", "date", "decimal(10,2)", "float", "boolean", "string",
+             "int", "int"]
+
+    def typed(values: str):
+        df = spark.sql(f"SELECT * FROM VALUES {values} AS t(ts, d, m, f, b, s, ver, v)")
+        return df.selectExpr(*[f"CAST({c} AS {t}) AS {c}" for c, t in zip(df.columns, types)])
+
+    stored = typed("""
+        (TIMESTAMP '2024-11-03 01:30:00', DATE '2024-01-01', 1.10, 0.1, true, 'x', 1, 1),
+        (TIMESTAMP '2024-11-03 01:30:00.000001', DATE '2024-01-01', 1.10, 0.1, true, 'x',
+         1, 2),
+        (NULL, NULL, NULL, NULL, NULL, NULL, 1, 3),
+        (TIMESTAMP '1900-01-01 00:00:00', DATE '0001-01-01', -5.00, -0.0, false, '', 1, 4)""")
+    eng.create_table(spark.createDataFrame(stored.collect(), stored.schema), "lit_keys",
+                     keys_type="UNIQUE_KEYS", keys=keys, sequence_col="ver")
+    values = """
+        (TIMESTAMP '2024-11-03 01:30:00', DATE '2024-01-01', 1.1, 0.1, true, 'x', 2, 10),
+        (NULL, NULL, NULL, NULL, NULL, NULL, 2, 30),
+        (TIMESTAMP '1900-01-01 00:00:00', DATE '0001-01-01', -5, 0.0, false, '', 0, 40),
+        (TIMESTAMP '2024-11-03 01:30:00', DATE '2024-01-02', 1.1, 0.1, true, 'x', 2, 50)"""
+    expect = _sorted(unique_key_view(
+        eng.table("lit_keys").unionByName(typed(values)), keys, "ver"))
+    assert eng.sql(f"INSERT INTO lit_keys VALUES {values}").collect()[0]["affected_rows"] == 4
+    got = _sorted(eng.table("lit_keys"))
+    assert got == expect
+    assert sorted(r[-1] for r in got) == [2, 4, 10, 30, 50]
+
+
+def test_write_job_counts(spark):
+    """An INSERT VALUES batch is one job on every keys model: the snapshot
+    pin (AUTO_INCREMENT adds the jobs of its max()); an INSERT SELECT keeps
+    four (batch pin, key broadcast, merge shuffle, snapshot pin); a read of
+    a fresh keyed table scans the snapshot pinned at CREATE in one job."""
+    from pyspark.sql import functions as F
+
+    eng = Engine(spark)
+    base = spark.createDataFrame(
+        [(i, i % 7, 1) for i in range(200)], "id int, v int, ver int")
+    eng.create_table(base, "jc_uni", keys_type="UNIQUE_KEYS",
+                     keys=["id"], sequence_col="ver")
+    eng.create_table(base, "jc_agg", keys_type="AGG_KEYS", keys=["id"],
+                     agg_spec={"v": "SUM", "ver": "MAX"})
+    eng.create_table(base, "jc_dup")
+    out = []
+    assert _job_count(spark, lambda: out.append(
+        eng.sql("SELECT * FROM jc_uni WHERE id = 5").collect())) == 1
+    assert out.pop() == [(5, 5, 1)]
+    for name in ("jc_uni", "jc_agg", "jc_dup"):
+        text = f"INSERT INTO {name} VALUES (500, 1, 2), (4, 3, 2)"
+        assert _job_count(spark, lambda t=text: out.append(eng.sql(t).collect())) == 1, name
+        assert out.pop()[0]["affected_rows"] == 2
+    assert _sorted(eng.table("jc_uni").filter("id IN (4, 500)")) == [(4, 3, 2), (500, 1, 2)]
+    assert _sorted(eng.table("jc_agg").filter("id IN (4, 500)")) == [(4, 7, 2), (500, 1, 2)]
+    assert eng.table("jc_dup").count() == 202
+    text = "INSERT INTO jc_uni SELECT id + 1000, v, ver FROM jc_uni WHERE id < 5"
+    assert _job_count(spark, lambda: out.append(eng.sql(text).collect())) == 4
+    assert out.pop()[0]["affected_rows"] == 5
+    eng.create_table(base, "jc_ai", keys_type="UNIQUE_KEYS", keys=["id"],
+                     sequence_col="ver", auto_increment="id")
+    n_max = _job_count(spark, lambda: eng.table("jc_ai").agg(F.max("id")).first())
+    text = "INSERT INTO jc_ai (v, ver) VALUES (1, 2), (3, 4)"
+    assert _job_count(spark, lambda: out.append(eng.sql(text).collect())) == n_max + 1
+    assert _sorted(eng.table("jc_ai").filter("id >= 199")) == [
+        (199, 3, 1), (200, 1, 2), (201, 3, 4)]

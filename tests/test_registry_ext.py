@@ -157,3 +157,72 @@ def test_registry_ext_pinned(spark, call, expected):
         assert int(got) == expected, (call, got, expected)
     else:
         assert got == expected, (call, got, expected)
+
+
+_FLOOR_CEIL_UNITS = {"second": 1_000_000, "minute": 60_000_000, "hour": 3_600_000_000,
+                     "day": 86_400_000_000, "week": 604_800_000_000}
+# the year-1 origin, DST gaps and folds, leap days, the Gregorian switch,
+# pre-standard (LMT) offsets and sub-second values
+_FLOOR_CEIL_TIMES = [
+    "0001-01-01 00:00:00", "0001-01-01 18:22:19.111529", "0001-01-03 07:00:00.5",
+    "1582-10-04 23:59:59.999999", "1582-10-15 00:00:00", "1900-01-01 00:05:43",
+    "1969-12-31 23:59:59.999999", "1970-01-01 00:00:00", "2020-02-29 13:17:11.123456",
+    "2024-03-10 02:30:00", "2024-03-31 02:30:00.25", "2024-10-27 02:30:00",
+    "2024-11-03 01:30:00", "2024-12-31 23:59:59.999999", "9999-12-30 12:00:00",
+]
+_FLOOR_CEIL_ORIGINS = ["0001-01-01 00:00:00", "1970-01-01 00:00:00",
+                       "2020-02-29 13:17:11.123456", "2099-07-04 05:06:07.000008"]
+
+
+@pytest.mark.parametrize(
+    "zone", ["UTC", "Asia/Shanghai", "America/Los_Angeles", "Europe/Berlin"])
+def test_time_floor_ceil_are_the_aligned_neighbours(spark, zone):
+    """{second,...,week}_{floor,ceil}(t, p, origin) are the origin-aligned
+    points at or below / at or above t, less than one period p * unit away,
+    for explicit origins and for the default origin 0001-01-01, under four
+    session zones. Values are compared as unix micros, so results before
+    year 1 are checked too."""
+    fns = [f"{u}_{side}" for u in _FLOOR_CEIL_UNITS for side in ("floor", "ceil")]
+    times = ", ".join(f"('{t}')" for t in _FLOOR_CEIL_TIMES)
+    origins = ", ".join(f"('{o}')" for o in _FLOOR_CEIL_ORIGINS)
+    calls = ", ".join(
+        f"unix_micros({f}(t, p, o)) AS {f}, unix_micros({f}(t, p)) AS {f}_d" for f in fns)
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        rows = spark.sql(f"""
+            SELECT unix_micros(t) AS t, unix_micros(o) AS o, p, {calls}
+            FROM (SELECT CAST(s AS TIMESTAMP) AS t FROM VALUES {times} AS v(s))
+            CROSS JOIN (SELECT CAST(s AS TIMESTAMP) AS o FROM VALUES {origins} AS v(s))
+            CROSS JOIN VALUES (1), (3), (7) AS ps(p)""").collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    # the default origin is 0001-01-01 00:00:00 in the functions' own zone
+    # (UTC, captured when they were registered)
+    default_origin = -62135596800000000
+    bad = []
+    for r in rows:
+        for f in fns:
+            unit, side = f.split("_")
+            step = r["p"] * _FLOOR_CEIL_UNITS[unit]
+            for o, got in ((r["o"], r[f]), (default_origin, r[f + "_d"])):
+                ok = (got - o) % step == 0 and (
+                    got <= r["t"] < got + step if side == "floor"
+                    else got - step < r["t"] <= got)
+                if not ok:
+                    bad.append((f, r["t"], r["p"], o, got))
+    assert len(rows) == len(_FLOOR_CEIL_TIMES) * len(_FLOOR_CEIL_ORIGINS) * 3
+    assert not bad, bad[:5]
+
+
+def test_day_floor_before_year_one(spark):
+    """A floor that lands before 0001-01-01 stays aligned to its origin."""
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    try:
+        got = spark.sql(
+            "SELECT CAST(day_floor(TIMESTAMP '0001-01-01 18:22:19.111529', 3, "
+            "TIMESTAMP '2020-02-29 13:17:11.123456') AS STRING)").collect()[0][0]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    assert got == "0000-12-31 13:17:11.123456"
