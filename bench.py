@@ -3,6 +3,11 @@
 JSON line {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
+`value` splits into two lanes: `sql_text_sec`, the queries registered as
+one SQL text (`queries.sql_query`, run through Engine.sql), and
+`builder_sec`, the hand-built DataFrame builders. `control_sec` is the
+time of `control_fixed_cpu_burn`, to divide totals by when comparing runs.
+
 Each query is executed with a count-style action (collect) after a warm-up of
 the session; timings are per-query wall clock, hot JVM, MIN of two
 back-to-back passes — single-pass totals on this box swing +/-25% on
@@ -65,9 +70,15 @@ def main() -> None:
     for name, sec in timings.items():
         g = name.split("_", 1)[0]
         groups[g] = round(groups.get(g, 0.0) + sec, 3)
+    total = sum(timings.values())
+    # sql_query registers a lambda defined in the queries package itself.
+    sql_text = sum(sec for name, sec in timings.items() if Q.QUERIES[name].__module__ == Q.__name__)
     out = {
         "metric": "headline_queries_total_hot",
-        "value": round(sum(timings.values()), 3),
+        "value": round(total, 3),
+        "sql_text_sec": round(sql_text, 3),
+        "builder_sec": round(total - sql_text, 3),
+        "control_sec": timings["control_fixed_cpu_burn"],
         "unit": "sec",
         "protocol": f"per-query min of {max(1, n_passes)} hot passes",
         "pass_totals": pass_totals,

@@ -12,8 +12,10 @@ calls Doris functions DuckDB lacks (IP, geo, JSON mutation, VARIANT), the
 oracle is a second text that computes the same answer another way. A query
 keeps a hand-built builder only when its text cannot run through Engine.sql
 unchanged, disagrees with DuckDB, runs slower than the builder beyond
-noise, exercises a statement that is not a SELECT, or is a builder the
-benchmark times (CHANGES.md gives each kept builder's reason).
+noise, waits for a native form of a Python kernel its text calls
+(`date_format` with a literal format, `json_extract` with a literal path),
+exercises a statement that is not a SELECT, or is a builder the benchmark
+times (CHANGES.md gives each kept builder's reason).
 
 A query with oracle=None gets the driver's weaker rows-only check (used for
 genuinely non-SQL-expressible ops, e.g. MinHash LSH dedup).

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from doris_spark.functions.dicts import nation_geo_exprs
 from doris_spark.queries import query, sql_query
-from doris_spark.session import load_tables, register_views
+from doris_spark.session import load_tables
 
 
 # ---------------------------------------------------------------- windows
@@ -594,8 +594,26 @@ def scalar_regexp_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------- NULL edge matrix
 
-@query(
+# Aggregates over an empty set and over all-NULL input (Doris
+# AdjustAggregateNullableForEmptySet.java; sum0 vs sum), and the signs of
+# integer division and modulo. Doris `div` is DuckDB `//`.
+sql_query(
     "null_edge_aggs",
+    """
+SELECT
+  (SELECT sum(l_quantity)   FROM lineitem WHERE 1 = 0) AS sum_empty,
+  (SELECT count(*)          FROM lineitem WHERE 1 = 0) AS cnt_empty,
+  (SELECT avg(l_quantity)   FROM lineitem WHERE 1 = 0) AS avg_empty,
+  (SELECT max(l_quantity)   FROM lineitem WHERE 1 = 0) AS max_empty,
+  sum(nullif(l_quantity, l_quantity))                  AS sum_all_null,
+  count(nullif(l_quantity, l_quantity))                AS cnt_all_null,
+  avg(CASE WHEN l_orderkey % 2 = 0 THEN l_quantity END) AS avg_half_null,
+  coalesce(sum(nullif(l_quantity, l_quantity)), 0.0)   AS sum0_analog,
+  CAST(7 / 2 AS DOUBLE)                                AS int_div_slash,
+  7 div 2                                              AS int_div_kw,
+  (-7) % 3                                             AS mod_neg
+FROM lineitem
+""",
     oracle="""
 SELECT
   (SELECT sum(l_quantity)   FROM lineitem WHERE 1 = 0) AS sum_empty,
@@ -612,29 +630,6 @@ SELECT
 FROM lineitem
 """,
 )
-def null_edge_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aggregate-over-empty-set and all-NULL-input semantics (Doris
-    AdjustAggregateNullableForEmptySet.java; sum0 vs sum) plus division/
-    modulo sign semantics (SURVEY §7.3 risk list). DuckDB `//` == Spark
-    `div`; both engines use C-style modulo sign."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT
-          (SELECT sum(l_quantity)   FROM lineitem WHERE 1 = 0) AS sum_empty,
-          (SELECT count(*)          FROM lineitem WHERE 1 = 0) AS cnt_empty,
-          (SELECT avg(l_quantity)   FROM lineitem WHERE 1 = 0) AS avg_empty,
-          (SELECT max(l_quantity)   FROM lineitem WHERE 1 = 0) AS max_empty,
-          sum(nullif(l_quantity, l_quantity))                  AS sum_all_null,
-          count(nullif(l_quantity, l_quantity))                AS cnt_all_null,
-          avg(CASE WHEN l_orderkey % 2 = 0 THEN l_quantity END) AS avg_half_null,
-          coalesce(sum(nullif(l_quantity, l_quantity)), 0.0)   AS sum0_analog,
-          CAST(7 / 2 AS DOUBLE)                                AS int_div_slash,
-          7 div 2                                              AS int_div_kw,
-          (-7) % 3                                             AS mod_neg
-        FROM lineitem
-        """
-    )
 
 
 @query(

@@ -8,8 +8,11 @@ property extraction, substring search — adapted to the driver's events
 and documents tables. Each is a single declarative statement so
 Catalyst plans the scan pruning/partial aggregation; the parquet scan
 should show 1-3 column ReadSchema on every one of these. A query
-registered with `sql_query` is its oracle text run through Engine.sql; the
-others keep a DataFrame builder.
+registered with `sql_query` is its oracle text run through Engine.sql. The
+others keep a DataFrame builder because their oracle text calls names only
+DuckDB has (`strftime`, `quantile_cont`), differs from Doris in value
+(`cb_regex_key_agg`), or ran slower through Engine.sql beyond noise
+(`cb_json_prop` waits for a native `json_extract`).
 """
 
 from __future__ import annotations
@@ -117,25 +120,14 @@ def cb_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "cb_hourly",
-    oracle="""
+    """
 SELECT CAST(date_trunc('hour', ts) AS VARCHAR) AS h, count(*) AS n,
        count(DISTINCT user_id) AS u
 FROM events GROUP BY date_trunc('hour', ts) ORDER BY h LIMIT 24
 """,
 )
-def cb_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_tables(spark, sf_dir)["events"]
-    return (
-        ev.groupBy(F.date_trunc("hour", "ts").alias("ht"))
-        .agg(F.count("*").alias("n"), F.countDistinct("user_id").alias("u"))
-        .select(
-            F.date_format("ht", "yyyy-MM-dd HH:mm:ss").alias("h"), "n", "u"
-        )
-        .orderBy("h")
-        .limit(24)
-    )
 
 
 @query(
@@ -371,9 +363,9 @@ FROM events
 )
 
 
-@query(
+sql_query(
     "cb_group_offset_page",
-    oracle="""
+    """
 SELECT user_id % 1000 AS ub, count(*) AS pv
 FROM events
 WHERE event_type <> 'view'
@@ -381,18 +373,6 @@ GROUP BY user_id % 1000
 ORDER BY pv DESC, ub LIMIT 10 OFFSET 100
 """,
 )
-def cb_group_offset_page(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickBench Q39-42 shape (queries.sql:49-52): grouped pageview
-    counts paged with LIMIT ... OFFSET."""
-    ev = load_tables(spark, sf_dir)["events"]
-    return (
-        ev.filter(F.col("event_type") != "view")
-        .groupBy((F.col("user_id") % 1000).alias("ub"))
-        .agg(F.count(F.lit(1)).alias("pv"))
-        .orderBy(F.desc("pv"), "ub")
-        .offset(100)
-        .limit(10)
-    )
 
 
 @query(
@@ -769,31 +749,15 @@ ORDER BY pv DESC, src_kind, src, dst LIMIT 10 OFFSET 5
 )
 
 
-@query(
+sql_query(
     "cb_inlist_point",
-    oracle="""
+    """
 SELECT CAST(ts AS DATE) AS d, count(*) AS pv FROM events
 WHERE user_id % 7 IN (1, 6)
   AND (user_id * 2654435761) % 1000 < 40
 GROUP BY CAST(ts AS DATE) ORDER BY pv DESC, d LIMIT 10
 """,
 )
-def cb_inlist_point(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickBench Q41 shape (queries.sql:58): IN-list + hash-point
-    predicates (TraficSourceID IN (-1,6) AND RefererHash = const) over a
-    dated group — both predicates push to the scan; Knuth-multiplicative
-    arithmetic stands in for the stored hash column."""
-    ev = load_tables(spark, sf_dir)["events"]
-    return (
-        ev.filter(
-            (F.col("user_id") % 7).isin(1, 6)
-            & ((F.col("user_id") * 2654435761) % 1000 < 40)
-        )
-        .groupBy(F.col("ts").cast("date").alias("d"))
-        .agg(F.count(F.lit(1)).alias("pv"))
-        .orderBy(F.desc("pv"), "d")
-        .limit(10)
-    )
 
 
 @query(

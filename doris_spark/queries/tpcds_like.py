@@ -9,8 +9,14 @@ contribution shares with QUALIFY-style top-k (q67), customer bucketing
 with GROUPING flags (q18/q22/q27) — on the tables we have.
 
 A query registered with `sql_query` is its oracle text run through
-Engine.sql, planned by Catalyst. Scale notes for the DataFrame builders
-kept here: each is a single declarative plan. Dimension joins
+Engine.sql, planned by Catalyst. A DataFrame builder is kept when its
+oracle text calls names only DuckDB has (`isodow`, `generate_series`, the
+three-argument `datediff`), differs from Doris in value (`dayofweek`
+numbering, the type of `date_trunc`, DECIMAL division), or ran slower
+through Engine.sql beyond noise; most of those apply a rule by hand that
+the optimizer lacks, such as a pre-aggregation below a join or a year
+range in place of `year(col) = Y` (CHANGES.md). Scale notes for those
+builders: each is a single declarative plan. Dimension joins
 broadcast (nation/region/part are bounded); fact-side aggregates are
 partial+final (map-side combine); window functions partition on the
 grouped key so the shuffle feeding the window is the same one the
@@ -60,9 +66,9 @@ def ds_yoy_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("p_brand", "yr")
 
 
-@query(
+sql_query(
     "ds_rollup_report",
-    oracle="""
+    """
 SELECT coalesce(n_name, 'ALL') AS nation,
        coalesce(c_mktsegment, 'ALL') AS segment,
        CAST(grouping(n_name) * 2 + grouping(c_mktsegment) AS BIGINT) AS gid,
@@ -77,28 +83,6 @@ GROUP BY ROLLUP (n_name, c_mktsegment)
 ORDER BY gid, nation, segment
 """,
 )
-def ds_rollup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q18/q27 shape: multi-level ROLLUP report with GROUPING flags
-    (reference: grouping sets rewrite in nereids RollupToGroupingSets)."""
-    t = load_tables(spark, sf_dir)
-    j = (
-        t["orders"]
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .filter(F.col("c_nationkey") < 5)
-        .withColumn("n_name", nation_geo_exprs(spark, sf_dir, F.col("c_nationkey"))[0])
-        .filter(F.col("n_name").isNotNull())
-    )
-    g = j.rollup("n_name", "c_mktsegment").agg(
-        F.count("*").alias("orders_cnt"),
-        F.round(F.sum("o_totalprice"), 4).alias("rev"),
-        F.round(F.avg("o_totalprice"), 6).alias("avg_rev"),
-        (F.grouping("n_name") * 2 + F.grouping("c_mktsegment")).cast("bigint").alias("gid"),
-    )
-    return g.select(
-        F.coalesce("n_name", F.lit("ALL")).alias("nation"),
-        F.coalesce("c_mktsegment", F.lit("ALL")).alias("segment"),
-        "gid", "orders_cnt", "rev", "avg_rev",
-    ).orderBy("gid", "nation", "segment")
 
 
 @query(
@@ -240,9 +224,9 @@ FROM dec GROUP BY d ORDER BY d
 )
 
 
-@query(
+sql_query(
     "ds_brand_type_topk",
-    oracle="""
+    """
 WITH t AS (
   SELECT p_brand, p_type, round(sum(l_extendedprice), 4) AS rev
   FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -256,28 +240,6 @@ QUALIFY rk <= 3
 ORDER BY p_brand, rk, p_type
 """,
 )
-def ds_brand_type_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q67 shape: contribution share + top-3 types per brand
-    (QUALIFY = post-window filter; Catalyst pushes the rank limit via
-    InferWindowGroupLimit so each partition keeps only its top rows)."""
-    t = load_tables(spark, sf_dir)
-    agg = (
-        t["lineitem"]
-        .join(F.broadcast(t["part"]), F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("p_brand", "p_type")
-        .agg(F.round(F.sum("l_extendedprice"), 4).alias("rev"))
-    )
-    wshare = Window.partitionBy("p_brand")
-    wrank = Window.partitionBy("p_brand").orderBy(F.desc("rev"), "p_type")
-    return (
-        agg.select(
-            "p_brand", "p_type", "rev",
-            F.round(F.col("rev") / F.sum("rev").over(wshare), 6).alias("share"),
-            F.rank().over(wrank).cast("bigint").alias("rk"),
-        )
-        .filter(F.col("rk") <= 3)
-        .orderBy("p_brand", "rk", "p_type")
-    )
 
 
 sql_query(
@@ -504,9 +466,9 @@ def ds_q47_monthly_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_q57_nation_deviation",
-    oracle="""
+    """
 WITH m AS (
   SELECT n_name, year(l_shipdate) AS yr, month(l_shipdate) AS mon,
          round(sum(l_extendedprice), 2) AS rev
@@ -526,32 +488,6 @@ FROM v WHERE rev_rank <= 3
 ORDER BY n_name, rev_rank, yr, mon
 """,
 )
-def ds_q57_nation_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q57 shape on the supplier-nation dimension: top-3 revenue
-    months per nation plus the nation-year average. The rank window
-    prunes through WindowGroupLimit before the final sort."""
-    t = load_tables(spark, sf_dir)
-    m = (
-        t["lineitem"]
-        .join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
-        .withColumn("n_name", nation_geo_exprs(spark, sf_dir, F.col("s_nationkey"))[0])
-        .filter(F.col("n_name").isNotNull())
-        .groupBy("n_name", F.year("l_shipdate").alias("yr"), F.month("l_shipdate").alias("mon"))
-        .agg(F.round(F.sum("l_extendedprice"), 2).alias("rev"))
-    )
-    wa = Window.partitionBy("n_name", "yr")
-    wr = Window.partitionBy("n_name").orderBy(F.desc("rev"))
-    v = m.select(
-        "n_name", "yr", "mon", "rev",
-        F.sum("rev").over(wa).alias("sum_year_raw"),
-        F.rank().over(wr).alias("rev_rank"),
-    )
-    return (
-        v.filter(F.col("rev_rank") <= 3)
-        .select("n_name", "yr", "mon", "rev",
-                F.round("sum_year_raw", 2).alias("sum_year"), "rev_rank")
-        .orderBy("n_name", "rev_rank", "yr", "mon")
-    )
 
 
 @query(
@@ -912,9 +848,9 @@ def ds_q2_wow_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_q31_qoq_growth",
-    oracle="""
+    """
 WITH q AS (
   SELECT c_nationkey,
          sum(CASE WHEN quarter(o_orderdate) = 1 AND o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -936,44 +872,11 @@ WHERE hi_q1 > 0 AND lo_q1 > 0 AND hi_q2 / hi_q1 > lo_q2 / lo_q1
 ORDER BY n_name
 """,
 )
-def ds_q31_qoq_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q31 shape (query31.sql): nations whose quarter-over-quarter
-    growth in the high-priority channel beats the other channel. The
-    literal TPC-DS form is six CTEs self-joined five times; here the
-    quarter x channel matrix is one conditional aggregate over a single
-    scan — one shuffle to c_nationkey (25 rows), nation broadcast."""
-    t = load_tables(spark, sf_dir)
-    hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    qn = F.quarter("o_orderdate")
-
-    def band(q, is_hi):
-        cond = (qn == q) & (hi if is_hi else ~hi)
-        return F.sum(F.when(cond, F.col("o_totalprice")).otherwise(0))
-
-    q = (
-        t["orders"].filter(year_between("o_orderdate", 1996))
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("c_nationkey")
-        .agg(
-            band(1, True).alias("hi_q1"), band(2, True).alias("hi_q2"),
-            band(1, False).alias("lo_q1"), band(2, False).alias("lo_q2"),
-        )
-    )
-    return (
-        q.filter((F.col("hi_q1") > 0) & (F.col("lo_q1") > 0)
-                 & (F.col("hi_q2") / F.col("hi_q1") > F.col("lo_q2") / F.col("lo_q1")))
-        .withColumn("n_name", nation_geo_exprs(spark, sf_dir, F.col("c_nationkey"))[0])
-        .filter(F.col("n_name").isNotNull())
-        .select("n_name",
-                F.round(F.col("hi_q2") / F.col("hi_q1"), 6).alias("hi_growth"),
-                F.round(F.col("lo_q2") / F.col("lo_q1"), 6).alias("lo_growth"))
-        .orderBy("n_name")
-    )
 
 
-@query(
+sql_query(
     "ds_q36_margin_rollup",
-    oracle="""
+    """
 WITH base AS (
   SELECT n_name, p_brand,
          sum(l_extendedprice * (1 - l_discount) - l_quantity * p_retailprice * 0.5) AS profit,
@@ -997,41 +900,6 @@ FROM base
 ORDER BY lochierarchy DESC, nation, rnk, brand
 """,
 )
-def ds_q36_margin_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q36 shape (query36.sql): gross-margin report over
-    ROLLUP(nation, brand) with the classic lochierarchy rank — rank of
-    each node among its siblings at the same rollup level. grouping()
-    flags are computed inside the Expand-based aggregate; the rank
-    window partitions on (level, parent), so sibling ranking reuses the
-    aggregated rows without another pass over the fact."""
-    t = load_tables(spark, sf_dir)
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    base = (
-        t["lineitem"]
-        .join(F.broadcast(t["part"]), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
-        .withColumn("n_name", nation_geo_exprs(spark, sf_dir, F.col("s_nationkey"))[0])
-        .filter(F.col("n_name").isNotNull())
-        .rollup("n_name", "p_brand")
-        .agg(
-            F.sum(rev - F.col("l_quantity") * F.col("p_retailprice") * 0.5).alias("profit"),
-            F.sum(rev).alias("rev"),
-            (F.grouping("n_name") + F.grouping("p_brand")).alias("lochierarchy"),
-            F.when(F.grouping("p_brand") == 0, F.col("n_name")).alias("parent"),
-        )
-    )
-    margin = F.round(F.col("profit") / F.col("rev"), 6)
-    w = Window.partitionBy("lochierarchy", "parent").orderBy(margin)
-    return (
-        base.select(
-            margin.alias("margin"),
-            F.coalesce("n_name", F.lit("ALL")).alias("nation"),
-            F.coalesce("p_brand", F.lit("ALL")).alias("brand"),
-            "lochierarchy",
-            F.rank().over(w).alias("rnk"),
-        )
-        .orderBy(F.desc("lochierarchy"), "nation", "rnk", "brand")
-    )
 
 
 sql_query(
@@ -1183,9 +1051,9 @@ def ds_q90_ampm_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_q93_returns_adjust",
-    oracle="""
+    """
 SELECT c_custkey,
        round(sum(CASE WHEN l_returnflag = 'R'
                       THEN -l_extendedprice * (1 - l_discount)
@@ -1198,24 +1066,6 @@ ORDER BY net_sales, c_custkey
 LIMIT 100
 """,
 )
-def ds_q93_returns_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q93 shape (query93.sql): net customer value after backing
-    out returned merchandise. The reference left-joins store_returns to
-    store_sales; the fixture folds the return flag into a signed sum —
-    one fact scan, one shuffle to custkey, bottom-100 via
-    TakeOrderedAndProject."""
-    t = load_tables(spark, sf_dir)
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    signed = F.when(F.col("l_returnflag") == "R", -rev).otherwise(rev)
-    return (
-        t["lineitem"]
-        .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("c_custkey")
-        .agg(F.round(F.sum(signed), 2).alias("net_sales"))
-        .orderBy("net_sales", "c_custkey")
-        .limit(100)
-    )
 
 
 @query(
@@ -1350,9 +1200,9 @@ def ds_q6_above_avg_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_q15_or_predicates",
-    oracle="""
+    """
 SELECT n_name, round(sum(o_totalprice), 2) AS total
 FROM orders
 JOIN customer ON o_custkey = c_custkey
@@ -1363,27 +1213,6 @@ GROUP BY n_name HAVING sum(o_totalprice) > 50000
 ORDER BY n_name
 """,
 )
-def ds_q15_or_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q15 shape (query15.sql): sales by geography where the
-    customer qualifies by EITHER balance or segment (the zip-list OR
-    balance disjunction). The OR stays one scan predicate on the
-    customer dim; no union-of-scans."""
-    t = load_tables(spark, sf_dir)
-    cust = t["customer"].filter(
-        (F.col("c_acctbal") > 9000) | F.col("c_mktsegment").isin("BUILDING", "MACHINERY")
-    )
-    return (
-        # year==1996 & quarter==1 as one exact pushable range (guide §6)
-        t["orders"].filter((F.col("o_orderdate") >= F.lit("1996-01-01"))
-                           & (F.col("o_orderdate") < F.lit("1996-04-01")))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .withColumn("n_name", nation_geo_exprs(spark, sf_dir, F.col("c_nationkey"))[0])
-        .filter(F.col("n_name").isNotNull())
-        .groupBy("n_name")
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("total"))
-        .filter(F.col("total") > 50000)
-        .orderBy("n_name")
-    )
 
 
 @query(
@@ -1653,9 +1482,9 @@ def ds_q9_bucket_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_q17_variation",
-    oracle="""
+    """
 WITH s AS (
   SELECT p_brand, n_name,
          avg(l_quantity) AS mean_qty,
@@ -1674,31 +1503,6 @@ WHERE cnt >= 5 AND std_qty / mean_qty > 0.62
 ORDER BY p_brand, n_name
 """,
 )
-def ds_q17_variation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q17 shape (query17.sql): groups whose quantity coefficient
-    of variation exceeds a threshold. mean/stddev/count come from one
-    aggregate; the CoV filter runs on the aggregated rows."""
-    t = load_tables(spark, sf_dir)
-    s = (
-        t["lineitem"]
-        .join(F.broadcast(t["part"]), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
-        .withColumn("n_name", nation_geo_exprs(spark, sf_dir, F.col("s_nationkey"))[0])
-        .filter(F.col("n_name").isNotNull())
-        .groupBy("p_brand", "n_name")
-        .agg(
-            F.avg("l_quantity").alias("mean_qty"),
-            F.stddev_samp("l_quantity").alias("std_qty"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
-    cov = F.col("std_qty") / F.col("mean_qty")
-    return (
-        s.filter((F.col("cnt") >= 5) & (cov > 0.62))
-        .select("p_brand", "n_name", F.round("mean_qty", 4).alias("mean_qty"),
-                F.round(cov, 4).alias("cov"))
-        .orderBy("p_brand", "n_name")
-    )
 
 
 @query(
@@ -1773,9 +1577,9 @@ def ds_q3_brand_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_q7_item_metrics",
-    oracle="""
+    """
 SELECT p_brand,
        round(avg(l_quantity), 6) AS avg_qty,
        round(avg(l_extendedprice), 6) AS avg_price,
@@ -1789,26 +1593,6 @@ WHERE c_mktsegment = 'BUILDING' AND o_orderpriority = '1-URGENT'
 GROUP BY p_brand ORDER BY p_brand
 """,
 )
-def ds_q7_item_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q7/q26 shape (query7.sql): average item metrics under
-    demographic filters. Customer filter prunes before the fact join."""
-    t = load_tables(spark, sf_dir)
-    return (
-        t["lineitem"]
-        .join(t["orders"].filter(F.col("o_orderpriority") == "1-URGENT"),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t["customer"].filter(F.col("c_mktsegment") == "BUILDING"),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t["part"]), F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("p_brand")
-        .agg(
-            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 6).alias("avg_price"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count("*").alias("cnt"),
-        )
-        .orderBy("p_brand")
-    )
 
 
 @query(
@@ -1945,9 +1729,9 @@ def ds_q16_ship_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_q19_cross_nation_brand",
-    oracle="""
+    """
 SELECT p_brand, round(sum(l_extendedprice * (1 - l_discount)), 4) AS rev
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
@@ -1958,21 +1742,6 @@ WHERE c_nationkey <> s_nationkey AND month(l_shipdate) = 12
 GROUP BY p_brand ORDER BY p_brand
 """,
 )
-def ds_q19_cross_nation_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q19 shape (query19.sql): brand revenue where the buyer and
-    the seller sit in different geographies (store zip <> customer zip)."""
-    t = load_tables(spark, sf_dir)
-    return (
-        t["lineitem"].filter(F.month("l_shipdate") == 12)
-        .join(F.broadcast(t["part"]), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy("p_brand")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("rev"))
-        .orderBy("p_brand")
-    )
 
 
 @query(
@@ -2075,9 +1844,9 @@ def ds_q28_bucket_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_q30_user_above_avg",
-    oracle="""
+    """
 WITH per_user AS (
   SELECT user_id, round(sum(value), 4) AS total
   FROM events WHERE event_type = 'purchase' GROUP BY user_id
@@ -2087,26 +1856,6 @@ WHERE total > 1.2 * (SELECT avg(total) FROM per_user)
 ORDER BY user_id
 """,
 )
-def ds_q30_user_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q30/q81 shape (query30.sql): per-customer return totals kept
-    above 1.2x the cohort average — grouped agg + scalar-subquery filter
-    (the 1-row average broadcasts)."""
-    t = load_tables(spark, sf_dir)
-    per_user = (
-        t["events"].filter(F.col("event_type") == "purchase")
-        .groupBy("user_id").agg(F.round(F.sum("value"), 4).alias("total"))
-        # Feeds both the cohort average and the filtered result; Catalyst
-        # plans the scan+aggregate twice (no cross-consumer exchange
-        # reuse), so materialize the slim aggregated rows once.
-        .localCheckpoint(eager=False)
-    )
-    avg_total = per_user.agg(F.avg("total").alias("avg_total"))
-    return (
-        per_user.join(F.broadcast(avg_total))
-        .filter(F.col("total") > 1.2 * F.col("avg_total"))
-        .select("user_id", "total")
-        .orderBy("user_id")
-    )
 
 
 @query(
@@ -2242,9 +1991,9 @@ def ds_q39_monthly_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_q40_net_before_after",
-    oracle="""
+    """
 SELECT p_brand,
        round(sum(CASE WHEN l_shipdate <  TIMESTAMP '1998-01-01'
                       THEN l_extendedprice * (1 - l_discount) ELSE 0 END), 4) AS rev_before,
@@ -2256,23 +2005,6 @@ WHERE l_returnflag <> 'R'
 GROUP BY p_brand ORDER BY p_brand
 """,
 )
-def ds_q40_net_before_after(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q40 shape (query40.sql): net (returns excluded) revenue by
-    item before/after a cutoff within a +/-30-day window."""
-    t = load_tables(spark, sf_dir)
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    sd = F.col("l_shipdate")
-    return (
-        t["lineitem"]
-        .filter((F.col("l_returnflag") != "R") & sd.between("1997-12-02", "1998-01-31"))
-        .join(F.broadcast(t["part"]), F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("p_brand")
-        .agg(
-            F.round(F.sum(F.when(sd < "1998-01-01", net).otherwise(0.0)), 4).alias("rev_before"),
-            F.round(F.sum(F.when(sd >= "1998-01-01", net).otherwise(0.0)), 4).alias("rev_after"),
-        )
-        .orderBy("p_brand")
-    )
 
 
 @query(
@@ -2393,9 +2125,9 @@ def ds_q44_best_worst(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_q45_list_or_subquery",
-    oracle="""
+    """
 WITH big_buyers AS (
   SELECT o_custkey FROM orders GROUP BY o_custkey HAVING count(*) > 30
 )
@@ -2408,29 +2140,6 @@ WHERE n_name IN ('NATION_1', 'NATION_3', 'NATION_7')
 GROUP BY n_name ORDER BY n_name
 """,
 )
-def ds_q45_list_or_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q45 shape (query45.sql): revenue kept when EITHER a dim
-    attribute is in a literal list OR the key is in a grouped subquery.
-    The OR of a predicate and a semi join becomes a left join against the
-    (small, broadcast) subquery plus a disjunctive filter."""
-    t = load_tables(spark, sf_dir)
-    big = (
-        t["orders"].groupBy("o_custkey").agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt") > 30)
-        .select("o_custkey", F.lit(1).alias("is_big"))
-    )
-    return (
-        t["orders"]
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .withColumn("n_name", nation_geo_exprs(spark, sf_dir, F.col("c_nationkey"))[0])
-        .filter(F.col("n_name").isNotNull())
-        .join(F.broadcast(big), "o_custkey", "left")
-        .filter(F.col("n_name").isin("NATION_1", "NATION_3", "NATION_7")
-                | F.col("is_big").isNotNull())
-        .groupBy("n_name")
-        .agg(F.round(F.sum("o_totalprice"), 4).alias("rev"))
-        .orderBy("n_name")
-    )
 
 
 sql_query(
@@ -2926,9 +2635,9 @@ def ds_q76_null_channel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_q77_sales_returns_rollup",
-    oracle="""
+    """
 SELECT coalesce(l_linestatus, 'ALL') AS channel,
        coalesce(n_name, 'ALL') AS nation,
        CAST(grouping(l_linestatus) * 2 + grouping(n_name) AS BIGINT) AS gid,
@@ -2941,28 +2650,6 @@ GROUP BY ROLLUP (l_linestatus, n_name)
 ORDER BY gid, channel, nation
 """,
 )
-def ds_q77_sales_returns_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q77 shape (query77.sql): sales vs returns per channel and
-    location with ROLLUP totals — the sales/returns UNION legs fold into
-    conditional aggregates over one scan."""
-    t = load_tables(spark, sf_dir)
-    g = (
-        t["lineitem"]
-        .join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
-        .withColumn("n_name", nation_geo_exprs(spark, sf_dir, F.col("s_nationkey"))[0])
-        .filter(F.col("n_name").isNotNull())
-        .rollup("l_linestatus", "n_name")
-        .agg(
-            F.round(F.sum(F.when(F.col("l_returnflag") != "R", F.col("l_extendedprice")).otherwise(0.0)), 4).alias("sales_rev"),
-            F.round(F.sum(F.when(F.col("l_returnflag") == "R", F.col("l_extendedprice")).otherwise(0.0)), 4).alias("returns_rev"),
-            (F.grouping("l_linestatus") * 2 + F.grouping("n_name")).cast("bigint").alias("gid"),
-        )
-    )
-    return g.select(
-        F.coalesce("l_linestatus", F.lit("ALL")).alias("channel"),
-        F.coalesce("n_name", F.lit("ALL")).alias("nation"),
-        "gid", "sales_rev", "returns_rev",
-    ).orderBy("gid", "channel", "nation")
 
 
 sql_query(
@@ -3023,9 +2710,9 @@ def ds_q79_best_trip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "ds_q80_channel_net",
-    oracle="""
+    """
 SELECT coalesce(l_linestatus, 'ALL') AS channel,
        CAST(grouping(l_linestatus) AS BIGINT) AS gid,
        round(sum(CASE WHEN l_returnflag <> 'R' THEN l_extendedprice * (1 - l_discount) ELSE 0 END), 4) AS gross_rev,
@@ -3039,29 +2726,6 @@ GROUP BY ROLLUP (l_linestatus)
 ORDER BY gid, channel
 """,
 )
-def ds_q80_channel_net(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q80 shape (query80.sql): channel gross / returned / net
-    revenue with a ROLLUP grand total, promo items excluded."""
-    t = load_tables(spark, sf_dir)
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    is_ret = F.col("l_returnflag") == "R"
-    g = (
-        t["lineitem"]
-        .filter((F.col("l_shipdate") >= "1997-06-01") & (F.col("l_shipdate") < "1997-08-01"))
-        .join(F.broadcast(t["part"].filter(F.col("p_type") != "PROMO")),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .rollup("l_linestatus")
-        .agg(
-            F.round(F.sum(F.when(~is_ret, net).otherwise(0.0)), 4).alias("gross_rev"),
-            F.round(F.sum(F.when(is_ret, net).otherwise(0.0)), 4).alias("returned_rev"),
-            F.round(F.sum(F.when(~is_ret, net).otherwise(-net)), 4).alias("net_rev"),
-            F.grouping("l_linestatus").cast("bigint").alias("gid"),
-        )
-    )
-    return g.select(
-        F.coalesce("l_linestatus", F.lit("ALL")).alias("channel"),
-        "gid", "gross_rev", "returned_rev", "net_rev",
-    ).orderBy("gid", "channel")
 
 
 @query(
@@ -3136,9 +2800,9 @@ ORDER BY c_mktsegment, n_name
 )
 
 
-@query(
+sql_query(
     "ds_q24_same_nation_spend",
-    oracle="""
+    """
 WITH spend AS (
   SELECT c_name, p_brand, sum(l_extendedprice * (1 - l_discount)) AS net
   FROM lineitem
@@ -3155,35 +2819,6 @@ WHERE net > 1.3 * (SELECT avg(net) FROM spend)
 ORDER BY c_name, p_brand
 """,
 )
-def ds_q24_same_nation_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q24 shape (query24.sql): customer+item spend where buyer
-    and seller share a market, kept above 1.3x the cohort average
-    (scalar-subquery threshold broadcast)."""
-    t = load_tables(spark, sf_dir)
-    spend = (
-        t["lineitem"]
-        .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(F.col("c_nationkey") == F.col("s_nationkey"))
-        .join(F.broadcast(t["part"]), F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("c_name", "p_brand")
-        .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("net_raw"))
-        # The spend subtree feeds BOTH the threshold aggregate and the
-        # filtered result; Catalyst does not reuse the exchange across
-        # the two consumers, so without this the 4-join aggregation runs
-        # twice. Lazy checkpoint: materialized by the threshold job,
-        # rescanned (aggregated rows only, far smaller than the join
-        # inputs) by the filter.
-        .localCheckpoint(eager=False)
-    )
-    thr = spend.agg((1.3 * F.avg("net_raw")).alias("thr"))
-    return (
-        spend.join(F.broadcast(thr))
-        .filter(F.col("net_raw") > F.col("thr"))
-        .select("c_name", "p_brand", F.round("net_raw", 4).alias("net"))
-        .orderBy("c_name", "p_brand")
-    )
 
 
 @query(

@@ -40,6 +40,10 @@ def test_bench_json_contract():
     assert all(k.startswith("tpch_") for k in d["queries"])
     assert d["n_queries"] >= 80
     assert d["sf"] == 0.001
+    # The SQL-text and builder lanes split the total; the control divides it.
+    assert abs(d["sql_text_sec"] + d["builder_sec"] - d["value"]) <= 0.002
+    assert d["sql_text_sec"] > 0 and d["builder_sec"] > 0
+    assert d["control_sec"] > 0
     # Full per-query map goes to the sidecar file.
     with open(sidecar) as fh:
         full = json.load(fh)

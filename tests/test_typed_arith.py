@@ -3,8 +3,9 @@
 
 Reference semantics: fe/fe-core/.../nereids/util/TypeCoercionUtils.java
 processBinaryArithmetic (:824) + per-op decimal result types in
-nereids/trees/expressions/{Add,Multiply,Divide,Mod}.java, pinned
-end-to-end by the nereids_arith_p0 suite gate in test_ref_suites.py.
+nereids/trees/expressions/{Add,Multiply,Divide,Mod}.java. The pass's
+output on whole statements is pinned by the `arith` field of
+tests/data/rewrite_corpus.jsonl (tests/test_rewrite_corpus.py).
 """
 
 import pytest

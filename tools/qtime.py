@@ -9,7 +9,8 @@ its last pass, counted by job group. With --sql, each query's oracle text
 also runs through Engine.sql (`queries.run_sql`, the path of a SQL-text
 query), alternating with the builder: which side runs first flips every
 pass. A query that fails prints its error instead of times.
---explain DIR writes each query's formatted plan to DIR/<name>.txt.
+--explain DIR writes each query's formatted plan to DIR/<name>.txt and,
+with --sql, its oracle text's plan through Engine.sql to DIR/<name>.sql.txt.
 """
 
 from __future__ import annotations
@@ -113,12 +114,14 @@ def main() -> None:
             print(f"{name:32s} {side:8s} {med:8.3f} {q1:8.3f} {q3:8.3f} {jobs[key][0]:5d} {jobs[key][1]:6d}")
     if explain:
         os.makedirs(explain, exist_ok=True)
+        suffix = {"builder": "", "sql": ".sql"}
         for name in names:
-            df = Q.QUERIES[name](spark, sf_dir)
-            with open(os.path.join(explain, f"{name}.txt"), "w") as fh:
-                fh.write(df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"))
-            spark.catalog.clearCache()
+            for side in sides:
+                df = runners[side](name)
+                with open(os.path.join(explain, f"{name}{suffix[side]}.txt"), "w") as fh:
+                    fh.write(df._sc._jvm.PythonSQLUtils.explainString(
+                        df._jdf.queryExecution(), "formatted"))
+                spark.catalog.clearCache()
 
 
 if __name__ == "__main__":
