@@ -22,7 +22,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+# Python UDF workers import doris_spark through PYTHONPATH, not this
+# process's sys.path; the JVM that forks them starts in get_spark and
+# inherits it.
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 from doris_spark import queries as Q
 from doris_spark.session import get_spark
@@ -95,7 +100,7 @@ def main() -> None:
     # drives bench.py at sf0.001) don't clobber the committed sf0.1 sidecar.
     full_path = os.environ.get(
         "SPARK_GRAFT_BENCH_FULL",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_full.json"),
+        os.path.join(ROOT, "bench_full.json"),
     )
     try:
         with open(full_path, "w") as fh:

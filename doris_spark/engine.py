@@ -240,7 +240,9 @@ class Engine:
         snap = df.localCheckpoint(eager=True)
         snap.createOrReplaceTempView(name)
         self._views[name] = snap
-        self._parts[name] = snap.rdd.getNumPartitions()
+        # The pinned LogicalRDD's own partitions: `snap.rdd` would plan a
+        # Python-row conversion just to count them.
+        self._parts[name] = snap._jdf.queryExecution().logical().rdd().getNumPartitions()
         return snap
 
     # ------------------------------------------------------------ queries

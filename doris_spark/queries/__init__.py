@@ -23,7 +23,6 @@ genuinely non-SQL-expressible ops, e.g. MinHash LSH dedup).
 
 from __future__ import annotations
 
-import re
 from collections.abc import Callable
 from typing import Optional
 
@@ -72,18 +71,12 @@ def query(name: str, oracle: Optional[str] = None):
 
 
 def run_sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
-    """`text` through Engine.sql over the fixture tables of `sf_dir`.
-
-    Only the fixture tables whose names occur in `text` as words are
-    (re-)registered as temp views: each registration costs ~4 ms, and a
-    word match can only register too many, never too few. A DataFrame
-    already returned keeps the tables it was analyzed against."""
+    """`text` through Engine.sql over the fixture tables of `sf_dir`,
+    registering only the tables `text` names (`session.register_views`)."""
     from doris_spark.engine import Engine
-    from doris_spark.session import load_tables
+    from doris_spark.session import register_views
 
-    for name, df in load_tables(spark, sf_dir).items():
-        if re.search(rf"\b{name}\b", text):
-            df.createOrReplaceTempView(name)
+    register_views(spark, sf_dir, text)
     return Engine(spark).sql(text)
 
 

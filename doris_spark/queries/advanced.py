@@ -47,7 +47,7 @@ def rec_cte_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from doris_spark.session import register_views
 
-    register_views(spark, sf_dir)  # reads the `nation` view
+    register_views(spark, sf_dir, "nation")  # reads the `nation` view
     # Statically unrolled fixpoint (r12, guide §2.4/§3.1): the recursion
     # depth is a LITERAL (r.depth < 10) and the graph is structurally
     # bounded at every scale factor — nation is 25 rows, each node has
@@ -567,7 +567,17 @@ def mv_transparent_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doris_spark.session import register_views
     from doris_spark.streaming.mtmv import MaterializedView
 
-    register_views(spark, sf_dir)
+    # The partial sums stay exact DECIMAL(38,4) (order-independent
+    # addition); only the FINAL total is cast to DOUBLE so both engines
+    # emit the same float value to the comparator.
+    text = (
+        "SELECT o_orderstatus, count(*) AS n, "
+        "CAST(sum(CAST(o_totalprice AS DECIMAL(38,4))) AS DOUBLE) AS total, "
+        "max(o_totalprice) AS mx "
+        "FROM orders WHERE o_orderpriority IN ('1-URGENT', '2-HIGH') "
+        "GROUP BY o_orderstatus ORDER BY o_orderstatus"
+    )
+    register_views(spark, sf_dir, text)
     eng = Engine(spark)
     orders = load_tables(spark, sf_dir)["orders"]
     storage = _os.path.join(
@@ -600,16 +610,7 @@ def mv_transparent_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         view=mv.read(),
     )
-    # The partial sums stay exact DECIMAL(38,4) (order-independent
-    # addition); only the FINAL total is cast to DOUBLE so both engines
-    # emit the same float value to the comparator.
-    out = eng.sql(
-        "SELECT o_orderstatus, count(*) AS n, "
-        "CAST(sum(CAST(o_totalprice AS DECIMAL(38,4))) AS DOUBLE) AS total, "
-        "max(o_totalprice) AS mx "
-        "FROM orders WHERE o_orderpriority IN ('1-URGENT', '2-HIGH') "
-        "GROUP BY o_orderstatus ORDER BY o_orderstatus"
-    )
+    out = eng.sql(text)
     assert eng.last_mv_rewrite == "orders_prio_rollup", "MV rewrite must fire"
     return out
 
@@ -677,7 +678,14 @@ def mv_join_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doris_spark.session import register_views
     from doris_spark.streaming.mtmv import MaterializedView
 
-    register_views(spark, sf_dir)
+    text = (
+        "SELECT c_mktsegment, count(*) AS n, sum(o_totalprice) AS total "
+        "FROM orders JOIN customer ON c_custkey = o_custkey "
+        "WHERE o_orderdate >= TIMESTAMP '1997-01-01' "
+        "AND c_mktsegment <> 'MACHINERY' "
+        "GROUP BY c_mktsegment ORDER BY c_mktsegment"
+    )
+    register_views(spark, sf_dir, text)
     eng = Engine(spark)
     t = load_tables(spark, sf_dir)
     base = (
@@ -707,12 +715,6 @@ def mv_join_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         view=mv.read(),
         where="o_orderdate >= TIMESTAMP '1997-01-01'",
     )
-    out = eng.sql(
-        "SELECT c_mktsegment, count(*) AS n, sum(o_totalprice) AS total "
-        "FROM orders JOIN customer ON c_custkey = o_custkey "
-        "WHERE o_orderdate >= TIMESTAMP '1997-01-01' "
-        "AND c_mktsegment <> 'MACHINERY' "
-        "GROUP BY c_mktsegment ORDER BY c_mktsegment"
-    )
+    out = eng.sql(text)
     assert eng.last_mv_rewrite == "orders_cust_97_mv", "join-MV rewrite must fire"
     return out

@@ -219,9 +219,7 @@ def fn_stragglers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (be/src/exprs/function/function_multi_match.cpp), array_enumerate_uniq,
     damerau_levenshtein (function_levenshtein.cpp; pandas-UDF DP kernel),
     json_exists_path (function_jsonb.cpp)."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
+    text = """
         SELECT c_custkey,
                array_join(multi_search_all_positions(
                  c_name, array('Customer', '00', 'zzz')), ',')                    AS msap,
@@ -234,7 +232,8 @@ def fn_stragglers(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE c_custkey < 500
         ORDER BY c_custkey
         """
-    )
+    register_views(spark, sf_dir, text)
+    return spark.sql(text)
 
 
 @query(

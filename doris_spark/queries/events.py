@@ -400,9 +400,7 @@ def ev_asof_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL-SIZE (the r4 0.5% bench slice is gone with the lateral plan).
     Oracle: DuckDB's native ASOF JOIN."""
     from doris_spark.engine import Engine
-    from doris_spark.session import register_views
 
-    register_views(spark, sf_dir)
     eng = Engine(spark)
     ev = load_tables(spark, sf_dir)["events"]
     ev.filter(F.col("event_type") == "purchase").select(

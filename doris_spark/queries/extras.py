@@ -300,9 +300,7 @@ ORDER BY o_orderstatus
 def agg_group_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """group_concat with custom separator + ORDER BY (Doris group_concat,
     aggregate_function_group_concat; Spark 4 listagg WITHIN GROUP)."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
+    text = """
         SELECT o_orderstatus,
                listagg(DISTINCT o_orderpriority, '|')
                  WITHIN GROUP (ORDER BY o_orderpriority) AS prios,
@@ -313,7 +311,8 @@ def agg_group_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY o_orderstatus
         ORDER BY o_orderstatus
         """
-    )
+    register_views(spark, sf_dir, text)
+    return spark.sql(text)
 
 
 # ------------------------------------------------------------------- JSON
@@ -994,9 +993,7 @@ def decimal_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimals. Every output type is pinned by explicit CAST on BOTH sides
     because the engines' implicit result-type rules differ (DuckDB decimal
     division yields DOUBLE; Spark yields a rescaled decimal)."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
+    text = """
         WITH d AS (
           SELECT CAST(round(l_extendedprice, 2) AS DECIMAL(12,2)) AS p,
                  CAST(round(l_quantity, 2)      AS DECIMAL(12,2)) AS q
@@ -1011,7 +1008,8 @@ def decimal_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(sum(p) % 7 AS DECIMAL(12,2))        AS mod_p
         FROM d
         """
-    )
+    register_views(spark, sf_dir, text)
+    return spark.sql(text)
 
 
 sql_query(

@@ -9,7 +9,8 @@ sessions. prepare_session() (doris_spark/session.py) now derives the
 engine's session from any session; this test proves it in a clean
 subprocess where no doris_spark session bootstrapping has run: the
 queries run with the engine's rules (bounded final sorts, Doris avg
-types) and the calling session keeps its own confs.
+types, literal-free generated code) and the calling session keeps its own
+confs and rules.
 """
 
 from __future__ import annotations
@@ -61,6 +62,16 @@ _SCRIPT = textwrap.dedent(
         "SELECT avg(CAST(x AS DECIMAL(10,2))) AS a FROM VALUES (1), (2), (2) AS t(x)")
     assert avg.schema["a"].dataType.simpleString() == "decimal(38,4)"
     assert str(avg.collect()[0]["a"]) == "1.6666"
+
+    # ParamLiterals: a statement that differs from the last one only in its
+    # constants compiles no new class; the caller's session has no such rule.
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    shape = "SELECT id * {{0}} AS x FROM range(1000) WHERE id > {{0}}"
+    Engine(spark).sql(shape.format(3)).collect()
+    before = compiles.getCount()
+    assert Engine(spark).sql(shape.format(5)).collect()[0]["x"] == 30
+    assert compiles.getCount() == before
+    assert spark._jsparkSession.sessionState().columnarRules().isEmpty()
 
     qs = e.queries()
     for name, want in {smoke!r}.items():

@@ -4,8 +4,9 @@ Usage: python tools/qtime.py [names...] [--passes N] [--sf DIR] [--sql] [--expla
 
 Runs one warm-up pass over the named queries (every registered query when
 none is named), then N hot passes (default 5). For each query it prints the
-median and quartiles of its pass seconds and the Spark jobs and stages of
-its last pass, counted by job group. With --sql, each query's oracle text
+median and quartiles of its pass seconds, and the Spark jobs and stages
+(counted by job group) and the Janino compilations (`compiles`, counted by
+Spark's `CodegenMetrics`) of its last pass. With --sql, each query's oracle text
 also runs through Engine.sql (`queries.run_sql`, the path of a SQL-text
 query), alternating with the builder: which side runs first flips every
 pass. A query that fails prints its error instead of times.
@@ -20,7 +21,12 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python UDF workers import doris_spark through PYTHONPATH, not this
+# process's sys.path; the JVM that forks them starts in get_spark and
+# inherits it.
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 from doris_spark import queries as Q
 from doris_spark.session import get_spark
@@ -63,6 +69,7 @@ def main() -> None:
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
     tracker = sc.statusTracker()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     Q.warm_up(spark, sf_dir)
 
     runners = {"builder": lambda n: Q.QUERIES[n](spark, sf_dir)}
@@ -72,7 +79,7 @@ def main() -> None:
             print("no oracle:", missing); sys.exit(1)
         runners["sql"] = lambda n: Q.run_sql(spark, sf_dir, Q.ORACLES[n])
     secs = {(n, side): [] for n in names for side in runners}
-    jobs: dict[tuple[str, str], tuple[int, int]] = {}
+    jobs: dict[tuple[str, str], tuple[int, int, int]] = {}
     errors: dict[tuple[str, str], str] = {}
 
     def run(name: str, side: str, p: int) -> None:
@@ -81,6 +88,7 @@ def main() -> None:
             return
         group = f"qtime:{name}:{side}:{p}"
         sc.setJobGroup(group, group)
+        compiled = codegen.getCount()
         t0 = time.perf_counter()
         try:
             runners[side](name).collect()
@@ -95,7 +103,7 @@ def main() -> None:
             secs[key].append(sec)
         job_ids = tracker.getJobIdsForGroup(group)
         stages = sum(len(info.stageIds) for info in map(tracker.getJobInfo, job_ids) if info)
-        jobs[key] = (len(job_ids), stages)
+        jobs[key] = (len(job_ids), stages, codegen.getCount() - compiled)
 
     sides = list(runners)
     for p in range(passes + 1):  # pass 0 is the warm-up
@@ -103,7 +111,8 @@ def main() -> None:
             for side in sides if p % 2 == 0 else sides[::-1]:
                 run(name, side, p)
 
-    print(f"{'query':32s} {'side':8s} {'median':>8s} {'q1':>8s} {'q3':>8s} {'jobs':>5s} {'stages':>6s}")
+    print(f"{'query':32s} {'side':8s} {'median':>8s} {'q1':>8s} {'q3':>8s} {'jobs':>5s} {'stages':>6s}"
+          f" {'compiles':>8s}")
     for name in names:
         for side in sides:
             key = (name, side)
@@ -111,7 +120,9 @@ def main() -> None:
                 print(f"{name:32s} {side:8s} error {errors[key]}")
                 continue
             med, q1, q3 = quartiles(secs[key])
-            print(f"{name:32s} {side:8s} {med:8.3f} {q1:8.3f} {q3:8.3f} {jobs[key][0]:5d} {jobs[key][1]:6d}")
+            n_jobs, n_stages, compiles = jobs[key]
+            print(f"{name:32s} {side:8s} {med:8.3f} {q1:8.3f} {q3:8.3f} {n_jobs:5d} {n_stages:6d}"
+                  f" {compiles:8d}")
     if explain:
         os.makedirs(explain, exist_ok=True)
         suffix = {"builder": "", "sql": ".sql"}
